@@ -1,28 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      // events.parquet stores TIMESTAMP(NANOS); read as int64 nanos
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      // Constraint propagation is pure planner CPU — O(constraints²) per
-      // plan tree, and this suite's operators all filter explicitly, so
-      // the inferred-IsNotNull predicates it adds are redundant here.
-      // Interleaved full-suite A/B (graft.tools.ConfAb, 371 queries,
-      // ABAB in one JVM so box drift cancels): 109.8 s → 105.1 s, -4.3%,
-      // no per-query regression outside noise at reps=5, oracle gate
-      // green both ways. Scale-independent: the cost is driver-side
-      // planning, paid identically at any cluster size (SPARK-19846
-      // made it optional for exactly this reason).
-      .config("spark.sql.constraintPropagation.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Untimed warmup: JVM/JIT, codegen compiler, parquet footer cache, and
     // the shuffle machinery all initialize here instead of inside whichever

@@ -1,7 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 
 /** As-of forward-fill onto a dense daily calendar (LOCF) — the reference's
@@ -49,39 +49,50 @@ object ForwardFill {
       tieBreak: Seq[String],
       start: String,
       end: String): DataFrame = {
-    val valueType = changes.schema(changes.schema.fieldIndex(valueCol)).dataType
-    val pts = changes
+    val (rows, base) =
+      withGrid(changes, idCol, dayCol, valueCol, tieBreak, start, end, None)
+    rows
+      .withColumn("__filled", last(col(valueCol), ignoreNulls = true)
+        .over(base.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+      .filter(col("__kind") === 1 && col("__filled").isNotNull)
+      .select(col(idCol), col(dayCol), col("__filled").as(valueCol))
+  }
+
+  /** The change points (`__kind` 0) unioned with the dense grid rows
+    * (`__kind` 1, null value and tie-breaks), plus the per-id window order
+    * both grids run their frames over.
+    *
+    * Points: rows with a null id, day or value are dropped, and so are
+    * changes after `end`; `valueType` casts the value after that filter.
+    * Grid: one row per day of [start, end] for every id that has at least
+    * one usable point — sequence+explode is generated map-side off the
+    * (small) distinct-id set. Order: day, then `__kind`, then the
+    * tie-breaks; `__kind` dominates the tie-break columns, so grid rows
+    * (all-null ties) sort after every change row of the same day.
+    */
+  private def withGrid(
+      changes: DataFrame, idCol: String, dayCol: String, valueCol: String,
+      tieBreak: Seq[String], start: String, end: String,
+      valueType: Option[String]): (DataFrame, WindowSpec) = {
+    val kept = changes
       .select((Seq(idCol, dayCol, valueCol) ++ tieBreak).map(col): _*)
       .na.drop(Seq(idCol, dayCol, valueCol))
       .filter(col(dayCol) <= to_date(lit(end)))
+    val pts = valueType.fold(kept)(t => kept.withColumn(valueCol, col(valueCol).cast(t)))
       .withColumn("__kind", lit(0))
-
-    // Dense calendar per id that has at least one usable change point.
-    // sequence+explode is generated map-side off the (small) distinct-id set.
     val grid = pts
       .select(col(idCol)).distinct()
       .select(
         col(idCol),
         explode(sequence(to_date(lit(start)), to_date(lit(end)), expr("interval 1 day")))
           .as(dayCol))
-      .withColumn(valueCol, lit(null).cast(valueType))
+      .withColumn(valueCol, lit(null).cast(pts.schema(valueCol).dataType))
       .withColumn("__kind", lit(1))
     val gridAligned = tieBreak.foldLeft(grid) { (df, c) =>
-      df.withColumn(c, lit(null).cast(pts.schema(pts.schema.fieldIndex(c)).dataType))
+      df.withColumn(c, lit(null).cast(pts.schema(c).dataType))
     }
-
-    // __kind dominates the tie-break columns, so grid rows (all-null ties)
-    // sort after every change row of the same day.
     val order = (Seq(col(dayCol), col("__kind")) ++ tieBreak.map(col)).map(_.asc)
-    val w = Window
-      .partitionBy(col(idCol))
-      .orderBy(order: _*)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-
-    pts.unionByName(gridAligned)
-      .withColumn("__filled", last(col(valueCol), ignoreNulls = true).over(w))
-      .filter(col("__kind") === 1 && col("__filled").isNotNull)
-      .select(col(idCol), col(dayCol), col("__filled").as(valueCol))
+    (pts.unionByName(gridAligned), Window.partitionBy(col(idCol)).orderBy(order: _*))
   }
 
   /** Linear interpolation onto the dense daily grid — the continuous
@@ -112,27 +123,8 @@ object ForwardFill {
       tieBreak: Seq[String],
       start: String,
       end: String): DataFrame = {
-    val pts = changes
-      .select((Seq(idCol, dayCol, valueCol) ++ tieBreak).map(col): _*)
-      .na.drop(Seq(idCol, dayCol, valueCol))
-      .filter(col(dayCol) <= to_date(lit(end)))
-      .withColumn(valueCol, col(valueCol).cast("double"))
-      .withColumn("__kind", lit(0))
-
-    val grid = pts
-      .select(col(idCol)).distinct()
-      .select(
-        col(idCol),
-        explode(sequence(to_date(lit(start)), to_date(lit(end)), expr("interval 1 day")))
-          .as(dayCol))
-      .withColumn(valueCol, lit(null).cast("double"))
-      .withColumn("__kind", lit(1))
-    val gridAligned = tieBreak.foldLeft(grid) { (df, c) =>
-      df.withColumn(c, lit(null).cast(pts.schema(pts.schema.fieldIndex(c)).dataType))
-    }
-
-    val order = (Seq(col(dayCol), col("__kind")) ++ tieBreak.map(col)).map(_.asc)
-    val base = Window.partitionBy(col(idCol)).orderBy(order: _*)
+    val (rows, base) =
+      withGrid(changes, idCol, dayCol, valueCol, tieBreak, start, end, Some("double"))
     val back = base.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val fwd = base.rowsBetween(Window.currentRow, Window.unboundedFollowing)
     val changeDay = when(col("__kind") === 0, col(dayCol))
@@ -140,7 +132,7 @@ object ForwardFill {
 
     val days = (a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =>
       datediff(a, b).cast("double")
-    pts.unionByName(gridAligned)
+    rows
       .withColumn("__t0", last(changeDay, ignoreNulls = true).over(back))
       .withColumn("__v0", last(changeVal, ignoreNulls = true).over(back))
       .withColumn("__t1", first(changeDay, ignoreNulls = true).over(fwd))

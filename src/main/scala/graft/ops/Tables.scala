@@ -12,7 +12,7 @@ object Tables {
     *
     * `spark.read.parquet(path)` runs FOOTER-BASED SCHEMA INFERENCE on
     * every call — a driver-coordinated job costing a measured ~70-80 ms
-    * per call even for a one-file table (MicroProf, sf0.1: construction
+    * per call even for a one-file table (sf0.1: construction
     * 82 ms inferred vs 7.7 ms with a supplied schema; a trivial
     * scan-sum query drops 222 ms → 109 ms end-to-end). With ~600+
     * loader calls per bench pass that inference is tens of seconds of
@@ -66,7 +66,7 @@ object Tables {
     * mtime, type-affecting confs) — the catalog layer the schema cache
     * started (r17): even with the schema supplied, every
     * `spark.read.parquet` call re-builds a relation and re-runs
-    * analyzer resolution on it; RuleProf measured ResolveDataSource
+    * analyzer resolution on it; Catalyst rule metering put ResolveDataSource
     * alone at 2.6 s per warm suite pass (11,700 runs) on top of the
     * per-call FileIndex/LogicalRelation construction. A production
     * catalog resolves a table once per session — this cache IS that
@@ -78,12 +78,6 @@ object Tables {
     * stay sound (DeduplicateRelations, as for any twice-used frame). */
   private val frameCache =
     new SessionCache[(String, Long, String), DataFrame]("table:")
-
-  /** A/B escape hatch for measurement only (see MicroProf): bypasses the
-    * schema cache so the inferred-vs-supplied cost can be compared inside
-    * one JVM. */
-  private[graft] def schemaCacheDisabled: Boolean =
-    java.lang.Boolean.getBoolean("graft.tables.noSchemaCache")
 
   /** Reads a harness table, normalizing any TIMESTAMP_NTZ column to
     * TimestampType. The driver's parquet writer has flipped
@@ -101,13 +95,10 @@ object Tables {
       }.foldLeft(raw) { (df, c) =>
         df.withColumn(c, df.col(c).cast(org.apache.spark.sql.types.TimestampType))
       }
-    if (schemaCacheDisabled) normalize(spark.read.parquet(path))
-    else {
-      val stamp = cacheStamp(spark, path)
-      frameCache.getOrElseUpdate(spark, (path, stamp._1, stamp._2),
-        normalize(spark.read
-          .schema(inferredSchema(spark, path, stamp)).parquet(path)))
-    }
+    val stamp = cacheStamp(spark, path)
+    frameCache.getOrElseUpdate(spark, (path, stamp._1, stamp._2),
+      normalize(spark.read
+        .schema(inferredSchema(spark, path, stamp)).parquet(path)))
   }
 
   def lineitem(spark: SparkSession, d: String): DataFrame = t(spark, d, "lineitem")

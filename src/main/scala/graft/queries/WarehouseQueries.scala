@@ -2026,7 +2026,7 @@ object WarehouseQueries {
       val wp = Window.partitionBy(col("l_partkey")).orderBy(col("wk"))
       // EAGER checkpoint barrier: `bal` feeds TWO consumers (the top-20
       // ranking and the final detail join), and the planner duplicated
-      // the whole scan + weekly-agg + window chain under both (IoProf:
+      // the whole scan + weekly-agg + window chain under both (task input:
       // 1.2M records read = 2 full lineitem scans; AQE exchange reuse
       // does not fire because the inner join pushes IsNotNull(l_partkey)
       // into the probe branch only, de-canonicalizing the twins). One

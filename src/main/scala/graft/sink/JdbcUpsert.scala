@@ -2,7 +2,6 @@ package graft.sink
 
 import java.sql.{Connection, DriverManager, PreparedStatement}
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.types._
 
 /** Keyed-upsert JDBC sink — the reference's K1 operator
   * (`scripts/pricenow_etl.py:98-112` `upsert_df`: records in 1000-row
@@ -54,9 +53,12 @@ object JdbcUpsert {
       dialect: Dialect, batchSize: Int = 1000,
       connectionProps: Map[String, String] = Map.empty,
       writePartitions: Option[Int] = None): Unit = {
-    val schema = df.schema
-    val cols = schema.fieldNames.toSeq
+    val cols = df.schema.fieldNames.toSeq
     require(keys.nonEmpty && keys.forall(cols.contains), s"keys $keys must be columns")
+    // row ordinals, resolved once per upsert instead of per cell; a row's
+    // own ordinals are `cols`' indices
+    val keyIdx = keys.map(cols.indexOf(_)).toArray
+    val probeIdx = (cols.filterNot(keys.contains) ++ keys).map(cols.indexOf(_)).toArray
 
     val writeDf = writePartitions.map(df.coalesce).getOrElse(df)
     writeDf.foreachPartition { rows: Iterator[org.apache.spark.sql.Row] =>
@@ -68,12 +70,19 @@ object JdbcUpsert {
           conn.setAutoCommit(false)
           dialect match {
             case Dialect.Postgres =>
-              writeNative(conn, table, cols, keys, schema, rows, batchSize)
+              writeNative(conn, table, cols, keys, keyIdx, rows, batchSize)
             case Dialect.Generic =>
-              writeGeneric(conn, table, cols, keys, schema, rows, batchSize)
+              writeGeneric(conn, table, cols, keys, keyIdx, probeIdx, rows, batchSize)
           }
           conn.commit()
-        } finally conn.close()
+        } catch { case e: Throwable =>
+          // Roll back before close: closing with a transaction still open
+          // throws (Derby 25001), and that error would replace the cause.
+          try conn.rollback() catch { case r: Throwable => e.addSuppressed(r) }
+          try conn.close() catch { case c: Throwable => e.addSuppressed(c) }
+          throw e
+        }
+        conn.close()
       }
     }
   }
@@ -82,22 +91,23 @@ object JdbcUpsert {
     * (SQL NULL != NULL), so reruns would silently insert duplicates —
     * fail loudly instead, mirroring the reference's PK asserts
     * (ref :248-251, :271-274). */
-  private def requireKey(row: org.apache.spark.sql.Row, keys: Seq[String]): Unit =
-    keys.foreach { k =>
-      val v = row.get(row.fieldIndex(k))
+  private def requireKey(row: org.apache.spark.sql.Row, keys: Seq[String],
+      keyIdx: Array[Int]): Unit =
+    keyIdx.indices.foreach { i =>
+      val v = row.get(keyIdx(i))
       val nan = v match {
         case d: Double => d.isNaN
         case f: Float => f.isNaN
         case _ => false
       }
       require(v != null && !nan,
-        s"upsert key '$k' is null/NaN in $row — duplicates would accumulate")
+        s"upsert key '${keys(i)}' is null/NaN in $row — duplicates would accumulate")
     }
 
   /** NaN → NULL at the sink edge (ref `:93` `df.where(pd.notnull(df), None)`)
     * plus java.sql type bridging for the parameter at `idx`.
     */
-  private def bind(ps: PreparedStatement, idx: Int, value: Any, dt: DataType): Unit =
+  private def bind(ps: PreparedStatement, idx: Int, value: Any): Unit =
     value match {
       case null => ps.setNull(idx, java.sql.Types.NULL)
       case d: Double if d.isNaN => ps.setNull(idx, java.sql.Types.DOUBLE)
@@ -120,16 +130,14 @@ object JdbcUpsert {
 
   private def writeNative(
       conn: Connection, table: String, cols: Seq[String], keys: Seq[String],
-      schema: StructType, rows: Iterator[org.apache.spark.sql.Row],
+      keyIdx: Array[Int], rows: Iterator[org.apache.spark.sql.Row],
       batchSize: Int): Unit = {
     val ps = conn.prepareStatement(upsertSql(table, cols, keys))
     try {
       var n = 0
       rows.foreach { row =>
-        requireKey(row, keys)
-        cols.zipWithIndex.foreach { case (c, i) =>
-          bind(ps, i + 1, row.get(row.fieldIndex(c)), schema(c).dataType)
-        }
+        requireKey(row, keys, keyIdx)
+        cols.indices.foreach(i => bind(ps, i + 1, row.get(i)))
         ps.addBatch()
         n += 1
         if (n % batchSize == 0) { ps.executeBatch(); conn.commit() }
@@ -140,8 +148,8 @@ object JdbcUpsert {
 
   private def writeGeneric(
       conn: Connection, table: String, cols: Seq[String], keys: Seq[String],
-      schema: StructType, rows: Iterator[org.apache.spark.sql.Row],
-      batchSize: Int): Unit = {
+      keyIdx: Array[Int], probeIdx: Array[Int],
+      rows: Iterator[org.apache.spark.sql.Row], batchSize: Int): Unit = {
     val updatable = cols.filterNot(keys.contains)
     // all-key tables degrade to insert-if-absent: probe with SELECT instead
     val updateSql = if (updatable.nonEmpty)
@@ -157,16 +165,12 @@ object JdbcUpsert {
     try {
       var n = 0
       rows.foreach { row =>
-        requireKey(row, keys)
-        (updatable ++ keys).zipWithIndex.foreach { case (c, i) =>
-          bind(up, i + 1, row.get(row.fieldIndex(c)), schema(c).dataType)
-        }
+        requireKey(row, keys, keyIdx)
+        probeIdx.indices.foreach(i => bind(up, i + 1, row.get(probeIdx(i))))
         val hit = if (updatable.nonEmpty) up.executeUpdate() > 0
           else { val rs = up.executeQuery(); rs.next(); val c = rs.getLong(1); rs.close(); c > 0 }
         if (!hit) {
-          cols.zipWithIndex.foreach { case (c, i) =>
-            bind(ins, i + 1, row.get(row.fieldIndex(c)), schema(c).dataType)
-          }
+          cols.indices.foreach(i => bind(ins, i + 1, row.get(i)))
           ins.executeUpdate()
         }
         n += 1

@@ -1,13 +1,11 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.{GraftSession, SparkEntry}
 
-import graft.SparkEntry
-
-/** In-JVM A/B timing of a SESSION CONF change (the AbProf pattern —
-  * interleaved ABAB so box drift cancels): runs each named query `reps`
-  * times with the conf at its baseline value (A) and at the candidate
-  * value (B), alternating, and prints per-query medians plus the A/B
+/** In-JVM A/B timing of a SESSION CONF change (interleaved ABAB so box
+  * drift cancels): runs each named query `reps` times with the conf at
+  * its baseline value (A) and at the candidate value (B), alternating,
+  * on top of the shipped GraftSession config, and prints per-query medians plus the A/B
   * total. Timing covers CONSTRUCTION + count — the bench's exact timed
   * region — because planner confs (constraint propagation, CBO) spend
   * their time at construction.
@@ -23,18 +21,7 @@ object ConfAb {
     val valA = args(3)
     val valB = args(4)
     val reps = args.lift(5).map(_.toInt).getOrElse(3)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      // match the shipped harness config so candidate confs are measured
-      // ON TOP of what the driver runs (still overridable as the A/B key)
-      .config("spark.sql.constraintPropagation.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val names = SparkEntry.queries.keys.toSeq.sorted
       .filter(n => args(1) == "all" || pats.exists(n.contains))

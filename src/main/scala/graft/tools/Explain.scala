@@ -1,8 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
-import graft.SparkEntry
+import graft.{GraftSession, SparkEntry}
 
 /** Plan-inspection utility: prints the executed (post-AQE-planning) physical
   * plan for each named query. `runMain graft.tools.Explain <sfDir> <name-substrings>`.
@@ -13,15 +11,7 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val pats = args.lift(1).map(_.split(",").toSeq).getOrElse(Seq(""))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
+    val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     SparkEntry.queries.keys.toSeq.sorted
       .filter(n => pats.exists(n.contains))

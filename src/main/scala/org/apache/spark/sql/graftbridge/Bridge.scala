@@ -15,6 +15,11 @@ object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
+  /** Blocks until the listener bus has delivered every posted event
+    * (`SparkContext.listenerBus` is `private[spark]`). */
+  def drainListeners(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
+
   /** Runtime function registration (sessionState is `private[sql]`). */
   def registerFunction(
       spark: org.apache.spark.sql.SparkSession,

@@ -82,11 +82,16 @@ class JdbcUpsertSpec extends SparkSpec {
     withTable(
       "CREATE TABLE nullkey (k BIGINT, v BIGINT)", "nullkey") {
       val df = Seq((Some(1L), 1L), (None, 2L)).toDF("k", "v")
-      val e = intercept[org.apache.spark.SparkException] {
-        JdbcUpsert.upsert(df, url, "nullkey", Seq("k"), JdbcUpsert.Dialect.Generic)
+      // one writer: the bad row follows a good one inside an open
+      // transaction, and the cause must survive the connection's cleanup
+      Seq(None, Some(1)).foreach { writers =>
+        val e = intercept[org.apache.spark.SparkException] {
+          JdbcUpsert.upsert(df, url, "nullkey", Seq("k"), JdbcUpsert.Dialect.Generic,
+            writePartitions = writers)
+        }
+        assert(e.getMessage.contains("upsert key") ||
+          Option(e.getCause).exists(_.getMessage.contains("upsert key")), s"$writers: $e")
       }
-      assert(e.getMessage.contains("upsert key") ||
-        Option(e.getCause).exists(_.getMessage.contains("upsert key")))
     }
   }
 

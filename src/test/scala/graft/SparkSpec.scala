@@ -5,19 +5,11 @@ import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for all specs — one JVM-wide session (getOrCreate)
-  * so suites don't pay repeated startup, UTC + small shuffle partitions to
-  * match the harness config (Verify.scala).
+  * so suites don't pay repeated startup, built from the shipped config
+  * (GraftSession) at 4 cores.
   */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // match the shipped harness config (Bench/Verify): planner-CPU saver,
-    // results unchanged — see the Bench.scala note
-    .config("spark.sql.constraintPropagation.enabled", "false")
+  lazy val spark: SparkSession = GraftSession.builder(4)
     // per-JVM dir: concurrent sbt test runs must not share a warehouse
     // (saveAsTable in one run would clobber or lock the other's tables)
     .config("spark.sql.warehouse.dir",
