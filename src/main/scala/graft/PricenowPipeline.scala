@@ -18,6 +18,9 @@ import org.apache.spark.sql.functions._
   * Differences by design (SURVEY.md §3): the driver-side id-list collect at
   * ref :439 disappears — the engine joins instead; both tables derive from
   * lazy plans and load in two actions.
+  * EP2 runs once per load: its keys are non-nullable by schema (the grid
+  * day from `sequence`, `product_id` from the catalog), so the V2 check
+  * folds to an empty relation and only the upsert runs the EP2 lineage.
   */
 object PricenowPipeline {
 
@@ -74,8 +77,8 @@ object PricenowPipeline {
     * months converges — the parquet analog of the keyed upsert. Consumers
     * read one month via [[graft.sink.PartitionedParquet.readMonth]], which
     * prunes the scan to that partition (asserted in SinkLayoutSpec).
-    */
-  /** @param requireNonEmpty when true (the batch-CLI default), a requested
+    *
+    * @param requireNonEmpty when true (the batch-CLI default), a requested
     *   month whose recomputed slice is empty fails loudly — its stale
     *   partition would silently survive a dynamic overwrite. The streaming
     *   composition ([[graft.streaming.StreamingOps.incrementalRefreshSink]])

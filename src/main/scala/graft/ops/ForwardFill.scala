@@ -1,7 +1,7 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.{Window, WindowSpec}
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** As-of forward-fill onto a dense daily calendar (LOCF) — the reference's
@@ -19,15 +19,17 @@ import org.apache.spark.sql.functions._
   *   - several changes on one (id, day): the last in tie-break order wins
   *     (ref :214 stable sort + pointer walk — last-in-order wins).
   *
-  * Spark-first design — ONE shuffle total: instead of (join grid with
-  * changes) + (window over id) — two shuffles — we UNION the change points
-  * with the generated grid rows and run a single running
-  * `last(value, ignoreNulls)` window partitioned by id. Change rows sort
-  * before the grid row of the same day (kind 0 < 1), so the frame ending at
-  * each grid row sees exactly the changes <= that day, latest last. At 100 TB
-  * the window partitions by id (bounded state: one running value per
-  * partition, no spill risk); skewed ids are handled by AQE since the only
-  * exchange is the window's hash partitioning.
+  * Spark-first design — expansion after ONE shuffle of the change points:
+  * a single window partitioned by id and ordered by (day, tie-breaks) runs
+  * over the change points only and pairs each point with its successor via
+  * `lead`. A point owns the days from its own day (clamped to the grid
+  * start) up to the day before its successor (or the grid end); the last
+  * same-day tie is the only one whose range is non-empty. Each point then
+  * explodes into its days map-side, after the exchange, so the dense grid
+  * is never shuffled or sorted: shuffle volume is the change count, not
+  * ids × days. At 100 TB the window sorts and buffers change rows only;
+  * skewed ids are handled by AQE since the only exchange is the window's
+  * hash partitioning.
   */
 object ForwardFill {
 
@@ -48,51 +50,38 @@ object ForwardFill {
       valueCol: String,
       tieBreak: Seq[String],
       start: String,
-      end: String): DataFrame = {
-    val (rows, base) =
-      withGrid(changes, idCol, dayCol, valueCol, tieBreak, start, end, None)
-    rows
-      .withColumn("__filled", last(col(valueCol), ignoreNulls = true)
-        .over(base.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      .filter(col("__kind") === 1 && col("__filled").isNotNull)
-      .select(col(idCol), col(dayCol), col("__filled").as(valueCol))
-  }
+      end: String): DataFrame =
+    expand(changes, idCol, dayCol, valueCol, tieBreak, start, end, None)
+      .select(col(idCol), col(dayCol), col(valueCol))
 
-  /** The change points (`__kind` 0) unioned with the dense grid rows
-    * (`__kind` 1, null value and tie-breaks), plus the per-id window order
-    * both grids run their frames over.
-    *
-    * Points: rows with a null id, day or value are dropped, and so are
-    * changes after `end`; `valueType` casts the value after that filter.
-    * Grid: one row per day of [start, end] for every id that has at least
-    * one usable point — sequence+explode is generated map-side off the
-    * (small) distinct-id set. Order: day, then `__kind`, then the
-    * tie-breaks; `__kind` dominates the tie-break columns, so grid rows
-    * (all-null ties) sort after every change row of the same day.
+  /** One row per (id, grid day `dayCol`): the point in force (`__t0`,
+    * `valueCol`) and its successor in (day, tieBreak) order (`__t1`, `__v1`).
+    * Points with a null id, day or value, or after `end`, are dropped before
+    * the `valueType` cast; null ties sort first. A point covers
+    * [max(day, start), next day - 1] (or `end`); empty ranges — a tie that is
+    * not the last, a point overtaken before `start` — are dropped first, as
+    * `sequence` rejects start > stop.
     */
-  private def withGrid(
+  private def expand(
       changes: DataFrame, idCol: String, dayCol: String, valueCol: String,
       tieBreak: Seq[String], start: String, end: String,
-      valueType: Option[String]): (DataFrame, WindowSpec) = {
+      valueType: Option[String]): DataFrame = {
     val kept = changes
       .select((Seq(idCol, dayCol, valueCol) ++ tieBreak).map(col): _*)
       .na.drop(Seq(idCol, dayCol, valueCol))
       .filter(col(dayCol) <= to_date(lit(end)))
     val pts = valueType.fold(kept)(t => kept.withColumn(valueCol, col(valueCol).cast(t)))
-      .withColumn("__kind", lit(0))
-    val grid = pts
-      .select(col(idCol)).distinct()
-      .select(
-        col(idCol),
-        explode(sequence(to_date(lit(start)), to_date(lit(end)), expr("interval 1 day")))
-          .as(dayCol))
-      .withColumn(valueCol, lit(null).cast(pts.schema(valueCol).dataType))
-      .withColumn("__kind", lit(1))
-    val gridAligned = tieBreak.foldLeft(grid) { (df, c) =>
-      df.withColumn(c, lit(null).cast(pts.schema(c).dataType))
-    }
-    val order = (Seq(col(dayCol), col("__kind")) ++ tieBreak.map(col)).map(_.asc)
-    (pts.unionByName(gridAligned), Window.partitionBy(col(idCol)).orderBy(order: _*))
+    val byDay = Window.partitionBy(col(idCol)).orderBy((dayCol +: tieBreak).map(col(_).asc): _*)
+    pts
+      .select(col(idCol), col(dayCol).as("__t0"), col(valueCol),
+        lead(col(dayCol), 1).over(byDay).as("__t1"),
+        lead(col(valueCol), 1).over(byDay).as("__v1"))
+      .withColumn("__lo", greatest(col("__t0"), to_date(lit(start))))
+      .withColumn("__hi", coalesce(date_sub(col("__t1"), 1), to_date(lit(end))))
+      .filter(col("__lo") <= col("__hi"))
+      .select(col(idCol),
+        explode(sequence(col("__lo"), col("__hi"), expr("interval 1 day"))).as(dayCol),
+        col(valueCol), col("__t0"), col("__t1"), col("__v1"))
   }
 
   /** Linear interpolation onto the dense daily grid — the continuous
@@ -107,13 +96,10 @@ object ForwardFill {
     * Boundary conventions: days before an id's first change emit no row
     * (LOCF parity); days after the last change carry it forward flat.
     *
-    * Same single-shuffle plan as LOCF — union change points with grid
-    * rows, then two mirrored running windows over the ONE hash exchange:
-    * a backward `last(_, ignoreNulls)` for (t0, v0) and a forward
-    * `first(_, ignoreNulls)` for (t1, v1). Day and value ride separate
-    * window expressions over the same frame (they are null on exactly the
-    * same rows, so the pair stays consistent). Value lands as double;
-    * callers own any cross-engine rounding of the interpolated output.
+    * Same expansion plan as LOCF: the day's winning point is (t0, v0) and
+    * its `lead` is (t1, v1) — the first tie of the next change day, since
+    * the winner is the last tie of its own. Value lands as double; callers
+    * own any cross-engine rounding of the interpolated output.
     */
   def interpolatedGrid(
       changes: DataFrame,
@@ -123,24 +109,12 @@ object ForwardFill {
       tieBreak: Seq[String],
       start: String,
       end: String): DataFrame = {
-    val (rows, base) =
-      withGrid(changes, idCol, dayCol, valueCol, tieBreak, start, end, Some("double"))
-    val back = base.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val fwd = base.rowsBetween(Window.currentRow, Window.unboundedFollowing)
-    val changeDay = when(col("__kind") === 0, col(dayCol))
-    val changeVal = when(col("__kind") === 0, col(valueCol))
-
-    val days = (a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =>
-      datediff(a, b).cast("double")
-    rows
-      .withColumn("__t0", last(changeDay, ignoreNulls = true).over(back))
-      .withColumn("__v0", last(changeVal, ignoreNulls = true).over(back))
-      .withColumn("__t1", first(changeDay, ignoreNulls = true).over(fwd))
-      .withColumn("__v1", first(changeVal, ignoreNulls = true).over(fwd))
-      .filter(col("__kind") === 1 && col("__v0").isNotNull)
+    val days = (a: Column, b: Column) => datediff(a, b).cast("double")
+    val (v0, v1) = (col(valueCol), col("__v1"))
+    expand(changes, idCol, dayCol, valueCol, tieBreak, start, end, Some("double"))
       .select(col(idCol), col(dayCol),
-        when(col("__t1").isNull, col("__v0"))
-          .otherwise(col("__v0") + (col("__v1") - col("__v0"))
+        when(col("__t1").isNull, v0)
+          .otherwise(v0 + (v1 - v0)
             * (days(col(dayCol), col("__t0")) / days(col("__t1"), col("__t0"))))
           .as(valueCol))
   }

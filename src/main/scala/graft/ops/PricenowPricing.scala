@@ -33,6 +33,8 @@ object PricenowPricing {
   /** T10+T11+T12+T14 composed: dense grid -> broadcast dim join -> derived
     * columns. `products` is the small catalog dimension — explicitly
     * broadcast, mirroring the reference's in-memory `duration_map` dict.
+    * On the USING join's left, it supplies the output `product_id` and its
+    * nullability: the page source's non-nullable key proves V2 by schema.
     */
   def priceTable(
       grid: DataFrame,
@@ -40,8 +42,8 @@ object PricenowPricing {
       dayCol: String,
       seasonEnd: String,
       updatedAt: String): DataFrame =
-    grid
-      .join(broadcast(products.select(col("product_id"), col("duration_days"))), "product_id")
+    broadcast(products.select(col("product_id"), col("duration_days")))
+      .join(grid, "product_id")
       .withColumn("days_between", daysBetween(col(dayCol), seasonEnd))
       .withColumn("active", activeFlag(col("days_between"), col("duration_days")))
       .withColumn("updated_at", to_timestamp(lit(updatedAt)))

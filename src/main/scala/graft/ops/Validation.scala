@@ -10,9 +10,12 @@ import org.apache.spark.sql.functions._
   */
 object Validation {
 
-  /** Rows violating a multi-column NOT NULL constraint. */
-  def nullViolations(df: DataFrame, keys: Seq[String]): DataFrame =
+  /** Rows violating a multi-column NOT NULL constraint (empty, with no job,
+    * when the schema declares every key non-nullable). */
+  def nullViolations(df: DataFrame, keys: Seq[String]): DataFrame = {
+    require(keys.nonEmpty, "nullViolations: at least one key column is required")
     df.filter(keys.map(col(_).isNull).reduce(_ || _))
+  }
 
   /** Per-key null counts — a one-row profile of constraint health. */
   def nullCounts(df: DataFrame, keys: Seq[String]): DataFrame =

@@ -81,7 +81,7 @@ object CoreQueries {
     * and change-point semantics, but gap days take the straight line
     * between the surrounding change points instead of the step function
     * (see [[ForwardFill.interpolatedGrid]] for the boundary conventions
-    * and the shared single-shuffle union+window plan).
+    * and the shared expansion plan; the oracle keeps union+window).
     */
   private val interpEvents = QueryDef(
     fn = (spark, dir) => {

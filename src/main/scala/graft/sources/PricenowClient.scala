@@ -12,7 +12,7 @@ import com.fasterxml.jackson.databind.ObjectMapper
   *  - JSON disk cache with absolute `expires_at` (S8, ref :20-34)
   *  - authed GET retried ONCE on 401 after a forced refresh (S10/S11, ref :71-85)
   *  - exhaustive pagination: stop on short or empty page, `maxPages`
-  *    runaway guard (S3, ref :179-190)
+  *    runaway guard that throws rather than truncate (S3, ref :179-190)
   *
   * Ingest stays a driver concern (Spark has no HTTP source); the landed
   * payloads feed [[PricenowCatalogSource]] / `from_json` downstream. In
@@ -110,7 +110,8 @@ class PricenowClient(
     PricenowCatalogSource.extractRows(root).map(_.toString).toSeq
   }
 
-  /** S3: loop pages until a short or empty page; maxPages runaway guard. */
+  /** S3: loop pages until a short or empty page; reaching `maxPages` first
+    * throws, since rows may remain (a runaway guard, never a truncation). */
   def getPricesAll(
       ids: Seq[Long], from: String, to: String,
       pageSize: Int = 1000, maxPages: Int = 1000): Seq[String] = {
@@ -123,6 +124,9 @@ class PricenowClient(
       done = rows.size < pageSize || rows.isEmpty
       page += 1
     }
+    if (!done) throw new IllegalStateException(
+      s"getPricesAll: hit maxPages = $maxPages before a short or empty page; " +
+        "rows may remain and the result would be truncated")
     out.result()
   }
 }

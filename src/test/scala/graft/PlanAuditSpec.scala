@@ -271,6 +271,19 @@ class PlanAuditSpec extends SparkSpec {
     assert(hashEx == 1, s"expected 1 hash exchange, got $hashEx")
   }
 
+  test("LOCF and interpolation expand after ONE shuffle of the change points") {
+    // the grid is exploded map-side after the window's exchange: no
+    // distinct-id stage, no second scan of the changes, no union with the
+    // dense grid; the final orderBy is a range exchange, not a hash one
+    Seq("f1_locf_events", "q_interpolate_linear").foreach { q =>
+      val p = plan(q)
+      val hashEx = "Exchange hashpartitioning".r.findAllIn(p).length
+      assert(hashEx == 1, s"$q: expected 1 hash exchange, got $hashEx")
+      val scans = p.linesIterator.count(_.contains("events.parquet"))
+      assert(scans == 1, s"$q: expected 1 events scan, got $scans")
+    }
+  }
+
   test("sketch probes broadcast the sketch, never shuffle the probe side against data") {
     Seq("q_cms_topk", "q_bloom_decontaminate").foreach { q =>
       val p = plan(q)

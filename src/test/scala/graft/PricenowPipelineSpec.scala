@@ -1,18 +1,63 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Path}
 import java.sql.DriverManager
+import java.util.concurrent.atomic.AtomicInteger
+import graft.ops.Validation
 import graft.sink.JdbcUpsert
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** End-to-end reference-pipeline parity: catalog pages -> dense price grid
   * with active flags -> keyed tables in (Derby-emulated) Postgres, rerun
-  * idempotence included.
+  * idempotence included; and the EP2-once contract of the load.
   */
 class PricenowPipelineSpec extends SparkSpec {
   import spark.implicits._
 
   private val url = "jdbc:derby:memory:pipeline;create=true"
+
+  private def writePages(): Path = {
+    val pages = Files.createTempDirectory("pages")
+    Files.writeString(pages.resolve("page-0.json"),
+      """{"data": [
+        | {"name": "skitickets", "productDefinitions": [
+        |   {"id": 101, "attributes": {"age": {"value": "adult"}, "duration": {"value": "1d"}}},
+        |   {"id": 103, "attributes": {"age": {"value": "small_child"}, "duration": {"value": "1d"}}}]},
+        | {"name": "wintercard", "productDefinitions": [
+        |   {"id": 201, "attributes": {"age": {"value": "adult"}, "duration": {"value": "13d"}}}]}]}""".stripMargin)
+    pages
+  }
+
+  private def changesDf: DataFrame = Seq(
+      (101L, Some("2025-12-01"), Some(5000), 1), // pre-season seed
+      (101L, Some("2026-01-10"), Some(6500), 2),
+      (201L, Some("2026-04-01"), Some(9000), 3)) // late first change -> leading gap
+    .toDF("product_id", "d", "price", "ord")
+    .withColumn("valid_at", to_date(col("d"))).drop("d")
+
+  /** Jobs launched by `body`, counted under a job group of its own. */
+  private def jobsOf(body: => Unit): Int = {
+    val group = s"jobs-of-${System.nanoTime()}"
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "job count probe")
+    try body
+    finally {
+      sc.clearJobGroup()
+      Bridge.drainListeners(sc)
+      sc.removeSparkListener(listener)
+    }
+    jobs.get
+  }
 
   test("full EP1->EP2->EP3 run lands both tables; rerun converges") {
     val conn = DriverManager.getConnection(url)
@@ -32,21 +77,8 @@ class PricenowPipelineSpec extends SparkSpec {
           |  PRIMARY KEY (product_id, valid_from))""".stripMargin)
     } finally conn.close()
 
-    val pages = Files.createTempDirectory("pages")
-    Files.writeString(pages.resolve("page-0.json"),
-      """{"data": [
-        | {"name": "skitickets", "productDefinitions": [
-        |   {"id": 101, "attributes": {"age": {"value": "adult"}, "duration": {"value": "1d"}}},
-        |   {"id": 103, "attributes": {"age": {"value": "small_child"}, "duration": {"value": "1d"}}}]},
-        | {"name": "wintercard", "productDefinitions": [
-        |   {"id": 201, "attributes": {"age": {"value": "adult"}, "duration": {"value": "13d"}}}]}]}""".stripMargin)
-
-    val changes = Seq(
-      (101L, Some("2025-12-01"), Some(5000), 1), // pre-season seed
-      (101L, Some("2026-01-10"), Some(6500), 2),
-      (201L, Some("2026-04-01"), Some(9000), 3)) // late first change -> leading gap
-      .toDF("product_id", "d", "price", "ord")
-      .withColumn("valid_at", to_date(col("d"))).drop("d")
+    val pages = writePages()
+    val changes = changesDf
 
     val cfg = PricenowPipeline.Config(
       updatedAt = "2026-04-01 06:00:00", jdbcUrl = url,
@@ -90,5 +122,35 @@ class PricenowPipelineSpec extends SparkSpec {
       rsN.next()
       assert(rsN.getInt(1) == 133)
     } finally c2.close()
+  }
+
+  test("EP2 runs once per load: the V2 key check is proven by schema and launches no job") {
+    val cfg = PricenowPipeline.Config(updatedAt = "2026-04-01 06:00:00", jdbcUrl = url)
+    val catalog = PricenowPipeline.products(spark, writePages().toString, cfg)
+    val prices = PricenowPipeline.prices(changesDf, catalog, cfg)
+    Seq("product_id", "valid_from").foreach { k =>
+      assert(!prices.schema(k).nullable, s"$k must be non-nullable in the EP2 schema")
+    }
+    val keys = Seq("product_id", "valid_from")
+    assert(jobsOf(Validation.requireNonNull(prices, keys)) == 0,
+      "the null-key check recomputed the EP2 lineage")
+    assert(jobsOf(prices.count()) > 0, "the probe must see the lineage's own jobs")
+
+    // a frame whose key is nullable in the schema is still checked for real
+    val nullable = Seq((Some(1L), "2026-01-01"), (None, "2026-01-02"))
+      .toDF("product_id", "d").withColumn("valid_from", to_date(col("d"))).drop("d")
+    val err = intercept[IllegalArgumentException](Validation.requireNonNull(nullable, keys))
+    assert(err.getMessage.contains("product_id/valid_from") && err.getMessage.contains("null"),
+      err.getMessage)
+  }
+
+  test("Validation rejects an empty key list by name, not with an opaque reduce error") {
+    val df = Seq(1L).toDF("product_id")
+    Seq[() => Any](
+      () => Validation.nullViolations(df, Nil),
+      () => Validation.requireNonNull(df, Nil)).foreach { call =>
+      val err = intercept[IllegalArgumentException](call())
+      assert(err.getMessage.contains("at least one key"), err.getMessage)
+    }
   }
 }

@@ -119,7 +119,15 @@ class SourcesSpec extends SparkSpec {
     val capped = new PricenowClient(
       transport = (_, _, _) => (200, pageBody(3)), // never short
       fetchToken = () => ("t", 3600L))
-    assert(capped.getPricesAll(Seq(1L), "a", "b", pageSize = 3, maxPages = 5).size == 15)
+    // five full pages and no short one: rows may remain, so no silent truncation
+    val err = intercept[IllegalStateException](
+      capped.getPricesAll(Seq(1L), "a", "b", pageSize = 3, maxPages = 5))
+    assert(err.getMessage.contains("maxPages = 5"), err.getMessage)
+    // a short page on the last allowed fetch is a complete result
+    val exact = new PricenowClient(
+      transport = (_, params, _) => (200, pageBody(if (params("page").toInt < 4) 3 else 2)),
+      fetchToken = () => ("t", 3600L))
+    assert(exact.getPricesAll(Seq(1L), "a", "b", pageSize = 3, maxPages = 5).size == 14)
   }
 
   test("S1 getProducts sends page/orderBy/orderDirection with reference defaults (ref :115-121)") {
