@@ -5,6 +5,7 @@ import graft.sink.JdbcUpsert
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.types.{LongType, StructType}
 
 /** Structured Streaming surface (SURVEY.md §2.3 streaming row): the
   * reference is batch-only (cron 2×/day = micro-batch by scheduler), so
@@ -542,7 +543,16 @@ object StreamingOps {
     * sink's persisted contract is row-SET equality per batch_id
     * partition, never row order. The written partitions also come out
     * at cluster parallelism, so downstream state re-reads parallelize
-    * without a second repartition. */
+    * without a second repartition.
+    *
+    * Used by the six sinks whose per-row work costs milliseconds:
+    * [[ivfStateSink]], [[minhashStateSink]], [[rootsStateSink]],
+    * [[knnStateSink]], [[phashStateSink]] and [[pqStateSink]].
+    * [[invertedStateSink]] does not fan out: tokenizing costs
+    * microseconds per row, so the extra `count()` job and round-robin
+    * shuffle would cost more than the single-task map side they spread,
+    * and its tf aggregation's exchange already redistributes the rows
+    * (the file source also splits a large batch by bytes). */
   /** Rows per fan-out task: small, because the per-row work these sinks
     * fan out for is heavy (tokenize + 16-way minhash, PQ coding, LSH
     * signing — milliseconds per row), so even a few-hundred-row batch
@@ -932,9 +942,27 @@ object StreamingOps {
       .select(col("node_id"), col("neighbor_id"), col("cos"), col("rank"))
   }
 
+  /** The inverted index's four stores, declared once: the sink writes
+    * exactly these columns (doc_id BIGINT, which [[invertedStateSink]]
+    * requires of its id column), and every read-back names its columns
+    * from here instead of inferring them — a parquet schema inference is
+    * one job per read. A new store column goes into its schema here. */
+  private[graft] object TextStore {
+    val tf: StructType = StructType.fromDDL("doc_id BIGINT, token STRING, tf BIGINT")
+    val dl: StructType = StructType.fromDDL("doc_id BIGINT, dl BIGINT")
+    val df: StructType = StructType.fromDDL("token STRING, df BIGINT")
+    val global: StructType = StructType.fromDDL("n_docs BIGINT, sum_dl BIGINT")
+
+    /** `cols` of a store at `path`, read with their declared types. */
+    def read(sess: SparkSession, store: StructType, path: String,
+        cols: String*): DataFrame =
+      sess.read.schema(StructType(cols.map(store(_)))).parquet(path)
+  }
+
   /** Streaming INVERTED-INDEX maintenance — the text-retrieval sibling of
     * [[knnStateSink]], same snapshot-generation state contract. The
-    * persisted state under `indexPath` is:
+    * persisted state under `indexPath` ([[TextStore]] declares each
+    * store's schema) is:
     *
     *  - `tf/batch_id=N` — (doc_id, token, tf): the batch's postings,
     *    append-only, idempotent per-batch overwrite (at 100 TB this
@@ -942,9 +970,15 @@ object StreamingOps {
     *    to its buckets instead of scanning batches);
     *  - `dl/batch_id=N` — (doc_id, dl): per-doc lengths, append-only;
     *  - `df/batch_id=N` — FULL vocabulary (token, df) snapshot:
-    *    previous snapshot ∪ the batch's df delta, group-summed
+    *    previous snapshot ∪ the batch's postings, group-summed
     *    (vocabulary-scale, not corpus-scale);
     *  - `global/batch_id=N` — one row (n_docs, sum_dl).
+    *
+    * Per micro-batch the batch is tokenized ONCE: `(doc_id, tokens)` is
+    * persisted, the dl and tf partitions are written from it, and it is
+    * unpersisted before [[foldTextStats]] folds the stats. The sink does
+    * not [[fanOut]]: tokenizing costs microseconds per row, and the tf
+    * aggregation's exchange redistributes the rows anyway.
     *
     * N micro-batches ≡ one one-shot index build, exactly: postings and
     * doc lengths are per-doc facts that land once (cross-batch doc-id
@@ -958,68 +992,86 @@ object StreamingOps {
     * that drift as a vocabulary-scale merge instead of a corpus rescan.
     * `q_bm25_stream` oracle-gates the streamed index against the
     * one-shot exhaustive ranking; StreamingInvertedSpec proves
-    * N batches ≡ one-shot, replay idempotence, and the GC invariant.
+    * N batches ≡ one-shot, replay idempotence, the GC invariant, store
+    * parity on docs without tokens, and the per-batch job count.
     * GC keeps each snapshot's immediate predecessor, so a foreachBatch
     * replay of batch N recomputes snapshot N byte-identically. */
   def invertedStateSink(
       docs: DataFrame, idCol: String, textCol: String,
       indexPath: String, checkpointDir: String,
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
+      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
+    val idType = docs.schema(idCol).dataType
+    require(idType == LongType,
+      s"invertedStateSink: $idCol must be BIGINT (the stores declare doc_id " +
+        s"BIGINT), got ${idType.sql}")
     docs.writeStream
       .outputMode(OutputMode.Update())
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
-      .foreachBatch { (batch0: DataFrame, batchId: Long) =>
-        val batch = fanOut(batch0)
-        val sess = batch.sparkSession
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val toks = batch.select(col(idCol).as("doc_id"),
-          graft.ops.TextAnalysis.tokens(col(textCol)).as("toks"))
-        toks.select(col("doc_id"), explode(col("toks")).as("token"))
-          .groupBy(col("doc_id"), col("token"))
-          .agg(count(lit(1)).as("tf"))
-          .write.mode("overwrite")
-          .parquet(s"$indexPath/tf/batch_id=$batchId")
-        toks.select(col("doc_id"), size(col("toks")).cast("long").as("dl"))
-          .write.mode("overwrite")
-          .parquet(s"$indexPath/dl/batch_id=$batchId")
-        foldTextStats(sess, indexPath, batchId)
+          graft.ops.TextAnalysis.tokens(col(textCol)).as("toks")).persist()
+        try {
+          // dl first: its exchange-free write fills the cache in its own
+          // job, where the tf write (planned adaptively) would spend a
+          // separate job materializing it
+          toks.select(col("doc_id"), size(col("toks")).cast("long").as("dl"))
+            .write.mode("overwrite")
+            .parquet(s"$indexPath/dl/batch_id=$batchId")
+          toks.select(col("doc_id"), explode(col("toks")).as("token"))
+            .groupBy(col("doc_id"), col("token"))
+            .agg(count(lit(1)).as("tf"))
+            .write.mode("overwrite")
+            .parquet(s"$indexPath/tf/batch_id=$batchId")
+        } finally toks.unpersist()
+        foldTextStats(batch.sparkSession, indexPath, batchId)
       }
       .start()
+  }
 
   /** The stats fold of [[invertedStateSink]], exposed for replay tests:
-    * derive the landed batch's df delta and length totals from its OWN
-    * tf/dl partitions (so a replay re-derives identical deltas), merge
-    * with the predecessor snapshots, land generation `batchId`, GC. */
+    * derive the landed batch's df and length contributions from its OWN
+    * tf/dl partitions (so a replay re-derives identical deltas), fold
+    * each with the predecessor snapshot in ONE aggregation — df groups
+    * `prior ∪ (token, 1)` per posting by token; global sums
+    * `prior ∪ (1, dl)` per doc — land generation `batchId`, GC. Integer
+    * sums over disjoint doc sets, so the result equals a per-batch delta
+    * folded into the prior. Every read declares its columns
+    * ([[TextStore]]), so the fold runs no schema-inference job. */
   private[graft] def foldTextStats(sess: SparkSession,
       indexPath: String, batchId: Long): Unit = {
-    val tfN = sess.read.parquet(s"$indexPath/tf/batch_id=$batchId")
-    val dlN = sess.read.parquet(s"$indexPath/dl/batch_id=$batchId")
-    val dfDelta = tfN.groupBy(col("token")).agg(count(lit(1)).as("df"))
-    val df = latestSnapshotBefore(sess, s"$indexPath/df", batchId)
-      .map(_.select(col("token"), col("df")).union(dfDelta))
-      .getOrElse(dfDelta)
+    def withPrior(store: String, schema: StructType,
+        delta: DataFrame): DataFrame =
+      latestSnapshotBefore(sess, s"$indexPath/$store", batchId, schema)
+        .fold(delta)(_.union(delta))
+    val tfN = TextStore.read(sess, TextStore.tf,
+      s"$indexPath/tf/batch_id=$batchId", "token")
+    val dlN = TextStore.read(sess, TextStore.dl,
+      s"$indexPath/dl/batch_id=$batchId", "dl")
+    withPrior("df", TextStore.df, tfN.select(col("token"), lit(1L).as("df")))
       .groupBy(col("token")).agg(sum(col("df")).as("df"))
-    df.write.mode("overwrite").parquet(s"$indexPath/df/batch_id=$batchId")
-    val gDelta = dlN.agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("sum_dl"))
-    val g = latestSnapshotBefore(sess, s"$indexPath/global", batchId)
-      .map(_.select(col("n_docs"), col("sum_dl")).union(gDelta)
-        .agg(sum(col("n_docs")).as("n_docs"), sum(col("sum_dl")).as("sum_dl")))
-      .getOrElse(gDelta)
-    g.coalesce(1).write.mode("overwrite")
+      .write.mode("overwrite").parquet(s"$indexPath/df/batch_id=$batchId")
+    withPrior("global", TextStore.global,
+        dlN.select(lit(1L).as("n_docs"), col("dl").as("sum_dl")))
+      .agg(coalesce(sum(col("n_docs")), lit(0L)).as("n_docs"),
+        sum(col("sum_dl")).as("sum_dl"))
+      .coalesce(1).write.mode("overwrite")
       .parquet(s"$indexPath/global/batch_id=$batchId")
     gcRootSnapshots(sess, s"$indexPath/df", batchId)
     gcRootSnapshots(sess, s"$indexPath/global", batchId)
   }
 
   /** The newest snapshot strictly before `batchId` under a generation
-    * store, whatever its schema ([[latestRootsBefore]] generalized). */
+    * store ([[latestRootsBefore]] generalized), read with the store's
+    * declared `schema` — no schema-inference job. */
   private def latestSnapshotBefore(sess: SparkSession,
-      storePath: String, batchId: Long): Option[DataFrame] = {
+      storePath: String, batchId: Long,
+      schema: StructType): Option[DataFrame] = {
     val root = new org.apache.hadoop.fs.Path(storePath)
     val fs = root.getFileSystem(sess.sparkContext.hadoopConfiguration)
     if (!fs.exists(root)) None
     else snapshotIds(fs, root).filter(_ < batchId).maxOption
-      .map(b => sess.read.parquet(s"$storePath/batch_id=$b"))
+      .map(b => sess.read.schema(schema).parquet(s"$storePath/batch_id=$b"))
   }
 
   /** BM25 top-k served FROM the maintained inverted-index state: term
@@ -1030,7 +1082,8 @@ object StreamingOps {
     * into DECIMAL(18,6), decimal sum — see
     * [[graft.queries.MaxScoreQueries]]), and the maintained counts equal
     * the one-shot counts, so the served scores are bit-identical to a
-    * full rebuild's. */
+    * full rebuild's. The four stores are read with their declared
+    * schemas ([[TextStore]]), so construction launches no job. */
   def invertedStateBm25(sess: SparkSession, indexPath: String,
       terms: Seq[String], k: Int): DataFrame = {
     import org.apache.spark.sql.types.DecimalType
@@ -1044,18 +1097,21 @@ object StreamingOps {
     // on disk); limit(1) encodes that contract in the plan — a corrupted
     // multi-row snapshot cannot fan the cross-attachment out, and the
     // boundedness is visible to plan lints (the on-disk Aggregate is not)
-    val stats = sess.read.parquet(s"$indexPath/global/batch_id=$latest")
+    val stats = TextStore.read(sess, TextStore.global,
+        s"$indexPath/global/batch_id=$latest", "n_docs", "sum_dl")
       .limit(1)
       .select(col("n_docs").cast("double").as("n"),
         (col("sum_dl").cast("double") / col("n_docs").cast("double"))
           .as("avgdl"))
-    val dfT = sess.read.parquet(s"$indexPath/df/batch_id=$latest")
+    val dfT = TextStore.read(sess, TextStore.df,
+        s"$indexPath/df/batch_id=$latest", "token", "df")
       .filter(col("token").isin(terms: _*))
       .select(col("token"), col("df").cast("double").as("df"))
-    val tf = sess.read.parquet(s"$indexPath/tf")
+    val tf = TextStore.read(sess, TextStore.tf, s"$indexPath/tf",
+        "doc_id", "token", "tf")
       .filter(col("token").isin(terms: _*))
       .select(col("doc_id"), col("token"), col("tf").cast("double").as("tf"))
-    val dl = sess.read.parquet(s"$indexPath/dl")
+    val dl = TextStore.read(sess, TextStore.dl, s"$indexPath/dl", "doc_id", "dl")
       .select(col("doc_id"), col("dl").cast("double").as("dl"))
     val perTerm = tf.join(broadcast(dfT), "token")
       .join(dl, "doc_id")

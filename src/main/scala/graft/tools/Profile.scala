@@ -2,7 +2,7 @@ package graft.tools
 
 import java.util.concurrent.atomic.LongAdder
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.catalyst.rules.RuleExecutor
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.Exchange
@@ -19,6 +19,9 @@ import graft.ops.SessionCache
   *               in name order, as in a cold bench pass;
   *   - build_s   median warm construction, up to `executedPlan`;
   *   - exec_s    median warm `count()` of the last constructed frame;
+  *   - first_jobs  jobs launched during the first touch;
+  *   - build_jobs  jobs launched during the median warm construction —
+  *               the jobs construction itself launches (zero is the goal);
   *   - in_bytes, shuffle_read_bytes, tasks   of the last warm `count()`;
   *   - exchange, smj, bhj, bnlj   node counts in that count's final plan.
   * Then the suite sums and the Catalyst per-rule times of the warm
@@ -35,9 +38,11 @@ object Profile extends AdaptiveSparkPlanHelper {
     val spark = GraftSession.builder().getOrCreate()
     val sc = spark.sparkContext
     sc.setLogLevel("ERROR")
-    // input bytes, shuffle-read bytes, tasks
+    // input bytes, shuffle-read bytes, tasks; and jobs started
     val io = Seq.fill(3)(new LongAdder)
+    val jobs = new LongAdder
     sc.addSparkListener(new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit = jobs.increment()
       override def onTaskEnd(te: SparkListenerTaskEnd): Unit =
         Option(te.taskMetrics).foreach { m =>
           io(0).add(m.inputMetrics.bytesRead)
@@ -49,6 +54,12 @@ object Profile extends AdaptiveSparkPlanHelper {
       val t0 = System.nanoTime(); val r = f; (r, (System.nanoTime() - t0) / 1e9)
     }
     def med(xs: Seq[Double]) = xs.sorted.apply(xs.size / 2)
+    // the jobs `f` launched, as a double for the row
+    def counted[T](f: => T): (T, Double) = {
+      Bridge.drainListeners(sc); jobs.reset()
+      val r = f
+      Bridge.drainListeners(sc); (r, jobs.sum.toDouble)
+    }
     def attempt[T](name: String, phase: String)(f: => T): Option[T] =
       try Some(f) catch { case e: Throwable =>
         println(s"$name\tFAILED ($phase)\t${e.getMessage}"); None }
@@ -61,29 +72,31 @@ object Profile extends AdaptiveSparkPlanHelper {
     val first = names.flatMap { name =>
       val m0 = memoTotal
       attempt(name, "first touch") {
-        name -> Seq(timed(SparkEntry.queries(name)(spark, sfDir).count())._2, memoTotal - m0)
+        val ((_, s), n) = counted(timed(SparkEntry.queries(name)(spark, sfDir).count()))
+        (name, Seq(s, memoTotal - m0), n)
       }
     }
 
     RuleExecutor.resetMetrics()
-    val built = first.flatMap { case (name, cold) =>
+    val built = first.flatMap { case (name, cold, firstJobs) =>
       attempt(name, "warm construction") {
-        val runs = (1 to reps).map(_ => timed {
+        val runs = (1 to reps).map(_ => counted(timed {
           val df = SparkEntry.queries(name)(spark, sfDir)
           df.queryExecution.executedPlan
           df
-        })
-        (name, cold :+ med(runs.map(_._2)), runs.last._1)
+        }))
+        (name, cold :+ med(runs.map(_._1._2)),
+          Seq(firstJobs, med(runs.map(_._2))), runs.last._1._1)
       }
     }
     val rules = RuleExecutor.dumpTimeSpent()
 
-    println("name\tfirst_s\tmemo_s\tbuild_s\texec_s\tin_bytes\tshuffle_read_bytes\ttasks" +
-      "\texchange\tsmj\tbhj\tbnlj")
+    println("name\tfirst_s\tmemo_s\tbuild_s\texec_s\tfirst_jobs\tbuild_jobs\tin_bytes" +
+      "\tshuffle_read_bytes\ttasks\texchange\tsmj\tbhj\tbnlj")
     def show(name: String, row: Seq[Double]): Unit = println((name +: row.zipWithIndex.map {
       case (v, i) => if (i < 4) f"$v%.3f" else v.toLong.toString
     }).mkString("\t"))
-    val rows = built.flatMap { case (name, times, df) =>
+    val rows = built.flatMap { case (name, times, jobCounts, df) =>
       attempt(name, "warm count") {
         val execs = (1 to reps).map { i =>
           if (i == reps) { Bridge.drainListeners(sc); io.foreach(_.reset()) }
@@ -98,7 +111,7 @@ object Profile extends AdaptiveSparkPlanHelper {
           case _: BroadcastHashJoinExec => 2
           case _: BroadcastNestedLoopJoinExec => 3
         }
-        val row = times ++ (med(execs.map(_._2)) +: io.map(_.sum.toDouble)) ++
+        val row = (times :+ med(execs.map(_._2))) ++ jobCounts ++ io.map(_.sum.toDouble) ++
           (0 until 4).map(k => shape.count(_ == k).toDouble)
         show(name, row)
         row

@@ -1,7 +1,14 @@
 package graft
 
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.sql.streaming.Trigger
 
 /** Streaming inverted-index maintenance (StreamingOps.invertedStateSink):
   * BM25 served from the folded state after N micro-batches must be
@@ -11,7 +18,8 @@ import org.apache.spark.sql.functions._
   * the last two stat generations. The driver gate (q_bm25_stream) proves
   * the same contract against DuckDB on the harness corpus; these tests
   * pin it in-process with a MemoryStream, including mid-stream df/avgdl
-  * drift.
+  * drift, docs whose text yields no tokens, and the jobs a micro-batch
+  * and a served query's construction launch.
   */
 class StreamingInvertedSpec extends SparkSpec {
 
@@ -28,6 +36,35 @@ class StreamingInvertedSpec extends SparkSpec {
   }
 
   private val terms = Seq("dup", "join", "scan")
+
+  private def sink(in: MemoryStream[(Long, String)], idx: String,
+      ckpt: String) = graft.streaming.StreamingOps.invertedStateSink(
+    in.toDF().toDF("doc_id", "text"), "doc_id", "text", idx, ckpt,
+    trigger = Trigger.ProcessingTime(0L))
+
+  /** (job group, micro-batch id) of every job started while `body` runs;
+    * `body` runs under job group `group`, a stream's jobs carry its run id
+    * as their group. */
+  private def jobsDuring(group: String)(body: => Unit): Seq[(String, String)] = {
+    val jobs = new ConcurrentLinkedQueue[(String, String)]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val p = Option(e.properties)
+        jobs.add((p.map(_.getProperty("spark.jobGroup.id")).orNull,
+          p.map(_.getProperty("streaming.sql.batchId")).orNull))
+      }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "job count probe")
+    try body
+    finally {
+      sc.clearJobGroup()
+      Bridge.drainListeners(sc)
+      sc.removeSparkListener(listener)
+    }
+    jobs.asScala.toSeq
+  }
 
   /** One-shot exhaustive BM25 on a (doc_id, text) frame — the
     * MaxScoreQueries postings arithmetic, scored without pruning. */
@@ -71,9 +108,7 @@ class StreamingInvertedSpec extends SparkSpec {
     assert(batches.forall(_.nonEmpty))
     val (idx, ckpt) = (tmp("idx"), tmp("ckpt"))
     val in = MemoryStream[(Long, String)]
-    val q = graft.streaming.StreamingOps.invertedStateSink(
-      in.toDF().toDF("doc_id", "text"), "doc_id", "text", idx, ckpt,
-      trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0L))
+    val q = sink(in, idx, ckpt)
     try {
       batches.foreach { b => in.addData(b: _*); q.processAllAvailable() }
     } finally q.stop()
@@ -113,9 +148,7 @@ class StreamingInvertedSpec extends SparkSpec {
     implicit val sc = spark.sqlContext
     val (idx, ckpt) = (tmp("idx2"), tmp("ckpt2"))
     val in = MemoryStream[(Long, String)]
-    val q = graft.streaming.StreamingOps.invertedStateSink(
-      in.toDF().toDF("doc_id", "text"), "doc_id", "text", idx, ckpt,
-      trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0L))
+    val q = sink(in, idx, ckpt)
     def servedScore: Long = graft.streaming.StreamingOps
       .invertedStateBm25(spark, idx, Seq("rare"), 10)
       .filter(col("doc_id") === 1L)
@@ -132,5 +165,76 @@ class StreamingInvertedSpec extends SparkSpec {
       assert(late < early,
         s"df drift must devalue doc 1's 'rare' score: early=$early late=$late")
     } finally q.stop()
+  }
+
+  test("store parity with docs that yield no tokens; replayed folds change nothing") {
+    implicit val sc = spark.sqlContext
+    val batches = Seq(
+      Seq((1L, "alpha beta beta"), (2L, ""), (3L, "Beta gamma")),
+      Seq((4L, "   "), (5L, "\t \n")), // no doc has a token
+      Seq((6L, "gamma delta alpha"), (7L, " ")))
+    def toks(text: String) = text.toLowerCase.split("\\s+").filter(_.nonEmpty)
+    // one-shot (df, (n_docs, sum_dl)) over the first `n` batches
+    def oneShot(n: Int) = {
+      val docs = batches.take(n).flatten
+      (docs.flatMap(d => toks(d._2).distinct).groupBy(identity)
+          .map { case (t, hits) => t -> hits.size.toLong },
+        (docs.size.toLong, docs.map(d => toks(d._2).length.toLong).sum))
+    }
+    val (idx, ckpt) = (tmp("idx3"), tmp("ckpt3"))
+    def snapshot(b: Long) = (
+      spark.read.parquet(s"$idx/df/batch_id=$b").as[(String, Long)].collect().toMap,
+      spark.read.parquet(s"$idx/global/batch_id=$b").as[(Long, Long)].collect().toSeq)
+    val in = MemoryStream[(Long, String)]
+    val q = sink(in, idx, ckpt)
+    try {
+      in.addData(batches.head: _*)
+      q.processAllAvailable()
+      val first = snapshot(0L)
+      assert(first == { val (df, g) = oneShot(1); (df, Seq(g)) })
+      // replay the first fold (no predecessor) as a foreachBatch retry would
+      graft.streaming.StreamingOps.foldTextStats(spark, idx, 0L)
+      assert(snapshot(0L) == first, "a replayed first fold must not change the stores")
+      batches.tail.foreach { b => in.addData(b: _*); q.processAllAvailable() }
+    } finally q.stop()
+    assert(snapshot(1L)._2 == Seq(oneShot(2)._2),
+      "a batch without tokens still counts its docs")
+    val last = snapshot(2L)
+    val (df, g) = oneShot(3)
+    assert(last._1 == df, "newest df snapshot = one-shot doc frequencies")
+    assert(last._2 == Seq(g), "global = (one-shot doc count, total tokens)")
+    graft.streaming.StreamingOps.foldTextStats(spark, idx, 2L)
+    assert(snapshot(2L) == last, "a replayed last fold must not change the stores")
+  }
+
+  test("jobs: BM25 construction launches none, a micro-batch a bounded few") {
+    implicit val sc = spark.sqlContext
+    val all = graft.ops.Tables.documents(spark, dir)
+      .select(col("doc_id"), col("text"))
+      .as[(Long, String)].collect().toSeq
+    val (idx, ckpt) = (tmp("idx4"), tmp("ckpt4"))
+    val in = MemoryStream[(Long, String)]
+    var runId = ""
+    val streamJobs = jobsDuring("inverted-sink") {
+      val q = sink(in, idx, ckpt)
+      runId = q.runId.toString
+      try (0 until 3).foreach { i =>
+        in.addData(all.filter(_._1 % 3 == i): _*)
+        q.processAllAvailable()
+      } finally q.stop()
+    }
+    val perBatch = streamJobs.filter(_._1 == runId).groupBy(_._2)
+      .map { case (b, js) => b -> js.size }
+    assert(perBatch.keySet == Set("0", "1", "2"))
+    // tokenize once, write dl and tf from the cached tokens, one
+    // aggregation per stats store: 7 jobs (13 and 17 with the fan-out,
+    // the second tokenization and the schema inferences)
+    assert(perBatch.values.forall(_ <= 7),
+      s"a micro-batch launched more jobs than its stores need: $perBatch")
+    val buildJobs = jobsDuring("bm25-build") {
+      graft.streaming.StreamingOps.invertedStateBm25(spark, idx, terms, 10)
+        .queryExecution.executedPlan
+    }.count(_._1 == "bm25-build")
+    assert(buildJobs == 0, s"constructing the served query launched $buildJobs jobs")
   }
 }
