@@ -23,10 +23,9 @@ import org.apache.spark.sql.functions._
   */
 object CrossRunDedupQueries {
 
-  /** Path of the persisted prior-run pair memo, written once per
-    * (session, dir). The path is keyed on the SESSION (identityHashCode)
-    * as well as pid + dir — two sessions in one JVM must never share a
-    * mode=overwrite path (the round-13 ADVICE race).
+  /** Scratch directory ([[Scratch.scratchPath]]) of the persisted
+    * prior-run pair memo (`pairs/`) and its component roots (`roots/`),
+    * written once per (session, dir).
     *
     * The state content is the session's memoized full pair set filtered
     * to corpus×corpus (both ids outside the batch) — VALUE-IDENTICAL to
@@ -37,21 +36,18 @@ object CrossRunDedupQueries {
     * CrossRunDedupSpec proves that identity against an actual
     * corpus-only [[Dedup.nearDupMinhash]] rebuild rather than assuming
     * it. */
-  private val pairStorePath =
+  private val pairStoreDir =
     new graft.ops.SessionCache[String, String]("pair-store:")
 
-  private[graft] def persistedPairsPath(spark: SparkSession, dir: String): String =
-    pairStorePath.getOrElseUpdate(spark, dir, {
-      val path = s"${System.getProperty("java.io.tmpdir")}/graft-pairmemo-" +
-        s"${ProcessHandle.current().pid()}-" +
-        s"${java.lang.Integer.toHexString(System.identityHashCode(spark))}-" +
-        java.lang.Integer.toHexString(dir.hashCode)
+  private def persistedPairsDir(spark: SparkSession, dir: String): String =
+    pairStoreDir.getOrElseUpdate(spark, dir, {
+      val base = Scratch.scratchPath(spark, "pairmemo", dir)
       val state = ExtensionQueries.minhashPairs(spark, dir)
         .filter(col("id_a") % 20 =!= 0 && col("id_b") % 20 =!= 0)
         // the roots build below re-reads the pair set; without a barrier
         // it would re-plan the memoized LogicalRDD filter per consumer
         .localCheckpoint(true)
-      graft.sink.IndexStore.writeMinhashPairs(state, path)
+      graft.sink.IndexStore.writeMinhashPairs(state, s"$base/pairs")
       // The prior run ALSO persists its component roots — the cluster
       // assignment it computed for its own survivor decision (round-15
       // verdict task 2). Today's run then loads roots as a node-scale
@@ -62,12 +58,15 @@ object CrossRunDedupQueries {
         state.select(col("id_a"), col("id_b")),
         "id_a", "id_b", uniquePairs = true)
         .withColumnRenamed("comp", "root")
-      graft.sink.IndexStore.writeMinhashRoots(roots, path + "-roots")
-      path
+      graft.sink.IndexStore.writeMinhashRoots(roots, s"$base/roots")
+      base
     })
 
+  private[graft] def persistedPairsPath(spark: SparkSession, dir: String): String =
+    persistedPairsDir(spark, dir) + "/pairs"
+
   private[graft] def persistedRootsPath(spark: SparkSession, dir: String): String =
-    persistedPairsPath(spark, dir) + "-roots"
+    persistedPairsDir(spark, dir) + "/roots"
 
   /** Component roots of the PERSISTED state graph (the prior run's
     * cluster structure) — READ from the root store the prior run wrote,
@@ -157,16 +156,13 @@ object CrossRunDedupQueries {
 
   /** Path of the persisted prior-run SIGNATURE store (digest rows —
     * [[graft.ops.Dedup.minhashPrepared]]), written once per (session,
-    * dir); the session-keyed-path discipline as above. */
+    * dir) under its own scratch directory. */
   private val sigStorePath =
     new graft.ops.SessionCache[String, String]("sig-store:")
 
   private def persistedSigsPath(spark: SparkSession, dir: String): String =
     sigStorePath.getOrElseUpdate(spark, dir, {
-      val path = s"${System.getProperty("java.io.tmpdir")}/graft-sigstore-" +
-        s"${ProcessHandle.current().pid()}-" +
-        s"${java.lang.Integer.toHexString(System.identityHashCode(spark))}-" +
-        java.lang.Integer.toHexString(dir.hashCode)
+      val path = Scratch.scratchPath(spark, "sigstore", dir) + "/sigs"
       graft.ops.Dedup.minhashPrepared(
           Tables.documents(spark, dir).filter(col("doc_id") % 20 =!= 0),
           "doc_id", "text")
@@ -241,55 +237,16 @@ object CrossRunDedupQueries {
          |FROM docs d LEFT JOIN comp c ON d.id = c.id
          |ORDER BY doc_id""".stripMargin))
 
-  /** Path of the roots store a COMPLETED 3-micro-batch
-    * [[graft.streaming.StreamingOps.rootsStateSink]] run left behind,
-    * built once per (session, dir); the session-keyed-path discipline
-    * as above. The documents table is delivered as a real file-source
-    * stream — three single-file parquet batches (doc_id % 3), each a
-    * distributed write (no driver-side collect of corpus data), drained
-    * under Trigger.AvailableNow with maxFilesPerTrigger=1 so the sink
-    * sees exactly three micro-batches. Stale directories from a failed
-    * prior attempt are cleared first (a leftover checkpoint would mark
-    * the batches already processed and skip the sink entirely). */
-  private val streamRootsPath =
-    new graft.ops.SessionCache[String, String]("stream-roots:")
-
-  private def streamedRootsPath(spark: SparkSession, dir: String): String =
-    streamRootsPath.getOrElseUpdate(spark, dir, {
-      val base = s"${System.getProperty("java.io.tmpdir")}/graft-rootstream-" +
-        s"${ProcessHandle.current().pid()}-" +
-        s"${java.lang.Integer.toHexString(System.identityHashCode(spark))}-" +
-        java.lang.Integer.toHexString(dir.hashCode)
-      val fs = new org.apache.hadoop.fs.Path(base + "-src")
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      Seq("-src", "-sigs", "-pairs", "-roots", "-ckpt").foreach(s =>
-        fs.delete(new org.apache.hadoop.fs.Path(base + s), true))
-      val srcDir = new org.apache.hadoop.fs.Path(base + "-src")
-      fs.mkdirs(srcDir)
-      val docs = Tables.documents(spark, dir)
-        .select(col("doc_id"), col("text"))
-      (0 until 3).foreach { i =>
-        val stage = new org.apache.hadoop.fs.Path(s"$base-stage-$i")
-        docs.filter(col("doc_id") % 3 === i)
-          .coalesce(1).write.mode("overwrite").parquet(stage.toString)
-        val part = fs.listStatus(stage).map(_.getPath)
-          .find(p => p.getName.startsWith("part-") &&
-            p.getName.endsWith(".parquet"))
-          .getOrElse(throw new IllegalStateException(s"no part file in $stage"))
-        fs.rename(part,
-          new org.apache.hadoop.fs.Path(srcDir, f"batch-$i%03d.parquet"))
-        fs.delete(stage, true)
-      }
-      val stream = spark.readStream
-        .schema(docs.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(srcDir.toString)
-      graft.streaming.StreamingOps.rootsStateSink(
+  /** The roots store a 3-micro-batch real-stream run of the documents
+    * table through [[graft.streaming.StreamingOps.rootsStateSink]] left
+    * behind, once per (session, dir) ([[Scratch.streamedStores]]). */
+  private[graft] def streamedRootsPath(spark: SparkSession, dir: String): String =
+    Scratch.streamedStores(spark, "rootstream", dir,
+        Tables.documents(spark, dir).select(col("doc_id"), col("text")), "doc_id") {
+      (stream, base) => graft.streaming.StreamingOps.rootsStateSink(
         stream, "doc_id", "text",
-        s"$base-sigs", s"$base-pairs", s"$base-roots", s"$base-ckpt")
-        .awaitTermination() // AvailableNow drains the 3 files and stops
-      base + "-roots"
-    })
+        s"$base/sigs", s"$base/pairs", s"$base/roots", s"$base/ckpt")
+    } + "/roots"
 
   /** The STREAMING twin of [[dedupRootsIncr]] (round-16 verdict task 4),
     * hash-gated end to end: a real

@@ -3159,20 +3159,18 @@ object ExtensionQueries {
          |FROM agg CROSS JOIN nt ORDER BY nprobe""".stripMargin
     })
 
-  /** Path of the persisted PQ index (cell-partitioned code table +
-    * codebook sidecar), written once per (session, dir) — the
-    * ivf-state-path discipline: session-keyed path so two sessions in
-    * one JVM never share a mode=overwrite store. */
+  /** Path of the persisted PQ index's cell-partitioned code table
+    * (`codes/`, with the codebook sidecar in `cb/` beside it), written
+    * once per (session, dir) under its own scratch directory
+    * ([[Scratch.scratchPath]]). */
   private val pqStorePathCache =
     new graft.ops.SessionCache[String, String]("pq-store:")
 
   private def persistedPqPath(spark: org.apache.spark.sql.SparkSession,
       dir: String): String =
     pqStorePathCache.getOrElseUpdate(spark, dir, {
-      val path = s"${System.getProperty("java.io.tmpdir")}/graft-pqstore-" +
-        s"${ProcessHandle.current().pid()}-" +
-        s"${java.lang.Integer.toHexString(System.identityHashCode(spark))}-" +
-        java.lang.Integer.toHexString(dir.hashCode)
+      val base = Scratch.scratchPath(spark, "pqstore", dir)
+      val path = s"$base/codes"
       graft.sink.IndexStore.writePqCodes(
         pqCodesMemo(spark, dir)
           .select(col("vec_id"), col("label").as("cell"), col("codes")),
@@ -3181,7 +3179,7 @@ object ExtensionQueries {
       val spark2 = spark
       import spark2.implicits._
       graft.sink.IndexStore.writePqCodebook(
-        cb.toDF("s", "j", "centroid"), path + "-cb")
+        cb.toDF("s", "j", "centroid"), s"$base/cb")
       path
     })
 

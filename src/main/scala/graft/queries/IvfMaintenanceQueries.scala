@@ -155,13 +155,7 @@ object IvfMaintenanceQueries {
   private def persistedStatePath(spark: org.apache.spark.sql.SparkSession,
       dir: String): String =
     statePathCache.getOrElseUpdate(spark, dir, {
-      // the path is keyed on the SESSION too (round-13 ADVICE): the memo
-      // is per-SparkSession, so two sessions in one JVM hitting the same
-      // dir must not share a mode=overwrite path (writer racing a reader)
-      val path = s"${System.getProperty("java.io.tmpdir")}/graft-ivf-state-" +
-        s"${ProcessHandle.current().pid()}-" +
-        s"${java.lang.Integer.toHexString(System.identityHashCode(spark))}-" +
-        java.lang.Integer.toHexString(dir.hashCode)
+      val path = Scratch.scratchPath(spark, "ivf-state", dir) + "/state"
       def nano(c: org.apache.spark.sql.Column) =
         floor(c.cast("double") * 1e9 + 0.5).cast("long")
       val state = Tables.embeddings(spark, dir)

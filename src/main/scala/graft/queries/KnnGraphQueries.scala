@@ -487,52 +487,18 @@ object KnnGraphQueries {
          |FROM assigned a JOIN sizes s USING (comp)
          |ORDER BY vec_id""".stripMargin))
 
-  // path memo for the real-stream fixture (the streamRootsPath pattern)
-  private val streamKnnPath =
-    new graft.ops.SessionCache[String, String]("knn-stream-path:")
-
-  /** Runs a REAL file-source stream of the embeddings table (3
-    * single-file parquet batches, vec_id % 3) through
-    * [[graft.streaming.StreamingOps.knnStateSink]] once per (session,
-    * dir), returning the graph store path. */
-  private def streamedGraphPath(spark: org.apache.spark.sql.SparkSession,
+  /** The graph store a 3-micro-batch real-stream run of the embeddings
+    * table through [[graft.streaming.StreamingOps.knnStateSink]] left
+    * behind, once per (session, dir) ([[Scratch.streamedStores]]). */
+  private[graft] def streamedGraphPath(spark: org.apache.spark.sql.SparkSession,
       dir: String): String =
-    streamKnnPath.getOrElseUpdate(spark, dir, {
-      val base = s"${System.getProperty("java.io.tmpdir")}/graft-knnstream-" +
-        s"${ProcessHandle.current().pid()}-" +
-        s"${java.lang.Integer.toHexString(System.identityHashCode(spark))}-" +
-        java.lang.Integer.toHexString(dir.hashCode)
-      val fs = new org.apache.hadoop.fs.Path(base + "-src")
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      Seq("-src", "-vecs", "-graph", "-ckpt").foreach(s =>
-        fs.delete(new org.apache.hadoop.fs.Path(base + s), true))
-      val srcDir = new org.apache.hadoop.fs.Path(base + "-src")
-      fs.mkdirs(srcDir)
-      val vecs = Tables.embeddings(spark, dir)
-        .select(col("vec_id"), col("embedding"))
-      (0 until 3).foreach { i =>
-        val stage = new org.apache.hadoop.fs.Path(s"$base-stage-$i")
-        vecs.filter(col("vec_id") % 3 === i)
-          .coalesce(1).write.mode("overwrite").parquet(stage.toString)
-        val part = fs.listStatus(stage).map(_.getPath)
-          .find(p => p.getName.startsWith("part-") &&
-            p.getName.endsWith(".parquet"))
-          .getOrElse(throw new IllegalStateException(s"no part file in $stage"))
-        fs.rename(part,
-          new org.apache.hadoop.fs.Path(srcDir, f"batch-$i%03d.parquet"))
-        fs.delete(stage, true)
-      }
-      val stream = spark.readStream
-        .schema(vecs.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(srcDir.toString)
-      graft.streaming.StreamingOps.knnStateSink(
-        stream, "vec_id", "embedding",
-        s"$base-vecs", s"$base-graph", s"$base-ckpt",
+    Scratch.streamedStores(spark, "knnstream", dir,
+        Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding")),
+        "vec_id") {
+      (stream, base) => graft.streaming.StreamingOps.knnStateSink(
+        stream, "vec_id", "embedding", s"$base/vecs", s"$base/graph", s"$base/ckpt",
         k = K, nBits = NBITS, tables = TABLES)
-        .awaitTermination() // AvailableNow drains the 3 files and stops
-      base + "-graph"
-    })
+    } + "/graph"
 
   /** The STREAMING twin of q_knn_graph, hash-gated end to end: a real
     * [[graft.streaming.StreamingOps.knnStateSink]] run folds three

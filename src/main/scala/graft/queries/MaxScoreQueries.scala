@@ -140,58 +140,16 @@ object MaxScoreQueries {
          |CROSS JOIN (SELECT COUNT(*) AS n_candidates FROM cand) c
          |CROSS JOIN theta t""".stripMargin))
 
-  // path memo for the real-stream fixture (the streamedGraphPath pattern)
-  private val streamIdxPath =
-    new graft.ops.SessionCache[String, String]("bm25-stream-path:")
-
-  /** Runs a REAL file-source stream of the documents table (3
-    * single-file parquet batches, micro-batch i holding `doc_id % 3 == i`)
-    * through [[graft.streaming.StreamingOps.invertedStateSink]] once per
-    * (session, dir), returning the index store path. The three source
-    * files come from ONE write — `partitionBy` on `pmod(doc_id, 3)` under
-    * `coalesce(1)`, one file per residue — renamed into the source dir.
-    * The file source orders files by modification time, so each renamed
-    * file's mtime is set in batch order. */
+  /** The index store a 3-micro-batch real-stream run of the documents
+    * table through [[graft.streaming.StreamingOps.invertedStateSink]]
+    * left behind, once per (session, dir) ([[Scratch.streamedStores]]). */
   private def streamedIndexPath(spark: org.apache.spark.sql.SparkSession,
       dir: String): String =
-    streamIdxPath.getOrElseUpdate(spark, dir, {
-      val base = s"${System.getProperty("java.io.tmpdir")}/graft-bm25stream-" +
-        s"${ProcessHandle.current().pid()}-" +
-        s"${java.lang.Integer.toHexString(System.identityHashCode(spark))}-" +
-        java.lang.Integer.toHexString(dir.hashCode)
-      val fs = new org.apache.hadoop.fs.Path(base + "-src")
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      Seq("-src", "-idx", "-ckpt", "-stage").foreach(s =>
-        fs.delete(new org.apache.hadoop.fs.Path(base + s), true))
-      val srcDir = new org.apache.hadoop.fs.Path(base + "-src")
-      fs.mkdirs(srcDir)
-      val docs = Tables.documents(spark, dir).select(col("doc_id"), col("text"))
-      val stage = new org.apache.hadoop.fs.Path(base + "-stage")
-      val batches = 3
-      docs.withColumn("batch", pmod(col("doc_id"), lit(batches.toLong)))
-        .coalesce(1).write.partitionBy("batch").parquet(stage.toString)
-      val t0 = System.currentTimeMillis()
-      (0 until batches).foreach { i =>
-        val part = fs.listStatus(new org.apache.hadoop.fs.Path(stage, s"batch=$i"))
-          .map(_.getPath)
-          .find(p => p.getName.startsWith("part-") &&
-            p.getName.endsWith(".parquet"))
-          .getOrElse(throw new IllegalStateException(s"no part file for batch $i in $stage"))
-        val dst = new org.apache.hadoop.fs.Path(srcDir, f"batch-$i%03d.parquet")
-        if (!fs.rename(part, dst))
-          throw new java.io.IOException(s"streamedIndexPath: rename $part -> $dst failed")
-        fs.setTimes(dst, t0 - 1000L * (batches - i), -1L)
-      }
-      fs.delete(stage, true)
-      val stream = spark.readStream
-        .schema(docs.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(srcDir.toString)
-      graft.streaming.StreamingOps.invertedStateSink(
-        stream, "doc_id", "text", base + "-idx", base + "-ckpt")
-        .awaitTermination() // AvailableNow drains the files and stops
-      base + "-idx"
-    })
+    Scratch.streamedStores(spark, "bm25stream", dir,
+        Tables.documents(spark, dir).select(col("doc_id"), col("text")), "doc_id") {
+      (stream, base) => graft.streaming.StreamingOps.invertedStateSink(
+        stream, "doc_id", "text", s"$base/idx", s"$base/ckpt")
+    } + "/idx"
 
   /** The STREAMING twin of the exhaustive BM25 ranking, hash-gated end
     * to end: a real [[graft.streaming.StreamingOps.invertedStateSink]]

@@ -2,10 +2,11 @@ package graft.streaming
 
 import graft.ops.ForwardFill
 import graft.sink.JdbcUpsert
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
-import org.apache.spark.sql.types.{LongType, StructType}
+import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, LongType, StructType}
 
 /** Structured Streaming surface (SURVEY.md §2.3 streaming row): the
   * reference is batch-only (cron 2×/day = micro-batch by scheduler), so
@@ -354,6 +355,17 @@ object StreamingOps {
       .drop(r(keyCol))
   }
 
+  /** Start `df` as a checkpointed stream whose every micro-batch runs
+    * `f(batch, batchId)`: the shape of every sink below. */
+  private def foreachBatchSink(df: DataFrame, checkpointDir: String,
+      trigger: Trigger)(f: (DataFrame, Long) => Unit): StreamingQuery =
+    df.writeStream
+      .outputMode(OutputMode.Update())
+      .option("checkpointLocation", checkpointDir)
+      .trigger(trigger)
+      .foreachBatch(f)
+      .start()
+
   /** Stream → keyed JDBC upsert: each micro-batch runs the K1 sink, so the
     * stream inherits the reference's idempotent last-write-wins load
     * (`scripts/pricenow_etl.py:98-112`) — replayed batches converge.
@@ -362,38 +374,10 @@ object StreamingOps {
       df: DataFrame, url: String, table: String, keys: Seq[String],
       dialect: JdbcUpsert.Dialect, checkpointDir: String,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    df.writeStream
-      .outputMode(OutputMode.Update())
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        JdbcUpsert.upsert(batch, url, table, keys, dialect)
-      }
-      .start()
+    foreachBatchSink(df, checkpointDir, trigger) { (batch, _) =>
+      JdbcUpsert.upsert(batch, url, table, keys, dialect)
+    }
 
-  /** Stream of price CHANGES → incrementally refreshed month-partitioned
-    * fact table: the streaming composition of the reference's cron rerun
-    * (`run_pricenow.yml:14-16` re-runs the whole load; rerun-idempotence IS
-    * its consistency model) with [[graft.PricenowPipeline.refreshMonths]]'
-    * dynamic partition overwrite. Per micro-batch:
-    *
-    *  1. the batch lands in an append-only change log as its OWN
-    *     deterministic partition (`batch_id=N`) — foreachBatch is
-    *     at-least-once, so a replayed batch overwrites its prior write
-    *     instead of duplicating rows;
-    *  2. the refresh frontier is the batch's earliest change month: a
-    *     price change at date d only rewrites LOCF-filled days >= d (fill
-    *     looks backward), so every season month >= that frontier is
-    *     recomputed from the FULL accumulated log and
-    *     dynamic-partition-overwritten, while earlier months' files are
-    *     provably untouched (byte-identity asserted in
-    *     StreamingRefreshSpec).
-    *
-    * At 100 TB the change log is the cheap side (changes are sparse; the
-    * dense grid is the expensive one) and each micro-batch rewrites only
-    * the frontier months — the streaming version of "rerun the season
-    * nightly", at per-batch granularity with the same idempotence.
-    */
   /** Streaming LOCF: the generic F1 forward-fill under `foreachBatch` —
     * change points stream in, and the dense daily LOCF grid of
     * [[graft.ops.ForwardFill.dailyGrid]] stays continuously refreshed,
@@ -421,60 +405,116 @@ object StreamingOps {
       tieBreak: Seq[String], start: String, end: String,
       changeLogPath: String, gridPath: String, checkpointDir: String,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    changes.writeStream
-      .outputMode(OutputMode.Update())
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val sess = batch.sparkSession
-        batch.write.mode("overwrite").parquet(s"$changeLogPath/batch_id=$batchId")
-        val landed = sess.read.parquet(s"$changeLogPath/batch_id=$batchId")
-        val touched = landed.select(col(idCol)).na.drop().distinct()
-        if (touched.head(1).nonEmpty) {
-          val fullLog = sess.read.parquet(changeLogPath).drop("batch_id")
-          val relevant = fullLog.join(broadcast(touched), Seq(idCol))
-          ForwardFill
-            .dailyGrid(relevant, idCol, dayCol, valueCol, tieBreak, start, end)
-            .write.mode("overwrite")
-            .partitionBy(idCol)
-            .option("partitionOverwriteMode", "dynamic")
-            .parquet(gridPath)
-        }
+    foreachBatchSink(changes, checkpointDir, trigger) { (batch, batchId) =>
+      val sess = batch.sparkSession
+      batch.write.mode("overwrite").parquet(s"$changeLogPath/batch_id=$batchId")
+      val landed = sess.read.parquet(s"$changeLogPath/batch_id=$batchId")
+      val touched = landed.select(col(idCol)).na.drop().distinct()
+      if (touched.head(1).nonEmpty) {
+        val fullLog = sess.read.parquet(changeLogPath).drop("batch_id")
+        val relevant = fullLog.join(broadcast(touched), Seq(idCol))
+        ForwardFill
+          .dailyGrid(relevant, idCol, dayCol, valueCol, tieBreak, start, end)
+          .write.mode("overwrite")
+          .partitionBy(idCol)
+          .option("partitionOverwriteMode", "dynamic")
+          .parquet(gridPath)
       }
-      .start()
+    }
 
+  /** Stream of price CHANGES → incrementally refreshed month-partitioned
+    * fact table: the streaming composition of the reference's cron rerun
+    * (`run_pricenow.yml:14-16` re-runs the whole load; rerun-idempotence IS
+    * its consistency model) with [[graft.PricenowPipeline.refreshMonths]]'
+    * dynamic partition overwrite. Per micro-batch:
+    *
+    *  1. the batch lands in an append-only change log as its OWN
+    *     deterministic partition (`batch_id=N`) — foreachBatch is
+    *     at-least-once, so a replayed batch overwrites its prior write
+    *     instead of duplicating rows;
+    *  2. the refresh frontier is the batch's earliest change month: a
+    *     price change at date d only rewrites LOCF-filled days >= d (fill
+    *     looks backward), so every season month >= that frontier is
+    *     recomputed from the FULL accumulated log and
+    *     dynamic-partition-overwritten, while earlier months' files are
+    *     provably untouched (byte-identity asserted in
+    *     StreamingRefreshSpec).
+    *
+    * At 100 TB the change log is the cheap side (changes are sparse; the
+    * dense grid is the expensive one) and each micro-batch rewrites only
+    * the frontier months — the streaming version of "rerun the season
+    * nightly", at per-batch granularity with the same idempotence.
+    */
   def incrementalRefreshSink(
       changes: DataFrame, pagesPath: String, cfg: graft.PricenowPipeline.Config,
       seasonMonths: Seq[String], changeLogPath: String, factPath: String,
       checkpointDir: String,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    changes.writeStream
-      .outputMode(OutputMode.Update())
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // single evaluation of the micro-batch: land it first, then derive
-        // emptiness and the frontier from the written partition — re-running
-        // the upstream lineage per question would triple the batch read
-        val sess = batch.sparkSession
-        batch.write.mode("overwrite").parquet(s"$changeLogPath/batch_id=$batchId")
-        val landed = sess.read.parquet(s"$changeLogPath/batch_id=$batchId")
-        // null frontier = empty batch or all-null change dates: nothing to
-        // refresh (null dates never reach the grid — dailyGrid drops them)
-        val frontier = landed
-          .agg(min(date_format(col("valid_at"), "yyyy-MM"))).head.getString(0)
-        val months = if (frontier == null) Nil else seasonMonths.filter(_ >= frontier)
-        if (months.nonEmpty) {
-          val fullLog = sess.read.parquet(changeLogPath).drop("batch_id")
-          // requireNonEmpty = false: the frontier is conservative — a month
-          // past the grid's actual end is a no-op here, never a poison pill
-          // (foreachBatch is at-least-once; a throwing batch replays forever)
-          graft.PricenowPipeline.refreshMonths(
-            sess, pagesPath, fullLog, cfg, factPath, months,
-            requireNonEmpty = false)
-        }
+    foreachBatchSink(changes, checkpointDir, trigger) { (batch, batchId) =>
+      // single evaluation of the micro-batch: land it first, then derive
+      // emptiness and the frontier from the written partition — re-running
+      // the upstream lineage per question would triple the batch read
+      val sess = batch.sparkSession
+      batch.write.mode("overwrite").parquet(s"$changeLogPath/batch_id=$batchId")
+      val landed = sess.read.parquet(s"$changeLogPath/batch_id=$batchId")
+      // null frontier = empty batch or all-null change dates: nothing to
+      // refresh (null dates never reach the grid — dailyGrid drops them)
+      val frontier = landed
+        .agg(min(date_format(col("valid_at"), "yyyy-MM"))).head.getString(0)
+      val months = if (frontier == null) Nil else seasonMonths.filter(_ >= frontier)
+      if (months.nonEmpty) {
+        val fullLog = sess.read.parquet(changeLogPath).drop("batch_id")
+        // requireNonEmpty = false: the frontier is conservative — a month
+        // past the grid's actual end is a no-op here, never a poison pill
+        // (foreachBatch is at-least-once; a throwing batch replays forever)
+        graft.PricenowPipeline.refreshMonths(
+          sess, pagesPath, fullLog, cfg, factPath, months,
+          requireNonEmpty = false)
       }
-      .start()
+    }
+
+  /** Rows per fan-out task: small, because the per-row work these sinks
+    * fan out for is heavy (tokenize + 16-way minhash, PQ coding, LSH
+    * signing — milliseconds per row), so even a few-hundred-row batch
+    * deserves the full cluster. The cap only bites for near-empty
+    * batches, where it prevents the r17 shape's small-file blow-up:
+    * defaultParallelism near-empty files per batch_id partition of every
+    * state store, plus a pointless full-width shuffle (r17 advice). */
+  private val FanOutRowsPerTask = 64L
+
+  /** Fan a micro-batch out to the session's parallelism before heavy
+    * per-batch work. File-source micro-batches arrive with as few
+    * partitions as FILES (the AvailableNow + maxFilesPerTrigger=1 shape
+    * delivers exactly ONE), so every map-side stage of the sink —
+    * tokenize + minhash signing, PQ coding, LSH sign keys, perceptual
+    * hashing — otherwise runs as a single task on one core while the
+    * rest of the cluster idles (guide §2.5 input skew: "one huge
+    * unsplittable file … repartition immediately after the read";
+    * measured: the 3-batch roots-sink build dropped 46 s → single-digit
+    * seconds at 32 cores). Round-robin repartition is deterministic
+    * under task retry (sort-before-repartition, SPARK-23207), and every
+    * sink's persisted contract is row-SET equality per batch_id
+    * partition, never row order. The written partitions also come out
+    * at cluster parallelism, so downstream state re-reads parallelize
+    * without a second repartition.
+    *
+    * Used by the six sinks whose per-row work costs milliseconds:
+    * [[ivfStateSink]], [[minhashStateSink]], [[rootsStateSink]],
+    * [[knnStateSink]], [[phashStateSink]] and [[pqStateSink]].
+    * [[invertedStateSink]] does not fan out: tokenizing costs
+    * microseconds per row, so the extra `count()` job and round-robin
+    * shuffle would cost more than the single-task map side they spread,
+    * and its tf aggregation's exchange already redistributes the rows
+    * (the file source also splits a large batch by bytes). */
+  private def fanOut(batch: DataFrame): DataFrame = {
+    val dp = batch.sparkSession.sparkContext.defaultParallelism.toLong
+    // one cheap extra job per micro-batch (the sources here are file
+    // batches; the sinks' own work is seconds per batch)
+    val rows = batch.count()
+    val parts = math.min(dp, math.max(1L, (rows + FanOutRowsPerTask - 1) /
+      FanOutRowsPerTask)).toInt
+    batch.repartition(parts)
+  }
 
   /** Streaming IVF index maintenance — the streaming form of
     * q_ivf_upsert's mergeable-sufficient-statistics contract, persisted
@@ -529,85 +569,149 @@ object StreamingOps {
     * bounded by one base + ≤ compactEvery recent deltas per touched
     * cell, for the life of the stream.
     */
-  /** Fan a micro-batch out to the session's parallelism before heavy
-    * per-batch work. File-source micro-batches arrive with as few
-    * partitions as FILES (the AvailableNow + maxFilesPerTrigger=1 shape
-    * delivers exactly ONE), so every map-side stage of the sink —
-    * tokenize + minhash signing, PQ coding, LSH sign keys, perceptual
-    * hashing — otherwise runs as a single task on one core while the
-    * rest of the cluster idles (guide §2.5 input skew: "one huge
-    * unsplittable file … repartition immediately after the read";
-    * measured: the 3-batch roots-sink build dropped 46 s → single-digit
-    * seconds at 32 cores). Round-robin repartition is deterministic
-    * under task retry (sort-before-repartition, SPARK-23207), and every
-    * sink's persisted contract is row-SET equality per batch_id
-    * partition, never row order. The written partitions also come out
-    * at cluster parallelism, so downstream state re-reads parallelize
-    * without a second repartition.
-    *
-    * Used by the six sinks whose per-row work costs milliseconds:
-    * [[ivfStateSink]], [[minhashStateSink]], [[rootsStateSink]],
-    * [[knnStateSink]], [[phashStateSink]] and [[pqStateSink]].
-    * [[invertedStateSink]] does not fan out: tokenizing costs
-    * microseconds per row, so the extra `count()` job and round-robin
-    * shuffle would cost more than the single-task map side they spread,
-    * and its tf aggregation's exchange already redistributes the rows
-    * (the file source also splits a large batch by bytes). */
-  /** Rows per fan-out task: small, because the per-row work these sinks
-    * fan out for is heavy (tokenize + 16-way minhash, PQ coding, LSH
-    * signing — milliseconds per row), so even a few-hundred-row batch
-    * deserves the full cluster. The cap only bites for near-empty
-    * batches, where it prevents the r17 shape's small-file blow-up:
-    * defaultParallelism near-empty files per batch_id partition of every
-    * state store, plus a pointless full-width shuffle (r17 advice). */
-  private val FanOutRowsPerTask = 64L
-
-  private def fanOut(batch: DataFrame): DataFrame = {
-    val dp = batch.sparkSession.sparkContext.defaultParallelism.toLong
-    // one cheap extra job per micro-batch (the sources here are file
-    // batches; the sinks' own work is seconds per batch)
-    val rows = batch.count()
-    val parts = math.min(dp, math.max(1L, (rows + FanOutRowsPerTask - 1) /
-      FanOutRowsPerTask)).toInt
-    batch.repartition(parts)
-  }
-
   def ivfStateSink(
       assigned: DataFrame, idCol: String, vecCol: String, cellCol: String,
       deltaLogPath: String, statePath: String, checkpointDir: String,
       trigger: Trigger = Trigger.AvailableNow(),
       compactEvery: Int = 16): StreamingQuery =
-    assigned.writeStream
-      .outputMode(OutputMode.Update())
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch0: DataFrame, batchId: Long) =>
-        val batch = fanOut(batch0)
-        val sess = batch.sparkSession
-        val delta = batch
-          .select(col(cellCol).as("cell"),
-            posexplode(col(vecCol)).as(Seq("pos0", "v")))
-          .groupBy(col("cell"), col("pos0"))
-          .agg(sum(floor(col("v").cast("double") * 1e9 + 0.5).cast("long"))
-            .as("s"), count(lit(1)).as("n"))
-          .select(col("cell"), (col("pos0") + 1).cast("long").as("pos"),
-            col("s"), col("n"))
-        delta.write.mode("overwrite")
-          .parquet(s"$deltaLogPath/batch_id=$batchId")
-        if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
-          compactDeltaLog(sess, deltaLogPath, batchId)
-        val landed = sess.read.parquet(s"$deltaLogPath/batch_id=$batchId")
-        val touched = landed.select(col("cell")).distinct()
-        if (touched.head(1).nonEmpty) {
-          val fullLog = effectiveDeltas(sess, deltaLogPath).drop("batch_id")
-          val merged = fullLog
-            .join(broadcast(touched), Seq("cell"))
-            .groupBy(col("cell"), col("pos"))
-            .agg(sum(col("s")).as("s"), sum(col("n")).as("n"))
-          graft.sink.IndexStore.writeIvfState(merged, statePath)
-        }
+    foreachBatchSink(assigned, checkpointDir, trigger) { (batch0, batchId) =>
+      val batch = fanOut(batch0)
+      val sess = batch.sparkSession
+      val delta = batch
+        .select(col(cellCol).as("cell"),
+          posexplode(col(vecCol)).as(Seq("pos0", "v")))
+        .groupBy(col("cell"), col("pos0"))
+        .agg(sum(floor(col("v").cast("double") * 1e9 + 0.5).cast("long"))
+          .as("s"), count(lit(1)).as("n"))
+        .select(col("cell"), (col("pos0") + 1).cast("long").as("pos"),
+          col("s"), col("n"))
+      delta.write.mode("overwrite")
+        .parquet(s"$deltaLogPath/batch_id=$batchId")
+      if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
+        compactDeltaLog(sess, deltaLogPath, batchId)
+      val landed = sess.read.parquet(s"$deltaLogPath/batch_id=$batchId")
+      val touched = landed.select(col("cell")).distinct()
+      if (touched.head(1).nonEmpty) {
+        val fullLog = effectiveDeltas(sess, deltaLogPath).drop("batch_id")
+        val merged = fullLog
+          .join(broadcast(touched), Seq("cell"))
+          .groupBy(col("cell"), col("pos"))
+          .agg(sum(col("s")).as("s"), sum(col("n")).as("n"))
+        graft.sink.IndexStore.writeIvfState(merged, statePath)
       }
-      .start()
+    }
+
+  /** A generation store: the state layout the minhash, roots, knn, phash
+    * and inverted sinks share. Micro-batch N lands at its own
+    * `root/batch_id=N` partition, so a replayed batch (foreachBatch is
+    * at-least-once) overwrites its prior write instead of duplicating it.
+    * The columns are declared once in `schema`: [[land]] writes exactly
+    * those, and every read names its columns with their declared types
+    * instead of inferring them — a parquet schema inference is one job per
+    * read. An append-only store is read whole or as the generations before
+    * N; a snapshot store holds a full state per generation, its fold reads
+    * the newest before its own batch, its reader the newest, and [[gc]]
+    * keeps the current generation and the predecessor a replay re-reads. */
+  private[graft] final case class Store(name: String, schema: StructType) {
+    private def typed(cols: Seq[String]): StructType =
+      if (cols.isEmpty) schema else StructType(cols.map(schema(_)))
+
+    private def fs(sess: SparkSession, root: String) =
+      new Path(root).getFileSystem(sess.sparkContext.hadoopConfiguration)
+
+    /** Generation ids under `root`; none when the store is missing.
+      * `_SUCCESS` markers and staging directories are not generations. */
+    private def generations(sess: SparkSession, root: String): Seq[Long] =
+      if (!fs(sess, root).exists(new Path(root))) Nil
+      else fs(sess, root).listStatus(new Path(root)).toSeq.flatMap { st =>
+        val n = st.getPath.getName
+        if (n.startsWith("batch_id=")) n.stripPrefix("batch_id=").toLongOption
+        else None
+      }
+
+    def partition(root: String, batchId: Long): String = s"$root/batch_id=$batchId"
+
+    /** Land the declared columns of `df` as generation `batchId`, through
+      * `write` when the store keeps a layout of its own. */
+    def land(df: DataFrame, root: String, batchId: Long,
+        write: (DataFrame, String) => Unit =
+          (d, p) => d.write.mode("overwrite").parquet(p)): Unit =
+      write(df.select(schema.fieldNames.toSeq.map(col): _*),
+        partition(root, batchId))
+
+    /** `cols` (all when none are named) under `path` — the store root or
+      * one generation. */
+    def read(sess: SparkSession, path: String, cols: String*): DataFrame = {
+      val s = typed(cols)
+      sess.read.schema(s).parquet(path).select(s.fieldNames.toSeq.map(col): _*)
+    }
+
+    def at(sess: SparkSession, root: String, batchId: Long,
+        cols: String*): DataFrame =
+      read(sess, partition(root, batchId), cols: _*)
+
+    /** Every generation strictly before `batchId`, as one frame. */
+    def before(sess: SparkSession, root: String, batchId: Long,
+        cols: String*): DataFrame = {
+      val s = typed(cols)
+      sess.read.schema(s.add("batch_id", LongType)).parquet(root)
+        .filter(col("batch_id") < batchId)
+        .select(s.fieldNames.toSeq.map(col): _*)
+    }
+
+    /** The newest generation strictly before `batchId`: a fold's prior. */
+    def latestBefore(sess: SparkSession, root: String, batchId: Long,
+        cols: String*): Option[DataFrame] =
+      generations(sess, root).filter(_ < batchId).maxOption
+        .map(at(sess, root, _, cols: _*))
+
+    /** The newest generation's id; throws, naming `reader`, if none. */
+    def newest(sess: SparkSession, root: String, reader: String): Long =
+      generations(sess, root).maxOption.getOrElse(
+        throw new IllegalStateException(
+          s"$reader: no $name generation under $root"))
+
+    /** Keep generation `curBatch` and its immediate predecessor; delete
+      * the rest. Best-effort hygiene — the readers stay correct without
+      * it. */
+    def gc(sess: SparkSession, root: String, curBatch: Long): Unit = {
+      val ids = generations(sess, root)
+      val keep = (ids.filter(_ < curBatch).maxOption.toSeq :+ curBatch).toSet
+      ids.filterNot(keep).foreach(i =>
+        fs(sess, root).delete(new Path(partition(root, i)), true))
+    }
+  }
+
+  /** The sinks' stores. Ids are BIGINT throughout. */
+  private[graft] object Store {
+    private def of(name: String, ddl: String) = Store(name, StructType.fromDDL(ddl))
+    // minhash and roots sinks: minhashPrepared digests, verified pairs,
+    // component-root snapshots
+    val sig: Store = of("sig", "id BIGINT, sig ARRAY<BIGINT>, toks ARRAY<BIGINT>")
+    val pairs: Store = of("pairs", "id_a BIGINT, id_b BIGINT, jaccard DOUBLE")
+    val roots: Store = of("roots", "id BIGINT, root BIGINT")
+    // knn sink: the vectors the graph serves, per-node top-k snapshots
+    val vecs: Store = of("vecs", "id BIGINT, vec ARRAY<FLOAT>")
+    val graph: Store =
+      of("graph", "node_id BIGINT, neighbor_id BIGINT, cos DOUBLE, rank INT")
+    // phash sink: 64-bit dHash signatures, Hamming pairs
+    val phashSig: Store = of("phash sig", "id BIGINT, sig BIGINT")
+    val phashPairs: Store = of("phash pairs", "id_a BIGINT, id_b BIGINT, hamming INT")
+    // inverted sink: postings, doc lengths, df and global snapshots
+    val tf: Store = of("tf", "doc_id BIGINT, token STRING, tf BIGINT")
+    val dl: Store = of("dl", "doc_id BIGINT, dl BIGINT")
+    val df: Store = of("df", "token STRING, df BIGINT")
+    val global: Store = of("global", "n_docs BIGINT, sum_dl BIGINT")
+  }
+
+  /** Fail before the stream starts, naming the sink, when an input column
+    * lacks the type its store declares. */
+  private def requireInput(sink: String, df: DataFrame,
+      cols: (String, DataType)*): Unit = cols.foreach { case (c, want) =>
+    val got = df.schema(c).dataType
+    require(got.sql == want.sql,
+      s"$sink: $c must be ${want.sql} (its store declares it so), got ${got.sql}")
+  }
 
   /** Streaming cross-run near-dup maintenance — the streaming twin of
     * q_dedup_cross_run, and the always-on form of the daily-ingest dedup
@@ -620,7 +724,7 @@ object StreamingOps {
     *  1. the batch's digests land in the sig store as the batch's OWN
     *     deterministic `batch_id=N` partition (foreachBatch is
     *     at-least-once: a replayed batch overwrites its prior digests
-    *     instead of duplicating them — the [[ivfStateSink]] discipline);
+    *     instead of duplicating them — the [[Store]] discipline);
     *  2. the incremental pair pass
     *     ([[graft.ops.Dedup.nearDupMinhashFromState]]) joins the landed
     *     batch against all PRIOR digest partitions — batch-sized
@@ -636,40 +740,39 @@ object StreamingOps {
     * After any number of micro-batches the pair store's union equals
     * [[graft.ops.Dedup.nearDupMinhash]] over the union of all batches,
     * byte-identically — StreamingDedupSpec proves it, plus replay
-    * idempotence.
+    * idempotence. `idCol` must be BIGINT ([[Store.sig]]).
     */
   def minhashStateSink(
       docs: DataFrame, idCol: String, textCol: String,
       sigStorePath: String, pairStorePath: String, checkpointDir: String,
       trigger: Trigger = Trigger.AvailableNow(),
-      k: Int = 16, bands: Int = 4, minJaccard: Double = 0.5): StreamingQuery =
-    docs.writeStream
-      .outputMode(OutputMode.Update())
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch0: DataFrame, batchId: Long) =>
-        val batch = fanOut(batch0)
-        val sess = batch.sparkSession
-        graft.ops.Dedup.minhashPrepared(batch, idCol, textCol, k)
-          .write.mode("overwrite")
-          .parquet(s"$sigStorePath/batch_id=$batchId")
-        val landed = sess.read.parquet(s"$sigStorePath/batch_id=$batchId")
-          .select(col("id"), col("sig"), col("toks"))
-        val prior = sess.read.parquet(sigStorePath)
-          .filter(col("batch_id").cast("long") < batchId)
-          .select(col("id"), col("sig"), col("toks"))
-        graft.ops.Dedup
-          .nearDupMinhashFromState(landed, prior, k, bands, minJaccard)
-          .write.mode("overwrite")
-          .parquet(s"$pairStorePath/batch_id=$batchId")
-      }
-      .start()
+      k: Int = 16, bands: Int = 4, minJaccard: Double = 0.5): StreamingQuery = {
+    requireInput("minhashStateSink", docs, idCol -> LongType)
+    foreachBatchSink(docs, checkpointDir, trigger) { (batch, batchId) =>
+      landSigsAndPairs(batch, batchId, idCol, textCol,
+        sigStorePath, pairStorePath, k, bands, minJaccard)
+    }
+  }
+
+  /** Steps 1-3 of [[minhashStateSink]], which [[rootsStateSink]] runs
+    * too: land the batch's digests, then the verified pairs touching
+    * them. */
+  private def landSigsAndPairs(batch: DataFrame, batchId: Long,
+      idCol: String, textCol: String, sigStorePath: String,
+      pairStorePath: String, k: Int, bands: Int, minJaccard: Double): Unit = {
+    val sess = batch.sparkSession
+    Store.sig.land(graft.ops.Dedup.minhashPrepared(fanOut(batch), idCol, textCol, k),
+      sigStorePath, batchId)
+    Store.pairs.land(graft.ops.Dedup.nearDupMinhashFromState(
+        Store.sig.at(sess, sigStorePath, batchId),
+        Store.sig.before(sess, sigStorePath, batchId), k, bands, minJaccard),
+      pairStorePath, batchId)
+  }
 
   /** The accumulated verified pair set a [[minhashStateSink]] stream has
     * produced so far — the frame downstream dedup decisions read. */
   def minhashStatePairs(sess: SparkSession, pairStorePath: String): DataFrame =
-    sess.read.parquet(pairStorePath)
-      .select(col("id_a"), col("id_b"), col("jaccard"))
+    Store.pairs.read(sess, pairStorePath)
 
   /** [[minhashStateSink]] plus streaming ROOT maintenance (round-16
     * verdict task 4): each micro-batch additionally folds its incident
@@ -678,8 +781,8 @@ object StreamingOps {
     * increment the batch cross-run path runs (`q_dedup_roots_incr`),
     * so the streaming store always holds the CURRENT cluster
     * assignment and the edge-scale accumulated pair graph is never
-    * re-read by root maintenance. Steps 1-3 are [[minhashStateSink]]
-    * verbatim; step 4:
+    * re-read by root maintenance. Steps 1-3 are [[minhashStateSink]]'s
+    * own (one shared step); step 4:
     *
     *  4. the previous roots SNAPSHOT (node-scale) unions with the
     *     batch's landed pairs through [[graft.ops.Dedup.incrementalRoots]]
@@ -706,98 +809,38 @@ object StreamingOps {
       sigStorePath: String, pairStorePath: String, rootsStorePath: String,
       checkpointDir: String,
       trigger: Trigger = Trigger.AvailableNow(),
-      k: Int = 16, bands: Int = 4, minJaccard: Double = 0.5): StreamingQuery =
-    docs.writeStream
-      .outputMode(OutputMode.Update())
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch0: DataFrame, batchId: Long) =>
-        val batch = fanOut(batch0)
-        val sess = batch.sparkSession
-        graft.ops.Dedup.minhashPrepared(batch, idCol, textCol, k)
-          .write.mode("overwrite")
-          .parquet(s"$sigStorePath/batch_id=$batchId")
-        val landed = sess.read.parquet(s"$sigStorePath/batch_id=$batchId")
-          .select(col("id"), col("sig"), col("toks"))
-        val prior = sess.read.parquet(sigStorePath)
-          .filter(col("batch_id").cast("long") < batchId)
-          .select(col("id"), col("sig"), col("toks"))
-        graft.ops.Dedup
-          .nearDupMinhashFromState(landed, prior, k, bands, minJaccard)
-          .write.mode("overwrite")
-          .parquet(s"$pairStorePath/batch_id=$batchId")
-        foldRootsSnapshot(sess, pairStorePath, rootsStorePath, batchId)
-      }
-      .start()
+      k: Int = 16, bands: Int = 4, minJaccard: Double = 0.5): StreamingQuery = {
+    requireInput("rootsStateSink", docs, idCol -> LongType)
+    foreachBatchSink(docs, checkpointDir, trigger) { (batch, batchId) =>
+      landSigsAndPairs(batch, batchId, idCol, textCol,
+        sigStorePath, pairStorePath, k, bands, minJaccard)
+      foldRootsSnapshot(batch.sparkSession, pairStorePath, rootsStorePath, batchId)
+    }
+  }
 
   /** Step 4 of [[rootsStateSink]], exposed for replay tests: fold the
     * landed `batch_id=N` pairs into a new roots snapshot from the
     * newest prior snapshot, then GC dead generations. */
   private[graft] def foldRootsSnapshot(sess: SparkSession,
       pairStorePath: String, rootsStorePath: String, batchId: Long): Unit = {
-    val newEdges = sess.read
-      .parquet(s"$pairStorePath/batch_id=$batchId")
-      .select(col("id_a"), col("id_b"))
-    val priorRoots = latestRootsBefore(sess, rootsStorePath, batchId)
+    val newEdges = Store.pairs.at(sess, pairStorePath, batchId, "id_a", "id_b")
+    val priorRoots = Store.roots.latestBefore(sess, rootsStorePath, batchId)
       // no prior snapshot: an empty (id, root) frame of the pair id type
       .getOrElse(newEdges.select(col("id_a").as("id"),
         col("id_a").as("root")).limit(0))
     val roots = graft.ops.Dedup
       .incrementalRoots(priorRoots, newEdges, "id_a", "id_b")
       .select(col("id"), col("comp").as("root"))
-    graft.sink.IndexStore.writeMinhashRoots(
-      roots, s"$rootsStorePath/batch_id=$batchId")
-    gcRootSnapshots(sess, rootsStorePath, batchId)
-  }
-
-  private def snapshotIds(fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path): Seq[Long] =
-    fs.listStatus(root).toSeq.flatMap { st =>
-      val n = st.getPath.getName
-      if (n.startsWith("batch_id=")) n.stripPrefix("batch_id=").toLongOption
-      else None
-    }
-
-  /** The newest roots snapshot strictly BEFORE `batchId` — the fold's
-    * prior state (on a replay of batch N this is still the snapshot the
-    * original run read, because GC keeps the immediate predecessor). */
-  private[graft] def latestRootsBefore(sess: SparkSession,
-      rootsStorePath: String, batchId: Long): Option[DataFrame] = {
-    val root = new org.apache.hadoop.fs.Path(rootsStorePath)
-    val fs = root.getFileSystem(sess.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) None
-    else snapshotIds(fs, root).filter(_ < batchId).maxOption
-      .map(b => sess.read.parquet(s"$rootsStorePath/batch_id=$b")
-        .select(col("id"), col("root")))
-  }
-
-  /** Keep snapshot `curBatch` and its immediate predecessor (a
-    * foreachBatch replay of `curBatch` re-reads the predecessor); older
-    * generations are dead. Best-effort hygiene — the newest-snapshot
-    * reader rule stays correct even if this never runs. */
-  private def gcRootSnapshots(sess: SparkSession, rootsStorePath: String,
-      curBatch: Long): Unit = {
-    val root = new org.apache.hadoop.fs.Path(rootsStorePath)
-    val fs = root.getFileSystem(sess.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) return
-    val ids = snapshotIds(fs, root)
-    val keep = (ids.filter(_ < curBatch).sorted.lastOption.toSeq :+ curBatch).toSet
-    ids.filterNot(keep).foreach(i =>
-      fs.delete(new org.apache.hadoop.fs.Path(root, s"batch_id=$i"), true))
+    Store.roots.land(roots, rootsStorePath, batchId,
+      graft.sink.IndexStore.writeMinhashRoots)
+    Store.roots.gc(sess, rootsStorePath, batchId)
   }
 
   /** The root store's CURRENT cluster assignment: the newest snapshot —
     * one node-scale narrow scan, never a component rebuild. */
-  def minhashStateRoots(sess: SparkSession, rootsStorePath: String): DataFrame = {
-    val root = new org.apache.hadoop.fs.Path(rootsStorePath)
-    val fs = root.getFileSystem(sess.sparkContext.hadoopConfiguration)
-    require(fs.exists(root), s"minhashStateRoots: no store at $rootsStorePath")
-    val latest = snapshotIds(fs, root).maxOption.getOrElse(
-      throw new IllegalStateException(
-        s"minhashStateRoots: no snapshot under $rootsStorePath"))
-    sess.read.parquet(s"$rootsStorePath/batch_id=$latest")
-      .select(col("id"), col("root"))
-  }
+  def minhashStateRoots(sess: SparkSession, rootsStorePath: String): DataFrame =
+    Store.roots.at(sess, rootsStorePath,
+      Store.roots.newest(sess, rootsStorePath, "minhashStateRoots"))
 
   /** Streaming kNN-GRAPH maintenance — the ANN-index sibling of
     * [[rootsStateSink]], same snapshot-generation state contract. The
@@ -807,7 +850,7 @@ object StreamingOps {
     *
     *  1. the batch's vectors land as their own deterministic
     *     `batch_id=N` partition (idempotent overwrite on replay — the
-    *     [[ivfStateSink]] discipline);
+    *     [[Store]] discipline);
     *  2. candidate edges INCIDENT to the batch come from the sign-LSH
     *     bucket equi-join of the landed batch's keys against the keys
     *     of everything landed so far ([[graft.ops.Similarity.signKeys]]
@@ -835,26 +878,23 @@ object StreamingOps {
     * rewritten `batch_id=N` vector partition, and the prior vector
     * partitions — so the recomputed snapshot N is byte-identical.
     * Cross-batch id-uniqueness contract as [[minhashStateSink]].
+    * `idCol` must be BIGINT and `vecCol` ARRAY<FLOAT> ([[Store.vecs]]).
     */
   def knnStateSink(
       vecs: DataFrame, idCol: String, vecCol: String,
       vecStorePath: String, graphStorePath: String, checkpointDir: String,
       trigger: Trigger = Trigger.AvailableNow(),
-      k: Int = 16, nBits: Int = 8, tables: Int = 8): StreamingQuery =
-    vecs.writeStream
-      .outputMode(OutputMode.Update())
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch0: DataFrame, batchId: Long) =>
-        val batch = fanOut(batch0)
-        val sess = batch.sparkSession
-        batch.select(col(idCol).as("id"), col(vecCol).as("vec"))
-          .write.mode("overwrite")
-          .parquet(s"$vecStorePath/batch_id=$batchId")
-        foldKnnSnapshot(sess, vecStorePath, graphStorePath, batchId,
-          k, nBits, tables)
-      }
-      .start()
+      k: Int = 16, nBits: Int = 8, tables: Int = 8): StreamingQuery = {
+    requireInput("knnStateSink", vecs,
+      idCol -> LongType, vecCol -> ArrayType(FloatType))
+    foreachBatchSink(vecs, checkpointDir, trigger) { (batch, batchId) =>
+      Store.vecs.land(
+        fanOut(batch).select(col(idCol).as("id"), col(vecCol).as("vec")),
+        vecStorePath, batchId)
+      foldKnnSnapshot(batch.sparkSession, vecStorePath, graphStorePath,
+        batchId, k, nBits, tables)
+    }
+  }
 
   /** Steps 2-3 of [[knnStateSink]], exposed for replay tests: score the
     * batch-incident candidate edges and fold them with the predecessor
@@ -863,11 +903,8 @@ object StreamingOps {
       vecStorePath: String, graphStorePath: String, batchId: Long,
       k: Int, nBits: Int, tables: Int): Unit = {
     import graft.ops.Similarity
-    val landed = sess.read.parquet(s"$vecStorePath/batch_id=$batchId")
-      .select(col("id"), col("vec"))
-    val all = sess.read.parquet(vecStorePath)
-      .filter(col("batch_id").cast("long") <= batchId)
-      .select(col("id"), col("vec"))
+    val landed = Store.vecs.at(sess, vecStorePath, batchId)
+    val all = Store.vecs.before(sess, vecStorePath, batchId + 1)
     val newKeys = Similarity.signKeys(landed, "id", "vec", nBits, tables)
     val allKeys = Similarity.signKeys(all, "id", "vec", nBits, tables)
     val incidentNew = newKeys.withColumnRenamed("id", "node_id")
@@ -885,84 +922,34 @@ object StreamingOps {
       .select(col("node_id"), col("neighbor_id"),
         Similarity.cosine(col("qv"), col("cv")).as("cos"))
       .filter(col("cos").isNotNull)
-    val prior = latestKnnBefore(sess, graphStorePath, batchId)
-      .getOrElse(scored.limit(0))
     // prior ∪ incident may repeat a pair (both endpoints old, re-bucketed
     // never happens — but a REPLAY folds edges already in the snapshot);
     // cosines of repeats are bit-identical (same fused expression over
     // the same stored floats), so a max-aggregate dedups deterministically
-    val merged = prior.select(col("node_id"), col("neighbor_id"), col("cos"))
-      .union(scored)
+    val merged = Store.graph
+      .latestBefore(sess, graphStorePath, batchId, "node_id", "neighbor_id", "cos")
+      .fold(scored)(_.union(scored))
       .groupBy(col("node_id"), col("neighbor_id"))
       .agg(max(col("cos")).as("cos"))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("node_id"))
       .orderBy(col("cos").desc, col("neighbor_id").asc)
-    val snapshot = merged
-      .withColumn("rank", org.apache.spark.sql.functions.row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("node_id"), col("neighbor_id"), col("cos"), col("rank"))
-    snapshot.write.mode("overwrite")
-      .parquet(s"$graphStorePath/batch_id=$batchId")
-    gcKnnSnapshots(sess, graphStorePath, batchId)
-  }
-
-  /** The newest graph snapshot strictly BEFORE `batchId`. */
-  private[graft] def latestKnnBefore(sess: SparkSession,
-      graphStorePath: String, batchId: Long): Option[DataFrame] = {
-    val root = new org.apache.hadoop.fs.Path(graphStorePath)
-    val fs = root.getFileSystem(sess.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) None
-    else snapshotIds(fs, root).filter(_ < batchId).maxOption
-      .map(b => sess.read.parquet(s"$graphStorePath/batch_id=$b")
-        .select(col("node_id"), col("neighbor_id"), col("cos"), col("rank")))
-  }
-
-  private def gcKnnSnapshots(sess: SparkSession, graphStorePath: String,
-      curBatch: Long): Unit = {
-    val root = new org.apache.hadoop.fs.Path(graphStorePath)
-    val fs = root.getFileSystem(sess.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) return
-    val ids = snapshotIds(fs, root)
-    val keep = (ids.filter(_ < curBatch).sorted.lastOption.toSeq :+ curBatch).toSet
-    ids.filterNot(keep).foreach(i =>
-      fs.delete(new org.apache.hadoop.fs.Path(root, s"batch_id=$i"), true))
+    Store.graph.land(
+      merged.withColumn("rank", row_number().over(w)).filter(col("rank") <= k),
+      graphStorePath, batchId)
+    Store.graph.gc(sess, graphStorePath, batchId)
   }
 
   /** The graph store's CURRENT kNN graph: the newest snapshot — one
     * node-scale narrow scan, never an index rebuild. */
-  def knnStateGraph(sess: SparkSession, graphStorePath: String): DataFrame = {
-    val root = new org.apache.hadoop.fs.Path(graphStorePath)
-    val fs = root.getFileSystem(sess.sparkContext.hadoopConfiguration)
-    require(fs.exists(root), s"knnStateGraph: no store at $graphStorePath")
-    val latest = snapshotIds(fs, root).maxOption.getOrElse(
-      throw new IllegalStateException(
-        s"knnStateGraph: no snapshot under $graphStorePath"))
-    sess.read.parquet(s"$graphStorePath/batch_id=$latest")
-      .select(col("node_id"), col("neighbor_id"), col("cos"), col("rank"))
-  }
-
-  /** The inverted index's four stores, declared once: the sink writes
-    * exactly these columns (doc_id BIGINT, which [[invertedStateSink]]
-    * requires of its id column), and every read-back names its columns
-    * from here instead of inferring them — a parquet schema inference is
-    * one job per read. A new store column goes into its schema here. */
-  private[graft] object TextStore {
-    val tf: StructType = StructType.fromDDL("doc_id BIGINT, token STRING, tf BIGINT")
-    val dl: StructType = StructType.fromDDL("doc_id BIGINT, dl BIGINT")
-    val df: StructType = StructType.fromDDL("token STRING, df BIGINT")
-    val global: StructType = StructType.fromDDL("n_docs BIGINT, sum_dl BIGINT")
-
-    /** `cols` of a store at `path`, read with their declared types. */
-    def read(sess: SparkSession, store: StructType, path: String,
-        cols: String*): DataFrame =
-      sess.read.schema(StructType(cols.map(store(_)))).parquet(path)
-  }
+  def knnStateGraph(sess: SparkSession, graphStorePath: String): DataFrame =
+    Store.graph.at(sess, graphStorePath,
+      Store.graph.newest(sess, graphStorePath, "knnStateGraph"))
 
   /** Streaming INVERTED-INDEX maintenance — the text-retrieval sibling of
     * [[knnStateSink]], same snapshot-generation state contract. The
-    * persisted state under `indexPath` ([[TextStore]] declares each
-    * store's schema) is:
+    * persisted state under `indexPath` ([[Store.tf]], [[Store.dl]],
+    * [[Store.df]] and [[Store.global]] declare each store's schema) is:
     *
     *  - `tf/batch_id=N` — (doc_id, token, tf): the batch's postings,
     *    append-only, idempotent per-batch overwrite (at 100 TB this
@@ -1000,33 +987,25 @@ object StreamingOps {
       docs: DataFrame, idCol: String, textCol: String,
       indexPath: String, checkpointDir: String,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    val idType = docs.schema(idCol).dataType
-    require(idType == LongType,
-      s"invertedStateSink: $idCol must be BIGINT (the stores declare doc_id " +
-        s"BIGINT), got ${idType.sql}")
-    docs.writeStream
-      .outputMode(OutputMode.Update())
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val toks = batch.select(col(idCol).as("doc_id"),
-          graft.ops.TextAnalysis.tokens(col(textCol)).as("toks")).persist()
-        try {
-          // dl first: its exchange-free write fills the cache in its own
-          // job, where the tf write (planned adaptively) would spend a
-          // separate job materializing it
-          toks.select(col("doc_id"), size(col("toks")).cast("long").as("dl"))
-            .write.mode("overwrite")
-            .parquet(s"$indexPath/dl/batch_id=$batchId")
+    requireInput("invertedStateSink", docs, idCol -> LongType)
+    foreachBatchSink(docs, checkpointDir, trigger) { (batch, batchId) =>
+      val toks = batch.select(col(idCol).as("doc_id"),
+        graft.ops.TextAnalysis.tokens(col(textCol)).as("toks")).persist()
+      try {
+        // dl first: its exchange-free write fills the cache in its own
+        // job, where the tf write (planned adaptively) would spend a
+        // separate job materializing it
+        Store.dl.land(
+          toks.select(col("doc_id"), size(col("toks")).cast("long").as("dl")),
+          s"$indexPath/dl", batchId)
+        Store.tf.land(
           toks.select(col("doc_id"), explode(col("toks")).as("token"))
             .groupBy(col("doc_id"), col("token"))
-            .agg(count(lit(1)).as("tf"))
-            .write.mode("overwrite")
-            .parquet(s"$indexPath/tf/batch_id=$batchId")
-        } finally toks.unpersist()
-        foldTextStats(batch.sparkSession, indexPath, batchId)
-      }
-      .start()
+            .agg(count(lit(1)).as("tf")),
+          s"$indexPath/tf", batchId)
+      } finally toks.unpersist()
+      foldTextStats(batch.sparkSession, indexPath, batchId)
+    }
   }
 
   /** The stats fold of [[invertedStateSink]], exposed for replay tests:
@@ -1037,41 +1016,27 @@ object StreamingOps {
     * `prior ∪ (1, dl)` per doc — land generation `batchId`, GC. Integer
     * sums over disjoint doc sets, so the result equals a per-batch delta
     * folded into the prior. Every read declares its columns
-    * ([[TextStore]]), so the fold runs no schema-inference job. */
+    * ([[Store]]), so the fold runs no schema-inference job. */
   private[graft] def foldTextStats(sess: SparkSession,
       indexPath: String, batchId: Long): Unit = {
-    def withPrior(store: String, schema: StructType,
-        delta: DataFrame): DataFrame =
-      latestSnapshotBefore(sess, s"$indexPath/$store", batchId, schema)
+    def withPrior(store: Store, delta: DataFrame): DataFrame =
+      store.latestBefore(sess, s"$indexPath/${store.name}", batchId)
         .fold(delta)(_.union(delta))
-    val tfN = TextStore.read(sess, TextStore.tf,
-      s"$indexPath/tf/batch_id=$batchId", "token")
-    val dlN = TextStore.read(sess, TextStore.dl,
-      s"$indexPath/dl/batch_id=$batchId", "dl")
-    withPrior("df", TextStore.df, tfN.select(col("token"), lit(1L).as("df")))
-      .groupBy(col("token")).agg(sum(col("df")).as("df"))
-      .write.mode("overwrite").parquet(s"$indexPath/df/batch_id=$batchId")
-    withPrior("global", TextStore.global,
-        dlN.select(lit(1L).as("n_docs"), col("dl").as("sum_dl")))
-      .agg(coalesce(sum(col("n_docs")), lit(0L)).as("n_docs"),
-        sum(col("sum_dl")).as("sum_dl"))
-      .coalesce(1).write.mode("overwrite")
-      .parquet(s"$indexPath/global/batch_id=$batchId")
-    gcRootSnapshots(sess, s"$indexPath/df", batchId)
-    gcRootSnapshots(sess, s"$indexPath/global", batchId)
-  }
-
-  /** The newest snapshot strictly before `batchId` under a generation
-    * store ([[latestRootsBefore]] generalized), read with the store's
-    * declared `schema` — no schema-inference job. */
-  private def latestSnapshotBefore(sess: SparkSession,
-      storePath: String, batchId: Long,
-      schema: StructType): Option[DataFrame] = {
-    val root = new org.apache.hadoop.fs.Path(storePath)
-    val fs = root.getFileSystem(sess.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) None
-    else snapshotIds(fs, root).filter(_ < batchId).maxOption
-      .map(b => sess.read.schema(schema).parquet(s"$storePath/batch_id=$b"))
+    val tfN = Store.tf.at(sess, s"$indexPath/tf", batchId, "token")
+    val dlN = Store.dl.at(sess, s"$indexPath/dl", batchId, "dl")
+    Store.df.land(
+      withPrior(Store.df, tfN.select(col("token"), lit(1L).as("df")))
+        .groupBy(col("token")).agg(sum(col("df")).as("df")),
+      s"$indexPath/df", batchId)
+    Store.global.land(
+      withPrior(Store.global,
+          dlN.select(lit(1L).as("n_docs"), col("dl").as("sum_dl")))
+        .agg(coalesce(sum(col("n_docs")), lit(0L)).as("n_docs"),
+          sum(col("sum_dl")).as("sum_dl"))
+        .coalesce(1),
+      s"$indexPath/global", batchId)
+    Store.df.gc(sess, s"$indexPath/df", batchId)
+    Store.global.gc(sess, s"$indexPath/global", batchId)
   }
 
   /** BM25 top-k served FROM the maintained inverted-index state: term
@@ -1083,35 +1048,27 @@ object StreamingOps {
     * [[graft.queries.MaxScoreQueries]]), and the maintained counts equal
     * the one-shot counts, so the served scores are bit-identical to a
     * full rebuild's. The four stores are read with their declared
-    * schemas ([[TextStore]]), so construction launches no job. */
+    * schemas ([[Store]]), so construction launches no job. */
   def invertedStateBm25(sess: SparkSession, indexPath: String,
       terms: Seq[String], k: Int): DataFrame = {
     import org.apache.spark.sql.types.DecimalType
-    val gRoot = new org.apache.hadoop.fs.Path(s"$indexPath/global")
-    val fs = gRoot.getFileSystem(sess.sparkContext.hadoopConfiguration)
-    require(fs.exists(gRoot), s"invertedStateBm25: no store at $indexPath")
-    val latest = snapshotIds(fs, gRoot).maxOption.getOrElse(
-      throw new IllegalStateException(
-        s"invertedStateBm25: no snapshot under $indexPath/global"))
+    val latest = Store.global.newest(sess, s"$indexPath/global", "invertedStateBm25")
     // the snapshot is one row BY CONSTRUCTION (a global aggregate landed
     // on disk); limit(1) encodes that contract in the plan — a corrupted
     // multi-row snapshot cannot fan the cross-attachment out, and the
     // boundedness is visible to plan lints (the on-disk Aggregate is not)
-    val stats = TextStore.read(sess, TextStore.global,
-        s"$indexPath/global/batch_id=$latest", "n_docs", "sum_dl")
+    val stats = Store.global.at(sess, s"$indexPath/global", latest)
       .limit(1)
       .select(col("n_docs").cast("double").as("n"),
         (col("sum_dl").cast("double") / col("n_docs").cast("double"))
           .as("avgdl"))
-    val dfT = TextStore.read(sess, TextStore.df,
-        s"$indexPath/df/batch_id=$latest", "token", "df")
+    val dfT = Store.df.at(sess, s"$indexPath/df", latest)
       .filter(col("token").isin(terms: _*))
       .select(col("token"), col("df").cast("double").as("df"))
-    val tf = TextStore.read(sess, TextStore.tf, s"$indexPath/tf",
-        "doc_id", "token", "tf")
+    val tf = Store.tf.read(sess, s"$indexPath/tf")
       .filter(col("token").isin(terms: _*))
       .select(col("doc_id"), col("token"), col("tf").cast("double").as("tf"))
-    val dl = TextStore.read(sess, TextStore.dl, s"$indexPath/dl", "doc_id", "dl")
+    val dl = Store.dl.read(sess, s"$indexPath/dl")
       .select(col("doc_id"), col("dl").cast("double").as("dl"))
     val perTerm = tf.join(broadcast(dfT), "token")
       .join(dl, "doc_id")
@@ -1152,7 +1109,7 @@ object StreamingOps {
     * After any number of micro-batches the pair store's union equals
     * [[graft.ops.Dedup.bandedPairsFromSigs]] over the union of batches,
     * row-identically — StreamingPhashSpec proves it plus replay
-    * idempotence.
+    * idempotence. `idCol` must be BIGINT ([[Store.phashSig]]).
     *
     * CONTRACT — cross-batch id uniqueness: each media id must arrive in
     * at most ONE micro-batch. The batch_id partitioning makes REPLAYS of
@@ -1168,28 +1125,19 @@ object StreamingOps {
       docs: DataFrame, idCol: String, textCol: String,
       sigStorePath: String, pairStorePath: String, checkpointDir: String,
       trigger: Trigger = Trigger.AvailableNow(),
-      maxHamming: Int = 3): StreamingQuery =
-    docs.writeStream
-      .outputMode(OutputMode.Update())
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch0: DataFrame, batchId: Long) =>
-        val batch = fanOut(batch0)
-        val sess = batch.sparkSession
-        graft.ops.Multimodal.dhashSigsFromDocs(batch, idCol, textCol)
-          .write.mode("overwrite")
-          .parquet(s"$sigStorePath/batch_id=$batchId")
-        val landed = sess.read.parquet(s"$sigStorePath/batch_id=$batchId")
-          .select(col("id"), col("sig"))
-        val prior = sess.read.parquet(sigStorePath)
-          .filter(col("batch_id").cast("long") < batchId)
-          .select(col("id"), col("sig"))
-        graft.ops.Dedup
-          .bandedPairsFromState(landed, prior, maxHamming)
-          .write.mode("overwrite")
-          .parquet(s"$pairStorePath/batch_id=$batchId")
-      }
-      .start()
+      maxHamming: Int = 3): StreamingQuery = {
+    requireInput("phashStateSink", docs, idCol -> LongType)
+    foreachBatchSink(docs, checkpointDir, trigger) { (batch, batchId) =>
+      val sess = batch.sparkSession
+      Store.phashSig.land(
+        graft.ops.Multimodal.dhashSigsFromDocs(fanOut(batch), idCol, textCol),
+        sigStorePath, batchId)
+      Store.phashPairs.land(graft.ops.Dedup.bandedPairsFromState(
+          Store.phashSig.at(sess, sigStorePath, batchId),
+          Store.phashSig.before(sess, sigStorePath, batchId), maxHamming),
+        pairStorePath, batchId)
+    }
+  }
 
   /** Streaming PQ coding into the cell-partitioned compressed store —
     * the ingest path of the IVF-PQ lifecycle (train → code → persist →
@@ -1217,20 +1165,15 @@ object StreamingOps {
       codebook: Seq[(Int, Int, Seq[Double])], m: Int, subDim: Int,
       codeStorePath: String, checkpointDir: String,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    vecs.writeStream
-      .outputMode(OutputMode.Update())
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch0: DataFrame, batchId: Long) =>
-        fanOut(batch0)
-          .select(col(idCol).as("vec_id"), col(cellCol).as("cell"),
-            graft.ops.Similarity
-              .pqCodesExpr(col(vecCol), codebook, m, subDim).as("codes"))
-          .write.mode("overwrite")
-          .partitionBy("cell")
-          .parquet(s"$codeStorePath/batch_id=$batchId")
-      }
-      .start()
+    foreachBatchSink(vecs, checkpointDir, trigger) { (batch0, batchId) =>
+      fanOut(batch0)
+        .select(col(idCol).as("vec_id"), col(cellCol).as("cell"),
+          graft.ops.Similarity
+            .pqCodesExpr(col(vecCol), codebook, m, subDim).as("codes"))
+        .write.mode("overwrite")
+        .partitionBy("cell")
+        .parquet(s"$codeStorePath/batch_id=$batchId")
+    }
 
   /** The delta log's EFFECTIVE row set under the base-generation rule:
     * the most-negative `batch_id` partition is the newest compacted base

@@ -59,7 +59,8 @@ class CrossRunDedupSpec extends SparkSpec {
     val storePath = graft.queries.CrossRunDedupQueries
       .persistedPairsPath(spark, dir)
     val stored = graft.sink.IndexStore
-      .readMinhashRoots(spark, storePath + "-roots")
+      .readMinhashRoots(spark, graft.queries.CrossRunDedupQueries
+        .persistedRootsPath(spark, dir))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val rebuilt = graft.ops.Dedup.connectedComponents(
         graft.sink.IndexStore.readMinhashPairs(spark, storePath)
@@ -74,10 +75,8 @@ class CrossRunDedupSpec extends SparkSpec {
     // Dedup.incrementalRoots: prior persisted roots (star forest) +
     // batch-incident edges must reproduce the components of the WHOLE
     // pair graph — old edges never re-read
-    val storePath = graft.queries.CrossRunDedupQueries
-      .persistedPairsPath(spark, dir)
-    val prior = graft.sink.IndexStore
-      .readMinhashRoots(spark, storePath + "-roots")
+    val prior = graft.sink.IndexStore.readMinhashRoots(spark,
+      graft.queries.CrossRunDedupQueries.persistedRootsPath(spark, dir))
     val incr = graft.queries.ExtensionQueries.minhashIncrPairs(spark, dir)
       .select(col("id_a"), col("id_b"))
     val viaIncr = graft.ops.Dedup

@@ -2,13 +2,10 @@ package graft
 
 import java.nio.file.{Files, Path}
 import java.sql.DriverManager
-import java.util.concurrent.atomic.AtomicInteger
 import graft.ops.Validation
 import graft.sink.JdbcUpsert
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.Bridge
 
 /** End-to-end reference-pipeline parity: catalog pages -> dense price grid
   * with active flags -> keyed tables in (Derby-emulated) Postgres, rerun
@@ -41,22 +38,7 @@ class PricenowPipelineSpec extends SparkSpec {
   /** Jobs launched by `body`, counted under a job group of its own. */
   private def jobsOf(body: => Unit): Int = {
     val group = s"jobs-of-${System.nanoTime()}"
-    val jobs = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
-          jobs.incrementAndGet()
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, "job count probe")
-    try body
-    finally {
-      sc.clearJobGroup()
-      Bridge.drainListeners(sc)
-      sc.removeSparkListener(listener)
-    }
-    jobs.get
+    jobsDuring(group)(body).count(_._1 == group)
   }
 
   test("full EP1->EP2->EP3 run lands both tables; rerun converges") {

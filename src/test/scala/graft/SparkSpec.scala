@@ -1,6 +1,12 @@
 package graft
 
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graftbridge.Bridge
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -15,6 +21,30 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     .config("spark.sql.warehouse.dir",
       s"${System.getProperty("java.io.tmpdir")}/graft-warehouse-${ProcessHandle.current().pid()}")
     .getOrCreate()
+
+  /** (job group, micro-batch id) of every job started while `body` runs;
+    * `body` runs under job group `group`, a stream's jobs carry its run id
+    * as their group. */
+  def jobsDuring(group: String)(body: => Unit): Seq[(String, String)] = {
+    val jobs = new ConcurrentLinkedQueue[(String, String)]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val p = Option(e.properties)
+        jobs.add((p.map(_.getProperty("spark.jobGroup.id")).orNull,
+          p.map(_.getProperty("streaming.sql.batchId")).orNull))
+      }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "job count probe")
+    try body
+    finally {
+      sc.clearJobGroup()
+      Bridge.drainListeners(sc)
+      sc.removeSparkListener(listener)
+    }
+    jobs.asScala.toSeq
+  }
 
   override protected def afterAll(): Unit = {
     // keep the session for sibling suites; stopped by the JVM exit

@@ -159,4 +159,38 @@ class StreamingDedupSpec extends SparkSpec {
     // and the landed rows are intact
     assert(spark.read.parquet(s"$sigStore/batch_id=0").count() == 5)
   }
+
+  test("jobs: roots construction launches none, a micro-batch a bounded few") {
+    implicit val sc = spark.sqlContext
+    val all = graft.ops.Tables.documents(spark, dir)
+      .select(col("doc_id"), col("text"))
+      .as[(Long, String)].collect().toSeq
+    val (sigStore, pairStore, rootsStore, ckpt) =
+      (tmp("jsigs"), tmp("jpairs"), tmp("jroots"), tmp("jckpt"))
+    val in = MemoryStream[(Long, String)]
+    var runId = ""
+    val streamJobs = jobsDuring("roots-sink") {
+      val q = graft.streaming.StreamingOps.rootsStateSink(
+        in.toDF().toDF("doc_id", "text"),
+        "doc_id", "text", sigStore, pairStore, rootsStore, ckpt,
+        trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0L))
+      runId = q.runId.toString
+      try (0 until 3).foreach { i =>
+        in.addData(all.filter(_._1 % 3 == i): _*)
+        q.processAllAvailable()
+      } finally q.stop()
+    }
+    val perBatch = streamJobs.filter(_._1 == runId).groupBy(_._2)
+      .map { case (b, js) => b -> js.size }
+    assert(perBatch.keySet == Set("0", "1", "2"))
+    // land sigs + pairs, fold the roots snapshot, every store read with
+    // its declared schema: 26-27 jobs (29-31 with the schema inferences)
+    assert(perBatch.values.forall(_ <= 27),
+      s"a micro-batch launched more jobs than its stores need: $perBatch")
+    val buildJobs = jobsDuring("roots-build") {
+      graft.streaming.StreamingOps.minhashStateRoots(spark, rootsStore)
+        .queryExecution.executedPlan
+    }.count(_._1 == "roots-build")
+    assert(buildJobs == 0, s"constructing the roots read launched $buildJobs jobs")
+  }
 }

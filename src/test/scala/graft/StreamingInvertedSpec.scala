@@ -1,13 +1,7 @@
 package graft
 
-import java.util.concurrent.ConcurrentLinkedQueue
-
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.streaming.Trigger
 
 /** Streaming inverted-index maintenance (StreamingOps.invertedStateSink):
@@ -41,30 +35,6 @@ class StreamingInvertedSpec extends SparkSpec {
       ckpt: String) = graft.streaming.StreamingOps.invertedStateSink(
     in.toDF().toDF("doc_id", "text"), "doc_id", "text", idx, ckpt,
     trigger = Trigger.ProcessingTime(0L))
-
-  /** (job group, micro-batch id) of every job started while `body` runs;
-    * `body` runs under job group `group`, a stream's jobs carry its run id
-    * as their group. */
-  private def jobsDuring(group: String)(body: => Unit): Seq[(String, String)] = {
-    val jobs = new ConcurrentLinkedQueue[(String, String)]
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = {
-        val p = Option(e.properties)
-        jobs.add((p.map(_.getProperty("spark.jobGroup.id")).orNull,
-          p.map(_.getProperty("streaming.sql.batchId")).orNull))
-      }
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, "job count probe")
-    try body
-    finally {
-      sc.clearJobGroup()
-      Bridge.drainListeners(sc)
-      sc.removeSparkListener(listener)
-    }
-    jobs.asScala.toSeq
-  }
 
   /** One-shot exhaustive BM25 on a (doc_id, text) frame — the
     * MaxScoreQueries postings arithmetic, scored without pruning. */

@@ -95,4 +95,38 @@ class StreamingKnnSpec extends SparkSpec {
     assert(g.contains((1L, 3L)) && g.contains((3L, 1L)),
       s"the late-landing closer neighbor must displace the early one: $g")
   }
+
+  test("jobs: graph construction launches none, a micro-batch a bounded few") {
+    implicit val sc = spark.sqlContext
+    val all = graft.ops.Tables.embeddings(spark, dir)
+      .select(col("vec_id"), col("embedding"))
+      .as[(Long, Array[Float])].collect().toSeq
+    val (vecStore, graphStore, ckpt) = (tmp("jvecs"), tmp("jgraph"), tmp("jckpt"))
+    val in = MemoryStream[(Long, Array[Float])]
+    var runId = ""
+    val streamJobs = jobsDuring("knn-sink") {
+      val q = graft.streaming.StreamingOps.knnStateSink(
+        in.toDF().toDF("vec_id", "embedding"),
+        "vec_id", "embedding", vecStore, graphStore, ckpt,
+        trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0L),
+        k = 4, nBits = 8, tables = 8)
+      runId = q.runId.toString
+      try (0 until 3).foreach { i =>
+        in.addData(all.filter(_._1 % 3 == i): _*)
+        q.processAllAvailable()
+      } finally q.stop()
+    }
+    val perBatch = streamJobs.filter(_._1 == runId).groupBy(_._2)
+      .map { case (b, js) => b -> js.size }
+    assert(perBatch.keySet == Set("0", "1", "2"))
+    // land the vectors, fold the graph snapshot, every store read with
+    // its declared schema: 9-10 jobs (11-13 with the schema inferences)
+    assert(perBatch.values.forall(_ <= 10),
+      s"a micro-batch launched more jobs than its stores need: $perBatch")
+    val buildJobs = jobsDuring("graph-build") {
+      graft.streaming.StreamingOps.knnStateGraph(spark, graphStore)
+        .queryExecution.executedPlan
+    }.count(_._1 == "graph-build")
+    assert(buildJobs == 0, s"constructing the graph read launched $buildJobs jobs")
+  }
 }
