@@ -165,7 +165,7 @@ object Bench {
     def esc(s: String) = s.replace("\\", "\\\\").replace("\"", "\\\"")
     def r3(d: Double) = math.rint(d * 1000) / 1000
     val builds = graft.ops.SessionCache.buildSeconds.toSeq
-      .map { case (n, s) => (n.replace(sfDir + "/", "").replace(sfDir, ""), s) }
+      .map { case (n, s) => (n.replace(sfDir + "/", "").replace(sfDir, "").stripSuffix(":"), s) }
     System.err.println(builds.sortBy(-_._2)
       .map { case (n, s) => s"[bench] memo-build $n ${r3(s)}s" }.mkString("\n"))
     val (top, rest) = builds.sortBy(-_._2).splitAt(12)

@@ -27,57 +27,12 @@ object Tables {
   private val schemaCache = scala.collection.concurrent.TrieMap
     .empty[(String, Long, String), org.apache.spark.sql.types.StructType]
 
-  /** (mtime, type-affecting-confs) cache key component for `path` —
-    * shared by the schema cache and the resolved-frame cache below. */
-  private def cacheStamp(spark: SparkSession, path: String): (Long, String) = {
-    // Every conf that changes what parquet type inference PRODUCES keys
-    // the cache (r17 advice: nanosAsLong/NTZ alone missed binaryAsString,
-    // int96AsTimestamp, caseSensitive, mergeSchema).
-    val confKey = Seq(
-      "spark.sql.legacy.parquet.nanosAsLong" -> "false",
-      "spark.sql.parquet.inferTimestampNTZ.enabled" -> "true",
-      "spark.sql.timestampType" -> "TIMESTAMP_LTZ",
-      "spark.sql.parquet.binaryAsString" -> "false",
-      "spark.sql.parquet.int96AsTimestamp" -> "true",
-      "spark.sql.caseSensitive" -> "false",
-      "spark.sql.parquet.mergeSchema" -> "false")
-      .map { case (k, d) => spark.conf.get(k, d) }.mkString("|")
-    // Hadoop FileSystem mtime, not java.io.File (which returns 0 for any
-    // non-local scheme — hdfs://, s3a:// — and would serve a stale schema
-    // silently). For directory-style tables the newest mtime across the
-    // directory and its direct children invalidates on in-place part-file
-    // rewrites, which the directory's own mtime misses.
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val st = fs.getFileStatus(p)
-    val mtime =
-      if (st.isDirectory)
-        (st.getModificationTime +: fs.listStatus(p).map(_.getModificationTime).toSeq).max
-      else st.getModificationTime
-    (mtime, confKey)
-  }
-
-  private def inferredSchema(spark: SparkSession, path: String,
-      stamp: (Long, String)): org.apache.spark.sql.types.StructType =
+  private def inferredSchema(spark: SparkSession,
+      path: String): org.apache.spark.sql.types.StructType = {
+    val stamp = SessionCache.cacheStamp(spark, path)
     schemaCache.getOrElseUpdate((path, stamp._1, stamp._2),
       spark.read.parquet(path).schema)
-
-  /** Resolved, normalized base-table DataFrame per (session, path,
-    * mtime, type-affecting confs) — the catalog layer the schema cache
-    * started (r17): even with the schema supplied, every
-    * `spark.read.parquet` call re-builds a relation and re-runs
-    * analyzer resolution on it; Catalyst rule metering put ResolveDataSource
-    * alone at 2.6 s per warm suite pass (11,700 runs) on top of the
-    * per-call FileIndex/LogicalRelation construction. A production
-    * catalog resolves a table once per session — this cache IS that
-    * catalog step: a lazy LOGICAL PLAN only (never data, never results;
-    * every query still scans parquet per action), invalidated by file
-    * mtime exactly like the schema cache, evicted on session stop via
-    * SessionCache. Same reuse discipline the dedup family established
-    * with its memoized `documents` read; self-joins of the shared frame
-    * stay sound (DeduplicateRelations, as for any twice-used frame). */
-  private val frameCache =
-    new SessionCache[(String, Long, String), DataFrame]("table:")
+  }
 
   /** Reads a harness table, normalizing any TIMESTAMP_NTZ column to
     * TimestampType. The driver's parquet writer has flipped
@@ -95,10 +50,15 @@ object Tables {
       }.foldLeft(raw) { (df, c) =>
         df.withColumn(c, df.col(c).cast(org.apache.spark.sql.types.TimestampType))
       }
-    val stamp = cacheStamp(spark, path)
-    frameCache.getOrElseUpdate(spark, (path, stamp._1, stamp._2),
-      normalize(spark.read
-        .schema(inferredSchema(spark, path, stamp)).parquet(path)))
+    // The resolved, normalized frame is memoized per (session, path) and
+    // rebuilt when the file's stamp changes: a production catalog resolves
+    // a table once per session. Every `spark.read.parquet` call re-builds
+    // a relation and re-runs analyzer resolution (ResolveDataSource alone
+    // metered 2.6 s per warm suite pass); the memo holds a lazy LOGICAL
+    // PLAN only, so every query still scans parquet per action. Self-joins
+    // of the shared frame stay sound (DeduplicateRelations).
+    SessionCache.memo(spark, path, "table")(
+      normalize(spark.read.schema(inferredSchema(spark, path)).parquet(path)))
   }
 
   def lineitem(spark: SparkSession, d: String): DataFrame = t(spark, d, "lineitem")

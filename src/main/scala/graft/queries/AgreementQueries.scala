@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.QueryDef
-import graft.ops.GridMemo.MemoOps
+import graft.ops.SessionCache.MemoOps
 import graft.ops.{Tables, TextAnalysis}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._

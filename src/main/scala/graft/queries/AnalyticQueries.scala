@@ -1,8 +1,8 @@
 package graft.queries
 
 import graft.QueryDef
-import graft.ops.GridMemo.MemoOps
-import graft.ops.{RobustStats, Tables, TextAnalysis}
+import graft.ops.SessionCache.MemoOps
+import graft.ops.{RobustStats, SessionCache, Tables, TextAnalysis}
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -29,14 +29,12 @@ object AnalyticQueries {
 
   /** Memoized daily-revenue mean-deviation grid — q_acf_table and
     * q_ljung_box derive from the IDENTICAL (day, dev = n·cents − Σcents)
-    * frame, so the orders scan + checkpoint run once per session (the
-    * minhashPairsCache pattern; calendar-grid-sized, cheap to pin). */
-  private val devGridCache =
-    new graft.ops.SessionCache[String, org.apache.spark.sql.DataFrame]("dev-grid:")
-
+    * frame, so the orders scan + checkpoint run once per session and
+    * again only when the input changes ([[graft.ops.SessionCache]];
+    * calendar-grid-sized, cheap to pin). */
   private def dailyDevGrid(spark: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame =
-    devGridCache.getOrElseUpdate(spark, dir, {
+    SessionCache.memo(spark, dir, "dev-grid") {
       val d380 = DecimalType(38, 0)
       val daily = Tables.orders(spark, dir)
         .groupBy(to_date(col("o_orderdate")).as("day"))
@@ -47,7 +45,7 @@ object AnalyticQueries {
         .select(col("day"),
           (col("c").cast(d380) * col("n") - col("s")).as("dev"))
         .localCheckpoint(true)
-    })
+    }
 
   // --- statistical aggregates from exact decimal sums -----------------------
 

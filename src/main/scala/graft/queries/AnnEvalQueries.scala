@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.QueryDef
-import graft.ops.{Similarity, Tables}
+import graft.ops.{SessionCache, Similarity, Tables}
 import org.apache.spark.sql.functions._
 
 /** ANN evaluation harnesses for the production questions the index
@@ -115,8 +115,7 @@ object AnnEvalQueries {
     * per pass. */
   private def annFilteredTruth(spark: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame =
-    ExtensionQueries.minhashPairsCache.getOrElseUpdate(spark,
-      (dir, "annf_truth"), {
+    SessionCache.memo(spark, dir, "annf_truth") {
         val emb = Tables.embeddings(spark, dir)
           .select(col("vec_id"), col("embedding"), col("label"))
           .localCheckpoint(false)
@@ -124,7 +123,7 @@ object AnnEvalQueries {
             emb.filter(col("vec_id") < 8), "vec_id", "embedding", K)
           .select(col("query_id"), col("neighbor_id"))
           .localCheckpoint(true)
-      })
+      }
 
   /** Memoized scored LSH candidate frame with the neighbor label
     * attached — ONE sign-key build + ONE bucket join + ONE scoring pass
@@ -141,8 +140,7 @@ object AnnEvalQueries {
     * run per pass. */
   private def annFilteredScored(spark: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame =
-    ExtensionQueries.minhashPairsCache.getOrElseUpdate(spark,
-      (dir, "annf_scored"), {
+    SessionCache.memo(spark, dir, "annf_scored") {
         val emb = Tables.embeddings(spark, dir)
           .select(col("vec_id"), col("embedding"), col("label"))
           .localCheckpoint(false)
@@ -162,7 +160,7 @@ object AnnEvalQueries {
           .filter(col("cos").isNotNull)
           .select(col("query_id"), col("neighbor_id"), col("nl"), col("cos"))
           .localCheckpoint(true)
-      })
+      }
 
   private val annFiltered = QueryDef(
     fn = (spark, dir) => {

@@ -1,8 +1,8 @@
 package graft.queries
 
 import graft.QueryDef
-import graft.ops.GridMemo.MemoOps
-import graft.ops.{Tables, TextAnalysis}
+import graft.ops.SessionCache.MemoOps
+import graft.ops.{SessionCache, Tables, TextAnalysis}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -30,8 +30,8 @@ import org.apache.spark.sql.functions._
   * join). Scoring re-touches the corpus once (per-doc tf) and joins it
   * to the BROADCAST weight table — no shuffle carries text, no window
   * runs over fact rows (the per-doc argmax partitions by doc_id). The
-  * model chain is memoized per (session, dir) so train + score build it
-  * once (the minhashPairsCache pattern).
+  * model chain is memoized per (session, dir) in
+  * [[graft.ops.SessionCache]] so train + score build it once.
   */
 object ClassifierQueries {
 
@@ -41,9 +41,6 @@ object ClassifierQueries {
     * scale, large enough that sf0.01 docs average many in-vocab hits. */
   private val V = 200
 
-  private val modelCache =
-    new graft.ops.SessionCache[(String, String), DataFrame]("nb-model:")
-
   /** Class-conditional weight table: (lang, token, c, w6, prior6, nl, vs)
     * — one row per (class, vocab token), Laplace-smoothed
     * w6 = ⌊(ln(c+1) − ln(n_l + |V|))·1e6⌉ micro-nats, plus the class
@@ -51,7 +48,7 @@ object ClassifierQueries {
     * rows); checkpointed so both consumers reuse the materialized model.
     */
   private def nbWeights(spark: SparkSession, dir: String): DataFrame =
-    modelCache.getOrElseUpdate(spark, (dir, "nb"), {
+    SessionCache.memo(spark, dir, "nb_weights") {
       val docs = Tables.documents(spark, dir)
       val toks = docs.select(col("lang"),
         explode(TextAnalysis.tokens(col("text"))).as("token"))
@@ -81,7 +78,7 @@ object ClassifierQueries {
           floor((log(col("dl")) - log(col("d"))) * 1e6 + 0.5)
             .cast("long").as("prior6"))
         .localCheckpoint(true)
-    })
+    }
 
   /** Memoized per-(doc, class) score matrix (doc_id, true_lang, lang,
     * score6 = Σ tf·w6 + prior6): the ONE corpus-sized scoring pass —
@@ -93,7 +90,7 @@ object ClassifierQueries {
     * class slice — identical values to the per-query construction, with
     * the left-join coalesce folded in). */
   private def nbScoreMatrix(spark: SparkSession, dir: String): DataFrame =
-    modelCache.getOrElseUpdate(spark, (dir, "nb_scores"),
+    SessionCache.memo(spark, dir, "nb_scores")(
       nbScoreMatrixBuild(spark, dir).localCheckpoint(true))
 
   /** The lazy pre-checkpoint build — separate so PlanAuditSpec can
@@ -212,7 +209,7 @@ object ClassifierQueries {
     * bigram shuffle runs once per session (vocabulary²-bounded,
     * checkpointed). */
   private def bigramCounts(spark: SparkSession, dir: String): DataFrame =
-    modelCache.getOrElseUpdate(spark, (dir, "bigrams"), {
+    SessionCache.memo(spark, dir, "bigram_counts") {
       Tables.documents(spark, dir)
         .select(TextAnalysis.tokens(col("text")).as("toks"))
         .filter(size(col("toks")) >= 2)
@@ -223,7 +220,7 @@ object ClassifierQueries {
         .select(col("p.a").as("a"), col("p.b").as("b"))
         .groupBy(col("a"), col("b")).agg(count(lit(1)).as("cab"))
         .localCheckpoint(true)
-    })
+    }
 
   private val tokenPmi = QueryDef(    fn = (spark, dir) => {
       val bc = bigramCounts(spark, dir)

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.QueryDef
-import graft.ops.{Dedup, Tables}
+import graft.ops.{Dedup, SessionCache, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -36,11 +36,8 @@ object CrossRunDedupQueries {
     * CrossRunDedupSpec proves that identity against an actual
     * corpus-only [[Dedup.nearDupMinhash]] rebuild rather than assuming
     * it. */
-  private val pairStoreDir =
-    new graft.ops.SessionCache[String, String]("pair-store:")
-
   private def persistedPairsDir(spark: SparkSession, dir: String): String =
-    pairStoreDir.getOrElseUpdate(spark, dir, {
+    SessionCache.memo(spark, dir, "pair-store") {
       val base = Scratch.scratchPath(spark, "pairmemo", dir)
       val state = ExtensionQueries.minhashPairs(spark, dir)
         .filter(col("id_a") % 20 =!= 0 && col("id_b") % 20 =!= 0)
@@ -60,7 +57,7 @@ object CrossRunDedupQueries {
         .withColumnRenamed("comp", "root")
       graft.sink.IndexStore.writeMinhashRoots(roots, s"$base/roots")
       base
-    })
+    }
 
   private[graft] def persistedPairsPath(spark: SparkSession, dir: String): String =
     persistedPairsDir(spark, dir) + "/pairs"
@@ -73,16 +70,13 @@ object CrossRunDedupQueries {
     * never recomputed from the pair graph (node-scale I/O; the memo
     * only pins the scan across bench passes). Canonical ids are the
     * cluster-minimum doc_ids of the old corpus. */
-  private val stateCompsCache =
-    new graft.ops.SessionCache[String, DataFrame]("state-comps:")
-
   private def stateComps(spark: SparkSession, dir: String): DataFrame =
-    stateCompsCache.getOrElseUpdate(spark, dir, {
+    SessionCache.memo(spark, dir, "state-comps") {
       graft.sink.IndexStore.readMinhashRoots(
           spark, persistedRootsPath(spark, dir))
         .select(col("id"), col("root").as("comp"))
         .localCheckpoint(true)
-    })
+    }
 
   /** Per-batch-doc dedup verdict against the loaded cross-run state:
     * for every batch doc (doc_id % 20 = 0) — its verified partner count,
@@ -157,18 +151,15 @@ object CrossRunDedupQueries {
   /** Path of the persisted prior-run SIGNATURE store (digest rows —
     * [[graft.ops.Dedup.minhashPrepared]]), written once per (session,
     * dir) under its own scratch directory. */
-  private val sigStorePath =
-    new graft.ops.SessionCache[String, String]("sig-store:")
-
   private def persistedSigsPath(spark: SparkSession, dir: String): String =
-    sigStorePath.getOrElseUpdate(spark, dir, {
+    SessionCache.memo(spark, dir, "sig-store") {
       val path = Scratch.scratchPath(spark, "sigstore", dir) + "/sigs"
       graft.ops.Dedup.minhashPrepared(
           Tables.documents(spark, dir).filter(col("doc_id") % 20 =!= 0),
           "doc_id", "text")
         .write.mode("overwrite").parquet(path)
       path
-    })
+    }
 
   /** The digest-path incremental pair pass, hash-gated end to end: the
     * prior run's SIGNATURE store (not its text!) reloads from parquet
@@ -187,18 +178,15 @@ object CrossRunDedupQueries {
     * pair set memoizes per session — the operator's own verify barrier
     * (localCheckpoint inside nearDupMinhashFromState) would otherwise
     * rebuild per bench pass (~3.6 s at sf0.1). */
-  private val statePairsCache =
-    new graft.ops.SessionCache[String, DataFrame]("state-pairs-digest:")
-
   private val dedupStatePairs = QueryDef(
-    fn = (spark, dir) => statePairsCache.getOrElseUpdate(spark, dir, {
+    fn = (spark, dir) => SessionCache.memo(spark, dir, "state-pairs-digest") {
       val stored = spark.read.parquet(persistedSigsPath(spark, dir))
         .select(col("id"), col("sig"), col("toks"))
       val batch = graft.ops.Dedup.minhashPrepared(
         Tables.documents(spark, dir).filter(col("doc_id") % 20 === 0),
         "doc_id", "text")
       graft.ops.Dedup.nearDupMinhashFromState(batch, stored)
-    }).orderBy("id_a", "id_b"),
+    }.orderBy("id_a", "id_b"),
     oracle = Some(
       s"""WITH ${ExtensionQueries.minhashOracle}
          |SELECT id_a, id_b, jaccard FROM jac

@@ -1,8 +1,8 @@
 package graft.queries
 
 import graft.QueryDef
-import graft.ops.GridMemo.MemoOps
-import graft.ops.{Dedup, Mixing, Multimodal, Similarity, Sketches, Tables, TextAnalysis}
+import graft.ops.SessionCache.MemoOps
+import graft.ops.{Dedup, Mixing, Multimodal, SessionCache, Similarity, Sketches, Tables, TextAnalysis}
 import org.apache.spark.sql.functions._
 
 /** North-star extension queries (SURVEY.md §2.4): text analysis, exact +
@@ -1016,19 +1016,13 @@ object ExtensionQueries {
     * checkpointed pairs back to the docs must share its lineage (see
     * trainedIvfCells' attribute-id note).
     */
-  // keyed (dir, tag); hosts the dedup chain's frames plus the ANN brute
-  // ground truth ("ann_truth") — one evictable home for the session memos
-  private[graft] val minhashPairsCache =
-    new graft.ops.SessionCache[(String, String), org.apache.spark.sql.DataFrame]("dedup-chain:")
-
   private def dedupDocs(spark: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame =
-    minhashPairsCache.getOrElseUpdate(spark, (dir, "docs"),
-      Tables.documents(spark, dir))
+    SessionCache.memo(spark, dir, "docs")(Tables.documents(spark, dir))
 
   private[graft] def minhashPairs(spark: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame =
-    minhashPairsCache.getOrElseUpdate(spark, (dir, "pairs"),
+    SessionCache.memo(spark, dir, "pairs")(
       // NO checkpoint here: the operator's own verify barrier (the scored
       // localCheckpoint inside nearDupMinhash) already pins the chain —
       // the returned frame is LogicalRDD + a trivial threshold filter, so
@@ -1045,7 +1039,7 @@ object ExtensionQueries {
     * back to the corpus. */
   private def minhashComps(spark: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame =
-    minhashPairsCache.getOrElseUpdate(spark, (dir, "comps"),
+    SessionCache.memo(spark, dir, "comps")(
       Dedup.connectedComponents(minhashPairs(spark, dir), "id_a", "id_b",
           uniquePairs = true) // id_a < id_b and once-per-pair by construction
         .withColumnRenamed("id", "doc_id")
@@ -1087,13 +1081,13 @@ object ExtensionQueries {
   private[graft] def minhashIncrPairs(
       spark: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame =
-    minhashPairsCache.getOrElseUpdate(spark, (dir, "incr-pairs"), {
+    SessionCache.memo(spark, dir, "incr-pairs") {
       val docs = dedupDocs(spark, dir)
       Dedup.nearDupMinhashIncremental(
         docs.filter(col("doc_id") % 20 === 0),
         docs.filter(col("doc_id") % 20 =!= 0),
         "doc_id", "text", k = 16, bands = 4, minJaccard = 0.5)
-    })
+    }
 
   /** Incremental near-dup: the NEW batch (doc_id % 20 = 0) against the
     * rest of the FULL corpus as the accumulated corpus — candidates are
@@ -1573,12 +1567,12 @@ object ExtensionQueries {
     * (the attribute-id note there). */
   private def annBruteTruth(spark: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame =
-    minhashPairsCache.getOrElseUpdate(spark, (dir, "ann_truth"), {
+    SessionCache.memo(spark, dir, "ann_truth") {
       val emb = trainedIvfCells(spark, dir, 0)
       Similarity.bruteForceTopK(emb, emb.filter(col("vec_id") < 8),
           "vec_id", "embedding", k = 5)
         .localCheckpoint(true)
-    })
+    }
 
   /** Memoized amplified-LSH top-5 for the fixed 8-query probe set — the
     * recall gate (q_ann_recall, alphabetically the family's first
@@ -1587,25 +1581,25 @@ object ExtensionQueries {
     * once per session (same contract as [[annBruteTruth]]). */
   private def annLshTopK(spark: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame =
-    minhashPairsCache.getOrElseUpdate(spark, (dir, "ann_lsh"), {
+    SessionCache.memo(spark, dir, "ann_lsh") {
       val emb = trainedIvfCells(spark, dir, 0)
       Similarity.lshTopKSelf(emb, col("vec_id") < 8,
           "vec_id", "embedding", k = 5, nBits = 4, tables = 16)
         .localCheckpoint(true)
-    })
+    }
 
   /** Memoized trained-IVF nprobe-2 top-5 for the same probe set —
     * q_ann_recall and q_sim_ann_ivf consume the identical result. */
   private def annIvfTopK(spark: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame =
-    minhashPairsCache.getOrElseUpdate(spark, (dir, "ann_ivf"), {
+    SessionCache.memo(spark, dir, "ann_ivf") {
       val emb = trainedIvfCells(spark, dir, 0)
       val cells = trainedIvfCells(spark, dir, 2)
       Similarity.ivfTopK(cells, emb.filter(col("vec_id") < 8),
           trainedCentFrame(spark, dir, 3),
           "vec_id", "embedding", "label", k = 5, nprobe = 2)
         .localCheckpoint(true)
-    })
+    }
 
   /** Memoized exact top-10 truth for the fixed 8-query probe set (the
     * k=10 sibling of [[annBruteTruth]]) — one full-corpus re-rank per
@@ -1613,12 +1607,12 @@ object ExtensionQueries {
     * readout (was inlined at three call sites). */
   private[queries] def annTruth10(spark: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame =
-    minhashPairsCache.getOrElseUpdate(spark, (dir, "ann_truth10"), {
+    SessionCache.memo(spark, dir, "ann_truth10") {
       val emb = trainedIvfCells(spark, dir, 0)
       Similarity.bruteForceTopK(emb, emb.filter(col("vec_id") < 8),
           "vec_id", "embedding", k = 10)
         .localCheckpoint(true)
-    })
+    }
 
   /** Memoized max-depth (nprobe = 5) probe ranking over the level-2
     * trained index for the fixed 8-query probe set — the probe-depth
@@ -1629,12 +1623,12 @@ object ExtensionQueries {
     * an index artifact — which cells each query probes). */
   private def ivfProbe5(spark: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame =
-    minhashPairsCache.getOrElseUpdate(spark, (dir, "ivf_probe5"), {
+    SessionCache.memo(spark, dir, "ivf_probe5") {
       val qs = trainedIvfCells(spark, dir, 0).filter(col("vec_id") < 8)
       Similarity.probeCellsRanked(qs, trainedCentFrame(spark, dir, 3),
           "vec_id", "embedding", "label", nprobe = 5)
         .localCheckpoint(true)
-    })
+    }
 
   /** Memoized exact-cosine scores of the [[ivfProbe5]] candidate set
     * (the corpus cell-join + scoring stage shared by both sweep
@@ -1647,11 +1641,11 @@ object ExtensionQueries {
     * equals the per-depth ivfTopK it replaced. */
   private def ivfScored5(spark: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame =
-    minhashPairsCache.getOrElseUpdate(spark, (dir, "ivf_scored5"), {
+    SessionCache.memo(spark, dir, "ivf_scored5") {
       Similarity.ivfScoreCandidates(trainedIvfCells(spark, dir, 2),
           ivfProbe5(spark, dir), "vec_id", "embedding", "label")
         .localCheckpoint(true)
-    })
+    }
 
   private val annBrute = QueryDef(
     fn = (spark, dir) =>
@@ -1880,7 +1874,7 @@ object ExtensionQueries {
     * (q_media_dedup_keep), the minhashPairs convention. */
   private def phashPairsMemo(spark: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame =
-    minhashPairsCache.getOrElseUpdate(spark, (dir, "phash_pairs"),
+    SessionCache.memo(spark, dir, "phash_pairs")(
       graft.ops.Dedup.bandedPairsFromSigs(
           mmDhashFrame(spark, dir, sampled = false), maxHamming = 3)
         .localCheckpoint(true))
@@ -1929,7 +1923,7 @@ object ExtensionQueries {
     * frame text never persists. */
   private def frameSigsMemo(spark: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame =
-    minhashPairsCache.getOrElseUpdate(spark, (dir, "frame_sigs"), {
+    SessionCache.memo(spark, dir, "frame_sigs") {
       val frames = Multimodal.frameSample(
         Multimodal.withPayload(Tables.documents(spark, dir), "doc_id", "text"),
         "doc_id", "payload", frameBytes = 128, stride = 96)
@@ -1938,7 +1932,7 @@ object ExtensionQueries {
             col("frame"), lit(16).as("w"), lit(8).as("h")),
           "fid", "frame", "w", "h")
         .localCheckpoint(true)
-    })
+    }
 
   /** DuckDB twin of the frame-signature chain over `sample`d documents:
     * the frameSample window arithmetic (128-byte frames, stride 96,
@@ -2040,7 +2034,7 @@ object ExtensionQueries {
     * q_frame_containment and the keep decision q_frame_dedup_keep. */
   private def frameCovMemo(spark: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame =
-    minhashPairsCache.getOrElseUpdate(spark, (dir, "frame_contain"), {
+    SessionCache.memo(spark, dir, "frame_contain") {
       // DISTINCT-SIG inverted index, not frame-level banding: template
       // corpora repeat identical frames across hundreds of clips, so a
       // frame-level band join pays B² candidate rows per hot bucket
@@ -2091,7 +2085,7 @@ object ExtensionQueries {
             expr("matched_b * 1000000 div n_frames_b"))
             .as("containment_e6"))
         .localCheckpoint(true)
-    })
+    }
 
   private val frameContainment = QueryDef(
     fn = (spark, dir) =>
@@ -2133,7 +2127,7 @@ object ExtensionQueries {
     * corpus is clip-keyed. */
   private val frameDedupKeep = QueryDef(
     fn = (spark, dir) => {
-      val comps = minhashPairsCache.getOrElseUpdate(spark, (dir, "frame_comps"),
+      val comps = SessionCache.memo(spark, dir, "frame_comps")(
         graft.ops.Dedup.connectedComponents(
             frameCovMemo(spark, dir)
               .filter(col("containment_e6") >= 600000L)
@@ -2192,7 +2186,7 @@ object ExtensionQueries {
     * the label join back to the corpus is doc-keyed. */
   private val mmDedupKeep = QueryDef(
     fn = (spark, dir) => {
-      val comps = minhashPairsCache.getOrElseUpdate(spark, (dir, "phash_comps"),
+      val comps = SessionCache.memo(spark, dir, "phash_comps")(
         graft.ops.Dedup.connectedComponents(phashPairsMemo(spark, dir),
             "id_a", "id_b", uniquePairs = true)
           .withColumnRenamed("id", "doc_id")
@@ -2219,6 +2213,16 @@ object ExtensionQueries {
          |SELECT doc_id, cluster, n_members, doc_id = cluster AS keep
          |FROM lab JOIN s USING (cluster) ORDER BY doc_id""".stripMargin))
 
+  /** Centroids ENTERING Lloyd iteration `level` — i.e. aggregated over the
+    * level−1 assignment — collected once per session as literal rows.
+    * level = iters+1 (e.g. 3 for the 2-iteration chain's probe centroids,
+    * the oracle's `cent3`). */
+  private def trainedCentRows(spark: org.apache.spark.sql.SparkSession,
+      dir: String, level: Int): Seq[(Any, Seq[Double])] =
+    SessionCache.memo(spark, dir, s"ivf-cents-$level")(
+      Similarity.collectCentroidRowsFast(
+        trainedIvfCells(spark, dir, level - 1), "label", "embedding"))
+
   /** Deterministic Lloyd iterations over the label-seeded cells:
     * recompute centroids, reassign every vector to its nearest centroid by
     * rounded cosine (ties to lowest cell).
@@ -2242,25 +2246,9 @@ object ExtensionQueries {
     * at sf0.1, where the assignment job itself is 0.07 s. Levels build
     * cumulatively: level i's centroids aggregate over the cached level
     * i−1 expression. */
-  private[graft] val ivfCellsCache =
-    new graft.ops.SessionCache[(String, Int), org.apache.spark.sql.DataFrame]("ivf-cells:")
-
-  /** Centroids ENTERING Lloyd iteration `level` — i.e. aggregated over the
-    * level−1 assignment — collected once per session as literal rows.
-    * level = iters+1 (e.g. 3 for the 2-iteration chain's probe centroids,
-    * the oracle's `cent3`). */
-  private[graft] val ivfCentRowsCache =
-    new graft.ops.SessionCache[(String, Int), Seq[(Any, Seq[Double])]]("ivf-cents:")
-
-  private def trainedCentRows(spark: org.apache.spark.sql.SparkSession,
-      dir: String, level: Int): Seq[(Any, Seq[Double])] =
-    ivfCentRowsCache.getOrElseUpdate(spark, (dir, level),
-      Similarity.collectCentroidRowsFast(
-        trainedIvfCells(spark, dir, level - 1), "label", "embedding"))
-
   private def trainedIvfCells(spark: org.apache.spark.sql.SparkSession,
       dir: String, iters: Int): org.apache.spark.sql.DataFrame =
-    ivfCellsCache.getOrElseUpdate(spark, (dir, iters),
+    SessionCache.memo(spark, dir, s"ivf-cells-$iters")(
       // level 0 memoizes the base READ itself: every family member derives
       // from this one frame (consumers take their `emb` from here, not a
       // fresh read — two reads of the same file carry distinct attribute
@@ -2882,12 +2870,9 @@ object ExtensionQueries {
   /** PQ codebook per (session, dir) — the trained sub-centroid literals
     * are m × 16 × subDim doubles (metadata scale); training runs once
     * across the PQ family's consumers. */
-  private val pqCbCache =
-    new graft.ops.SessionCache[String, Seq[(Int, Int, Seq[Double])]]("pq-cb:")
-
   private[queries] def pqCodebook(spark: org.apache.spark.sql.SparkSession,
       dir: String): Seq[(Int, Int, Seq[Double])] =
-    pqCbCache.getOrElseUpdate(spark, dir,
+    SessionCache.memo(spark, dir, "pq-cb")(
       Similarity.pqTrainCodebook(trainedIvfCells(spark, dir, 2),
         "vec_id", "embedding", 8, 8))
 
@@ -2896,13 +2881,13 @@ object ExtensionQueries {
     * PQ store. */
   private[queries] def pqCodesMemo(spark: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame =
-    minhashPairsCache.getOrElseUpdate(spark, (dir, "pq_codes"), {
+    SessionCache.memo(spark, dir, "pq_codes") {
       val cb = pqCodebook(spark, dir)
       trainedIvfCells(spark, dir, 2)
         .select(col("vec_id"), col("label"),
           Similarity.pqCodesExpr(col("embedding"), cb, 8, 8).as("codes"))
         .localCheckpoint(true)
-    })
+    }
 
   /** Shared oracle CTE chain replaying PQ training + coding over the
     * trained cells (a2): seed-group means → cb1 → floored-L2² Lloyd
@@ -3017,7 +3002,7 @@ object ExtensionQueries {
     * (candidate sets nest — a codes row has exactly one cell). */
   private def pqAdc5(spark: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame =
-    minhashPairsCache.getOrElseUpdate(spark, (dir, "pq_adc5"), {
+    SessionCache.memo(spark, dir, "pq_adc5") {
       val (m, subDim) = (8, 8)
       val cb = pqCodebook(spark, dir)
       val codes = pqCodesMemo(spark, dir)
@@ -3039,7 +3024,7 @@ object ExtensionQueries {
         .select(col("query_id"), col("qv"), col("vec_id"), col("adc"),
           col("crank"))
         .localCheckpoint(true)
-    })
+    }
 
   private val ivfPqRerank = QueryDef(
     fn = (spark, dir) => {
@@ -3163,12 +3148,9 @@ object ExtensionQueries {
     * (`codes/`, with the codebook sidecar in `cb/` beside it), written
     * once per (session, dir) under its own scratch directory
     * ([[Scratch.scratchPath]]). */
-  private val pqStorePathCache =
-    new graft.ops.SessionCache[String, String]("pq-store:")
-
   private def persistedPqPath(spark: org.apache.spark.sql.SparkSession,
       dir: String): String =
-    pqStorePathCache.getOrElseUpdate(spark, dir, {
+    SessionCache.memo(spark, dir, "pq-store") {
       val base = Scratch.scratchPath(spark, "pqstore", dir)
       val path = s"$base/codes"
       graft.sink.IndexStore.writePqCodes(
@@ -3181,7 +3163,7 @@ object ExtensionQueries {
       graft.sink.IndexStore.writePqCodebook(
         cb.toDF("s", "j", "centroid"), s"$base/cb")
       path
-    })
+    }
 
   /** Persisted-PQ-index round trip, hash-gated (the q_ivf_state_persist
     * convention for the compressed ANN store): train codebooks, code
@@ -3436,12 +3418,9 @@ object ExtensionQueries {
     * trained on x − centroid(cell) values (IVFADC's second half: the
     * coarse quantizer absorbs the cell mean; the same 8-byte budget
     * quantizes the tighter intra-cell spread). */
-  private val pqResCbCache =
-    new graft.ops.SessionCache[String, Seq[(Int, Int, Seq[Double])]]("pqres-cb:")
-
   private def pqResCodebook(spark: org.apache.spark.sql.SparkSession,
       dir: String): Seq[(Int, Int, Seq[Double])] =
-    pqResCbCache.getOrElseUpdate(spark, dir,
+    SessionCache.memo(spark, dir, "pqres-cb")(
       Similarity.pqTrainCodebook(residualCells(spark, dir),
         "vec_id", "resid", 16, 4))
 
@@ -3449,13 +3428,13 @@ object ExtensionQueries {
     * array<int>[8]). */
   private def pqResCodesMemo(spark: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame =
-    minhashPairsCache.getOrElseUpdate(spark, (dir, "pq_res_codes"), {
+    SessionCache.memo(spark, dir, "pq_res_codes") {
       val cb = pqResCodebook(spark, dir)
       residualCells(spark, dir)
         .select(col("vec_id"), col("label"),
           Similarity.pqCodesExpr(col("resid"), cb, 16, 4).as("codes"))
         .localCheckpoint(true)
-    })
+    }
 
   /** IVF-PQ with RESIDUAL encoding (round-16 verdict task 3 — IVFADC's
     * second half, Jégou et al. 2011, public): each vector's residual
@@ -4235,7 +4214,7 @@ object ExtensionQueries {
     * checkpoint per session is the 100 TB shape. */
   private def kmvSrcDist(spark: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame =
-    minhashPairsCache.getOrElseUpdate(spark, (dir, "kmv_src_dist"),
+    SessionCache.memo(spark, dir, "kmv_src_dist")(
       Tables.documents(spark, dir)
         .filter(col("source").isin("src0", "src1", "src2", "src3", "src4"))
         .select(col("source"),
@@ -5034,14 +5013,10 @@ object ExtensionQueries {
     * post-merge pair counts; each previously re-ran its training rounds
     * (driver argmax collect + vocabulary rewrite per round) on EVERY
     * construction — 5 collect barriers per pass for the k=5 queries. */
-  private val bpeTrainCache = new graft.ops.SessionCache[(String, Int),
-    (Seq[org.apache.spark.sql.Row],
-      IndexedSeq[org.apache.spark.sql.DataFrame])]("bpe-train:")
-
   private def trainedBpe(spark: org.apache.spark.sql.SparkSession,
       dir: String, k: Int): (Seq[org.apache.spark.sql.Row],
       IndexedSeq[org.apache.spark.sql.DataFrame]) =
-    bpeTrainCache.getOrElseUpdate(spark, (dir, k), {
+    SessionCache.memo(spark, dir, s"bpe-$k") {
       val frames = IndexedSeq.newBuilder[org.apache.spark.sql.DataFrame]
       var wf = bpeWordFreq(spark, dir).localCheckpoint(true)
       frames += wf
@@ -5055,7 +5030,7 @@ object ExtensionQueries {
         frames += wf
       }
       (merges.result(), frames.result())
-    })
+    }
 
   private val bpeMergeStep = QueryDef(
     fn = (spark, dir) => {
@@ -5713,7 +5688,7 @@ object ExtensionQueries {
       // build is 0.19 s at sf0.1 on top of the memoized corpus read, so
       // the warm saving is real but modest — the query's residual cost
       // is the two broadcast joins + aggregations over the pair frame.
-      val sigs = minhashPairsCache.getOrElseUpdate(spark, (dir, "calib-sigs"),
+      val sigs = SessionCache.memo(spark, dir, "calib-sigs")(
         dedupDocs(spark, dir)
           .select(col("doc_id"),
             Dedup.minhashSignature(TextAnalysis.tokenSet(col("text")), 16).as("sig"))

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.QueryDef
-import graft.ops.Tables
+import graft.ops.{SessionCache, Tables}
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
@@ -27,17 +27,14 @@ object GraphQueries {
     * Dimension joins stay unhinted: customer/supplier grow with SF, so the
     * broadcast-vs-shuffle choice belongs to AQE's size estimate.
     *
-    * Memoized per (session, dir) — the ExtensionQueries.minhashPairsCache
-    * pattern: q_pagerank, q_graph_triangles, and q_graph_degrees all
+    * Memoized per (session, dir) in [[graft.ops.SessionCache]]:
+    * q_pagerank, q_graph_triangles, and q_graph_degrees all
     * consume the identical edge frame, so the fact-sized 4-table join runs
     * once per session, not once per consumer. The checkpointed frame is
     * nation-domain-sized (≤ 625 rows). */
-  private[graft] val tradeEdgesCache =
-    new graft.ops.SessionCache[(String, String), org.apache.spark.sql.DataFrame]("graph-edges:")
-
   private def tradeEdges(spark: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame =
-    tradeEdgesCache.getOrElseUpdate(spark, (dir, "trade"),
+    SessionCache.memo(spark, dir, "trade_edges")(
       tradeEdgesBuild(spark, dir).localCheckpoint(true))
 
   private def tradeEdgesBuild(spark: org.apache.spark.sql.SparkSession, dir: String) = {
@@ -214,8 +211,8 @@ object GraphQueries {
         |ORDER BY n.n_nationkey""".stripMargin))
 
   /** Sparsified symmetric supplier co-supply edge list (u, v) — the one
-    * data-sized stage of q_graph_kcore, memoized per (session, dir) in
-    * [[tradeEdgesCache]] exactly like [[tradeEdges]]: repeated bench
+    * data-sized stage of q_graph_kcore, memoized per (session, dir)
+    * exactly like [[tradeEdges]]: repeated bench
     * passes and any future co-supply consumer reuse the checkpointed,
     * edge-domain-sized frame instead of re-running the distinct
     * (part, supplier) self-join.
@@ -235,7 +232,7 @@ object GraphQueries {
     */
   private def cosupplyEdges(spark: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame =
-    tradeEdgesCache.getOrElseUpdate(spark, (dir, "cosupply"), {
+    SessionCache.memo(spark, dir, "cosupply_edges") {
       val ps = Tables.lineitem(spark, dir)
         .select(col("l_partkey").as("p"), col("l_suppkey").as("s")).distinct()
       val pairs = ps.as("a")
@@ -253,7 +250,7 @@ object GraphQueries {
       keep.select(col("sa").as("u"), col("sb").as("v"))
         .union(keep.select(col("sb").as("u"), col("sa").as("v")))
         .localCheckpoint(true)
-    })
+    }
 
   /** One peel round: drop every edge with an endpoint of degree < k in
     * the CURRENT edge set. Degrees come from a single `groupBy(u)`

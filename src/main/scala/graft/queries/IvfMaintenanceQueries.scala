@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.QueryDef
-import graft.ops.{Similarity, Tables}
+import graft.ops.{SessionCache, Similarity, Tables}
 import org.apache.spark.sql.functions._
 
 /** Incremental IVF index maintenance — the ANN counterpart of
@@ -149,12 +149,9 @@ object IvfMaintenanceQueries {
   /** Path of the persisted full-corpus IVF state, written ONCE per
     * (session, dir) — repeated consumers (Verify dump, bench passes)
     * reload from parquet instead of rewriting. */
-  private[graft] val statePathCache =
-    new graft.ops.SessionCache[String, String]("ivf-state-path:")
-
   private def persistedStatePath(spark: org.apache.spark.sql.SparkSession,
       dir: String): String =
-    statePathCache.getOrElseUpdate(spark, dir, {
+    SessionCache.memo(spark, dir, "ivf-state-path") {
       val path = Scratch.scratchPath(spark, "ivf-state", dir) + "/state"
       def nano(c: org.apache.spark.sql.Column) =
         floor(c.cast("double") * 1e9 + 0.5).cast("long")
@@ -167,7 +164,7 @@ object IvfMaintenanceQueries {
           col("s"), col("n"))
       graft.sink.IndexStore.writeIvfState(state, path)
       path
-    })
+    }
 
   /** Persisted-index round trip, hash-gated: build the full-corpus IVF
     * sufficient-statistics state, WRITE it to a cell-partitioned parquet

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.QueryDef
-import graft.ops.GridMemo.MemoOps
+import graft.ops.SessionCache.MemoOps
 import graft.ops.{Tables, TextAnalysis}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
@@ -55,7 +55,7 @@ object KeywordQueries {
     // narrow ids checkpoint: 8 bytes/row, distributed — every driver
     // aggregate below reads these blocks, not parquet. All three caller
     // queries cut the SAME full doc_id set per dir, so when the caller
-    // passes its dir the frame memoizes per session (GridMemo) instead
+    // passes its dir the frame memoizes per session (SessionCache) instead
     // of re-materializing on every construction. The memoized frame is
     // derived HERE from the dir (Tables.documents), never from the
     // caller's df — so a future caller passing a filtered frame with

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.QueryDef
-import graft.ops.{GridMemo, Similarity, Tables}
+import graft.ops.{SessionCache, Similarity, Tables}
 import org.apache.spark.sql.functions._
 
 /** k-nearest-neighbor GRAPH construction and NN-descent refinement
@@ -38,9 +38,10 @@ object KnnGraphQueries {
 
   private def graphFrame(spark: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame =
-    GridMemo.memo(spark, dir, "knn_graph") {
+    SessionCache.memo(spark, dir, "knn_graph") {
       Similarity.knnGraph(Tables.embeddings(spark, dir),
         "vec_id", "embedding", K, NBITS, TABLES)
+         .localCheckpoint(true)
     }
 
   /** Two NN-descent rounds. Round 1 is checkpointed inside the build:
@@ -53,11 +54,12 @@ object KnnGraphQueries {
     * AQE's skew split handles the in-between scales. */
   private def descentFrame(spark: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame =
-    GridMemo.memo(spark, dir, "knn_descent") {
+    SessionCache.memo(spark, dir, "knn_descent") {
       val emb = Tables.embeddings(spark, dir)
       val r1 = Similarity.nnDescentRound(emb, graphFrame(spark, dir),
         "vec_id", "embedding", K).localCheckpoint(true)
       Similarity.nnDescentRound(emb, r1, "vec_id", "embedding", K)
+         .localCheckpoint(true)
     }
 
   /** Truth for the recall contract: exact top-KEVAL of the 8 fixed probe
@@ -65,10 +67,11 @@ object KnnGraphQueries {
     * annBruteTruth convention; 8·n cosines, never n²). */
   private def truthFrame(spark: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame =
-    GridMemo.memo(spark, dir, "knn_truth") {
+    SessionCache.memo(spark, dir, "knn_truth") {
       val emb = Tables.embeddings(spark, dir)
       Similarity.bruteForceTopK(emb, emb.filter(col("vec_id") < 8),
         "vec_id", "embedding", KEVAL)
+         .localCheckpoint(true)
     }
 
   /** One descent round as SQL: symmetrize `prev`, two-hop expand, union
@@ -212,12 +215,13 @@ object KnnGraphQueries {
     * fixed entry block ([[graft.ops.Similarity.graphSearch]]). */
   private def searchFrame(spark: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame =
-    GridMemo.memo(spark, dir, "knn_graph_search") {
+    SessionCache.memo(spark, dir, "knn_graph_search") {
       val emb = Tables.embeddings(spark, dir)
       Similarity.graphSearch(emb, descentFrame(spark, dir),
         emb.filter(col("vec_id") < 8), "vec_id", "embedding",
         emb.filter(col("vec_id") >= ENTRY_LO && col("vec_id") < ENTRY_LO + BEAM),
         BEAM, ROUNDS)
+         .localCheckpoint(true)
     }
 
   /** One beam-search round as SQL: score `candSql`'s (query_id, node_id)
@@ -358,7 +362,7 @@ object KnnGraphQueries {
     * family's memoized descent graph. */
   private def adcSearchFrame(spark: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame =
-    GridMemo.memo(spark, dir, "knn_graph_search_adc") {
+    SessionCache.memo(spark, dir, "knn_graph_search_adc") {
       val emb = Tables.embeddings(spark, dir)
       Similarity.graphSearchAdc(emb, descentFrame(spark, dir),
         emb.filter(col("vec_id") < 8), "vec_id", "embedding",
@@ -367,6 +371,7 @@ object KnnGraphQueries {
           .select(col("vec_id"), col("codes")),
         ExtensionQueries.pqCodebook(spark, dir),
         m = 8, subDim = 8, beam = BEAM, rounds = ROUNDS, k = KFINAL)
+         .localCheckpoint(true)
     }
 
   /** One ADC beam round as SQL: candidates keep their m per-subspace
@@ -440,7 +445,7 @@ object KnnGraphQueries {
     * exactly why the frame is checkpointed once per session. */
   private def mutualCompsFrame(spark: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame =
-    GridMemo.memo(spark, dir, "knn_mutual_comps") {
+    SessionCache.memo(spark, dir, "knn_mutual_comps") {
       val e = descentFrame(spark, dir).select(col("node_id"), col("neighbor_id"))
       val mutual = e.intersect(
           e.select(col("neighbor_id").as("node_id"), col("node_id").as("neighbor_id")))
@@ -448,6 +453,7 @@ object KnnGraphQueries {
         .select(col("node_id").as("id_a"), col("neighbor_id").as("id_b"))
       graft.ops.Dedup.connectedComponents(mutual, "id_a", "id_b",
         uniquePairs = true)
+         .localCheckpoint(true)
     }
 
   /** Graph-based semantic clustering: connected components of the

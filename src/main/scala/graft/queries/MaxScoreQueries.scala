@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.QueryDef
-import graft.ops.{GridMemo, Retrieval, Tables, TextAnalysis}
+import graft.ops.{Retrieval, SessionCache, Tables, TextAnalysis}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
@@ -42,7 +42,7 @@ object MaxScoreQueries {
     * — narrow and cheap to keep hot. */
   private def postings(spark: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame =
-    GridMemo.memo(spark, dir, "maxscore_postings") {
+    SessionCache.memo(spark, dir, "maxscore_postings") {
       val docs = Tables.documents(spark, dir)
         .select(col("doc_id"), TextAnalysis.tokens(col("text")).as("toks"))
         .localCheckpoint(false)
@@ -64,6 +64,7 @@ object MaxScoreQueries {
               * (col("tf") * 2.2))
               / (col("tf") + lit(1.2) * (lit(0.25) + lit(0.75) * col("dl") / col("avgdl"))))
             .cast(DecimalType(18, 6)).as("s"))
+         .localCheckpoint(true)
     }
 
   /** Shared oracle CTE chain: tokenize, stats, rational-idf per-term

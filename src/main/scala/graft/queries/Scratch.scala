@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.ops.SessionCache
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -34,9 +35,6 @@ private[graft] object Scratch {
   private def fsOf(spark: SparkSession, p: Path): FileSystem =
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  private val streamed =
-    new graft.ops.SessionCache[(String, String), String]("stream-fixture:")
-
   private val Batches = 3
 
   /** Runs a REAL file-source stream of `source` through the sink `start`
@@ -54,7 +52,7 @@ private[graft] object Scratch {
   def streamedStores(spark: SparkSession, tag: String, dir: String,
       source: => DataFrame, idCol: String)(
       start: (DataFrame, String) => StreamingQuery): String =
-    streamed.getOrElseUpdate(spark, (tag, dir), {
+    SessionCache.memo(spark, dir, s"stream-$tag") {
       val base = scratchPath(spark, tag, dir)
       val (srcDir, stage) = (new Path(base, "src"), new Path(base, "stage"))
       val fs = fsOf(spark, srcDir)
@@ -79,5 +77,5 @@ private[graft] object Scratch {
         .parquet(srcDir.toString)
       start(stream, base).awaitTermination() // AvailableNow drains the files and stops
       base
-    })
+    }
 }

@@ -1,8 +1,8 @@
 package graft.queries
 
 import graft.QueryDef
-import graft.ops.GridMemo.MemoOps
-import graft.ops.{RangeJoin, RobustStats, Tables, TextAnalysis}
+import graft.ops.SessionCache.MemoOps
+import graft.ops.{RangeJoin, RobustStats, SessionCache, Tables, TextAnalysis}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -104,7 +104,7 @@ object WarehouseQueries {
     // memoized per (session, dir, window): q_funnel_steps and
     // q_funnel_lag share the unbounded build; the one event scan runs
     // once per session, not once per consumer per pass
-    graft.ops.GridMemo.memo(spark, dir,
+    SessionCache.memo(spark, dir,
         s"funnel_stages_${win.getOrElse(0L)}") {
     val ev = Tables.events(spark, dir)
       .select(col("user_id"), expr("ts_ns div 1000").as("ts_us"), col("event_type"))
@@ -125,6 +125,7 @@ object WarehouseQueries {
       .withColumn("t2", after(col("vs"), col("t1")))
       .withColumn("t3", after(col("ps"), col("t2")))
       .select(col("user_id"), col("t1"), col("t2"), col("t3"))
+       .localCheckpoint(true)
   }
 
   /** Three-stage strictly-ordered funnel over the event stream:

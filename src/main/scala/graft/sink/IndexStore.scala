@@ -7,7 +7,8 @@ import org.apache.spark.sql.functions._
   * production contract an incremental index actually needs: state built
   * in one session (or one daily ingest job) must reload in a FRESH
   * session and drive queries byte-identically to a from-scratch rebuild.
-  * In-session the states live in [[graft.ops.SessionCache]] memos; this
+  * In-session the states live in [[graft.ops.SessionCache.memo]] entries
+  * (rebuilt when the input table changes); this
   * sink is their durable form (IndexStoreSpec proves reload ≡ rebuild
   * for both, and `q_ivf_state_persist` hash-gates a full write→read
   * round trip against the DuckDB oracle).

@@ -1,6 +1,6 @@
 package graft.sources
 
-import java.nio.file.{Files, Path}
+import java.nio.file.{Files, Path, StandardCopyOption}
 import com.fasterxml.jackson.databind.ObjectMapper
 
 /** Driver-side Pricenow connector: the reference's auth/pagination layer
@@ -45,9 +45,17 @@ class PricenowClient(
       }.toOption
     }
 
+  /** JSON-encoded by the mapper (a token may hold `"` or `\`), written to a
+    * sibling temp file and moved into place atomically, so a reader never
+    * sees a half-written cache. */
   private def saveCache(t: (String, Long)): Unit = cachePath.foreach { p =>
-    Files.writeString(p,
-      s"""{"access_token": "${t._1}", "expires_at": ${t._2}}""")
+    val node = mapper.createObjectNode()
+      .put("access_token", t._1).put("expires_at", t._2)
+    val tmp = Files.createTempFile(p.toAbsolutePath.getParent, p.getFileName.toString, ".tmp")
+    try {
+      Files.write(tmp, mapper.writeValueAsBytes(node))
+      Files.move(tmp, p, StandardCopyOption.ATOMIC_MOVE)
+    } finally Files.deleteIfExists(tmp)
   }
 
   /** S9: memory -> disk -> fresh; refresh when inside the margin. */

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import java.sql.Timestamp
 
 /** Hand-built fixtures for the activity-analytics family (the round-10
@@ -13,7 +12,7 @@ class ActivityQueriesSpec extends SparkSpec {
   import spark.implicits._
 
   private def eventsDir(rows: Seq[(Long, String, String, java.lang.Double)]): String = {
-    val dir = Files.createTempDirectory("graft-activity-fixture").toFile.getAbsolutePath
+    val dir = tmpDir("activity-fixture")
     rows.map { case (uid, day, typ, v) =>
       (uid, Timestamp.valueOf(s"$day 12:00:00"), typ, v, s"e$uid-$day-$typ")
     }.toDF("user_id", "ts", "event_type", "value", "event_id")

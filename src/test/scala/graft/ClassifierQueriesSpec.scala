@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 
 /** Semantic invariants for the corpus-model family (ClassifierQueries):
   * hand-computed Laplace weights on a literal fixture, end-to-end
@@ -13,7 +12,7 @@ class ClassifierQueriesSpec extends SparkSpec {
   import spark.implicits._
 
   private def fixtureDir(tables: (String, org.apache.spark.sql.DataFrame)*): String = {
-    val dir = Files.createTempDirectory("graft-clf-fixture").toFile.getAbsolutePath
+    val dir = tmpDir("clf-fixture")
     tables.foreach { case (name, df) =>
       df.coalesce(1).write.mode("overwrite").parquet(s"$dir/$name.parquet")
     }

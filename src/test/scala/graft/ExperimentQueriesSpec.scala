@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import java.sql.Timestamp
 import org.apache.spark.sql.functions._
 
@@ -17,7 +16,7 @@ class ExperimentQueriesSpec extends SparkSpec {
   private val sf = "/root/testdata/sf0.001"
 
   private def eventsDir(rows: Seq[(Long, String, String, Double)]): String = {
-    val dir = Files.createTempDirectory("graft-exp-fixture").toFile.getAbsolutePath
+    val dir = tmpDir("exp-fixture")
     rows.map { case (uid, day, typ, v) =>
       (uid, Timestamp.valueOf(s"$day 12:00:00"), typ, v, s"e$uid-$day-$typ")
     }.toDF("user_id", "ts", "event_type", "value", "event_id")
@@ -74,7 +73,7 @@ class ExperimentQueriesSpec extends SparkSpec {
   }
 
   test("q_kendall_tau: known 3-month census (C=2, D=1) gives tau_b = 1/3") {
-    val dir = Files.createTempDirectory("graft-kendall").toFile.getAbsolutePath
+    val dir = tmpDir("kendall")
     // Jan: 1 order, 10 cents; Feb: 2 orders, 20 cents; Mar: 3 orders, 15 cents
     Seq(
       (1L, "1995-01-10", 0.10), (2L, "1995-02-05", 0.12), (3L, "1995-02-06", 0.08),
@@ -101,7 +100,7 @@ class ExperimentQueriesSpec extends SparkSpec {
   }
 
   private def ordersDir(rows: Seq[(java.lang.Long, Long, String, Double, String, String)]): String = {
-    val dir = Files.createTempDirectory("graft-orders-fixture").toFile.getAbsolutePath
+    val dir = tmpDir("orders-fixture")
     rows.map { case (k, ck, st, tp, d, pr) =>
       (k, ck, st, tp, Timestamp.valueOf(s"$d 00:00:00"), pr)
     }.toDF("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
@@ -143,7 +142,7 @@ class ExperimentQueriesSpec extends SparkSpec {
   }
 
   test("q_psm_match: caliper excludes far pairs; distance ties break to smaller id") {
-    val dir = Files.createTempDirectory("graft-psm").toFile.getAbsolutePath
+    val dir = tmpDir("psm")
     Seq(
       (1L, "AUTOMOBILE", 100.00),  // ties: controls at 120 and 80, both d=2000
       (4L, "AUTOMOBILE", 500.00),  // nearest control is 6000 away -> unmatched

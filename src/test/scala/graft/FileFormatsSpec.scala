@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import graft.ops.Tables
 import org.apache.spark.sql.functions._
 
@@ -14,7 +13,7 @@ class FileFormatsSpec extends SparkSpec {
   test("documents round-trip through json-lines and csv with explicit schemas") {
     val docs = Tables.documents(spark, "/root/testdata/sf0.001")
       .select("doc_id", "lang", "n_chars", "text")
-    val base = Files.createTempDirectory("fmt").toString
+    val base = tmpDir("fmt")
     val expected = docs.orderBy("doc_id").collect().toSeq
 
     docs.write.mode("overwrite").json(s"$base/json")
@@ -32,7 +31,7 @@ class FileFormatsSpec extends SparkSpec {
   test("documents round-trip through orc with predicate pushdown intact") {
     val docs = Tables.documents(spark, "/root/testdata/sf0.001")
       .select("doc_id", "lang", "n_chars", "text")
-    val base = Files.createTempDirectory("fmt3").toString
+    val base = tmpDir("fmt3")
     docs.write.mode("overwrite").orc(s"$base/orc")
     val viaOrc = spark.read.orc(s"$base/orc")
     assert(viaOrc.orderBy("doc_id").collect().toSeq ==
@@ -46,7 +45,7 @@ class FileFormatsSpec extends SparkSpec {
   test("csv read pushes filters and prunes columns like any file scan") {
     val docs = Tables.documents(spark, "/root/testdata/sf0.001")
       .select("doc_id", "lang")
-    val base = Files.createTempDirectory("fmt2").toString
+    val base = tmpDir("fmt2")
     docs.write.mode("overwrite").option("header", "true").csv(s"$base/c")
     val scan = spark.read.schema(docs.schema).option("header", "true")
       .csv(s"$base/c").filter(col("lang") === "de").select("doc_id")

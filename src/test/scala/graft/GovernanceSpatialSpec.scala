@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import java.sql.Timestamp
 
 /** Semantic invariants for the spatial, governance, and as-of-tolerance
@@ -13,7 +12,7 @@ class GovernanceSpatialSpec extends SparkSpec {
   import spark.implicits._
 
   private def fixtureDir(tables: (String, org.apache.spark.sql.DataFrame)*): String = {
-    val dir = Files.createTempDirectory("graft-gov-fixture").toFile.getAbsolutePath
+    val dir = tmpDir("gov-fixture")
     tables.foreach { case (name, df) =>
       df.coalesce(1).write.mode("overwrite").parquet(s"$dir/$name.parquet")
     }

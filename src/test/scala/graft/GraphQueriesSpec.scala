@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
@@ -58,7 +57,7 @@ class GraphQueriesSpec extends SparkSpec {
   }
 
   test("q_event_paths fixture: strictly consecutive, ties broken on path") {
-    val dir = Files.createTempDirectory("graft-paths-fixture").toFile.getAbsolutePath
+    val dir = tmpDir("paths-fixture")
     // user 1: A B C D  -> paths A>B>C, B>C>D; user 2: A B C -> A>B>C
     val rows = Seq(
       (1L, 1L, "A"), (2L, 1L, "B"), (3L, 1L, "C"), (4L, 1L, "D"),
@@ -74,7 +73,7 @@ class GraphQueriesSpec extends SparkSpec {
 
   test("q_emb_project: zero vector maps to zero, constant vector to the sign row sums") {
     // fixture: vec 0 = zeros, vec 1 = all 1.0 → p_j = 1e6 · Σ_i s_ij
-    val dir = Files.createTempDirectory("graft-proj-fixture").toFile.getAbsolutePath
+    val dir = tmpDir("proj-fixture")
     Seq(
       (0L, Array.fill(64)(0.0f), 0),
       (1L, Array.fill(64)(1.0f), 0)
@@ -97,7 +96,7 @@ class GraphQueriesSpec extends SparkSpec {
   }
 
   test("q_emb_project: projection is additive (exact integer linearity)") {
-    val dir = Files.createTempDirectory("graft-proj-lin").toFile.getAbsolutePath
+    val dir = tmpDir("proj-lin")
     val rnd = new scala.util.Random(11)
     val a = Array.fill(64)(rnd.nextFloat() * 2 - 1)
     val b = Array.fill(64)(rnd.nextFloat() * 2 - 1)

@@ -13,10 +13,6 @@ import org.apache.spark.sql.functions._
 class IndexStoreSpec extends SparkSpec {
 
   private val dir = "/root/testdata/sf0.001"
-  private def tmp(name: String) =
-    s"${System.getProperty("java.io.tmpdir")}/graft-indexstore-spec-" +
-      s"${ProcessHandle.current().pid()}-$name"
-
   private def nano(c: org.apache.spark.sql.Column) =
     floor(c.cast("double") * 1e9 + 0.5).cast("long")
 
@@ -30,7 +26,7 @@ class IndexStoreSpec extends SparkSpec {
         col("s"), col("n"))
 
   test("IVF state: fresh-session reload is row-identical to a rebuild") {
-    val path = tmp("ivf")
+    val path = tmpDir("ivf")
     graft.sink.IndexStore.writeIvfState(ivfState(spark), path)
     val fresh = spark.newSession()
     val reloaded = graft.sink.IndexStore.readIvfState(fresh, path)
@@ -45,7 +41,7 @@ class IndexStoreSpec extends SparkSpec {
   }
 
   test("IVF state: a consumer query over reloaded state equals rebuilt state") {
-    val path = tmp("ivf2")
+    val path = tmpDir("ivf2")
     graft.sink.IndexStore.writeIvfState(ivfState(spark), path)
     // consumer = the centroid derivation every probe path runs:
     // m = s/1e9/n per (cell, pos) — two IEEE ops, byte-comparable
@@ -64,7 +60,7 @@ class IndexStoreSpec extends SparkSpec {
   }
 
   test("IVF state: cell-filtered read partition-prunes") {
-    val path = tmp("ivf3")
+    val path = tmpDir("ivf3")
     graft.sink.IndexStore.writeIvfState(ivfState(spark), path)
     val probed = graft.sink.IndexStore.readIvfCells(spark, path, Seq(3, 7))
     val plan = probed.queryExecution.executedPlan.toString
@@ -79,7 +75,7 @@ class IndexStoreSpec extends SparkSpec {
     val docs = graft.ops.Tables.documents(spark, dir)
     val pairs = graft.ops.Dedup.nearDupMinhash(docs, "doc_id", "text",
       k = 16, bands = 4, minJaccard = 0.5)
-    val path = tmp("minhash")
+    val path = tmpDir("minhash")
     graft.sink.IndexStore.writeMinhashPairs(pairs, path)
     val fresh = spark.newSession()
     val reloaded = graft.sink.IndexStore.readMinhashPairs(fresh, path)
@@ -113,7 +109,7 @@ class IndexStoreSpec extends SparkSpec {
         (i, Seq.fill(64)(rnd.nextFloat() - 0.5f), (i % 5).toInt))
       .toDF("vec_id", "embedding", "cell")
     val cb = graft.ops.Similarity.pqTrainCodebook(emb, "vec_id", "embedding", 8, 8)
-    val cbPath = tmp("pqcb")
+    val cbPath = tmpDir("pqcb")
     graft.sink.IndexStore.writePqCodebook(cb.toDF("s", "j", "centroid"), cbPath)
     val back = graft.sink.IndexStore.readPqCodebook(spark, cbPath)
       .collect().map(r => ((r.getInt(0), r.getInt(1)), r.getSeq[Double](2))).toMap
@@ -128,7 +124,7 @@ class IndexStoreSpec extends SparkSpec {
     }
     val codes = emb.select(col("vec_id"), col("cell"),
       graft.ops.Similarity.pqCodesExpr(col("embedding"), cb, 8, 8).as("codes"))
-    val codesPath = tmp("pqcodes")
+    val codesPath = tmpDir("pqcodes")
     graft.sink.IndexStore.writePqCodes(codes, codesPath)
     def key(df: org.apache.spark.sql.DataFrame) = df
       .select(col("vec_id"), col("codes"))
@@ -142,7 +138,7 @@ class IndexStoreSpec extends SparkSpec {
         (i, Seq.fill(64)((i % 7).toFloat / 7f), (i % 5).toInt))
       .toDF("vec_id", "embedding", "cell")
     val cb = graft.ops.Similarity.pqTrainCodebook(emb, "vec_id", "embedding", 8, 8)
-    val path = tmp("pqprune")
+    val path = tmpDir("pqprune")
     graft.sink.IndexStore.writePqCodes(
       emb.select(col("vec_id"), col("cell"),
         graft.ops.Similarity.pqCodesExpr(col("embedding"), cb, 8, 8).as("codes")),

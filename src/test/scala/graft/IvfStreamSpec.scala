@@ -13,10 +13,6 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 class IvfStreamSpec extends SparkSpec {
   import spark.implicits._
 
-  private def tmp(name: String) =
-    s"${System.getProperty("java.io.tmpdir")}/graft-ivfstream-" +
-      s"${ProcessHandle.current().pid()}-$name"
-
   private def stateOf(path: String): Map[(Int, Long), (Long, Long)] =
     graft.sink.IndexStore.readIvfState(spark, path)
       .select(col("cell").cast("int"), col("pos"), col("s"), col("n"))
@@ -45,7 +41,7 @@ class IvfStreamSpec extends SparkSpec {
       all.filter(_._1 % 3 == 0), all.filter(_._1 % 3 == 1),
       all.filter(_._1 % 3 == 2))
     val (deltaLog, statePath, ckpt) =
-      (tmp("delta"), tmp("state"), tmp("ckpt"))
+      (tmpDir("delta"), tmpDir("state"), tmpDir("ckpt"))
     val in = MemoryStream[(Long, Seq[Float], Int)]
     val q = graft.streaming.StreamingOps.ivfStateSink(
       in.toDF().toDF("vec_id", "embedding", "cell"),
@@ -116,7 +112,7 @@ class IvfStreamSpec extends SparkSpec {
     val batches = (0 until 5).map(i => all.filter(_._1 % 5 == i))
     assert(batches.forall(_.nonEmpty))
     val (deltaLog, statePath, ckpt) =
-      (tmp("cdelta"), tmp("cstate"), tmp("cckpt"))
+      (tmpDir("cdelta"), tmpDir("cstate"), tmpDir("cckpt"))
     val in = MemoryStream[(Long, Seq[Float], Int)]
     val q = graft.streaming.StreamingOps.ivfStateSink(
       in.toDF().toDF("vec_id", "embedding", "cell"),
@@ -171,7 +167,7 @@ class IvfStreamSpec extends SparkSpec {
         .map(_.stripPrefix("batch_id=").toLong).sorted.toSeq
 
     // crash AFTER fold + GC (worst case: base is the only copy of history)
-    val logA = tmp("replayA")
+    val logA = tmpDir("replayA")
     writeDelta(logA, 0L, Seq((1, 1L, 10L, 2L)))
     writeDelta(logA, 1L, Seq((1, 1L, 5L, 1L), (2, 1L, 7L, 3L)))
     writeDelta(logA, 2L, Seq((2, 1L, 1L, 1L)))
@@ -185,7 +181,7 @@ class IvfStreamSpec extends SparkSpec {
     assert(want((1, 1L)) == ((15L, 3L)) && want((2, 1L)) == ((8L, 4L)))
 
     // crash AFTER fold, BEFORE GC (base + folded positives both present)
-    val logB = tmp("replayB")
+    val logB = tmpDir("replayB")
     writeDelta(logB, 0L, Seq((1, 1L, 10L, 2L)))
     writeDelta(logB, 1L, Seq((1, 1L, 5L, 1L)))
     writeDelta(logB, 2L, Seq((1, 1L, 2L, 1L)))
@@ -202,7 +198,7 @@ class IvfStreamSpec extends SparkSpec {
     // round-14 ADVICE (low): min(batch_id) over zero rows is NULL — a
     // zero-data micro-batch can land an empty delta partition before any
     // real batch; the reader must return the raw (empty) log, not NPE.
-    val log = tmp("emptylog")
+    val log = tmpDir("emptylog")
     Seq.empty[(Int, Long, Long, Long)].toDF("cell", "pos", "s", "n")
       .write.mode("overwrite").parquet(s"$log/batch_id=0")
     val eff = graft.streaming.StreamingOps.effectiveDeltas(spark, log)

@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Path}
+import java.nio.file.{Files, Path, Paths}
 import java.sql.DriverManager
 import graft.ops.Validation
 import graft.sink.JdbcUpsert
@@ -17,7 +17,7 @@ class PricenowPipelineSpec extends SparkSpec {
   private val url = "jdbc:derby:memory:pipeline;create=true"
 
   private def writePages(): Path = {
-    val pages = Files.createTempDirectory("pages")
+    val pages = Paths.get(tmpDir("pages"))
     Files.writeString(pages.resolve("page-0.json"),
       """{"data": [
         | {"name": "skitickets", "productDefinitions": [

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions.col
 
 /** Hand-built fixtures for the round-12 second batch: agreement stats
@@ -11,15 +10,12 @@ import org.apache.spark.sql.functions.col
 class Round12bSpec extends SparkSpec {
   import spark.implicits._
 
-  private def tmp(name: String): String =
-    Files.createTempDirectory(s"graft-$name").toFile.getAbsolutePath
-
   private def writeDocs(dir: String, rows: Seq[(Long, String, String, String, Long)]): Unit =
     rows.toDF("doc_id", "text", "lang", "source", "n_chars")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/documents.parquet")
 
   test("q_cohens_kappa: exact kappa on a hand confusion matrix") {
-    val dir = tmp("kappa")
+    val dir = tmpDir("kappa")
     def toks(n: Int) = (1 to n).map(i => s"t$i").mkString(" ")
     // (a from n_chars: <220/<380/else; b from token count: <40/<69/else)
     val rows = Seq(
@@ -38,7 +34,7 @@ class Round12bSpec extends SparkSpec {
   }
 
   test("q_wilcoxon_signed: exact rank statistics on hand-paired counts") {
-    val dir = tmp("wilcoxon")
+    val dir = tmpDir("wilcoxon")
     val ts = java.sql.Timestamp.valueOf("1995-06-01 00:00:00")
     def order(k: Long, cust: Long, prio: String) =
       (k, cust, "O", 100.0, ts, prio)
@@ -60,7 +56,7 @@ class Round12bSpec extends SparkSpec {
   }
 
   test("q_did: exact 2x2 cross-multiplied difference-in-differences") {
-    val dir = tmp("did")
+    val dir = tmpDir("did")
     val pre = java.sql.Timestamp.valueOf("1995-06-01 00:00:00")
     val post = java.sql.Timestamp.valueOf("1997-06-01 00:00:00")
     Seq(
@@ -85,7 +81,7 @@ class Round12bSpec extends SparkSpec {
   }
 
   test("q_t_closeness: two perfectly skewed segments score EMD 1/2") {
-    val dir = tmp("tclose")
+    val dir = tmpDir("tclose")
     Seq(
       (1L, "a", 0, 100.0, "X"), (2L, "b", 0, 100.0, "X"),   // bucket 0
       (3L, "c", 0, 1100.0, "Y"), (4L, "d", 0, 1100.0, "Y")) // bucket 1
@@ -98,7 +94,7 @@ class Round12bSpec extends SparkSpec {
   }
 
   test("q_group_kfold: groups never straddle folds; totals conserved") {
-    val dir = tmp("kfold")
+    val dir = tmpDir("kfold")
     val ts = java.sql.Timestamp.valueOf("1995-06-01 00:00:00")
     val rows = (1L to 200L).map(k =>
       (k, k % 40 + 1, "O", 10.0, ts, "3-MEDIUM")) // 40 groups x 5 rows
@@ -115,7 +111,7 @@ class Round12bSpec extends SparkSpec {
   }
 
   test("q_label_propagation: two co-supply cliques collapse to two communities") {
-    val dir = tmp("lpa")
+    val dir = tmpDir("lpa")
     // suppliers {1,2,3} share parts 1-10; {10,11,12} share parts 21-30;
     // one weak cross pair (3,10) via part 40 is sparsified away
     val rows =
@@ -132,7 +128,7 @@ class Round12bSpec extends SparkSpec {
   }
 
   test("q_mmr_select: exact greedy trace on unit-component vectors") {
-    val dir = tmp("mmr")
+    val dir = tmpDir("mmr")
     def v(x: Float, y: Float, z: Float) = Seq(x, y, z)
     Seq(
       (0L, v(1, 0, 0), 0L), // query

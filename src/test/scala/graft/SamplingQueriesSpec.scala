@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 
 /** Hand-built fixtures for the round-11 sampling family: allocation
   * conservation + variance-seeking for Neyman, budget-threshold
@@ -10,7 +9,7 @@ class SamplingQueriesSpec extends SparkSpec {
   import spark.implicits._
 
   private def docsDir(rows: Seq[(Long, String, String, String, Long)]): String = {
-    val dir = Files.createTempDirectory("graft-sampling-fixture").toFile.getAbsolutePath
+    val dir = tmpDir("sampling-fixture")
     rows.toDF("doc_id", "text", "source", "lang", "n_chars")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/documents.parquet")
     dir

@@ -21,7 +21,7 @@ import org.apache.spark.sql.functions._
   * plan's dominant I/O term.
   *
   * Known blind spot, documented: frames materialized during query
-  * CONSTRUCTION (SessionCache memo builds, eager localCheckpoints such
+  * CONSTRUCTION (`SessionCache.memo` builds, eager localCheckpoints such
   * as arrivalBuckets' narrow ids frame) surface as LogicalRDD leaves —
   * their build-time scans are invisible here. Memo builds amortize to
   * zero across consumers; the remaining per-construction checkpoints

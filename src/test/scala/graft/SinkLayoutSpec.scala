@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 import graft.sink.PartitionedParquet
 import org.apache.spark.sql.functions._
 
@@ -8,7 +8,7 @@ class SinkLayoutSpec extends SparkSpec {
   import spark.implicits._
 
   test("writeByMonth lays out part_month dirs; reads prune partitions; dynamic overwrite converges") {
-    val dir = Files.createTempDirectory("pp").toString + "/prices"
+    val dir = tmpDir("pp") + "/prices"
     val v1 = Seq(
       (101L, "2025-12-13", 5000), (101L, "2026-01-05", 6000),
       (102L, "2025-12-20", 3000))
@@ -35,7 +35,7 @@ class SinkLayoutSpec extends SparkSpec {
   }
 
   test("incremental month refresh rewrites only its partition; reads prune to one month") {
-    val pages = Files.createTempDirectory("incr-pages")
+    val pages = Paths.get(tmpDir("incr-pages"))
     java.nio.file.Files.writeString(pages.resolve("page-0.json"),
       """{"data": [
         | {"name": "skitickets", "productDefinitions": [
@@ -46,7 +46,7 @@ class SinkLayoutSpec extends SparkSpec {
     val cfg = PricenowPipeline.Config(
       updatedAt = "2026-04-01 06:00:00", jdbcUrl = "unused",
       writePartitions = Some(1))
-    val fact = Files.createTempDirectory("incr-fact").toString + "/prices"
+    val fact = tmpDir("incr-fact") + "/prices"
     val allMonths = Seq("2025-12", "2026-01", "2026-02", "2026-03", "2026-04")
 
     // full build: season 2025-12-13..2026-04-12 -> five month partitions
@@ -94,7 +94,7 @@ class SinkLayoutSpec extends SparkSpec {
   }
 
   test("refreshMonths fails loudly when a requested month produces no rows") {
-    val pages = Files.createTempDirectory("guard-pages")
+    val pages = Paths.get(tmpDir("guard-pages"))
     java.nio.file.Files.writeString(pages.resolve("page-0.json"),
       """{"data": [
         | {"name": "skitickets", "productDefinitions": [
@@ -104,7 +104,7 @@ class SinkLayoutSpec extends SparkSpec {
       .withColumn("valid_at", to_date(col("d"))).drop("d")
     val cfg = PricenowPipeline.Config(
       updatedAt = "2026-04-01 06:00:00", jdbcUrl = "unused", writePartitions = Some(1))
-    val fact = Files.createTempDirectory("guard-fact").toString + "/prices"
+    val fact = tmpDir("guard-fact") + "/prices"
     // out-of-season month and a mis-formatted month must both refuse to
     // no-op (dynamic overwrite would silently keep stale files)
     Seq("2026-07", "2026-1").foreach { bad =>

@@ -94,7 +94,7 @@ class SketchesSpec extends SparkSpec {
     // two sources with identical 7-token texts: merged sketch is sub-k
     // exhaustive, so jac_est must be exactly 1.0 — a c/64 divisor would
     // emit 5/64 and fail the ±0.15 contract (regression for that bug)
-    val dir = java.nio.file.Files.createTempDirectory("graft-kmv-subk").toFile.getAbsolutePath
+    val dir = tmpDir("kmv-subk")
     Seq(
       (1L, "a b c d e f g", "en", "src0", 13L),
       (2L, "a b c d e f g", "en", "src1", 13L)

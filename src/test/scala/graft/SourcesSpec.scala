@@ -1,13 +1,13 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 import graft.sources.PricenowClient
 
 class SourcesSpec extends SparkSpec {
   import spark.implicits._
 
   private def writePages(pages: Seq[String]): String = {
-    val dir = Files.createTempDirectory("pricenow-pages")
+    val dir = Paths.get(tmpDir("pricenow-pages"))
     pages.zipWithIndex.foreach { case (body, i) =>
       Files.writeString(dir.resolve(f"page-$i%03d.json"), body)
     }
@@ -76,8 +76,7 @@ class SourcesSpec extends SparkSpec {
   test("client: token cached in memory, disk, refreshed inside the 60s margin") {
     var now = 1000L
     var fetches = 0
-    val cache = Files.createTempFile("tok", ".json")
-    Files.delete(cache)
+    val cache = Paths.get(tmpDir("tok"), "token.json")
     def mkClient() = new PricenowClient(
       transport = (_, _, tok) => (200, s"""{"data": ["$tok"]}"""),
       fetchToken = () => { fetches += 1; (s"tok$fetches", 300L) },
@@ -90,6 +89,20 @@ class SourcesSpec extends SparkSpec {
     assert(c2.getToken() == "tok1" && fetches == 1) // disk cache survives restart
     now = 1000 + 300 - 59 // inside the 60s early-refresh margin
     assert(c2.getToken() == "tok2" && fetches == 2) // early refresh
+  }
+
+  test("client: a token holding a quote and a backslash survives a restart without a refetch") {
+    var fetches = 0
+    val cache = Paths.get(tmpDir("tok"), "token.json")
+    def mkClient() = new PricenowClient(
+      transport = (_, _, _) => (200, "[]"),
+      fetchToken = () => { fetches += 1; ("a\"b\\c", 300L) },
+      cachePath = Some(cache), clock = () => 1000L)
+    assert(mkClient().getToken() == "a\"b\\c" && fetches == 1)
+    assert(mkClient().getToken() == "a\"b\\c", "the cached token reads back intact")
+    assert(fetches == 1, "a readable cache means no second fetch")
+    // the write went through a sibling temp file that is gone afterwards
+    assert(cache.getParent.toFile.list().toSeq == Seq("token.json"))
   }
 
   test("client: 401 forces one refresh and retry (ref :80-84)") {

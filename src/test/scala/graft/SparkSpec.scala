@@ -4,6 +4,8 @@ import java.util.concurrent.ConcurrentLinkedQueue
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.graftbridge.Bridge
@@ -18,9 +20,14 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = GraftSession.builder(4)
     // per-JVM dir: concurrent sbt test runs must not share a warehouse
     // (saveAsTable in one run would clobber or lock the other's tables)
-    .config("spark.sql.warehouse.dir",
-      s"${System.getProperty("java.io.tmpdir")}/graft-warehouse-${ProcessHandle.current().pid()}")
+    .config("spark.sql.warehouse.dir", s"${SparkSpec.root}/warehouse")
     .getOrCreate()
+
+  /** A fresh, empty directory named after `tag` under the JVM's test
+    * root; gone when the JVM exits. */
+  def tmpDir(tag: String): String =
+    java.nio.file.Files.createTempDirectory(
+      java.nio.file.Paths.get(SparkSpec.root), s"$tag-").toString
 
   /** (job group, micro-batch id) of every job started while `body` runs;
     * `body` runs under job group `group`, a stream's jobs carry its run id
@@ -49,5 +56,21 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   override protected def afterAll(): Unit = {
     // keep the session for sibling suites; stopped by the JVM exit
     super.afterAll()
+  }
+}
+
+object SparkSpec {
+  /** `<tmpdir>/graft-test-<pid>`: the one directory a test JVM writes its
+    * fixtures, stores and warehouse under, registered with Hadoop
+    * `FileSystem.deleteOnExit` (as `queries.Scratch` does), so a test run
+    * leaves nothing behind. */
+  lazy val root: String = {
+    val p = new Path(s"${System.getProperty("java.io.tmpdir")}/graft-test-" +
+      ProcessHandle.current().pid())
+    val fs = p.getFileSystem(new Configuration())
+    fs.delete(p, true)
+    fs.mkdirs(p)
+    fs.deleteOnExit(p)
+    p.toString
   }
 }

@@ -14,10 +14,6 @@ class StreamingDedupSpec extends SparkSpec {
 
   private val dir = "/root/testdata/sf0.001"
 
-  private def tmp(name: String) =
-    s"${System.getProperty("java.io.tmpdir")}/graft-dedupstream-" +
-      s"${ProcessHandle.current().pid()}-$name"
-
   private def pairSet(df: org.apache.spark.sql.DataFrame): Set[(Long, Long, Double)] =
     df.select(col("id_a"), col("id_b"), col("jaccard"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
@@ -44,7 +40,7 @@ class StreamingDedupSpec extends SparkSpec {
     val batches = (0 until 3).map(i => all.filter(_._1 % 3 == i))
     assert(batches.forall(_.nonEmpty))
     val (sigStore, pairStore, ckpt) =
-      (tmp("sigs"), tmp("pairs"), tmp("ckpt"))
+      (tmpDir("sigs"), tmpDir("pairs"), tmpDir("ckpt"))
     val in = MemoryStream[(Long, String)]
     val q = graft.streaming.StreamingOps.minhashStateSink(
       in.toDF().toDF("doc_id", "text"),
@@ -93,7 +89,7 @@ class StreamingDedupSpec extends SparkSpec {
     val batches = (0 until 3).map(i => all.filter(_._1 % 3 == i))
     assert(batches.forall(_.nonEmpty))
     val (sigStore, pairStore, rootsStore, ckpt) =
-      (tmp("rsigs"), tmp("rpairs"), tmp("roots"), tmp("rckpt"))
+      (tmpDir("rsigs"), tmpDir("rpairs"), tmpDir("roots"), tmpDir("rckpt"))
     val in = MemoryStream[(Long, String)]
     val q = graft.streaming.StreamingOps.rootsStateSink(
       in.toDF().toDF("doc_id", "text"),
@@ -141,7 +137,7 @@ class StreamingDedupSpec extends SparkSpec {
       .select(col("doc_id"), col("text"))
       .as[(Long, String)].collect().toSeq.take(5)
     val (sigStore, pairStore, ckpt) =
-      (tmp("capsigs"), tmp("cappairs"), tmp("capckpt"))
+      (tmpDir("capsigs"), tmpDir("cappairs"), tmpDir("capckpt"))
     val fs = new org.apache.hadoop.fs.Path(sigStore)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     Seq(sigStore, pairStore, ckpt).foreach(p =>
@@ -166,7 +162,7 @@ class StreamingDedupSpec extends SparkSpec {
       .select(col("doc_id"), col("text"))
       .as[(Long, String)].collect().toSeq
     val (sigStore, pairStore, rootsStore, ckpt) =
-      (tmp("jsigs"), tmp("jpairs"), tmp("jroots"), tmp("jckpt"))
+      (tmpDir("jsigs"), tmpDir("jpairs"), tmpDir("jroots"), tmpDir("jckpt"))
     val in = MemoryStream[(Long, String)]
     var runId = ""
     val streamJobs = jobsDuring("roots-sink") {

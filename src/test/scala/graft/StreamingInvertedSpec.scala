@@ -21,14 +21,6 @@ class StreamingInvertedSpec extends SparkSpec {
 
   private val dir = "/root/testdata/sf0.001"
 
-  private def tmp(tag: String): String = {
-    val p = s"${System.getProperty("java.io.tmpdir")}/graft-invspec-" +
-      s"${ProcessHandle.current().pid()}-$tag"
-    val path = new org.apache.hadoop.fs.Path(p)
-    path.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(path, true)
-    p
-  }
-
   private val terms = Seq("dup", "join", "scan")
 
   private def sink(in: MemoryStream[(Long, String)], idx: String,
@@ -76,7 +68,7 @@ class StreamingInvertedSpec extends SparkSpec {
       .as[(Long, String)].collect().toSeq
     val batches = (0 until 3).map(i => all.filter(_._1 % 3 == i))
     assert(batches.forall(_.nonEmpty))
-    val (idx, ckpt) = (tmp("idx"), tmp("ckpt"))
+    val (idx, ckpt) = (tmpDir("idx"), tmpDir("ckpt"))
     val in = MemoryStream[(Long, String)]
     val q = sink(in, idx, ckpt)
     try {
@@ -116,7 +108,7 @@ class StreamingInvertedSpec extends SparkSpec {
     // (stats drift applies retroactively to already-indexed postings,
     // which is exactly what per-batch stat snapshots are for).
     implicit val sc = spark.sqlContext
-    val (idx, ckpt) = (tmp("idx2"), tmp("ckpt2"))
+    val (idx, ckpt) = (tmpDir("idx2"), tmpDir("ckpt2"))
     val in = MemoryStream[(Long, String)]
     val q = sink(in, idx, ckpt)
     def servedScore: Long = graft.streaming.StreamingOps
@@ -151,7 +143,7 @@ class StreamingInvertedSpec extends SparkSpec {
           .map { case (t, hits) => t -> hits.size.toLong },
         (docs.size.toLong, docs.map(d => toks(d._2).length.toLong).sum))
     }
-    val (idx, ckpt) = (tmp("idx3"), tmp("ckpt3"))
+    val (idx, ckpt) = (tmpDir("idx3"), tmpDir("ckpt3"))
     def snapshot(b: Long) = (
       spark.read.parquet(s"$idx/df/batch_id=$b").as[(String, Long)].collect().toMap,
       spark.read.parquet(s"$idx/global/batch_id=$b").as[(Long, Long)].collect().toSeq)
@@ -182,7 +174,7 @@ class StreamingInvertedSpec extends SparkSpec {
     val all = graft.ops.Tables.documents(spark, dir)
       .select(col("doc_id"), col("text"))
       .as[(Long, String)].collect().toSeq
-    val (idx, ckpt) = (tmp("idx4"), tmp("ckpt4"))
+    val (idx, ckpt) = (tmpDir("idx4"), tmpDir("ckpt4"))
     val in = MemoryStream[(Long, String)]
     var runId = ""
     val streamJobs = jobsDuring("inverted-sink") {

@@ -15,14 +15,6 @@ class StreamingKnnSpec extends SparkSpec {
 
   private val dir = "/root/testdata/sf0.001"
 
-  private def tmp(tag: String): String = {
-    val p = s"${System.getProperty("java.io.tmpdir")}/graft-knnspec-" +
-      s"${ProcessHandle.current().pid()}-$tag"
-    val path = new org.apache.hadoop.fs.Path(p)
-    path.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(path, true)
-    p
-  }
-
   test("streamed kNN snapshot equals the one-shot graph; replay idempotent") {
     implicit val sc = spark.sqlContext
     val all = graft.ops.Tables.embeddings(spark, dir)
@@ -30,7 +22,7 @@ class StreamingKnnSpec extends SparkSpec {
       .as[(Long, Array[Float])].collect().toSeq
     val batches = (0 until 3).map(i => all.filter(_._1 % 3 == i))
     assert(batches.forall(_.nonEmpty))
-    val (vecStore, graphStore, ckpt) = (tmp("vecs"), tmp("graph"), tmp("ckpt"))
+    val (vecStore, graphStore, ckpt) = (tmpDir("vecs"), tmpDir("graph"), tmpDir("ckpt"))
     val in = MemoryStream[(Long, Array[Float])]
     val q = graft.streaming.StreamingOps.knnStateSink(
       in.toDF().toDF("vec_id", "embedding"),
@@ -75,7 +67,7 @@ class StreamingKnnSpec extends SparkSpec {
     val v2 = Array.tabulate(8)(i => if (i % 2 == 0) 0.01f else 5.0f)
     val v3 = Array.tabulate(8)(i => 1.0f + 0.001f * i)
     val (vecStore, graphStore, ckpt) =
-      (tmp("vecs2"), tmp("graph2"), tmp("ckpt2"))
+      (tmpDir("vecs2"), tmpDir("graph2"), tmpDir("ckpt2"))
     val in = MemoryStream[(Long, Array[Float])]
     val q = graft.streaming.StreamingOps.knnStateSink(
       in.toDF().toDF("vec_id", "embedding"),
@@ -101,7 +93,7 @@ class StreamingKnnSpec extends SparkSpec {
     val all = graft.ops.Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("embedding"))
       .as[(Long, Array[Float])].collect().toSeq
-    val (vecStore, graphStore, ckpt) = (tmp("jvecs"), tmp("jgraph"), tmp("jckpt"))
+    val (vecStore, graphStore, ckpt) = (tmpDir("jvecs"), tmpDir("jgraph"), tmpDir("jckpt"))
     val in = MemoryStream[(Long, Array[Float])]
     var runId = ""
     val streamJobs = jobsDuring("knn-sink") {

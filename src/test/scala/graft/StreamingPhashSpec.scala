@@ -14,10 +14,6 @@ class StreamingPhashSpec extends SparkSpec {
 
   private val dir = "/root/testdata/sf0.001"
 
-  private def tmp(name: String) =
-    s"${System.getProperty("java.io.tmpdir")}/graft-phashstream-" +
-      s"${ProcessHandle.current().pid()}-$name"
-
   private def pairSet(df: org.apache.spark.sql.DataFrame): Set[(Long, Long, Int)] =
     df.select(col("id_a"), col("id_b"), col("hamming"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
@@ -46,7 +42,7 @@ class StreamingPhashSpec extends SparkSpec {
       .as[(Long, String)].collect().toSeq
     val batches = (0 until 3).map(i => all.filter(_._1 % 3 == i))
     assert(batches.forall(_.nonEmpty))
-    val (sigStore, pairStore, ckpt) = (tmp("sigs"), tmp("pairs"), tmp("ckpt"))
+    val (sigStore, pairStore, ckpt) = (tmpDir("sigs"), tmpDir("pairs"), tmpDir("ckpt"))
     val in = MemoryStream[(Long, String)]
     val q = graft.streaming.StreamingOps.phashStateSink(
       in.toDF().toDF("doc_id", "text"),

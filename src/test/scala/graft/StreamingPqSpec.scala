@@ -12,10 +12,6 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 class StreamingPqSpec extends SparkSpec {
   import spark.implicits._
 
-  private def tmp(name: String) =
-    s"${System.getProperty("java.io.tmpdir")}/graft-pqstream-" +
-      s"${ProcessHandle.current().pid()}-$name"
-
   private def codeMap(df: org.apache.spark.sql.DataFrame): Map[Long, Seq[Int]] =
     df.select(col("vec_id"), col("codes"))
       .as[(Long, Seq[Int])].collect().toMap
@@ -30,7 +26,7 @@ class StreamingPqSpec extends SparkSpec {
     val cb = graft.ops.Similarity.pqTrainCodebook(
       corpus, "vec_id", "embedding", 8, 8)
 
-    val (store, ckpt) = (tmp("codes"), tmp("ckpt"))
+    val (store, ckpt) = (tmpDir("codes"), tmpDir("ckpt"))
     val in = MemoryStream[(Long, Seq[Float], Int)]
     val q = graft.streaming.StreamingOps.pqStateSink(
       in.toDF().toDF("vec_id", "embedding", "cell"),
@@ -91,7 +87,7 @@ class StreamingPqSpec extends SparkSpec {
     // codebook it was frozen with
     val cbr = graft.ops.Similarity.pqTrainCodebook(
       withResid(corpus), "vec_id", "resid", 16, 4)
-    val (store, ckpt) = (tmp("rescodes"), tmp("resckpt"))
+    val (store, ckpt) = (tmpDir("rescodes"), tmpDir("resckpt"))
     val in = MemoryStream[(Long, Seq[Float], Int)]
     val q = graft.streaming.StreamingOps.pqStateSink(
       withResid(in.toDF().toDF("vec_id", "embedding", "cell")),

@@ -30,7 +30,7 @@ class StreamingRefreshSpec extends SparkSpec {
   }
 
   test("streamed changes refresh only frontier months; restart replay converges; untouched months stay byte-identical") {
-    val pages = Files.createTempDirectory("refreshpages")
+    val pages = Paths.get(tmpDir("refreshpages"))
     Files.writeString(pages.resolve("page-0.json"),
       """{"data": [
         | {"name": "skitickets", "productDefinitions": [
@@ -42,9 +42,9 @@ class StreamingRefreshSpec extends SparkSpec {
       updatedAt = "2026-04-01 06:00:00", jdbcUrl = "unused",
       dialect = JdbcUpsert.Dialect.Generic, writePartitions = Some(1))
     val seasonMonths = Seq("2025-12", "2026-01", "2026-02", "2026-03", "2026-04")
-    val changeLog = Files.createTempDirectory("changelog").toString
-    val fact = Files.createTempDirectory("factrefresh").toString
-    val ckpt = Files.createTempDirectory("refreshckpt").toString
+    val changeLog = tmpDir("changelog")
+    val fact = tmpDir("factrefresh")
+    val ckpt = tmpDir("refreshckpt")
 
     implicit val sc = spark.sqlContext
     val in = MemoryStream[(Long, String, Int, Int)]

@@ -287,7 +287,7 @@ class StreamingSpec extends SparkSpec {
 
     implicit val sc = spark.sqlContext
     val in = MemoryStream[(Long, Double)]
-    val ckpt = java.nio.file.Files.createTempDirectory("ckpt").toString
+    val ckpt = tmpDir("ckpt")
     in.addData((1L, 1.0), (2L, 2.0))
     val q1 = StreamingOps.upsertSink(in.toDF().toDF("k", "v"), url,
       "latest_vals", Seq("k"), JdbcUpsert.Dialect.Generic, ckpt)
@@ -333,7 +333,7 @@ class StreamingSpec extends SparkSpec {
 
     implicit val sc = spark.sqlContext
     val in = MemoryStream[(Long, Double)]
-    val ckpt = java.nio.file.Files.createTempDirectory("replayckpt").toString
+    val ckpt = tmpDir("replayckpt")
     in.addData((1L, 1.0), (2L, 2.0))
     val q1 = StreamingOps.upsertSink(in.toDF().toDF("k", "v"), url,
       "replay_vals", Seq("k"), JdbcUpsert.Dialect.Generic, ckpt)
@@ -370,7 +370,7 @@ class StreamingSpec extends SparkSpec {
 
   test("locfGridSink: streamed change points produce the exact batch dailyGrid (batch ≡ stream)") {
     implicit val sc = spark.sqlContext
-    val base = java.nio.file.Files.createTempDirectory("graft-locf-stream").toString
+    val base = tmpDir("locf-stream")
     val (log, grid, ckpt) = (s"$base/log", s"$base/grid", s"$base/ckpt")
     val in = MemoryStream[(Long, String, Double, Long)]
     def shaped(df: org.apache.spark.sql.DataFrame) = df
@@ -416,7 +416,7 @@ class StreamingSpec extends SparkSpec {
   test("locfGridSink: a LATE change at date d corrects exactly the LOCF days in " +
       "[d, next change); untouched ids' partitions stay byte-identical") {
     implicit val sc = spark.sqlContext
-    val base = java.nio.file.Files.createTempDirectory("graft-locf-late").toString
+    val base = tmpDir("locf-late")
     val (log, grid, ckpt) = (s"$base/log", s"$base/grid", s"$base/ckpt")
     val in = MemoryStream[(Long, String, Double, Long)]
     def shaped(df: org.apache.spark.sql.DataFrame) = df

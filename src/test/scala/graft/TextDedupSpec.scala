@@ -52,7 +52,7 @@ class TextDedupSpec extends SparkSpec {
   }
 
   test("q_phrase_search fixture: adjacency required, occurrences counted, scattered words ignored") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-phrase").toFile.getAbsolutePath
+    val dir = tmpDir("phrase")
     Seq(
       (1L, "big order scan then big order scan again", "en", "s", 10L), // 2 hits
       (2L, "big BIG order scan", "en", "s", 10L),                       // case-folded, 1 hit
@@ -90,7 +90,7 @@ class TextDedupSpec extends SparkSpec {
   }
 
   test("q_dedup_containment fixture: subset doc flagged at jaccard Jaccard misses") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-contain").toFile.getAbsolutePath
+    val dir = tmpDir("contain")
     val big = (1 to 40).map(i => s"w$i").mkString(" ")      // 40-token vocab
     val small = (1 to 10).map(i => s"w$i").mkString(" ")    // strict subset
     Seq(

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import java.sql.Timestamp
 
 import org.apache.spark.sql.functions._
@@ -19,7 +18,7 @@ class WarehouseQueriesSpec extends SparkSpec {
   /** Write fixture tables as `<name>.parquet` under a fresh dir usable as a
     * query sfDir. */
   private def fixtureDir(tables: (String, org.apache.spark.sql.DataFrame)*): String = {
-    val dir = Files.createTempDirectory("graft-wh-fixture").toFile.getAbsolutePath
+    val dir = tmpDir("wh-fixture")
     tables.foreach { case (name, df) =>
       df.coalesce(1).write.mode("overwrite").parquet(s"$dir/$name.parquet")
     }

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 
 import graft.sink.ZOrder
 import org.apache.spark.sql.functions._
@@ -54,7 +53,7 @@ class ZOrderSpec extends SparkSpec {
   }
 
   test("written z-layout files carry the bounded envelopes (input_file_name readback)") {
-    val dir = Files.createTempDirectory("graft-zorder").toFile.getAbsolutePath
+    val dir = tmpDir("zorder")
     grid.select($"x", $"y", shiftright(ZOrder.zValue($"x", $"y", 8), 12).as("zchunk"))
       .repartition($"zchunk")
       .write.mode("overwrite").partitionBy("zchunk").parquet(dir)
