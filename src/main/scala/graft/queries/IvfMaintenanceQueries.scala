@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.QueryDef
 import graft.ops.{SessionCache, Similarity, Tables}
+import graft.sink.Store
 import org.apache.spark.sql.functions._
 
 /** Incremental IVF index maintenance — the ANN counterpart of
@@ -162,13 +163,13 @@ object IvfMaintenanceQueries {
         .agg(sum(nano(col("v"))).as("s"), count(lit(1)).as("n"))
         .select(col("cell"), (col("pos0") + 1).cast("long").as("pos"),
           col("s"), col("n"))
-      graft.sink.IndexStore.writeIvfState(state, path)
+      Store.ivfState.write(state, path, Store.byCell("pos"))
       path
     }
 
   /** Persisted-index round trip, hash-gated: build the full-corpus IVF
     * sufficient-statistics state, WRITE it to a cell-partitioned parquet
-    * store ([[graft.sink.IndexStore]]), READ it back, and emit the
+    * store ([[Store.ivfState]]), READ it back, and emit the
     * reloaded rows. The oracle computes the same state straight from the
     * embeddings table — so the driver's gate proves the persisted form
     * is value-identical to a rebuild after a disk round trip (longs are
@@ -182,10 +183,7 @@ object IvfMaintenanceQueries {
   private val ivfStatePersist = QueryDef(
     fn = (spark, dir) => {
       val path = persistedStatePath(spark, dir)
-      graft.sink.IndexStore.readIvfState(spark, path)
-        .select(col("cell").cast("int").as("cell"), col("pos"),
-          col("s"), col("n"))
-        .orderBy("cell", "pos")
+      Store.ivfState.read(spark, path).orderBy("cell", "pos")
     },
     oracle = Some(
       """WITH op AS (SELECT label AS cell,

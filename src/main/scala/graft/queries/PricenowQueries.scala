@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.QueryDef
-import graft.ops.{ForwardFill, PricenowCatalog, PricenowPricing}
+import graft.ops.{ForwardFill, PricenowPricing, SessionCache}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -78,11 +78,12 @@ object PricenowQueries {
 
   // --- query defs -----------------------------------------------------------
 
-  /** T1+T2+T3+T5+S5: nested catalog flatten over the three envelope shapes. */
-  private val catalog = QueryDef(
-    fn = (spark, _) => {
-      import spark.implicits._
-      val payloads = Seq(
+  /** The three catalog payloads as page files under a scratch directory
+    * ([[Scratch.scratchPath]]), written once per (session, dir). */
+  private def catalogPages(spark: SparkSession, dir: String): String =
+    SessionCache.memo(spark, dir, "catalog-pages") {
+      val base = Scratch.scratchPath(spark, "catalog-pages", dir)
+      Seq(
         // `data` envelope (ref payload shape, scripts/pricenow_etl.py:296-313)
         """{"data": [
           | {"name": "skitickets", "productDefinitions": [
@@ -96,10 +97,21 @@ object PricenowQueries {
         // bare top-level array (S5)
         """[{"name": "summercard", "productDefinitions": [
           |   {"id": 301, "attributes": {"age": {"value": "child"}, "duration": {"value": "2d"}}}]}]""".stripMargin
-      )
-      PricenowCatalog.flatten(payloads.toDF("json"), "json")
-        .orderBy("product_id")
-    },
+      ).zipWithIndex.foreach { case (body, i) =>
+        java.nio.file.Files.writeString(
+          java.nio.file.Paths.get(base, f"page-$i%03d.json"), body)
+      }
+      base
+    }
+
+  /** T1+T2+T3+T5+S5: nested catalog flatten over the three envelope
+    * shapes, through the page source the pipeline reads
+    * ([[graft.sources.PricenowCatalogSource]]). */
+  private val catalog = QueryDef(
+    fn = (spark, dir) =>
+      spark.read.format("graft.sources.PricenowCatalogSource")
+        .option("path", catalogPages(spark, dir)).load()
+        .orderBy("product_id"),
     oracle = Some(
       """SELECT * FROM (VALUES
         | (CAST(101 AS BIGINT), 'skitickets', 'adult', '1d', 1),

@@ -58,8 +58,7 @@ object PricenowCatalogSource {
   /** `'4h'` counts as one day; otherwise remove ALL `d` characters and
     * parse — `replace("d", "")`, not a suffix strip, to stay
     * value-identical with the reference (`scripts/pricenow_etl.py:315-318`)
-    * and with `PricenowCatalog.durationDays` (regexp_replace) on every
-    * input including malformed ones. */
+    * on every input including malformed ones. */
   def durationDays(duration: String): Option[Int] =
     if (duration == null) None
     else if (duration == "4h") Some(1)
@@ -106,11 +105,21 @@ private class PricenowCatalogTable(path: String) extends Table with SupportsRead
 private case class PricenowPagePartition(file: String) extends InputPartition
 
 /** Parses one page payload and emits flattened, filtered catalog rows
-  * (T1 explode ×2, T2 struct paths, T3 small_child filter, T5 duration). */
+  * (T1 explode ×2, T2 struct paths, T3 small_child filter, T5 duration).
+  * A page that is not JSON, or is empty (a landed response is at least
+  * `[]`, so an empty file is a truncated landing), fails the scan with
+  * an error naming the page. */
 private class PricenowPageReader(file: String) extends PartitionReader[InternalRow] {
   private val rows: Iterator[InternalRow] = {
-    val root = new ObjectMapper().readTree(
-      java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(file)))
+    val root =
+      try new ObjectMapper().readTree(
+        java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(file)))
+      catch {
+        case e: java.io.IOException =>
+          throw new java.io.IOException(s"catalog page $file: ${e.getMessage}", e)
+      }
+    if (root.isMissingNode)
+      throw new java.io.IOException(s"catalog page $file is empty")
     for {
       product <- PricenowCatalogSource.extractRows(root)
       category = Option(product.get("name")).map(_.asText()).orNull

@@ -1,12 +1,12 @@
 package graft.streaming
 
 import graft.ops.ForwardFill
-import graft.sink.JdbcUpsert
+import graft.sink.{JdbcUpsert, Store}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
-import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, LongType, StructType}
+import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, IntegerType, LongType}
 
 /** Structured Streaming surface (SURVEY.md §2.3 streaming row): the
   * reference is batch-only (cron 2×/day = micro-batch by scheduler), so
@@ -398,21 +398,23 @@ object StreamingOps {
     *     partition; untouched ids' files are never rewritten.
     *
     * At 100 TB the change log is the sparse cheap side; per-batch work is
-    * proportional to touched ids × grid days, not to the corpus.
+    * proportional to touched ids × grid days, not to the corpus. The log
+    * is a [[Store]] declared from the stream's schema, so every read of
+    * it is typed as the rows were written.
     */
   def locfGridSink(
       changes: DataFrame, idCol: String, dayCol: String, valueCol: String,
       tieBreak: Seq[String], start: String, end: String,
       changeLogPath: String, gridPath: String, checkpointDir: String,
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
+      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
+    val log = Store("locf change log", changes.schema)
     foreachBatchSink(changes, checkpointDir, trigger) { (batch, batchId) =>
       val sess = batch.sparkSession
-      batch.write.mode("overwrite").parquet(s"$changeLogPath/batch_id=$batchId")
-      val landed = sess.read.parquet(s"$changeLogPath/batch_id=$batchId")
-      val touched = landed.select(col(idCol)).na.drop().distinct()
+      log.land(batch, changeLogPath, batchId)
+      val touched = log.at(sess, changeLogPath, batchId, idCol).na.drop().distinct()
       if (touched.head(1).nonEmpty) {
-        val fullLog = sess.read.parquet(changeLogPath).drop("batch_id")
-        val relevant = fullLog.join(broadcast(touched), Seq(idCol))
+        val relevant = log.read(sess, changeLogPath)
+          .join(broadcast(touched), Seq(idCol))
         ForwardFill
           .dailyGrid(relevant, idCol, dayCol, valueCol, tieBreak, start, end)
           .write.mode("overwrite")
@@ -421,6 +423,7 @@ object StreamingOps {
           .parquet(gridPath)
       }
     }
+  }
 
   /** Stream of price CHANGES → incrementally refreshed month-partitioned
     * fact table: the streaming composition of the reference's cron rerun
@@ -443,35 +446,36 @@ object StreamingOps {
     * At 100 TB the change log is the cheap side (changes are sparse; the
     * dense grid is the expensive one) and each micro-batch rewrites only
     * the frontier months — the streaming version of "rerun the season
-    * nightly", at per-batch granularity with the same idempotence.
+    * nightly", at per-batch granularity with the same idempotence. The
+    * log is a [[Store]] declared from the stream's schema.
     */
   def incrementalRefreshSink(
       changes: DataFrame, pagesPath: String, cfg: graft.PricenowPipeline.Config,
       seasonMonths: Seq[String], changeLogPath: String, factPath: String,
       checkpointDir: String,
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
+      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
+    val log = Store("refresh change log", changes.schema)
     foreachBatchSink(changes, checkpointDir, trigger) { (batch, batchId) =>
       // single evaluation of the micro-batch: land it first, then derive
       // emptiness and the frontier from the written partition — re-running
       // the upstream lineage per question would triple the batch read
       val sess = batch.sparkSession
-      batch.write.mode("overwrite").parquet(s"$changeLogPath/batch_id=$batchId")
-      val landed = sess.read.parquet(s"$changeLogPath/batch_id=$batchId")
+      log.land(batch, changeLogPath, batchId)
       // null frontier = empty batch or all-null change dates: nothing to
       // refresh (null dates never reach the grid — dailyGrid drops them)
-      val frontier = landed
+      val frontier = log.at(sess, changeLogPath, batchId, "valid_at")
         .agg(min(date_format(col("valid_at"), "yyyy-MM"))).head.getString(0)
       val months = if (frontier == null) Nil else seasonMonths.filter(_ >= frontier)
       if (months.nonEmpty) {
-        val fullLog = sess.read.parquet(changeLogPath).drop("batch_id")
         // requireNonEmpty = false: the frontier is conservative — a month
         // past the grid's actual end is a no-op here, never a poison pill
         // (foreachBatch is at-least-once; a throwing batch replays forever)
         graft.PricenowPipeline.refreshMonths(
-          sess, pagesPath, fullLog, cfg, factPath, months,
+          sess, pagesPath, log.read(sess, changeLogPath), cfg, factPath, months,
           requireNonEmpty = false)
       }
     }
+  }
 
   /** Rows per fan-out task: small, because the per-row work these sinks
     * fan out for is heavy (tokenize + 16-way minhash, PQ coding, LSH
@@ -518,7 +522,7 @@ object StreamingOps {
 
   /** Streaming IVF index maintenance — the streaming form of
     * q_ivf_upsert's mergeable-sufficient-statistics contract, persisted
-    * through [[graft.sink.IndexStore]]: embedding batches stream in
+    * as [[Store.ivfDelta]] and [[Store.ivfState]]: embedding batches stream in
     * (already carrying their cell assignment — the caller composes
     * [[graft.ops.Similarity.assignByCents]] upstream, a map-side argmax),
     * and the cell-partitioned state table (cell, pos, s, n) stays
@@ -543,8 +547,8 @@ object StreamingOps {
     *
     * At 100 TB the per-batch cost is batch-sized quantization + a
     * touched-cells × batches grid re-sum — nothing corpus-sized moves,
-    * and probes read the maintained state partition-pruned
-    * ([[graft.sink.IndexStore.readIvfCells]]).
+    * and probes read the maintained state partition-pruned (a read of
+    * [[Store.ivfState]] filtered on `cell`, laid out [[Store.byCell]]).
     *
     * CONTRACT: one delta log belongs to ONE checkpointed stream —
     * `batch_id` is only unique per checkpoint, so a second query (fresh
@@ -567,13 +571,15 @@ object StreamingOps {
     * immutable; a replayed current batch re-runs the fold and rewrites
     * the identical base (idempotent). Per-batch merge cost is now
     * bounded by one base + ≤ compactEvery recent deltas per touched
-    * cell, for the life of the stream.
+    * cell, for the life of the stream. `cellCol` must be INT
+    * ([[Store.ivfDelta]]).
     */
   def ivfStateSink(
       assigned: DataFrame, idCol: String, vecCol: String, cellCol: String,
       deltaLogPath: String, statePath: String, checkpointDir: String,
       trigger: Trigger = Trigger.AvailableNow(),
-      compactEvery: Int = 16): StreamingQuery =
+      compactEvery: Int = 16): StreamingQuery = {
+    requireInput("ivfStateSink", assigned, cellCol -> IntegerType)
     foreachBatchSink(assigned, checkpointDir, trigger) { (batch0, batchId) =>
       val batch = fanOut(batch0)
       val sess = batch.sparkSession
@@ -585,123 +591,18 @@ object StreamingOps {
           .as("s"), count(lit(1)).as("n"))
         .select(col("cell"), (col("pos0") + 1).cast("long").as("pos"),
           col("s"), col("n"))
-      delta.write.mode("overwrite")
-        .parquet(s"$deltaLogPath/batch_id=$batchId")
+      Store.ivfDelta.land(delta, deltaLogPath, batchId)
       if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
         compactDeltaLog(sess, deltaLogPath, batchId)
-      val landed = sess.read.parquet(s"$deltaLogPath/batch_id=$batchId")
-      val touched = landed.select(col("cell")).distinct()
+      val touched = Store.ivfDelta.at(sess, deltaLogPath, batchId, "cell").distinct()
       if (touched.head(1).nonEmpty) {
-        val fullLog = effectiveDeltas(sess, deltaLogPath).drop("batch_id")
-        val merged = fullLog
+        val merged = effectiveDeltas(sess, deltaLogPath)
           .join(broadcast(touched), Seq("cell"))
           .groupBy(col("cell"), col("pos"))
           .agg(sum(col("s")).as("s"), sum(col("n")).as("n"))
-        graft.sink.IndexStore.writeIvfState(merged, statePath)
+        Store.ivfState.write(merged, statePath, Store.byCell("pos"))
       }
     }
-
-  /** A generation store: the state layout the minhash, roots, knn, phash
-    * and inverted sinks share. Micro-batch N lands at its own
-    * `root/batch_id=N` partition, so a replayed batch (foreachBatch is
-    * at-least-once) overwrites its prior write instead of duplicating it.
-    * The columns are declared once in `schema`: [[land]] writes exactly
-    * those, and every read names its columns with their declared types
-    * instead of inferring them — a parquet schema inference is one job per
-    * read. An append-only store is read whole or as the generations before
-    * N; a snapshot store holds a full state per generation, its fold reads
-    * the newest before its own batch, its reader the newest, and [[gc]]
-    * keeps the current generation and the predecessor a replay re-reads. */
-  private[graft] final case class Store(name: String, schema: StructType) {
-    private def typed(cols: Seq[String]): StructType =
-      if (cols.isEmpty) schema else StructType(cols.map(schema(_)))
-
-    private def fs(sess: SparkSession, root: String) =
-      new Path(root).getFileSystem(sess.sparkContext.hadoopConfiguration)
-
-    /** Generation ids under `root`; none when the store is missing.
-      * `_SUCCESS` markers and staging directories are not generations. */
-    private def generations(sess: SparkSession, root: String): Seq[Long] =
-      if (!fs(sess, root).exists(new Path(root))) Nil
-      else fs(sess, root).listStatus(new Path(root)).toSeq.flatMap { st =>
-        val n = st.getPath.getName
-        if (n.startsWith("batch_id=")) n.stripPrefix("batch_id=").toLongOption
-        else None
-      }
-
-    def partition(root: String, batchId: Long): String = s"$root/batch_id=$batchId"
-
-    /** Land the declared columns of `df` as generation `batchId`, through
-      * `write` when the store keeps a layout of its own. */
-    def land(df: DataFrame, root: String, batchId: Long,
-        write: (DataFrame, String) => Unit =
-          (d, p) => d.write.mode("overwrite").parquet(p)): Unit =
-      write(df.select(schema.fieldNames.toSeq.map(col): _*),
-        partition(root, batchId))
-
-    /** `cols` (all when none are named) under `path` — the store root or
-      * one generation. */
-    def read(sess: SparkSession, path: String, cols: String*): DataFrame = {
-      val s = typed(cols)
-      sess.read.schema(s).parquet(path).select(s.fieldNames.toSeq.map(col): _*)
-    }
-
-    def at(sess: SparkSession, root: String, batchId: Long,
-        cols: String*): DataFrame =
-      read(sess, partition(root, batchId), cols: _*)
-
-    /** Every generation strictly before `batchId`, as one frame. */
-    def before(sess: SparkSession, root: String, batchId: Long,
-        cols: String*): DataFrame = {
-      val s = typed(cols)
-      sess.read.schema(s.add("batch_id", LongType)).parquet(root)
-        .filter(col("batch_id") < batchId)
-        .select(s.fieldNames.toSeq.map(col): _*)
-    }
-
-    /** The newest generation strictly before `batchId`: a fold's prior. */
-    def latestBefore(sess: SparkSession, root: String, batchId: Long,
-        cols: String*): Option[DataFrame] =
-      generations(sess, root).filter(_ < batchId).maxOption
-        .map(at(sess, root, _, cols: _*))
-
-    /** The newest generation's id; throws, naming `reader`, if none. */
-    def newest(sess: SparkSession, root: String, reader: String): Long =
-      generations(sess, root).maxOption.getOrElse(
-        throw new IllegalStateException(
-          s"$reader: no $name generation under $root"))
-
-    /** Keep generation `curBatch` and its immediate predecessor; delete
-      * the rest. Best-effort hygiene — the readers stay correct without
-      * it. */
-    def gc(sess: SparkSession, root: String, curBatch: Long): Unit = {
-      val ids = generations(sess, root)
-      val keep = (ids.filter(_ < curBatch).maxOption.toSeq :+ curBatch).toSet
-      ids.filterNot(keep).foreach(i =>
-        fs(sess, root).delete(new Path(partition(root, i)), true))
-    }
-  }
-
-  /** The sinks' stores. Ids are BIGINT throughout. */
-  private[graft] object Store {
-    private def of(name: String, ddl: String) = Store(name, StructType.fromDDL(ddl))
-    // minhash and roots sinks: minhashPrepared digests, verified pairs,
-    // component-root snapshots
-    val sig: Store = of("sig", "id BIGINT, sig ARRAY<BIGINT>, toks ARRAY<BIGINT>")
-    val pairs: Store = of("pairs", "id_a BIGINT, id_b BIGINT, jaccard DOUBLE")
-    val roots: Store = of("roots", "id BIGINT, root BIGINT")
-    // knn sink: the vectors the graph serves, per-node top-k snapshots
-    val vecs: Store = of("vecs", "id BIGINT, vec ARRAY<FLOAT>")
-    val graph: Store =
-      of("graph", "node_id BIGINT, neighbor_id BIGINT, cos DOUBLE, rank INT")
-    // phash sink: 64-bit dHash signatures, Hamming pairs
-    val phashSig: Store = of("phash sig", "id BIGINT, sig BIGINT")
-    val phashPairs: Store = of("phash pairs", "id_a BIGINT, id_b BIGINT, hamming INT")
-    // inverted sink: postings, doc lengths, df and global snapshots
-    val tf: Store = of("tf", "doc_id BIGINT, token STRING, tf BIGINT")
-    val dl: Store = of("dl", "doc_id BIGINT, dl BIGINT")
-    val df: Store = of("df", "token STRING, df BIGINT")
-    val global: Store = of("global", "n_docs BIGINT, sum_dl BIGINT")
   }
 
   /** Fail before the stream starts, naming the sink, when an input column
@@ -787,7 +688,7 @@ object StreamingOps {
     *  4. the previous roots SNAPSHOT (node-scale) unions with the
     *     batch's landed pairs through [[graft.ops.Dedup.incrementalRoots]]
     *     and lands as a full snapshot at `batch_id=N`
-    *     ([[graft.sink.IndexStore.writeMinhashRoots]] layout); older
+    *     (clustered by `id`, the cross-run root store's layout); older
     *     generations except the immediate predecessor are GC'd.
     *
     * Replay safety: a foreachBatch replay of batch N re-reads the
@@ -831,8 +732,7 @@ object StreamingOps {
     val roots = graft.ops.Dedup
       .incrementalRoots(priorRoots, newEdges, "id_a", "id_b")
       .select(col("id"), col("comp").as("root"))
-    Store.roots.land(roots, rootsStorePath, batchId,
-      graft.sink.IndexStore.writeMinhashRoots)
+    Store.roots.land(roots, rootsStorePath, batchId, Store.clustered("id"))
     Store.roots.gc(sess, rootsStorePath, batchId)
   }
 
@@ -1151,49 +1051,46 @@ object StreamingOps {
     * never persist, only the m code bytes). Reads filter on `cell` and
     * partition-prune ACROSS batches (cell is a partition column at
     * every generation), so ADC candidate I/O stays nprobe/n_cells of
-    * the accumulated store. After any number of micro-batches the
-    * store's codes equal one-shot coding of the union —
-    * StreamingPqSpec proves it plus replay idempotence and the pruned
-    * read.
+    * the accumulated store. Each generation has the persisted pq
+    * index's layout ([[Store.byCell]]). After any number of
+    * micro-batches the store's codes equal one-shot coding of the
+    * union — StreamingPqSpec proves it plus replay idempotence and the
+    * pruned read.
     *
     * Same cross-batch id-uniqueness contract as [[minhashStateSink]] /
     * [[phashStateSink]]: replays of a batch are idempotent; a source
     * re-delivering an id in a LATER batch must be deduped upstream.
+    * `idCol` must be BIGINT and `cellCol` INT ([[Store.pqCodes]]).
     */
   def pqStateSink(
       vecs: DataFrame, idCol: String, vecCol: String, cellCol: String,
       codebook: Seq[(Int, Int, Seq[Double])], m: Int, subDim: Int,
       codeStorePath: String, checkpointDir: String,
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
+      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
+    requireInput("pqStateSink", vecs, idCol -> LongType, cellCol -> IntegerType)
     foreachBatchSink(vecs, checkpointDir, trigger) { (batch0, batchId) =>
-      fanOut(batch0)
-        .select(col(idCol).as("vec_id"), col(cellCol).as("cell"),
-          graft.ops.Similarity
-            .pqCodesExpr(col(vecCol), codebook, m, subDim).as("codes"))
-        .write.mode("overwrite")
-        .partitionBy("cell")
-        .parquet(s"$codeStorePath/batch_id=$batchId")
+      Store.pqCodes.land(
+        fanOut(batch0)
+          .select(col(idCol).as("vec_id"), col(cellCol).as("cell"),
+            graft.ops.Similarity
+              .pqCodesExpr(col(vecCol), codebook, m, subDim).as("codes")),
+        codeStorePath, batchId, Store.byCell("vec_id"))
     }
+  }
 
-  /** The delta log's EFFECTIVE row set under the base-generation rule:
-    * the most-negative `batch_id` partition is the newest compacted base
-    * (covering every batch < |id|); everything at or past |id| is a live
-    * delta. With no base (no negative partition) the whole log is live.
-    * Deterministic from partition values alone — see [[ivfStateSink]]'s
-    * compaction contract. */
+  /** The delta log's EFFECTIVE row set, each row with its `batch_id`,
+    * under the base-generation rule: the most-negative `batch_id`
+    * partition is the newest compacted base (covering every batch
+    * < |id|); everything at or past |id| is a live delta. With no base
+    * (no negative partition) the whole log is live. Deterministic from
+    * the store's partition listing alone, so it launches no job — see
+    * [[ivfStateSink]]'s compaction contract. */
   private[graft] def effectiveDeltas(sess: SparkSession,
       deltaLogPath: String): DataFrame = {
-    val log = sess.read.parquet(deltaLogPath)
-      .withColumn("batch_id", col("batch_id").cast("long"))
-    // min over zero rows is NULL (a zero-data micro-batch can land an
-    // empty delta partition before any real batch) — the raw log is the
-    // correct answer there, not an NPE.
-    val minRow = log.agg(min(col("batch_id"))).head
-    if (minRow.isNullAt(0)) return log
-    val minId = minRow.getLong(0)
-    if (minId < 0)
-      log.filter(col("batch_id") === minId || col("batch_id") >= -minId)
-    else log
+    val log = Store.ivfDelta.tagged(sess, deltaLogPath)
+    Store.ivfDelta.generations(sess, deltaLogPath).minOption.filter(_ < 0)
+      .fold(log)(base =>
+        log.filter(col("batch_id") === base || col("batch_id") >= -base))
   }
 
   /** Fold every delta strictly older than `curBatch` (including the
@@ -1202,10 +1099,9 @@ object StreamingOps {
     * foreachBatch replay of `curBatch`. */
   private[graft] def compactDeltaLog(sess: SparkSession,
       deltaLogPath: String, curBatch: Long): Unit = {
-    val root = new org.apache.hadoop.fs.Path(deltaLogPath)
+    val root = new Path(deltaLogPath)
     val fs = root.getFileSystem(sess.sparkContext.hadoopConfiguration)
-    val basePath =
-      new org.apache.hadoop.fs.Path(root, s"batch_id=${-curBatch}")
+    val basePath = new Path(Store.ivfDelta.partition(deltaLogPath, -curBatch))
     // Replay safety: on a foreachBatch replay of a compaction batch
     // (crash after the fold, before the checkpoint commit) the base
     // partition already exists AND may be the only surviving copy of
@@ -1214,34 +1110,26 @@ object StreamingOps {
     // mode("overwrite") deletes that same directory before the job runs —
     // reading deleted files, then silently losing history. Idempotent
     // skip: an existing base IS the fold's output; only re-run GC.
-    val baseExists = fs.exists(basePath)
-    if (!baseExists) {
+    if (!fs.exists(basePath)) {
       // Stage-then-rename so the fold's source partitions are never the
       // overwrite target even on exotic replays: materialize the folded
       // frame to a sibling staging dir, then atomically move it in.
-      val staging =
-        new org.apache.hadoop.fs.Path(root, s".staging_base_${curBatch}")
+      val staging = new Path(root, s".staging_base_$curBatch")
       if (fs.exists(staging)) fs.delete(staging, true)
-      val folded = effectiveDeltas(sess, deltaLogPath)
-        .filter(col("batch_id") =!= curBatch)
-        .drop("batch_id")
-        .groupBy(col("cell"), col("pos"))
-        .agg(sum(col("s")).as("s"), sum(col("n")).as("n"))
-      folded.write.mode("overwrite").parquet(staging.toString)
+      Store.ivfDelta.write(
+        effectiveDeltas(sess, deltaLogPath)
+          .filter(col("batch_id") =!= curBatch)
+          .groupBy(col("cell"), col("pos"))
+          .agg(sum(col("s")).as("s"), sum(col("n")).as("n")),
+        staging.toString)
       if (!fs.rename(staging, basePath))
         throw new java.io.IOException(
           s"compactDeltaLog: rename $staging -> $basePath failed")
     }
     // GC the folded partitions — best-effort hygiene; the reader rule
     // above stays correct even if this never runs
-    fs.listStatus(root).foreach { st =>
-      val name = st.getPath.getName
-      if (name.startsWith("batch_id=")) {
-        name.stripPrefix("batch_id=").toLongOption.foreach { id =>
-          if ((id >= 0 && id < curBatch) || (id < 0 && id != -curBatch))
-            fs.delete(st.getPath, true)
-        }
-      }
-    }
+    Store.ivfDelta.drop(sess, deltaLogPath,
+      Store.ivfDelta.generations(sess, deltaLogPath).filter(id =>
+        (id >= 0 && id < curBatch) || (id < 0 && id != -curBatch)))
   }
 }

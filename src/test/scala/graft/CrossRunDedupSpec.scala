@@ -42,8 +42,7 @@ class CrossRunDedupSpec extends SparkSpec {
     // force the store write, then read the state back from DISK
     val storePath = graft.queries.CrossRunDedupQueries
       .persistedPairsPath(spark, dir)
-    val state = pairSet(graft.sink.IndexStore.readMinhashPairs(
-      spark, storePath))
+    val state = pairSet(graft.sink.Store.pairs.read(spark, storePath))
     assert(state.forall { case (a, b, _) => a % 20 != 0 && b % 20 != 0 })
     assert(incr.forall { case (a, b, _) => a % 20 == 0 || b % 20 == 0 })
     assert((state ++ incr) == full,
@@ -58,12 +57,12 @@ class CrossRunDedupSpec extends SparkSpec {
     // assignment is value-identical to the rebuild it replaced
     val storePath = graft.queries.CrossRunDedupQueries
       .persistedPairsPath(spark, dir)
-    val stored = graft.sink.IndexStore
-      .readMinhashRoots(spark, graft.queries.CrossRunDedupQueries
+    val stored = graft.sink.Store.roots
+      .read(spark, graft.queries.CrossRunDedupQueries
         .persistedRootsPath(spark, dir))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val rebuilt = graft.ops.Dedup.connectedComponents(
-        graft.sink.IndexStore.readMinhashPairs(spark, storePath)
+        graft.sink.Store.pairs.read(spark, storePath)
           .select(col("id_a"), col("id_b")),
         "id_a", "id_b", uniquePairs = true)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -75,7 +74,7 @@ class CrossRunDedupSpec extends SparkSpec {
     // Dedup.incrementalRoots: prior persisted roots (star forest) +
     // batch-incident edges must reproduce the components of the WHOLE
     // pair graph — old edges never re-read
-    val prior = graft.sink.IndexStore.readMinhashRoots(spark,
+    val prior = graft.sink.Store.roots.read(spark,
       graft.queries.CrossRunDedupQueries.persistedRootsPath(spark, dir))
     val incr = graft.queries.ExtensionQueries.minhashIncrPairs(spark, dir)
       .select(col("id_a"), col("id_b"))

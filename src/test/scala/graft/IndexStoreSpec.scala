@@ -1,9 +1,11 @@
 package graft
 
+import graft.sink.Store
 import org.apache.spark.sql.functions._
 
 /** The persisted-index production contract (round-13 order #5): index
-  * state written by [[graft.sink.IndexStore]] and reloaded in a FRESH
+  * state written through [[graft.sink.Store]] in the layouts the index
+  * builds use, and reloaded with its declared types in a FRESH
   * session must drive maintained-state queries byte-identically to a
   * from-scratch rebuild — for both incrementally-maintained states (the
   * IVF sufficient statistics and the MinHash near-dup pair memo). Also
@@ -27,10 +29,9 @@ class IndexStoreSpec extends SparkSpec {
 
   test("IVF state: fresh-session reload is row-identical to a rebuild") {
     val path = tmpDir("ivf")
-    graft.sink.IndexStore.writeIvfState(ivfState(spark), path)
+    Store.ivfState.write(ivfState(spark), path, Store.byCell("pos"))
     val fresh = spark.newSession()
-    val reloaded = graft.sink.IndexStore.readIvfState(fresh, path)
-      .select(col("cell").cast("int"), col("pos"), col("s"), col("n"))
+    val reloaded = Store.ivfState.read(fresh, path)
       .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2),
         r.getLong(3))).toSet
     val rebuilt = ivfState(fresh)
@@ -42,15 +43,15 @@ class IndexStoreSpec extends SparkSpec {
 
   test("IVF state: a consumer query over reloaded state equals rebuilt state") {
     val path = tmpDir("ivf2")
-    graft.sink.IndexStore.writeIvfState(ivfState(spark), path)
+    Store.ivfState.write(ivfState(spark), path, Store.byCell("pos"))
     // consumer = the centroid derivation every probe path runs:
     // m = s/1e9/n per (cell, pos) — two IEEE ops, byte-comparable
     def centroids(state: org.apache.spark.sql.DataFrame) = state
-      .select(col("cell").cast("int").as("cell"), col("pos"),
+      .select(col("cell"), col("pos"),
         (col("s").cast("double") / 1e9 / col("n")).as("m"))
       .collect().map(r => ((r.getInt(0), r.getLong(1)), r.getDouble(2)))
       .toMap
-    val fromDisk = centroids(graft.sink.IndexStore.readIvfState(spark, path))
+    val fromDisk = centroids(Store.ivfState.read(spark, path))
     val fromScratch = centroids(ivfState(spark))
     assert(fromDisk.keySet == fromScratch.keySet)
     for ((k, m) <- fromScratch)
@@ -61,8 +62,8 @@ class IndexStoreSpec extends SparkSpec {
 
   test("IVF state: cell-filtered read partition-prunes") {
     val path = tmpDir("ivf3")
-    graft.sink.IndexStore.writeIvfState(ivfState(spark), path)
-    val probed = graft.sink.IndexStore.readIvfCells(spark, path, Seq(3, 7))
+    Store.ivfState.write(ivfState(spark), path, Store.byCell("pos"))
+    val probed = Store.ivfState.read(spark, path).filter(col("cell").isin(3, 7))
     val plan = probed.queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters") &&
       plan.replaceAll("\\s+", " ").matches("(?s).*PartitionFilters: \\[[^\\]]*cell[^\\]]*\\].*"),
@@ -76,9 +77,9 @@ class IndexStoreSpec extends SparkSpec {
     val pairs = graft.ops.Dedup.nearDupMinhash(docs, "doc_id", "text",
       k = 16, bands = 4, minJaccard = 0.5)
     val path = tmpDir("minhash")
-    graft.sink.IndexStore.writeMinhashPairs(pairs, path)
+    Store.pairs.write(pairs, path, Store.clustered("id_a", "id_b"))
     val fresh = spark.newSession()
-    val reloaded = graft.sink.IndexStore.readMinhashPairs(fresh, path)
+    val reloaded = Store.pairs.read(fresh, path)
     val freshDocs = graft.ops.Tables.documents(fresh, dir)
     val rebuilt = graft.ops.Dedup.nearDupMinhash(freshDocs, "doc_id", "text",
       k = 16, bands = 4, minJaccard = 0.5)
@@ -110,8 +111,9 @@ class IndexStoreSpec extends SparkSpec {
       .toDF("vec_id", "embedding", "cell")
     val cb = graft.ops.Similarity.pqTrainCodebook(emb, "vec_id", "embedding", 8, 8)
     val cbPath = tmpDir("pqcb")
-    graft.sink.IndexStore.writePqCodebook(cb.toDF("s", "j", "centroid"), cbPath)
-    val back = graft.sink.IndexStore.readPqCodebook(spark, cbPath)
+    Store.pqCodebook.write(cb.toDF("s", "j", "centroid"), cbPath,
+      Store.clustered("s", "j"))
+    val back = Store.pqCodebook.read(spark, cbPath)
       .collect().map(r => ((r.getInt(0), r.getInt(1)), r.getSeq[Double](2))).toMap
     assert(back.keySet == cb.map(e => (e._1, e._2)).toSet)
     cb.foreach { case (si, j, c) =>
@@ -125,11 +127,11 @@ class IndexStoreSpec extends SparkSpec {
     val codes = emb.select(col("vec_id"), col("cell"),
       graft.ops.Similarity.pqCodesExpr(col("embedding"), cb, 8, 8).as("codes"))
     val codesPath = tmpDir("pqcodes")
-    graft.sink.IndexStore.writePqCodes(codes, codesPath)
+    Store.pqCodes.write(codes, codesPath, Store.byCell("vec_id"))
     def key(df: org.apache.spark.sql.DataFrame) = df
       .select(col("vec_id"), col("codes"))
       .as[(Long, Seq[Int])].collect().toMap
-    assert(key(graft.sink.IndexStore.readPqCodes(spark, codesPath)) == key(codes))
+    assert(key(Store.pqCodes.read(spark, codesPath)) == key(codes))
   }
 
   test("PQ store: probed-cell read partition-prunes") {
@@ -139,11 +141,11 @@ class IndexStoreSpec extends SparkSpec {
       .toDF("vec_id", "embedding", "cell")
     val cb = graft.ops.Similarity.pqTrainCodebook(emb, "vec_id", "embedding", 8, 8)
     val path = tmpDir("pqprune")
-    graft.sink.IndexStore.writePqCodes(
+    Store.pqCodes.write(
       emb.select(col("vec_id"), col("cell"),
         graft.ops.Similarity.pqCodesExpr(col("embedding"), cb, 8, 8).as("codes")),
-      path)
-    val probed = graft.sink.IndexStore.readPqCells(spark, path, Seq(1, 4))
+      path, Store.byCell("vec_id"))
+    val probed = Store.pqCodes.read(spark, path).filter(col("cell").isin(1, 4))
     val plan = probed.queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters") &&
       plan.replaceAll("\\s+", " ").matches("(?s).*PartitionFilters: \\[[^\\]]*cell[^\\]]*\\].*"),

@@ -1,5 +1,6 @@
 package graft
 
+import graft.sink.Store
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
@@ -14,8 +15,7 @@ class IvfStreamSpec extends SparkSpec {
   import spark.implicits._
 
   private def stateOf(path: String): Map[(Int, Long), (Long, Long)] =
-    graft.sink.IndexStore.readIvfState(spark, path)
-      .select(col("cell").cast("int"), col("pos"), col("s"), col("n"))
+    Store.ivfState.read(spark, path)
       .collect()
       .map(r => ((r.getInt(0), r.getLong(1)), (r.getLong(2), r.getLong(3))))
       .toMap
@@ -78,8 +78,7 @@ class IvfStreamSpec extends SparkSpec {
     // as a foreachBatch retry would (same batch_id partition, re-merge) —
     // the state must not change
     val snapshot = stateOf(statePath)
-    val lastId = spark.read.parquet(deltaLog)
-      .select(max(col("batch_id")).cast("long")).head.getLong(0)
+    val lastId = Store.ivfDelta.newest(spark, deltaLog, "spec")
     val replay = cell3.toDF("vec_id", "embedding", "cell")
       .select(col("cell"), posexplode(col("embedding")).as(Seq("pos0", "v")))
       .groupBy(col("cell"), col("pos0"))
@@ -87,14 +86,13 @@ class IvfStreamSpec extends SparkSpec {
         count(lit(1)).as("n"))
       .select(col("cell"), (col("pos0") + 1).cast("long").as("pos"),
         col("s"), col("n"))
-    replay.write.mode("overwrite").parquet(s"$deltaLog/batch_id=$lastId")
-    val touched = spark.read.parquet(s"$deltaLog/batch_id=$lastId")
-      .select(col("cell")).distinct()
-    val merged = spark.read.parquet(deltaLog).drop("batch_id")
+    Store.ivfDelta.land(replay, deltaLog, lastId)
+    val touched = Store.ivfDelta.at(spark, deltaLog, lastId, "cell").distinct()
+    val merged = Store.ivfDelta.read(spark, deltaLog)
       .join(broadcast(touched), Seq("cell"))
       .groupBy(col("cell"), col("pos"))
       .agg(sum(col("s")).as("s"), sum(col("n")).as("n"))
-    graft.sink.IndexStore.writeIvfState(merged, statePath)
+    Store.ivfState.write(merged, statePath, Store.byCell("pos"))
     assert(stateOf(statePath) == snapshot,
       "a replayed batch must not double-count")
   }
@@ -152,8 +150,7 @@ class IvfStreamSpec extends SparkSpec {
     // reads it, so history was silently destroyed. The fix skips the
     // fold when the base exists and only re-runs GC.
     def writeDelta(log: String, id: Long, rows: Seq[(Int, Long, Long, Long)]): Unit =
-      rows.toDF("cell", "pos", "s", "n")
-        .write.mode("overwrite").parquet(s"$log/batch_id=$id")
+      Store.ivfDelta.land(rows.toDF("cell", "pos", "s", "n"), log, id)
     def effTotals(log: String): Map[(Int, Long), (Long, Long)] =
       graft.streaming.StreamingOps.effectiveDeltas(spark, log)
         .groupBy(col("cell"), col("pos"))
@@ -199,9 +196,47 @@ class IvfStreamSpec extends SparkSpec {
     // zero-data micro-batch can land an empty delta partition before any
     // real batch; the reader must return the raw (empty) log, not NPE.
     val log = tmpDir("emptylog")
-    Seq.empty[(Int, Long, Long, Long)].toDF("cell", "pos", "s", "n")
-      .write.mode("overwrite").parquet(s"$log/batch_id=0")
+    Store.ivfDelta.land(
+      Seq.empty[(Int, Long, Long, Long)].toDF("cell", "pos", "s", "n"), log, 0L)
     val eff = graft.streaming.StreamingOps.effectiveDeltas(spark, log)
     assert(eff.count() == 0L)
+  }
+
+  test("a micro-batch runs a pinned number of jobs; effectiveDeltas runs none") {
+    implicit val sc = spark.sqlContext
+    val rnd = new scala.util.Random(71)
+    val all = (0L until 90L).map(i =>
+      (i, Seq.fill(16)(rnd.nextFloat() - 0.5f), (i % 5).toInt))
+    val (deltaLog, statePath, ckpt) =
+      (tmpDir("jdelta"), tmpDir("jstate"), tmpDir("jckpt"))
+    val in = MemoryStream[(Long, Seq[Float], Int)]
+    var runId = ""
+    // compactEvery = 2: batch 2 folds batches 0-1 into a base generation
+    val streamJobs = jobsDuring("ivf-sink") {
+      val q = graft.streaming.StreamingOps.ivfStateSink(
+        in.toDF().toDF("vec_id", "embedding", "cell"),
+        "vec_id", "embedding", "cell", deltaLog, statePath, ckpt,
+        trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0L),
+        compactEvery = 2)
+      runId = q.runId.toString
+      try (0 until 3).foreach { i =>
+        in.addData(all.filter(_._1 % 3 == i): _*)
+        q.processAllAvailable()
+      } finally q.stop()
+    }
+    val perBatch = streamJobs.filter(_._1 == runId).groupBy(_._2)
+      .map { case (b, js) => b -> js.size }
+    assert(perBatch.keySet == Set("0", "1", "2"))
+    // fan out, land the delta, read the touched cells, merge the state
+    // (14 when the delta log and the base-generation rule were read by
+    // schema inference and a min(batch_id) job); the compacting batch adds
+    // the fold (19 then)
+    assert(perBatch("0") <= 10 && perBatch("1") <= 10 && perBatch("2") <= 12,
+      s"a micro-batch launched more jobs than its stores need: $perBatch")
+    val readJobs = jobsDuring("ivf-deltas") {
+      graft.streaming.StreamingOps.effectiveDeltas(spark, deltaLog)
+        .queryExecution.executedPlan
+    }.count(_._1 == "ivf-deltas")
+    assert(readJobs == 0, s"constructing the effective delta log launched $readJobs jobs")
   }
 }

@@ -38,39 +38,25 @@ class SourcesSpec extends SparkSpec {
       (301L, "summercard", "child", "2d", Some(2))))
     // small_child (103) filtered at the source (ref :322)
     assert(!got.exists(_._1 == 103L))
+    // an empty catalog, an empty envelope and an envelope whose `data` is
+    // not an array are pages without products, not errors
+    val empty = spark.read.format("graft.sources.PricenowCatalogSource")
+      .option("path", writePages(Seq("{}", "[]", """{"data": "oops-not-an-array"}""")))
+      .load()
+    assert(empty.rdd.getNumPartitions == 3 && empty.count() == 0)
   }
 
-  test("DSv2 source matches the expression-based catalog flatten on the same payloads") {
-    val payload =
-      """{"results": [
-        | {"name": "x", "productDefinitions": [
-        |   {"id": 7, "attributes": {"age": {"value": "adult"}, "duration": {"value": "5d"}}}]}]}""".stripMargin
-    val dir = writePages(Seq(payload))
-    val viaSource = spark.read.format("graft.sources.PricenowCatalogSource")
-      .option("path", dir).load()
-      .as[(Long, String, String, String, Option[Int])].collect().toSeq
-    val viaExpr = graft.ops.PricenowCatalog
-      .flatten(Seq(payload).toDF("json"), "json")
-      .as[(Long, String, String, String, Option[Int])].collect().toSeq
-    assert(viaSource.sortBy(_._1) == viaExpr.sortBy(_._1))
-  }
-
-  test("catalog flatten tolerates malformed or empty payloads (no rows, no crash)") {
-    val bad = Seq(
-      "not json at all",
-      "{\"data\": \"oops-not-an-array\"}",
-      "{}",
-      "[]").toDF("json")
-    assert(graft.ops.PricenowCatalog.flatten(bad, "json").count() == 0)
-    // mixed batch: good rows survive alongside garbage
-    val mixed = Seq(
-      "garbage{{{",
-      """{"data": [{"name": "x", "productDefinitions": [
-        | {"id": 1, "attributes": {"age": {"value": "adult"}, "duration": {"value": "2d"}}}]}]}""".stripMargin)
-      .toDF("json")
-    val got = graft.ops.PricenowCatalog.flatten(mixed, "json")
-      .as[(Long, String, String, String, Option[Int])].collect().toSeq
-    assert(got == Seq((1L, "x", "adult", "2d", Some(2))))
+  test("DSv2 catalog source: a page that is not JSON, or is empty, fails naming the page") {
+    Seq("garbage{{{", "").foreach { body =>
+      val dir = writePages(Seq("[]", body))
+      val err = intercept[Exception](
+        spark.read.format("graft.sources.PricenowCatalogSource")
+          .option("path", dir).load().collect())
+      val msgs = Iterator.iterate[Throwable](err)(_.getCause)
+        .takeWhile(_ != null).map(e => String.valueOf(e.getMessage)).mkString("\n")
+      assert(msgs.contains(s"catalog page $dir/page-001.json"),
+        s"the error must name the page: $msgs")
+    }
   }
 
   test("client: token cached in memory, disk, refreshed inside the 60s margin") {

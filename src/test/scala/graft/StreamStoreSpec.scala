@@ -4,12 +4,12 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
 
 import graft.queries.{CrossRunDedupQueries, KnnGraphQueries, Scratch}
+import graft.sink.Store
 import graft.streaming.StreamingOps
-import graft.streaming.StreamingOps.Store
 
-/** The generation-store layer the streaming sinks share
-  * (StreamingOps.Store): the newest-generation readers on stores without
-  * generations, GC, and what a land writes; and the scratch directories
+/** The persisted-store layer (sink.Store): the newest-generation readers
+  * on stores without generations, GC, what a land writes and what it
+  * refuses; and the scratch directories
   * and real-stream fixture of the stream-backed queries (queries.Scratch).
   */
 class StreamStoreSpec extends SparkSpec {
@@ -72,6 +72,16 @@ class StreamStoreSpec extends SparkSpec {
       Seq("id", "root"))
   }
 
+  test("a write refuses a column whose type differs from its declaration, naming the store") {
+    val root = tmp("typed")
+    val err = intercept[IllegalArgumentException](
+      Store.ivfState.write(Seq((1L, 1L, 5L, 1L)).toDF("cell", "pos", "s", "n"),
+        root, Store.byCell("pos")))
+    assert(err.getMessage.contains("ivf state store: cell must be INT, got BIGINT"),
+      err.getMessage)
+    assert(!fs.exists(new Path(root)), "nothing is written")
+  }
+
   test("stream fixture: batch_id=i of the roots and knn sinks' stores holds ids with id % 3 == i") {
     val stores = Seq(
       new Path(CrossRunDedupQueries.streamedRootsPath(spark, dir)).getParent -> "sigs",
@@ -97,5 +107,17 @@ class StreamStoreSpec extends SparkSpec {
       assert(fs.cancelDeleteOnExit(p), s"$p is not registered with deleteOnExit")
       fs.deleteOnExit(p)
     }
+  }
+
+  test("the store-backed queries construct with no job once their memos are warm") {
+    val names = Seq("q_ivf_state_persist", "q_ivf_pq_persist", "q_ivf_pq_probe",
+      "q_ivf_pq_tombstone", "q_dedup_state_pairs", "q_dedup_cross_run",
+      "q_dedup_roots_incr")
+    def construct(name: String): Unit =
+      SparkEntry.queries(name)(spark, dir).queryExecution.executedPlan
+    names.foreach(construct) // first touch: builds the memos and stores
+    val launched = names.map(n => n -> jobsDuring(n)(construct(n)).count(_._1 == n))
+    assert(launched.forall(_._2 == 0),
+      s"warm constructions launched jobs: ${launched.filter(_._2 > 0)}")
   }
 }

@@ -75,4 +75,33 @@ class StreamingPhashSpec extends SparkSpec {
     assert(pairSet(spark.read.parquet(pairStore)) == oneShot,
       "a replayed batch must not change the store")
   }
+
+  test("a micro-batch runs a pinned number of jobs") {
+    implicit val sc = spark.sqlContext
+    val all = graft.ops.Tables.documents(spark, dir)
+      .select(col("doc_id"), col("text"))
+      .as[(Long, String)].collect().toSeq
+    val (sigStore, pairStore, ckpt) =
+      (tmpDir("jsigs"), tmpDir("jpairs"), tmpDir("jckpt"))
+    val in = MemoryStream[(Long, String)]
+    var runId = ""
+    val streamJobs = jobsDuring("phash-sink") {
+      val q = graft.streaming.StreamingOps.phashStateSink(
+        in.toDF().toDF("doc_id", "text"),
+        "doc_id", "text", sigStore, pairStore, ckpt,
+        trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0L))
+      runId = q.runId.toString
+      try (0 until 3).foreach { i =>
+        in.addData(all.filter(_._1 % 3 == i): _*)
+        q.processAllAvailable()
+      } finally q.stop()
+    }
+    val perBatch = streamJobs.filter(_._1 == runId).groupBy(_._2)
+      .map { case (b, js) => b -> js.size }
+    assert(perBatch.keySet == Set("0", "1", "2"))
+    // fan out, land the signatures, land the banded pairs against the
+    // prior signatures, every store read with its declared schema: 7-8
+    assert(perBatch.values.forall(_ <= 8),
+      s"a micro-batch launched more jobs than its stores need: $perBatch")
+  }
 }

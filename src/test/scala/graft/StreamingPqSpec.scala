@@ -1,5 +1,6 @@
 package graft
 
+import graft.sink.Store
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
@@ -37,7 +38,7 @@ class StreamingPqSpec extends SparkSpec {
       batches.foreach { b => in.addData(b: _*); q.processAllAvailable() }
     } finally q.stop()
 
-    val streamed = codeMap(spark.read.parquet(store))
+    val streamed = codeMap(Store.pqCodes.read(spark, store))
     val oneShot = codeMap(corpus.select(col("vec_id"), col("cell"),
       graft.ops.Similarity.pqCodesExpr(col("embedding"), cb, 8, 8).as("codes")))
     assert(streamed == oneShot,
@@ -46,18 +47,16 @@ class StreamingPqSpec extends SparkSpec {
 
     // replay the LAST batch exactly as a foreachBatch retry would:
     // the batch_id partition overwrite must leave the store unchanged
-    val lastId = spark.read.parquet(store)
-      .select(max(col("batch_id")).cast("long")).head.getLong(0)
-    batches.last.toDF("vec_id", "embedding", "cell")
+    val lastId = Store.pqCodes.newest(spark, store, "spec")
+    Store.pqCodes.land(batches.last.toDF("vec_id", "embedding", "cell")
       .select(col("vec_id"), col("cell"),
-        graft.ops.Similarity.pqCodesExpr(col("embedding"), cb, 8, 8).as("codes"))
-      .write.mode("overwrite").partitionBy("cell")
-      .parquet(s"$store/batch_id=$lastId")
-    assert(codeMap(spark.read.parquet(store)) == oneShot,
+        graft.ops.Similarity.pqCodesExpr(col("embedding"), cb, 8, 8).as("codes")),
+      store, lastId, Store.byCell("vec_id"))
+    assert(codeMap(Store.pqCodes.read(spark, store)) == oneShot,
       "a replayed micro-batch must not change the accumulated store")
 
     // probed-cell read over the ACCUMULATED multi-batch store prunes
-    val probed = spark.read.parquet(store).filter(col("cell").isin(1, 3))
+    val probed = Store.pqCodes.read(spark, store).filter(col("cell").isin(1, 3))
     val plan = probed.queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters") &&
       plan.replaceAll("\\s+", " ").matches("(?s).*PartitionFilters: \\[[^\\]]*cell[^\\]]*\\].*"),
@@ -97,12 +96,41 @@ class StreamingPqSpec extends SparkSpec {
     try {
       batches.foreach { b => in.addData(b: _*); q.processAllAvailable() }
     } finally q.stop()
-    val streamed = codeMap(spark.read.parquet(store))
+    val streamed = codeMap(Store.pqCodes.read(spark, store))
     val oneShot = codeMap(withResid(corpus).select(col("vec_id"), col("cell"),
       graft.ops.Similarity.pqCodesExpr(col("resid"), cbr, 16, 4).as("codes")))
     assert(streamed == oneShot,
       "streamed residual store must equal one-shot residual coding")
     assert(streamed.size == 80 &&
       streamed.values.forall(cs => cs.length == 16 && cs.forall(j => j >= 0 && j < 16)))
+  }
+
+  test("a micro-batch runs a pinned number of jobs") {
+    implicit val sc = spark.sqlContext
+    val rnd = new scala.util.Random(67)
+    val all = (0L until 90L).map(i =>
+      (i, Seq.fill(64)(rnd.nextFloat() - 0.5f), (i % 5).toInt))
+    val cb = graft.ops.Similarity.pqTrainCodebook(
+      all.toDF("vec_id", "embedding", "cell"), "vec_id", "embedding", 8, 8)
+    val (store, ckpt) = (tmpDir("jcodes"), tmpDir("jckpt"))
+    val in = MemoryStream[(Long, Seq[Float], Int)]
+    var runId = ""
+    val streamJobs = jobsDuring("pq-sink") {
+      val q = graft.streaming.StreamingOps.pqStateSink(
+        in.toDF().toDF("vec_id", "embedding", "cell"),
+        "vec_id", "embedding", "cell", cb, 8, 8, store, ckpt,
+        trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0L))
+      runId = q.runId.toString
+      try (0 until 3).foreach { i =>
+        in.addData(all.filter(_._1 % 3 == i): _*)
+        q.processAllAvailable()
+      } finally q.stop()
+    }
+    val perBatch = streamJobs.filter(_._1 == runId).groupBy(_._2)
+      .map { case (b, js) => b -> js.size }
+    assert(perBatch.keySet == Set("0", "1", "2"))
+    // fan out, code map-side, cluster by cell and land one file per cell
+    assert(perBatch.values.forall(_ <= 5),
+      s"a micro-batch launched more jobs than its store needs: $perBatch")
   }
 }
