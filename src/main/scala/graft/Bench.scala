@@ -10,11 +10,12 @@ object Bench {
     try {
       spark.range(0, 1000000).selectExpr("sum(id)").collect()
       SparkEntry.entry(spark).count()
-      // warm the custom-expression codegen paths (minhash / tokenhash32/64 /
-      // simhash32/64 / cosine) on tiny IN-MEMORY frames so their one-time
-      // compile cost doesn't land on whichever family member happens to run
-      // first alphabetically — no dependence on a sibling dataset layout,
-      // and nothing here scales with the bench SF
+      // warm the native-kernel paths (minhash / tokenhash32/64 /
+      // simhash32/64 / cosine: generated code plus the kernels' JIT) on
+      // tiny IN-MEMORY frames so their one-time compile cost doesn't land
+      // on whichever family member happens to run first alphabetically —
+      // no dependence on a sibling dataset layout, and nothing here scales
+      // with the bench SF
       import spark.implicits._
       import org.apache.spark.sql.functions.col
       val toyDocs = Seq((1L, "warm the token hash"), (2L, "warm the token fold"))

@@ -1,15 +1,14 @@
 package graft
 
-import graft.functions.{CosineSimilarity, JaroWinklerExpr, MinHashSigExpr, SimHash32Expr, TokenHash32Expr}
+import graft.functions.Native
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
 
-/** SQL-surface registration for the engine's native expressions: with this
+/** SQL-surface registration for the engine's native functions: with this
   * installed, `spark.sql("SELECT cosine_similarity(a, b) ...")` plans the
-  * fused codegen expressions directly — the full Catalyst extension-point
-  * story (custom Expression + SparkSessionExtensions), no Column-API
-  * required.
+  * same `StaticInvoke` of the kernel that the Column entry points in
+  * [[graft.functions.Native]] build — no Column API required.
   *
   * Two installation paths:
   *  - config: `--conf spark.sql.extensions=graft.GraftExtensions`
@@ -27,10 +26,11 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
 object GraftExtensions {
 
+  type Builder = Seq[Expression] => Expression
+
   /** Arity guard: a clear analysis-time error naming the function beats
     * the IndexOutOfBoundsException that raw args(i) indexing throws. */
-  private def arity(name: String, n: Int)(
-      build: Seq[Expression] => Expression): Seq[Expression] => Expression =
+  private def arity(name: String, n: Int)(build: Builder): Builder =
     args => {
       if (args.length != n) throw new IllegalArgumentException(
         s"$name expects $n argument${if (n == 1) "" else "s"}, " +
@@ -38,36 +38,30 @@ object GraftExtensions {
       build(args)
     }
 
+  private def function(name: String, build: Builder) =
+    (FunctionIdentifier(name),
+      new ExpressionInfo(Native.getClass.getName.stripSuffix("$"), null, name), build)
+
+  private def native(name: String, fn: Native.Fn) =
+    function(name, arity(name, fn.args.length)(fn.expr))
+
   /** (identifier, info, builder) triples shared by both install paths. */
-  val descriptors: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
-    (FunctionIdentifier("cosine_similarity"),
-      new ExpressionInfo(classOf[CosineSimilarity].getName, null, "cosine_similarity"),
-      arity("cosine_similarity", 2)(args => CosineSimilarity(args(0), args(1)))),
-    (FunctionIdentifier("simhash32"),
-      new ExpressionInfo(classOf[SimHash32Expr].getName, null, "simhash32"),
-      arity("simhash32", 1)(args => SimHash32Expr(args.head))),
-    (FunctionIdentifier("token_hash32"),
-      new ExpressionInfo(classOf[TokenHash32Expr].getName, null, "token_hash32"),
-      arity("token_hash32", 1)(args => TokenHash32Expr(args.head))),
-    (FunctionIdentifier("jaro_winkler"),
-      new ExpressionInfo(classOf[JaroWinklerExpr].getName, null, "jaro_winkler"),
-      arity("jaro_winkler", 2)(args => JaroWinklerExpr(args(0), args(1)))),
-    (FunctionIdentifier("minhash_sig"),
-      new ExpressionInfo(classOf[MinHashSigExpr].getName, null, "minhash_sig"),
-      (args: Seq[Expression]) => {
-        if (args.length != 2) throw new IllegalArgumentException(
-          s"minhash_sig(hashes, k) expects 2 arguments, got ${args.length}")
-        // k must be a literal: the permutation coefficients are baked into
-        // the expression at plan time (and into the DuckDB oracle as the
-        // same seeded-LCG literals)
-        val k = args(1) match {
-          case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) if v > 0 => v
-          case other => throw new IllegalArgumentException(
-            s"minhash_sig(hashes, k): k must be a positive integer literal, got $other")
-        }
-        val coefs = graft.ops.Dedup.coefficients(k)
-        MinHashSigExpr(args.head, coefs.map(_._1), coefs.map(_._2))
-      }))
+  val descriptors: Seq[(FunctionIdentifier, ExpressionInfo, Builder)] = Seq(
+    native("cosine_similarity", Native.cosine),
+    native("simhash32", Native.simhash32),
+    native("token_hash32", Native.tokenHash32),
+    native("jaro_winkler", Native.jaroWinkler),
+    function("minhash_sig", arity("minhash_sig(hashes, k)", 2) { args =>
+      // k must be a literal: the permutation coefficients are fixed at
+      // plan time (and embedded in the DuckDB oracle as the same
+      // seeded-LCG literals)
+      val k = args(1) match {
+        case Literal(v: Int, _) if v > 0 => v
+        case other => throw new IllegalArgumentException(
+          s"minhash_sig(hashes, k): k must be a positive integer literal, got $other")
+      }
+      Native.minhash(args.head, graft.ops.Dedup.coefficients(k))
+    }))
 
   /** Runtime registration on an existing session. */
   def register(spark: SparkSession): Unit =

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, LongType}
 
 /** Deduplication operators (SURVEY.md §2.4): exact keyed dedup, MinHash+LSH
   * near-dup candidate generation with exact-Jaccard verification, SimHash
@@ -45,11 +46,11 @@ object Dedup {
   /** MinHash signature (array<long> of length k) over a string-array column.
     * Token hash is reduced mod P before the affine map so every product
     * stays < 2^62 (no overflow). Pure per-row expression — no shuffle;
-    * routed through the fused native [[graft.functions.MinHashSigExpr]]
+    * routed through the native [[graft.functions.MinHasher]] kernel
     * (one pass over the tokens for all k permutations).
     */
   def minhashSignature(tokenSet: Column, k: Int): Column =
-    graft.functions.MinHashSigExpr.minhashFast(
+    graft.functions.Native.minhash(
       transform(tokenSet, t => TextAnalysis.tokenHash32(t)), coefficients(k))
 
   /** Expression-composition MinHash (k array_min/transform walks) — kept as
@@ -256,7 +257,7 @@ object Dedup {
     // class of state the candidates checkpoint above already pins.
     val scored = candidates.join(a, "id_a").join(b, "id_b")
       .select(col("id_a"), col("id_b"),
-        jaccardSorted(col("toks_a"), col("toks_b")).as("jaccard"))
+        jaccardSorted(col("toks_a"), col("toks_b"), longSets = true).as("jaccard"))
       .localCheckpoint(true)
     scored.filter(col("jaccard") >= minJaccard)
   }
@@ -318,7 +319,7 @@ object Dedup {
       .join(candToks.select(col("id").as("id_a"), col("toks").as("toks_a")), "id_a")
       .join(candToks.select(col("id").as("id_b"), col("toks").as("toks_b")), "id_b")
       .select(col("id_a"), col("id_b"),
-        jaccardSorted(col("toks_a"), col("toks_b")).as("jaccard"))
+        jaccardSorted(col("toks_a"), col("toks_b"), longSets = true).as("jaccard"))
       .localCheckpoint(true)
     scored.filter(col("jaccard") >= minJaccard)
   }
@@ -379,7 +380,7 @@ object Dedup {
       .join(candToks.select(col("id").as("id_a"), col("toks").as("toks_a")), "id_a")
       .join(candToks.select(col("id").as("id_b"), col("toks").as("toks_b")), "id_b")
       .select(col("id_a"), col("id_b"),
-        jaccardSorted(col("toks_a"), col("toks_b")).as("jaccard"))
+        jaccardSorted(col("toks_a"), col("toks_b"), longSets = true).as("jaccard"))
       .localCheckpoint(true)
     scored.filter(col("jaccard") >= minJaccard)
   }
@@ -687,23 +688,24 @@ object Dedup {
     jaccardFrom(size(array_intersect(a, b)).cast("double"), a, b)
 
   /** [[jaccard]] specialized to SORTED distinct arrays (what
-    * [[TextAnalysis.tokenSet]] produces): the intersection count is a
-    * fused zero-allocation merge walk
-    * ([[graft.functions.SortedIntersectCount]]) instead of
+    * [[TextAnalysis.tokenSet]] produces, or
+    * [[TextAnalysis.hashedTokenSet]] when `longSets`): the intersection
+    * count is a fused zero-allocation merge walk
+    * ([[graft.functions.Kernels.intersectCount]]) instead of
     * array_intersect's per-row hash-set build — ~2x on the LSH verify
     * stage, where every candidate pair pays this expression. Equivalence
     * to [[jaccard]] on tokenSet inputs is property-tested. */
-  def jaccardSorted(a: Column, b: Column): Column =
+  def jaccardSorted(a: Column, b: Column, longSets: Boolean = false): Column =
     jaccardFrom(
-      graft.functions.SortedIntersectCount.intersectCountFast(a, b).cast("double"),
+      graft.functions.Native.intersectCount(longSets)(a, b).cast("double"),
       a, b)
 
   /** [[jaccardSorted]] WITHOUT the display rounding — for callers whose
     * candidate pruning is proved against the true Jaccard (rounding a
     * boundary value up would admit pairs the pruning may have dropped). */
   def jaccardSortedRaw(a: Column, b: Column): Column = {
-    val inter = graft.functions.SortedIntersectCount
-      .intersectCountFast(a, b).cast("double")
+    val inter =
+      graft.functions.Native.intersectCount(longSets = false)(a, b).cast("double")
     val union = size(a) + size(b) - inter
     when(union > 0, inter / union)
   }
@@ -877,8 +879,8 @@ object Dedup {
   /** Element-domain-agnostic core of [[containmentPrefixJoin]]: the same
     * rarest-first positional-postings prefix join over a PRECOMPUTED
     * sorted-distinct set column (`array<string>` token sets or
-    * `array<bigint>` shingle-hash sets — anything
-    * [[graft.functions.SortedIntersectCount]] accepts). Lets callers pick
+    * `array<bigint>` shingle-hash sets — the two domains of
+    * [[graft.functions.Kernels.intersectCount]]). Lets callers pick
     * the set domain: q_dedup_containment runs token sets,
     * q_dedup_containment_prefix runs composed 3-gram shingle hashes
     * (high-cardinality postings — the regime this index is built for).
@@ -894,8 +896,8 @@ object Dedup {
       .filter(size(col("toks")) > 0)
     val candidates = containmentPrefixCandidates(docs, t)
     val sets = docs.select(col("id"), col("toks"), size(col("toks")).as("sz"))
-    val ni = graft.functions.SortedIntersectCount
-      .intersectCountFast(col("toks_a"), col("toks_b")).cast("long")
+    val ni = graft.functions.Native.intersectCount(longSets(docs, "toks"))(
+      col("toks_a"), col("toks_b")).cast("long")
     // checkpoint barrier before the threshold: keeps the intersect walk
     // in a codegen project instead of the interpreted join condition
     // (see the nearDupMinhash note; measured 10×)
@@ -1007,13 +1009,13 @@ object Dedup {
 
   /** 32-bit SimHash over a pre-computed token-hash array column: bit j of
     * the signature is set iff sum over tokens of (+1 if bit j of hash(token)
-    * else -1) > 0. Routed through the fused native expression
-    * [[graft.functions.SimHash32Expr]] (one pass, stack-local counts);
+    * else -1) > 0. Routed through the fused native kernel
+    * [[graft.functions.Kernels.simhash]] (one pass, stack-local counts);
     * callers project `tokenHashes` into a column first so md5 runs once per
     * token.
     */
   def simhash32(hashes: Column): Column =
-    graft.functions.SimHash32Expr.simhashFast(hashes)
+    graft.functions.Native.simhash32(hashes)
 
   /** Higher-order-function SimHash (32 aggregate walks) — kept as the
     * reference implementation for the equivalence spec. */
@@ -1031,13 +1033,13 @@ object Dedup {
   /** Per-token full-width 64-bit hashes (first 8 md5 bytes — the high word
     * IS [[TextAnalysis.tokenHash32]], the low word folds hex chars 9-16). */
   def tokenHashes64(toks: Column): Column =
-    transform(toks, t => graft.functions.TokenHash64Expr.tokenHashFast(t))
+    transform(toks, t => graft.functions.Native.tokenHash64(t))
 
   /** 64-bit SimHash over 64-bit token hashes — the signature width that makes
     * pigeonhole banding prune (see [[simhashPairsBanded]]). Fused one-pass
-    * codegen ([[graft.functions.SimHash64Expr]]). */
+    * kernel ([[graft.functions.Kernels.simhash]]). */
   def simhash64(hashes: Column): Column =
-    graft.functions.SimHash64Expr.simhashFast(hashes)
+    graft.functions.Native.simhash64(hashes)
 
   /** Half-composed twin of [[simhash64]] for the equivalence spec: each
     * signature bit depends only on that bit of every token hash, so the
@@ -1066,7 +1068,7 @@ object Dedup {
 
   /** Quadratic Hamming pair join over a prepared (id, sig) frame — the
     * oracle-checkable small-scale form shared by the text SimHash family
-    * and the multimodal dHash family ([[graft.functions.DHash64Expr]]);
+    * and the multimodal dHash family ([[graft.functions.Kernels.dhash64]]);
     * [[bandedPairsFromSigs]] is the output-identical scale path. */
   def pairsFromSigs(sigs: DataFrame, maxHamming: Int): DataFrame =
     sigs.as("x").join(sigs.as("y"), col("x.id") < col("y.id"))
@@ -1298,7 +1300,7 @@ object Dedup {
     * each row's `window` successor ranks and equi-joining on rank, so
     * the pair stage is a plain hash join on a dense long key; the
     * verify step is per-pair scalar codegen
-    * ([[graft.functions.SortedIntersectCount]]).
+    * ([[graft.functions.Kernels.intersectCount]]).
     *
     * `tokSet` must be a sorted-distinct token array (see
     * [[graft.ops.TextAnalysis.tokenSet]]); `sortKey` must be
@@ -1335,8 +1337,17 @@ object Dedup {
       .join(ranked.select(col("id").as("id_b"), col("__ts").as("toks_b"),
         col("rn").as("rn_b")), "rn_b")
       .select(col("id_a"), col("id_b"),
-        jaccardSorted(col("toks_a"), col("toks_b")).as("jaccard"))
+        jaccardSorted(col("toks_a"), col("toks_b"), longSets(base, "__ts"))
+          .as("jaccard"))
       .localCheckpoint(true)
     scored.filter(col("jaccard") >= minJaccard)
   }
+
+  /** Whether `df`'s set column `c` holds `array<bigint>` hash sets rather
+    * than `array<string>` token sets. */
+  private def longSets(df: DataFrame, c: String): Boolean =
+    df.schema(c).dataType match {
+      case ArrayType(LongType, _) => true
+      case _ => false
+    }
 }

@@ -130,7 +130,7 @@ object Multimodal {
   /** Perceptual dHash signatures over the payload column: decode (stub)
     * to the deterministic 9×8 nearest-neighbor thumbnail, then fold the
     * 72-byte grid into the 64-bit horizontal-gradient signature
-    * ([[graft.functions.DHash64Expr]]). Returns (id, sig) — the frame
+    * ([[graft.functions.Kernels.dhash64]]). Returns (id, sig) — the frame
     * [[graft.ops.Dedup.bandedPairsFromSigs]] blocks on. Everything is a
     * narrow map (batched partition-local resize + one codegen'd
     * expression); no shuffle until the pair join.
@@ -140,7 +140,7 @@ object Multimodal {
       widthCol: String, heightCol: String): DataFrame =
     resize(df, idCol, payloadCol, widthCol, heightCol, targetW = 9, targetH = 8)
       .select(col(idCol).as("id"),
-        graft.functions.DHash64Expr.dhash(col("resized")).as("sig"))
+        graft.functions.Native.dhash64(col("resized")).as("sig"))
 
   /** [[dhashSigs]] straight from a text-payload document frame: attach
     * the stand-in payload + header dims, decode, sign. The one-call form

@@ -36,7 +36,7 @@ object Similarity {
   private def nanToNull(c: Column): Column = when(isnan(c), lit(null)).otherwise(c)
 
   /** Higher-order-function cosine (reference form; 4 array passes). Kept for
-    * the equivalence spec against the fused native expression.
+    * the equivalence spec against the fused native kernel.
     * NOTE: nanToNull must wrap the RAW ratio — Spark's floor() maps NaN to
     * 0, so round6(NaN) would silently become 0.0 and dodge the guard. */
   def cosineHof(a: Column, b: Column): Column =
@@ -44,12 +44,12 @@ object Similarity {
 
   /** Cosine similarity rounded to 6 digits (cross-engine float discipline —
     * see TextAnalysis.round6 on why not the builtin `round`). Uses the
-    * fused single-pass codegen expression [[graft.functions.CosineSimilarity]];
+    * fused single-pass kernel [[graft.functions.Kernels.cosine]];
     * bit-identical to [[cosineHof]] (same index-order double accumulation),
     * with zero-norm inputs mapped to NULL.
     */
   def cosine(a: Column, b: Column): Column =
-    TextAnalysis.round6(nanToNull(graft.functions.CosineSimilarity.cosineFast(a, b)))
+    TextAnalysis.round6(nanToNull(graft.functions.Native.cosine(a, b)))
 
   /** Asymmetric scalar-quantization cosine: a RAW float query against an
     * int8 code array. The per-vector quantization scale cancels in the

@@ -55,7 +55,7 @@ object TextAnalysis {
     * equivalence spec.
     */
   def tokenHash32(tok: Column): Column =
-    graft.functions.TokenHash32Expr.tokenHashFast(tok)
+    graft.functions.Native.tokenHash32(tok)
 
   /** Built-in-function twin of [[tokenHash32]] (definitionally the DuckDB
     * oracle's arithmetic). */
@@ -64,9 +64,9 @@ object TextAnalysis {
 
   /** All four 32-bit words of one md5 digest (`array<long>`, word 0 ≡
     * [[tokenHash32]]) — one digest per FOUR independent hash streams; see
-    * [[graft.functions.TokenHash32x4Expr]]. */
+    * [[graft.functions.Kernels.tokenHash32x4]]. */
   def tokenHash32Words(tok: Column): Column =
-    graft.functions.TokenHash32x4Expr.tokenHash4Fast(tok)
+    graft.functions.Native.tokenHash32x4(tok)
 
   /** Word n-gram shingles over an ALREADY-MATERIALIZED token-array column.
     * The token array must be a projected column (attribute), not an inline

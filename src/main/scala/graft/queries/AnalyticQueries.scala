@@ -1333,7 +1333,7 @@ object AnalyticQueries {
         .select(col("event_id"), floor(col("value") * 10000 + 0.5).cast("long").as("u"))
       val n = q.agg(count(lit(1)).as("n"))
       // 8 digests × 4 words = 32 uniforms per row: md5 is the per-row
-      // cost floor, so the replica streams ride TokenHash32x4Expr's full
+      // cost floor, so the replica streams ride Kernels.tokenHash32x4's full
       // 128 digest bits instead of one 32-bit word each (2.0 s → 1.1 s)
       val wts = q.select(col("event_id"), col("u"),
           explode(expr("sequence(0, 7)")).as("g"))

@@ -1788,7 +1788,7 @@ object ExtensionQueries {
 
   /** Shared (id, sig) dHash frame: stub-decode payloads to the
     * deterministic 9×8 thumbnail, fold to the 64-bit gradient signature
-    * ([[graft.functions.DHash64Expr]], [[Multimodal.dhashSigs]]). */
+    * ([[graft.functions.Kernels.dhash64]], [[Multimodal.dhashSigs]]). */
   private def mmDhashFrame(spark: org.apache.spark.sql.SparkSession,
       dir: String, sampled: Boolean): org.apache.spark.sql.DataFrame = {
     val base = Tables.documents(spark, dir)
@@ -1801,8 +1801,8 @@ object ExtensionQueries {
     * arithmetic): replicate the 9×8 nearest-neighbor thumbnail byte by
     * byte (the mmResize oracle's arithmetic at w2=9, h2=8; text is
     * ASCII, so byte = unicode(char)), one gradient bit per (r, c), then
-    * the two 32-bit words. Empty docs sign to 0 (the DHash64Expr
-    * convention). */
+    * the two 32-bit words. Empty docs sign to 0 (the
+    * [[graft.functions.Kernels.dhash64]] convention). */
   private def dhashOracle(sample: String): String =
     s"""d AS (SELECT doc_id, text, len(text) AS n,
        |       len(text) % 64 + 1 AS w, len(text) % 48 + 1 AS h
@@ -1904,7 +1904,7 @@ object ExtensionQueries {
     * — the video-frame dedup story q_media_phash lacks: every 128-byte
     * payload frame (stride 96) is stub-decoded as a fixed 16×8 "frame
     * image", resized to the 9×8 thumbnail, and signed with the same
-    * [[graft.functions.DHash64Expr]] gradient fold. Keyed fid =
+    * [[graft.functions.Kernels.dhash64]] gradient fold. Keyed fid =
     * doc_id·1024 + frame_idx (frame counts are payload-bytes/96 —
     * orders of magnitude under the 1024 slot bound on this corpus; a
     * production container would key (clip_id, frame_no) directly).
@@ -4283,7 +4283,7 @@ object ExtensionQueries {
     fn = (spark, dir) => {
       import org.apache.spark.unsafe.types.UTF8String
       val signs = (0 until 16).map(j => (0 until 64).map { i =>
-        if (graft.functions.TokenHash32Expr.hash(
+        if (graft.functions.Kernels.tokenHash32(
             UTF8String.fromString(s"rp:$j:$i")) % 2 == 1) 1 else -1
       })
       val q = Tables.embeddings(spark, dir)
@@ -4364,11 +4364,10 @@ object ExtensionQueries {
     * unbounded at corpus scale), so the rarest-first positional-postings
     * prefix index is the right plan: candidates come from (prefix tokens)
     * ⋈ (positional postings), never df² per token, and exact
-    * intersection ([[graft.functions.SortedIntersectCount]], the
-    * array<bigint> overload) verifies candidates only. Oracle is the
-    * brute-force postings ground truth — green means the pruning dropped
-    * NOTHING. PlanAuditSpec pins candidate count ≪ n²/2 on a clustered
-    * fixture.
+    * intersection ([[graft.functions.Kernels.intersectCount]] over
+    * longs) verifies candidates only. Oracle is the brute-force postings
+    * ground truth — green means the pruning dropped NOTHING. PlanAuditSpec
+    * pins candidate count ≪ n²/2 on a clustered fixture.
     */
   private val dedupContainmentPrefix = QueryDef(
     fn = (spark, dir) => {

@@ -406,13 +406,13 @@ object GovernanceQueries {
     })
 
   /** Jaro-Winkler fuzzy name matching — the record-linkage comparator
-    * ([[graft.functions.JaroWinklerExpr]], the US Census matcher Spark
+    * ([[graft.functions.Kernels.jaroWinkler]], the US Census matcher Spark
     * lacks natively) over block-bounded customer-name pairs: candidates
     * come from the same name-suffix blocking equi-join as q_er_clusters
-    * (never A×B), each pair scored by the fused codegen expression,
+    * (never A×B), each pair scored by the native kernel,
     * kept at similarity ≥ 0.95. The oracle scores the identical pair
     * set with DuckDB's built-in `jaro_winkler_similarity` — the Spark
-    * expression is verified BIT-IDENTICAL to it (see the expression
+    * kernel is verified BIT-IDENTICAL to it (see the kernel's
     * scaladoc), so the 6dp floor cannot straddle a boundary.
     */
   private val nameSimilarity = QueryDef(
@@ -424,7 +424,7 @@ object GovernanceQueries {
         substring(col("c_name"), 16, 3).as("blk"))
       a.join(b, "blk")
         .filter(col("id_a") < col("id_b"))
-        .withColumn("sim", graft.functions.JaroWinklerExpr.jaroWinkler(
+        .withColumn("sim", graft.functions.Native.jaroWinkler(
           col("name_a"), col("name_b")))
         .filter(col("sim") >= 0.95)
         .select(col("id_a"), col("id_b"),

@@ -3,17 +3,32 @@ package org.apache.spark.sql.graftbridge
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.types.{AbstractDataType, DataType, NullType}
 
 /** Minimal Column <-> catalyst Expression bridge. Spark 4 made the
   * converters `private[sql]` (`org.apache.spark.sql.classic.ExpressionUtils`,
   * columnNodeSupport.scala), so libraries registering custom expressions do
   * it from a sub-package of org.apache.spark.sql — the established pattern
   * for Catalyst extension libraries. This is the ONLY non-`graft` package in
-  * the codebase and holds no logic.
+  * the codebase and holds no engine logic, only what needs `private[sql]`
+  * access.
   */
 object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
+
+  /** An argument type that accepts `t` alone (nullability aside) and that
+    * no implicit cast reaches: a function declaring it fails analysis on a
+    * wrong-typed argument instead of casting it. Type coercion casts an
+    * argument to the expected type's `defaultConcreteType` when it can
+    * (a `DataType` input type would take `array<double>` to `array<float>`);
+    * `NullType` is a type no other type casts to, and an untyped NULL
+    * stays untyped and fails too. The members are `private[sql]`. */
+  final case class Exactly(t: DataType) extends AbstractDataType {
+    override private[sql] def defaultConcreteType: DataType = NullType
+    override private[sql] def acceptsType(other: DataType): Boolean = other.sameType(t)
+    override private[sql] def simpleString: String = t.simpleString
+  }
 
   /** Blocks until the listener bus has delivered every posted event
     * (`SparkContext.listenerBus` is `private[spark]`). */

@@ -95,16 +95,25 @@ class GraftExtensionsSpec extends SparkSpec {
     // codegen and interpreted paths agree on a real column pair
     val df = Seq(("JELLYFISH", "SMELLYFISH"), ("CRANE", "CRATE"))
       .toDF("a", "b")
-      .select(graft.functions.JaroWinklerExpr.jaroWinkler(
+      .select(graft.functions.Native.jaroWinkler(
         org.apache.spark.sql.functions.col("a"),
         org.apache.spark.sql.functions.col("b")).as("s"))
     val fromCodegen = df.collect().map(_.getDouble(0)).toSeq
     val interp = Seq(("JELLYFISH", "SMELLYFISH"), ("CRANE", "CRATE")).map {
-      case (a, b) => graft.functions.JaroWinklerExpr.jw(
+      case (a, b) => graft.functions.Kernels.jaroWinkler(
         org.apache.spark.unsafe.types.UTF8String.fromString(a),
         org.apache.spark.unsafe.types.UTF8String.fromString(b))
     }
     assert(fromCodegen == interp)
+    // empty strings: two empties are identical, one empty matches nothing
+    assert(spark.sql("SELECT jaro_winkler('', ''), jaro_winkler('', 'x')")
+      .as[(Double, Double)].collect().head == ((1.0, 0.0)))
+    val edges = Seq[(Int, String, String)]((1, "", ""), (2, null, "x"))
+      .toDF("id", "a", "b").orderBy("id")
+      .select(graft.functions.Native.jaroWinkler(
+        org.apache.spark.sql.functions.col("a"),
+        org.apache.spark.sql.functions.col("b"))).collect()
+    assert(edges(0).getDouble(0) == 1.0 && edges(1).isNullAt(0))
   }
 
   test("registered functions reject wrong arity with a named error, not IndexOutOfBounds") {
@@ -119,6 +128,28 @@ class GraftExtensionsSpec extends SparkSpec {
         s"$bad must not surface IndexOutOfBounds: $msgs")
       assert(msgs.exists(m => m.contains("expects") || m.contains("argument")),
         s"$bad must name the arity problem: $msgs")
+    }
+  }
+
+  test("registered functions reject a wrong-typed argument at analysis instead of casting it") {
+    GraftExtensions.register(spark)
+    for ((bad, want) <- Seq(
+        "cosine_similarity(array(1.0D), array(1.0D))" -> "array<float>",
+        "simhash32(array(1, 2))" -> "array<bigint>",
+        "minhash_sig(array(1, 2), 4)" -> "array<bigint>",
+        "token_hash32(1)" -> "string",
+        "token_hash32(NULL)" -> "string",
+        "jaro_winkler(1, 'x')" -> "string")) {
+      val outcome = scala.util.Try(spark.sql(s"SELECT $bad").collect().toSeq)
+      assert(outcome.failed.toOption.exists { e =>
+        e.isInstanceOf[org.apache.spark.sql.AnalysisException] &&
+          e.getMessage.toLowerCase.contains(want)
+      }, s"$bad must fail analysis naming $want: $outcome")
+    }
+    // the Column entry points check the same way
+    val doubles = Seq((Array(1.0), Array(1.0))).toDF("a", "b")
+    intercept[org.apache.spark.sql.AnalysisException] {
+      doubles.select(graft.ops.Similarity.cosine($"a", $"b")).collect()
     }
   }
 }

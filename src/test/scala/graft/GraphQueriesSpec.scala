@@ -86,7 +86,7 @@ class GraphQueriesSpec extends SparkSpec {
     (1 to 16).foreach { c => assert(zeroRow.getLong(c) == 0L, s"p${c - 1} of 0-vector") }
     val expected = (0 until 16).map { j =>
       (0 until 64).map { i =>
-        if (graft.functions.TokenHash32Expr.hash(
+        if (graft.functions.Kernels.tokenHash32(
             UTF8String.fromString(s"rp:$j:$i")) % 2 == 1) 1L else -1L
       }.sum * 1000000L
     }
@@ -112,7 +112,7 @@ class GraphQueriesSpec extends SparkSpec {
     val rows = SparkEntry.queries("q_emb_project")(spark, dir)
       .orderBy("vec_id").collect()
     val signs = (0 until 16).map(j => (0 until 64).map { i =>
-      if (graft.functions.TokenHash32Expr.hash(
+      if (graft.functions.Kernels.tokenHash32(
           UTF8String.fromString(s"rp:$j:$i")) % 2 == 1) 1L else -1L
     })
     (0 until 16).foreach { j =>

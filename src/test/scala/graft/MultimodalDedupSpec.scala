@@ -5,7 +5,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** The multimodal perceptual near-dup chain (round-14 verdict task 3):
-  * dHash signature semantics, the DHash64Expr eval/codegen identity,
+  * dHash signature semantics, the dhash64 kernel against a reference fold,
   * and the banded-≡-quadratic output identity that lets the equi-join
   * scale path replace the all-pairs baseline at 100 TB.
   */
@@ -23,22 +23,26 @@ class MultimodalDedupSpec extends SparkSpec {
     // a payload whose 9x8 thumbnail is byte-identity (72 chars, w=72%64+1
     // is NOT 9 — so exercise through the expression directly instead)
     val grid = Array.tabulate[Byte](72)(i => if (i % 9 < 4) 2 else 1)
-    val got = Seq((1L, grid), (2L, Array.emptyByteArray))
+    val got = Seq((1L, grid), (2L, Array.emptyByteArray), (3L, grid.take(71)))
       .toDF("id", "g")
-      .select(col("id"), graft.functions.DHash64Expr.dhash(col("g")).as("s"))
+      .select(col("id"), graft.functions.Native.dhash64(col("g")).as("s"))
       .as[(Long, Long)].collect().sortBy(_._1)
     // columns 0..3 hold 2, columns 4..8 hold 1: within a row the only
     // descending step is c=3 (2 > 1), so bit (r*8 + 3) fires for all 8 rows
     val expect = (0 until 8).map(r => 1L << (r * 8 + 3)).reduce(_ | _)
     assert(got(0)._2 == expect)
     assert(got(1)._2 == 0L, "empty payload must sign to 0")
+    assert(got(2)._2 == 0L, "a payload shorter than the 72-byte grid signs to 0")
+    val nullSig = Seq[(Long, Array[Byte])]((4L, null)).toDF("id", "g")
+      .select(graft.functions.Native.dhash64(col("g"))).collect().head
+    assert(nullSig.isNullAt(0), "a NULL payload has no signature")
   }
 
   test("DHash64Expr: interpreted eval equals the column (codegen) path") {
     val rnd = new scala.util.Random(11)
     val rows = (1L to 50L).map(i => (i, Array.fill[Byte](72)(rnd.nextInt(256).toByte)))
     val viaCol = rows.toDF("id", "g")
-      .select(col("id"), graft.functions.DHash64Expr.dhash(col("g")).as("s"))
+      .select(col("id"), graft.functions.Native.dhash64(col("g")).as("s"))
       .as[(Long, Long)].collect().toMap
     rows.foreach { case (i, g) =>
       var sig = 0L

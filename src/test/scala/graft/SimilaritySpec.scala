@@ -35,6 +35,27 @@ class SimilaritySpec extends SparkSpec {
         Similarity.cosineHof(col("x.embedding"), col("y.embedding")).as("hof"))
     assert(both.filter(col("fused") =!= col("hof")).count() == 0)
     assert(both.count() > 1000)
+    // edge inputs: a NULL column, empty arrays (0/0), a null element and
+    // a length mismatch are all NULL; the raw SQL function keeps the empty
+    // pair's NaN (the HOF form's double division by zero throws under
+    // ANSI, so it is the reference on non-empty inputs only)
+    val edges = Seq[(Int, Seq[Option[Float]], Seq[Option[Float]])](
+      (1, null, Seq(Some(1f), Some(0f))),
+      (2, Seq(), Seq()),
+      (3, Seq(Some(1f), None), Seq(Some(1f), Some(1f))),
+      (4, Seq(Some(1f), Some(2f)), Seq(Some(1f), Some(2f), Some(3f))))
+      .toDF("id", "a", "b")
+    val viaCol = edges.orderBy("id").select(
+        Similarity.cosine(col("a"), col("b")),
+        when(col("id") =!= 2, Similarity.cosineHof(col("a"), col("b"))))
+      .collect()
+    assert(viaCol.forall(r => r.isNullAt(0) && r.isNullAt(1)), viaCol.toSeq)
+    GraftExtensions.register(spark)
+    edges.createOrReplaceTempView("cos_edges")
+    val viaSql = spark.sql(
+      "SELECT cosine_similarity(a, b) FROM cos_edges ORDER BY id").collect()
+    assert(viaSql(0).isNullAt(0) && viaSql(1).getDouble(0).isNaN &&
+      viaSql(2).isNullAt(0) && viaSql(3).isNullAt(0), viaSql.toSeq)
   }
 
   test("bruteForceTopK ranks by cosine desc, excludes self, k rows per query") {

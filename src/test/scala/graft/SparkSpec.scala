@@ -12,16 +12,11 @@ import org.apache.spark.sql.graftbridge.Bridge
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local SparkSession for all specs — one JVM-wide session (getOrCreate)
-  * so suites don't pay repeated startup, built from the shipped config
-  * (GraftSession) at 4 cores.
+/** Shared local SparkSession for all specs — the one JVM-wide session
+  * [[SparkSpec.session]], so suites don't pay repeated startup.
   */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
-  lazy val spark: SparkSession = GraftSession.builder(4)
-    // per-JVM dir: concurrent sbt test runs must not share a warehouse
-    // (saveAsTable in one run would clobber or lock the other's tables)
-    .config("spark.sql.warehouse.dir", s"${SparkSpec.root}/warehouse")
-    .getOrCreate()
+  lazy val spark: SparkSession = SparkSpec.session
 
   /** A fresh, empty directory named after `tag` under the JVM's test
     * root; gone when the JVM exits. */
@@ -60,6 +55,15 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpec {
+  /** The test JVM's session, built once from the shipped config
+    * (GraftSession) at 4 cores. A second `getOrCreate` would re-apply the
+    * builder's confs to it and log "Using an existing Spark session". */
+  lazy val session: SparkSession = GraftSession.builder(4)
+    // per-JVM dir: concurrent sbt test runs must not share a warehouse
+    // (saveAsTable in one run would clobber or lock the other's tables)
+    .config("spark.sql.warehouse.dir", s"$root/warehouse")
+    .getOrCreate()
+
   /** `<tmpdir>/graft-test-<pid>`: the one directory a test JVM writes its
     * fixtures, stores and warehouse under, registered with Hadoop
     * `FileSystem.deleteOnExit` (as `queries.Scratch` does), so a test run

@@ -29,6 +29,16 @@ class TextDedupSpec extends SparkSpec {
     val diff = toks.filter(
       TextAnalysis.tokenHash32(col("t")) =!= TextAnalysis.tokenHash32Sql(col("t")))
     assert(diff.count() == 0)
+    // edge inputs: the empty token (md5("") = d41d8cd9...) and NULL
+    val edges = Seq[(Int, String)]((1, ""), (2, null)).toDF("id", "t")
+    val viaCol = edges.orderBy("id").select(TextAnalysis.tokenHash32(col("t")),
+      TextAnalysis.tokenHash32Sql(col("t"))).collect()
+    assert(viaCol(0).getLong(0) == 3558706393L && viaCol(0).getLong(1) == 3558706393L)
+    assert(viaCol(1).isNullAt(0) && viaCol(1).isNullAt(1))
+    GraftExtensions.register(spark)
+    val viaSql = spark.sql(
+      "SELECT token_hash32(''), token_hash32(CAST(NULL AS STRING))").collect().head
+    assert(viaSql.getLong(0) == 3558706393L && viaSql.isNullAt(1))
   }
 
   test("shingles: n-grams in order; short input yields empty") {
@@ -125,8 +135,8 @@ class TextDedupSpec extends SparkSpec {
         .withColumn("sz", size($"toks"))
       val brute = sets.as("a").crossJoin(sets.as("b"))
         .filter($"a.id" < $"b.id")
-        .withColumn("ni", graft.functions.SortedIntersectCount
-          .intersectCountFast($"a.toks", $"b.toks").cast("long"))
+        .withColumn("ni", graft.functions.Native
+          .intersectCount(longSets = false)($"a.toks", $"b.toks").cast("long"))
         .filter($"ni".cast("double") / least($"a.sz", $"b.sz") >= t)
         .select($"a.id", $"b.id", $"ni")
         .as[(Long, Long, Long)].collect().toSet
@@ -155,8 +165,8 @@ class TextDedupSpec extends SparkSpec {
     val szd = sets.withColumn("sz", size($"gs")).filter($"sz" > 0)
     val brute = szd.as("a").crossJoin(szd.as("b"))
       .filter($"a.id" < $"b.id")
-      .withColumn("ni", graft.functions.SortedIntersectCount
-        .intersectCountFast($"a.gs", $"b.gs").cast("long"))
+      .withColumn("ni", graft.functions.Native
+        .intersectCount(longSets = true)($"a.gs", $"b.gs").cast("long"))
       .filter($"ni".cast("double") / least($"a.sz", $"b.sz") >= t)
       .select($"a.id", $"b.id", $"ni")
       .as[(Long, Long, Long)].collect().toSet
@@ -281,12 +291,30 @@ class TextDedupSpec extends SparkSpec {
         Dedup.simhash32Hof(col("hs")).as("hof"))
     assert(both.filter(col("fused") =!= col("hof")).count() == 0)
     assert(both.count() == 500)
+    // edge inputs: an empty array signs to 0 and a null element counts as
+    // hash 0 in both forms; a NULL array is NULL (the HOF form folds it to 0)
+    val edges = Seq[(Int, Seq[Option[Long]])](
+      (1, null), (2, Seq()), (3, Seq(Some(5L), None)), (4, Seq(Some(5L), Some(0L))))
+      .toDF("id", "hs")
+    val viaCol = edges.orderBy("id")
+      .select(Dedup.simhash32(col("hs")), Dedup.simhash32Hof(col("hs"))).collect()
+    assert(viaCol(0).isNullAt(0) && viaCol(0).getLong(1) == 0L)
+    assert(viaCol.drop(1).forall(r => r.getLong(0) == r.getLong(1)), viaCol.toSeq)
+    assert(viaCol(1).getLong(0) == 0L && viaCol(2).getLong(0) == viaCol(3).getLong(0))
+    GraftExtensions.register(spark)
+    val viaSql = spark.sql(
+      """SELECT simhash32(CAST(NULL AS ARRAY<BIGINT>)),
+        |       simhash32(CAST(array() AS ARRAY<BIGINT>)),
+        |       simhash32(array(CAST(5 AS BIGINT), CAST(NULL AS BIGINT)))""".stripMargin)
+      .collect().head
+    assert(viaSql.isNullAt(0) && viaSql.getLong(1) == 0L &&
+      viaSql.getLong(2) == viaCol(2).getLong(0))
   }
 
   test("TokenHash64: high word is tokenHash32, low word folds md5 chars 9-16") {
     val docs = graft.ops.Tables.documents(spark, "/root/testdata/sf0.001")
     val toks = docs.select(explode(TextAnalysis.tokens(col("text"))).as("t"))
-    val h64 = graft.functions.TokenHash64Expr.tokenHashFast(col("t"))
+    val h64 = graft.functions.Native.tokenHash64(col("t"))
     val composed = shiftleft(TextAnalysis.tokenHash32(col("t")), 32)
       .bitwiseOR(conv(substring(md5(col("t")), 9, 8), 16, 10).cast("long"))
     assert(toks.filter(h64 =!= composed).count() == 0)
@@ -355,6 +383,18 @@ class TextDedupSpec extends SparkSpec {
         Dedup.jaccardSorted(col("a"), col("b")).as("fused"))
     assert(pairs.filter(not(col("ref") <=> col("fused"))).count() == 0)
     assert(pairs.count() > 100)
+    // edge inputs of the merge walk: a NULL set is NULL, empty sets share
+    // nothing, a null element never matches
+    val edges = Seq[(Int, Seq[String], Seq[String])](
+      (1, null, Seq("a")), (2, Seq(), Seq()), (3, Seq("a", null), Seq("a", "b")))
+      .toDF("id", "a", "b")
+    val counts = edges.orderBy("id").select(
+        graft.functions.Native.intersectCount(longSets = false)(col("a"), col("b")),
+        size(array_intersect(col("a"), col("b"))))
+      .collect()
+    assert(counts(0).isNullAt(0))
+    assert(counts.drop(1).forall(r => r.getInt(0) == r.getInt(1)), counts.toSeq)
+    assert(counts(1).getInt(0) == 0 && counts(2).getInt(0) == 1)
     // empty-vs-empty stays NULL (the NaN guard) in the fused path too
     val empty = Seq(("", "")).toDF("ta", "tb")
       .select(Dedup.jaccardSorted(
@@ -556,15 +596,34 @@ class TextDedupSpec extends SparkSpec {
     // an all-null array degrades to the null signature like empty input
     val coefs = Dedup.coefficients(4)
     val mixed = Seq(1).toDF("x").select(
-      graft.functions.MinHashSigExpr.minhashFast(
+      graft.functions.Native.minhash(
         expr("array(CAST(7 AS BIGINT), CAST(null AS BIGINT), CAST(11 AS BIGINT))"), coefs).as("m"),
-      graft.functions.MinHashSigExpr.minhashFast(
+      graft.functions.Native.minhash(
         expr("array(CAST(7 AS BIGINT), CAST(11 AS BIGINT))"), coefs).as("nn"),
-      graft.functions.MinHashSigExpr.minhashFast(
+      graft.functions.Native.minhash(
         expr("array(CAST(null AS BIGINT))"), coefs).as("an"))
       .collect().head
     assert(mixed.getSeq[Long](0) == mixed.getSeq[Long](1))
     assert(mixed.isNullAt(2))
+    // the same edge inputs as a column and through the SQL surface: a
+    // NULL array, an empty one and an all-null one give a NULL signature
+    val edges = Seq[(Int, Seq[Option[Long]])](
+      (1, null), (2, Seq()), (3, Seq(None)), (4, Seq(Some(7L), None, Some(11L))))
+      .toDF("id", "hs")
+    val viaCol = edges.orderBy("id")
+      .select(graft.functions.Native.minhash(col("hs"), coefs)).collect()
+    assert(viaCol.take(3).forall(_.isNullAt(0)) &&
+      viaCol(3).getSeq[Long](0) == mixed.getSeq[Long](1), viaCol.toSeq)
+    GraftExtensions.register(spark)
+    val viaSql = spark.sql(
+      """SELECT minhash_sig(CAST(NULL AS ARRAY<BIGINT>), 4),
+        |       minhash_sig(CAST(array() AS ARRAY<BIGINT>), 4),
+        |       minhash_sig(array(CAST(NULL AS BIGINT)), 4),
+        |       minhash_sig(array(CAST(7 AS BIGINT), CAST(NULL AS BIGINT),
+        |                         CAST(11 AS BIGINT)), 4)""".stripMargin)
+      .collect().head
+    assert(viaSql.isNullAt(0) && viaSql.isNullAt(1) && viaSql.isNullAt(2) &&
+      viaSql.getSeq[Long](3) == mixed.getSeq[Long](1))
   }
 
   test("connectedComponents labels transitive clusters; survivors keep cluster minima") {
