@@ -230,9 +230,6 @@ object Dedup {
     // tokenize only candidate docs: join the raw text to the candidate id
     // set FIRST, then tokenize — the optimizer cannot hoist an expression
     // below a join on its own, so the order is explicit here
-    val candIds = candidates.select(col("id_a").as("id"))
-      .union(candidates.select(col("id_b").as("id")))
-      .distinct()
     // candToks feeds BOTH join sides (a and b) — without a barrier each
     // side re-runs the corpus⋈candIds join and re-tokenizes the candidate
     // docs. This is candidate-doc-sized (not corpus-sized) state, so the
@@ -242,87 +239,45 @@ object Dedup {
     // walk compares longs — Jaccard is unchanged except on md5-prefix
     // collisions, which the oracle (same md5 fold) collapses identically.
     val candToks = df.select(col(idCol).as("id"), col(textCol).as("__text"))
-      .join(candIds, "id")
+      .join(endIds(candidates), "id")
       .select(col("id"), TextAnalysis.hashedTokenSet(col("__text")).as("toks"))
       .localCheckpoint(true)
-    val a = candToks.select(col("id").as("id_a"), col("toks").as("toks_a"))
-    val b = candToks.select(col("id").as("id_b"), col("toks").as("toks_b"))
-    // The threshold filter must NOT sit directly on the join output: the
-    // optimizer folds it into the SortMergeJoin condition, and join
-    // conditions evaluate OUTSIDE whole-stage codegen — the interpreted
-    // jaccard tree walk measured 10× the codegen'd project (40 vs 4 CPU-s
-    // at sf0.1). A checkpoint barrier between the scored projection and
-    // the filter keeps jaccard in a codegen project, evaluated once; the
-    // scored frame is candidate-sized (two ids + a double), the same
-    // class of state the candidates checkpoint above already pins.
-    val scored = candidates.join(a, "id_a").join(b, "id_b")
-      .select(col("id_a"), col("id_b"),
-        jaccardSorted(col("toks_a"), col("toks_b"), longSets = true).as("jaccard"))
-      .localCheckpoint(true)
-    scored.filter(col("jaccard") >= minJaccard)
+    verifyJaccard(candidates, candToks, minJaccard)
   }
 
-  /** Incremental MinHash near-dup: pairs of a NEW batch against itself and
-    * against the EXISTING corpus, never corpus × corpus — the daily-ingest
-    * shape at 100 TB, where re-pairing the accumulated corpus each run
-    * would redo quadratically growing work for pairs already decided.
-    * Output-identical to running [[nearDupMinhash]] on (new ∪ corpus) and
-    * keeping the pairs touching at least one new doc (spec-pinned).
-    *
-    * Scale shape: both inputs are signed in ONE pass over their union
-    * (same barrier/ReuseExchange discipline as the batch form); the
-    * candidate equi-join puts only the NEW side's band rows on the build
-    * side, so candidates are new×new plus new×corpus — corpus×corpus
-    * bucket members meet only through a new doc. Mixed pairs orient
-    * (id_a, id_b) = (least, greatest) like every pair operator here.
-    */
-  def nearDupMinhashIncremental(
-      newDf: DataFrame, corpusDf: DataFrame, idCol: String, textCol: String,
-      k: Int = 16, bands: Int = 4, minJaccard: Double = 0.5): DataFrame = {
-    require(bands > 0 && k % bands == 0,
-      s"k=$k must divide evenly into bands=$bands")
-    val rowsPerBand = k / bands
-    val tagged = newDf
-      .select(col(idCol).as("id"), col(textCol).as("__text"), lit(true).as("isnew"))
-      .unionByName(corpusDf
-        .select(col(idCol).as("id"), col(textCol).as("__text"), lit(false).as("isnew")))
-    val sigs = tagged.select(col("id"), col("isnew"),
-        minhashSignature(TextAnalysis.tokenSet(col("__text")), k).as("sig"))
-      .repartition(col("id"))
-    val banded = sigs
-      .select(col("id"), col("isnew"),
-        explode(bandKeys(col("sig"), bands, rowsPerBand)).as("bk"))
-      .select(col("id"), col("isnew"),
-        col("bk.band").as("band"), col("bk.band_key").as("band_key"))
-    // x side is NEW only; new×new dedups by id order, new×corpus appears
-    // exactly once (corpus rows never sit on the x side)
-    val candidates = banded.filter(col("isnew")).as("x")
-      .join(banded.as("y"),
-        col("x.band") === col("y.band") &&
-          col("x.band_key") === col("y.band_key") &&
-          col("x.id") =!= col("y.id") &&
-          (!col("y.isnew") || col("x.id") < col("y.id")))
-      .select(least(col("x.id"), col("y.id")).as("id_a"),
-        greatest(col("x.id"), col("y.id")).as("id_b"))
-      .distinct()
-    val candIds = candidates.select(col("id_a").as("id"))
+  /** Distinct ids at either end of a (id_a, id_b) candidate frame. */
+  private def endIds(candidates: DataFrame): DataFrame =
+    candidates.select(col("id_a").as("id"))
       .union(candidates.select(col("id_b").as("id")))
       .distinct()
-    // hashed token sets, exactly as the batch operator (output-identity)
-    val candToks = tagged.select(col("id"), col("__text"))
-      .join(candIds, "id")
-      .select(col("id"), TextAnalysis.hashedTokenSet(col("__text")).as("toks"))
-    // same checkpoint barrier as the batch operator: the threshold must
-    // not fold into the join condition (interpreted eval — see the
-    // nearDupMinhash note; measured 10×)
-    val scored = candidates
-      .join(candToks.select(col("id").as("id_a"), col("toks").as("toks_a")), "id_a")
-      .join(candToks.select(col("id").as("id_b"), col("toks").as("toks_b")), "id_b")
-      .select(col("id_a"), col("id_b"),
-        jaccardSorted(col("toks_a"), col("toks_b"), longSets = true).as("jaccard"))
-      .localCheckpoint(true)
-    scored.filter(col("jaccard") >= minJaccard)
+
+  /** Each column `c` of `sets` (id, set columns…) attached to both ends of
+    * the candidate pairs as `c_a` and `c_b`, joined on id_a and id_b. */
+  private def bothEnds(candidates: DataFrame, sets: DataFrame): DataFrame = {
+    def end(sfx: String) =
+      sets.select(sets.columns.map(c => col(c).as(s"${c}_$sfx")).toSeq: _*)
+    candidates.join(end("a"), "id_a").join(end("b"), "id_b")
   }
+
+  /** The verify stage of every candidate-pair operator here: project the
+    * exact `scores` of the joined pairs, checkpoint, then apply the
+    * threshold `keep`. The threshold must NOT sit directly on the join
+    * output: the optimizer folds it into the SortMergeJoin condition, and
+    * join conditions evaluate OUTSIDE whole-stage codegen — the interpreted
+    * jaccard tree walk measured 10× the codegen'd project (40 vs 4 CPU-s
+    * at sf0.1). The barrier keeps the scores in a codegen project,
+    * evaluated once; the scored frame is candidate-sized (ids + a few
+    * numbers), the same class of state a candidate checkpoint pins. */
+  private def verify(pairs: DataFrame, keep: Column, scores: Column*): DataFrame =
+    pairs.select(scores: _*).localCheckpoint(true).filter(keep)
+
+  /** [[verify]] of MinHash candidates by exact Jaccard over hashed token
+    * sets `toks` = (id, toks): (id_a, id_b, jaccard ≥ minJaccard). */
+  private def verifyJaccard(candidates: DataFrame, toks: DataFrame,
+      minJaccard: Double): DataFrame =
+    verify(bothEnds(candidates, toks), col("jaccard") >= minJaccard,
+      col("id_a"), col("id_b"),
+      jaccardSorted(col("toks_a"), col("toks_b"), longSets = true).as("jaccard"))
 
   /** The persisted-digest form of a document: (id, minhash signature,
     * hashed token set) — everything the near-dup operators need, and the
@@ -335,15 +290,23 @@ object Dedup {
       minhashSignature(TextAnalysis.tokenSet(col(textCol)), k).as("sig"),
       TextAnalysis.hashedTokenSet(col(textCol)).as("toks"))
 
-  /** [[nearDupMinhashIncremental]] with the corpus side arriving as
-    * PERSISTED digests ([[minhashPrepared]] rows read back from a store)
-    * instead of text — the form a streaming or cross-run pipeline
-    * actually executes: the batch pays signature work for ITS OWN rows
-    * only; the accumulated corpus contributes a narrow columnar scan.
-    * Output-identical to the text form on the same documents
-    * (StreamingDedupSpec pins it): the stored sig/toks are pure
-    * functions of the text, and the candidate/verify stages below are
-    * the incremental operator's own, stage for stage. */
+  /** Incremental MinHash near-dup over [[minhashPrepared]] digests: pairs
+    * of a NEW batch against itself and against the EXISTING corpus, never
+    * corpus × corpus — the daily-ingest shape at 100 TB, where re-pairing
+    * the accumulated corpus each run would redo quadratically growing work
+    * for pairs already decided. Output-identical to running
+    * [[nearDupMinhash]] on (new ∪ corpus) and keeping the pairs touching
+    * at least one new doc (spec-pinned). The corpus side may be digests
+    * read back from a store — the form a streaming or cross-run pipeline
+    * executes: the batch pays signature work for ITS OWN rows only; the
+    * accumulated corpus contributes a narrow columnar scan.
+    *
+    * Scale shape: one repartition barrier over the union of both inputs
+    * feeds banding and the verify token sets; the candidate equi-join puts
+    * only the NEW side's band rows on the build side, so candidates are
+    * new×new plus new×corpus — corpus×corpus bucket members meet only
+    * through a new doc. Mixed pairs orient (id_a, id_b) = (least,
+    * greatest) like every pair operator here. */
   def nearDupMinhashFromState(
       newPrepared: DataFrame, corpusPrepared: DataFrame,
       k: Int = 16, bands: Int = 4, minJaccard: Double = 0.5): DataFrame = {
@@ -370,19 +333,8 @@ object Dedup {
       .select(least(col("x.id"), col("y.id")).as("id_a"),
         greatest(col("x.id"), col("y.id")).as("id_b"))
       .distinct()
-    val candIds = candidates.select(col("id_a").as("id"))
-      .union(candidates.select(col("id_b").as("id")))
-      .distinct()
-    val candToks = tagged.select(col("id"), col("toks")).join(candIds, "id")
-    // same checkpoint barrier as the text operators: the threshold must
-    // not fold into the join condition (interpreted eval)
-    val scored = candidates
-      .join(candToks.select(col("id").as("id_a"), col("toks").as("toks_a")), "id_a")
-      .join(candToks.select(col("id").as("id_b"), col("toks").as("toks_b")), "id_b")
-      .select(col("id_a"), col("id_b"),
-        jaccardSorted(col("toks_a"), col("toks_b"), longSets = true).as("jaccard"))
-      .localCheckpoint(true)
-    scored.filter(col("jaccard") >= minJaccard)
+    verifyJaccard(candidates,
+      tagged.select(col("id"), col("toks")).join(endIds(candidates), "id"), minJaccard)
   }
 
   /** Connected components over an undirected pair graph — the survivor-
@@ -822,22 +774,14 @@ object Dedup {
           col("x.n") >= ceil(lit(minJaccard) * col("y.n")))
       .select(col("x.id").as("id_a"), col("y.id").as("id_b"))
       .distinct()
-    val sets = docs.select(col("id"), col("toks"))
     // filter on the UNROUNDED Jaccard: the prefix/length pruning only
     // guarantees candidate generation for true J >= t, so admitting pairs
     // whose ROUNDED J reaches t (true J in [t - 5e-7, t)) would promise
     // rows the pruning may already have dropped. Rounding is display-only.
-    // checkpoint barrier before the threshold: keeps the intersect walk
-    // in a codegen project instead of the interpreted join condition
-    // (see the nearDupMinhash note; measured 10×)
-    val scored = candidates
-      .join(sets.select(col("id").as("id_a"), col("toks").as("toks_a")), "id_a")
-      .join(sets.select(col("id").as("id_b"), col("toks").as("toks_b")), "id_b")
-      .select(col("id_a"), col("id_b"),
+    verify(bothEnds(candidates, docs.select(col("id"), col("toks"))),
+        col("__jraw") >= minJaccard,
+        col("id_a"), col("id_b"),
         jaccardSortedRaw(col("toks_a"), col("toks_b")).as("__jraw"))
-      .localCheckpoint(true)
-    scored
-      .filter(col("__jraw") >= minJaccard)
       .select(col("id_a"), col("id_b"),
         TextAnalysis.round6(col("__jraw")).as("jaccard"))
   }
@@ -898,18 +842,9 @@ object Dedup {
     val sets = docs.select(col("id"), col("toks"), size(col("toks")).as("sz"))
     val ni = graft.functions.Native.intersectCount(longSets(docs, "toks"))(
       col("toks_a"), col("toks_b")).cast("long")
-    // checkpoint barrier before the threshold: keeps the intersect walk
-    // in a codegen project instead of the interpreted join condition
-    // (see the nearDupMinhash note; measured 10×)
-    val scored = candidates
-      .join(sets.select(col("id").as("id_a"), col("toks").as("toks_a"),
-        col("sz").as("sz_a")), "id_a")
-      .join(sets.select(col("id").as("id_b"), col("toks").as("toks_b"),
-        col("sz").as("sz_b")), "id_b")
-      .select(col("id_a"), col("id_b"), col("sz_a"), col("sz_b"), ni.as("ni"))
-      .localCheckpoint(true)
-    scored
-      .filter(col("ni").cast("double") / least(col("sz_a"), col("sz_b")) >= t)
+    verify(bothEnds(candidates, sets),
+        col("ni").cast("double") / least(col("sz_a"), col("sz_b")) >= t,
+        col("id_a"), col("id_b"), col("sz_a"), col("sz_b"), ni.as("ni"))
       .withColumn("containment", TextAnalysis.round6(
         col("ni").cast("double") / least(col("sz_a"), col("sz_b"))))
       .withColumn("jaccard", TextAnalysis.round6(
@@ -1018,13 +953,15 @@ object Dedup {
     graft.functions.Native.simhash32(hashes)
 
   /** Higher-order-function SimHash (32 aggregate walks) — kept as the
-    * reference implementation for the equivalence spec. */
+    * reference implementation for the equivalence spec. A NULL hash array
+    * is a NULL signature, as in [[simhash32]]: each bit's `bitSum > 0`
+    * would be NULL and fall to the `otherwise(0)` branch. */
   def simhash32Hof(hashes: Column): Column =
-    (0 until 32).map { j =>
+    when(hashes.isNotNull, (0 until 32).map { j =>
       val bitSum = aggregate(hashes, lit(0L),
         (acc, h) => acc + when(shiftright(h, j).bitwiseAND(1) === 1, 1L).otherwise(-1L))
       when(bitSum > 0, lit(1L << j)).otherwise(lit(0L))
-    }.reduce(_ + _)
+    }.reduce(_ + _))
 
   /** Per-token 32-bit hashes (project this once, then feed `simhash32`). */
   def tokenHashes(toks: Column): Column =
@@ -1134,22 +1071,46 @@ object Dedup {
       df: DataFrame, idCol: String, textCol: String, maxHamming: Int): DataFrame =
     bandedPairsFromSigs(simhash64Sigs(df, idCol, textCol), maxHamming)
 
+  /** The pigeonhole band algebra of the 64-bit Hamming joins: the
+    * signature splits into `maxHamming + 1` near-equal bit chunks;
+    * [[explode]] emits one (id, sig, band, key) row per chunk and
+    * [[firstMatch]] is the index of the FIRST band on which the `x.sig`
+    * and `y.sig` of a joined pair agree (-1 if none) — a scalar
+    * shift/mask/compare chain, fully codegen'd inside the join stage,
+    * that emits each pair once without a distinct exchange. */
+  private final class HammingBands(maxHamming: Int) {
+    require(maxHamming >= 0 && maxHamming <= 7,
+      s"maxHamming=$maxHamming must be in [0, 7]: banding the 64-bit " +
+        "signature into maxHamming+1 chunks must keep every chunk >= 8 bits " +
+        "or candidate volume approaches the full pair space")
+    private val nChunks = maxHamming + 1
+    private val widths =
+      Array.tabulate(nChunks)(i => 64 / nChunks + (if (i < 64 % nChunks) 1 else 0))
+    private val starts = widths.scanLeft(0)(_ + _)
+    // NOT (1L << w) - 1: JVM long shifts are mod 64, so at maxHamming=0 the
+    // single 64-bit chunk would mask to 0 and every row would share band
+    // key 0 — a silent equi-join degeneration to the full pair space
+    private def mask(w: Int): Long = -1L >>> (64 - w)
+    private def chunk(sig: Column, i: Int): Column =
+      shiftrightunsigned(sig, starts(i)).bitwiseAND(lit(mask(widths(i))))
+
+    def explode(sigs: DataFrame): DataFrame =
+      sigs.select(col("id"), col("sig"),
+        posexplode(array((0 until nChunks).map(chunk(col("sig"), _)): _*))
+          .as(Seq("band", "key")))
+
+    val firstMatch: Column = (0 until nChunks).reverse
+      .foldLeft(lit(-1)) { (rest, b) =>
+        when(chunk(col("x.sig"), b) === chunk(col("y.sig"), b), lit(b)).otherwise(rest)
+      }
+  }
+
   /** The pigeonhole band join over a prepared (id, sig) frame — shared
     * by the text SimHash scale path and the multimodal dHash near-dup
     * (same 64-bit signature algebra, same crossover analysis; see
     * [[simhashPairsBanded]]'s scaladoc for the measured numbers). */
   def bandedPairsFromSigs(sigs: DataFrame, maxHamming: Int): DataFrame = {
-    require(maxHamming >= 0 && maxHamming <= 7,
-      s"maxHamming=$maxHamming must be in [0, 7]: banding the 64-bit " +
-        "signature into maxHamming+1 chunks must keep every chunk >= 8 bits " +
-        "or candidate volume approaches the full pair space")
-    val nChunks = maxHamming + 1
-    val widths = Array.tabulate(nChunks)(i => 64 / nChunks + (if (i < 64 % nChunks) 1 else 0))
-    val starts = widths.scanLeft(0)(_ + _)
-    // NOT (1L << w) - 1: JVM long shifts are mod 64, so at maxHamming=0 the
-    // single 64-bit chunk would mask to 0 and every row would share band
-    // key 0 — a silent equi-join degeneration to the full pair space
-    def mask(w: Int): Long = -1L >>> (64 - w)
+    val bands = new HammingBands(maxHamming)
     // the repartition is a deliberate materialization barrier: the self-join
     // below would otherwise scan the corpus and run the tokenize+hash+fold
     // signature chain twice (plus twice more in the isnotnull filters that
@@ -1158,20 +1119,7 @@ object Dedup {
     // sides are identical subtrees, ReuseExchange collapses them, and the
     // corpus is scanned ONCE with signatures computed once — at 100 TB this
     // trades one narrow (id, sig) shuffle for a second full corpus scan.
-    val banded = sigs
-      .repartition(col("id"))
-      .select(col("id"), col("sig"),
-        posexplode(array((0 until nChunks).map { i =>
-          shiftrightunsigned(col("sig"), starts(i)).bitwiseAND(lit(mask(widths(i))))
-        }: _*)).as(Seq("band", "key")))
-    def chunk(sig: Column, i: Int): Column =
-      shiftrightunsigned(sig, starts(i)).bitwiseAND(lit(mask(widths(i))))
-    // index of the FIRST band on which two signatures agree — scalar
-    // shift/mask/compare chain, fully codegen'd inside the join stage
-    val firstMatchingBand = (0 until nChunks).reverse
-      .foldLeft(lit(-1)) { (rest, b) =>
-        when(chunk(col("x.sig"), b) === chunk(col("y.sig"), b), lit(b)).otherwise(rest)
-      }
+    val banded = bands.explode(sigs.repartition(col("id")))
     banded.as("x")
       .join(banded.as("y"),
         col("x.band") === col("y.band") && col("x.key") === col("y.key") &&
@@ -1179,7 +1127,7 @@ object Dedup {
       // emit each pair once: only at its first matching band (the join
       // already guarantees the chunks agree AT x.band, so this holds for
       // exactly one of a pair's matching bands) — no distinct exchange
-      .filter(col("x.band") === firstMatchingBand)
+      .filter(col("x.band") === bands.firstMatch)
       .select(col("x.id").as("id_a"), col("y.id").as("id_b"),
         bit_count(col("x.sig").bitwiseXOR(col("y.sig"))).as("hamming"))
       .filter(col("hamming") <= maxHamming)
@@ -1201,31 +1149,15 @@ object Dedup {
     * a violation can never emit a degenerate self-pair. */
   def bandedPairsFromState(landed: DataFrame, prior: DataFrame,
       maxHamming: Int): DataFrame = {
-    require(maxHamming >= 0 && maxHamming <= 7,
-      s"maxHamming=$maxHamming must be in [0, 7]")
-    val nChunks = maxHamming + 1
-    val widths = Array.tabulate(nChunks)(i => 64 / nChunks + (if (i < 64 % nChunks) 1 else 0))
-    val starts = widths.scanLeft(0)(_ + _)
-    def mask(w: Int): Long = -1L >>> (64 - w)
-    def explodeBands(df: DataFrame): DataFrame = df
-      .select(col("id"), col("sig"),
-        posexplode(array((0 until nChunks).map { i =>
-          shiftrightunsigned(col("sig"), starts(i)).bitwiseAND(lit(mask(widths(i))))
-        }: _*)).as(Seq("band", "key")))
-    def chunk(sig: Column, i: Int): Column =
-      shiftrightunsigned(sig, starts(i)).bitwiseAND(lit(mask(widths(i))))
-    val firstMatchingBand = (0 until nChunks).reverse
-      .foldLeft(lit(-1)) { (rest, b) =>
-        when(chunk(col("x.sig"), b) === chunk(col("y.sig"), b), lit(b)).otherwise(rest)
-      }
-    val cross = explodeBands(landed.repartition(col("id"))).as("x")
-      .join(explodeBands(prior).as("y"),
+    val bands = new HammingBands(maxHamming)
+    val cross = bands.explode(landed.repartition(col("id"))).as("x")
+      .join(bands.explode(prior).as("y"),
         col("x.band") === col("y.band") && col("x.key") === col("y.key") &&
           // defensive: landed ∩ prior = ∅ is the caller's contract, but a
           // violating source must not produce id_a == id_b hamming-0 rows
           // (least/greatest would collapse the pair into a self-loop)
           col("x.id") =!= col("y.id"))
-      .filter(col("x.band") === firstMatchingBand)
+      .filter(col("x.band") === bands.firstMatch)
       .select(least(col("x.id"), col("y.id")).as("id_a"),
         greatest(col("x.id"), col("y.id")).as("id_b"),
         bit_count(col("x.sig").bitwiseXOR(col("y.sig"))).as("hamming"))
@@ -1332,15 +1264,11 @@ object Dedup {
       .localCheckpoint(false)
     val lhs = ranked.select(col("id").as("id_a"), col("__ts").as("toks_a"),
       explode(sequence(col("rn") + 1, col("rn") + window)).as("rn_b"))
-    // checkpoint barrier before the threshold (see nearDupMinhash note)
-    val scored = lhs
-      .join(ranked.select(col("id").as("id_b"), col("__ts").as("toks_b"),
-        col("rn").as("rn_b")), "rn_b")
-      .select(col("id_a"), col("id_b"),
-        jaccardSorted(col("toks_a"), col("toks_b"), longSets(base, "__ts"))
-          .as("jaccard"))
-      .localCheckpoint(true)
-    scored.filter(col("jaccard") >= minJaccard)
+    verify(lhs.join(ranked.select(col("id").as("id_b"), col("__ts").as("toks_b"),
+        col("rn").as("rn_b")), "rn_b"),
+      col("jaccard") >= minJaccard,
+      col("id_a"), col("id_b"),
+      jaccardSorted(col("toks_a"), col("toks_b"), longSets(base, "__ts")).as("jaccard"))
   }
 
   /** Whether `df`'s set column `c` holds `array<bigint>` hash sets rather

@@ -8,10 +8,17 @@ import org.apache.spark.sql.functions._
   * (SURVEY.md §2.4): exact brute-force cosine top-k as the baseline and an
   * LSH-bucketed variant as the 100 TB scale path.
   *
-  * Dot products are higher-order `zip_with`/`aggregate` expressions — fully
-  * codegen'd, no UDF — accumulated in double in array order so the result is
-  * bit-deterministic (and matches DuckDB's sequential list_cosine_similarity
-  * after rounding).
+  * Every search operator here is one pipeline: generate candidate pairs
+  * (a cross join, sign-LSH buckets, IVF cells, graph hops), score them
+  * ([[scoreCos]]), keep a per-query top-k ([[topK]]). Only the candidate
+  * stage differs between operators.
+  *
+  * Cosine is the fused native kernel [[graft.functions.Kernels.cosine]]:
+  * one pass, accumulated in double in array order, so the result is
+  * bit-deterministic (and matches DuckDB's sequential
+  * list_cosine_similarity after rounding). The centroid and PQ scorers
+  * are higher-order `zip_with`/`aggregate` expressions with the same
+  * accumulation order.
   *
   * Scale notes: brute force is a broadcast nested-loop of Q queries × N
   * corpus rows — linear scans parallelize perfectly but cost O(Q·N·d); the
@@ -36,11 +43,15 @@ object Similarity {
   private def nanToNull(c: Column): Column = when(isnan(c), lit(null)).otherwise(c)
 
   /** Higher-order-function cosine (reference form; 4 array passes). Kept for
-    * the equivalence spec against the fused native kernel.
+    * the equivalence spec against the fused native kernel. The divisor is
+    * guarded, not the quotient: under ANSI mode a zero-norm or empty pair
+    * raises DIVIDE_BY_ZERO before any NaN exists (see [[cosineInt]]).
     * NOTE: nanToNull must wrap the RAW ratio — Spark's floor() maps NaN to
     * 0, so round6(NaN) would silently become 0.0 and dodge the guard. */
-  def cosineHof(a: Column, b: Column): Column =
-    TextAnalysis.round6(nanToNull(dot(a, b) / (norm(a) * norm(b))))
+  def cosineHof(a: Column, b: Column): Column = {
+    val denom = norm(a) * norm(b)
+    TextAnalysis.round6(nanToNull(when(denom > 0, dot(a, b) / denom)))
+  }
 
   /** Cosine similarity rounded to 6 digits (cross-engine float discipline —
     * see TextAnalysis.round6 on why not the builtin `round`). Uses the
@@ -79,14 +90,51 @@ object Similarity {
       idCol: String, vecCol: String, k: Int): DataFrame = {
     val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
     val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"))
-    val scored = c.join(broadcast(q), col("query_id") =!= col("neighbor_id"))
-      .withColumn("cos", cosine(col("qv"), col("cv")))
-      .filter(col("cos").isNotNull) // zero-norm/corrupt vectors are not neighbors
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    topK(scoreCos(c.join(broadcast(q), col("query_id") =!= col("neighbor_id"))),
+        "query_id", "cos", "neighbor_id", k)
       .select("query_id", "neighbor_id", "cos", "rank")
+  }
+
+  // ---- the score and rank stages -----------------------------------------
+
+  /** The score stage of every cosine search: join each `(side, key)` onto
+    * the candidates by that id column (a side brings `qv` or `cv`), score
+    * `cos = cosine(qv, cv)` and drop NULL — a zero-norm or corrupt vector
+    * is no one's neighbor. Ids travel through the candidate joins and the
+    * vectors attach once, here. */
+  private[graft] def scoreCos(cand: DataFrame, sides: (DataFrame, String)*): DataFrame =
+    sides.foldLeft(cand) { case (df, (side, key)) => df.join(side, key) }
+      .withColumn("cos", cosine(col("qv"), col("cv")))
+      .filter(col("cos").isNotNull)
+
+  /** The rank stage of every top-k operator: within each `key`, number
+    * rows by `score` descending, ties by `tie` ascending, and keep numbers
+    * ≤ k in column `as`. One comparator, so every operator breaks ties the
+    * same way (and the SQL oracles replay it as one ORDER BY). */
+  private[graft] def topK(df: DataFrame, key: String, score: String, tie: String,
+      k: Int, as: String = "rank"): DataFrame =
+    df.withColumn(as, row_number().over(
+        Window.partitionBy(col(key)).orderBy(col(score).desc, col(tie).asc)))
+      .filter(col(as) <= k)
+
+  /** Approximate shortlist → exact re-rank: per query, the `shortlist`
+    * best rows of `approx` by its approximate `score` (ties by candidate
+    * id `tie`), then the raw vectors of `raw` (neighbor_id, cv) attach to
+    * that shortlist only and the top k by exact cosine win. `approx`
+    * carries (query_id, qv, tie, score). The raw store is read for
+    * |queries| × shortlist rows, never per candidate. */
+  private[graft] def rerankExact(approx: DataFrame, score: String, tie: String,
+      shortlist: Int, raw: DataFrame, k: Int): DataFrame =
+    topK(scoreCos(topK(approx, "query_id", score, tie, shortlist, "ar")
+        .select(col("query_id"), col("qv"), col(tie).as("neighbor_id")),
+        raw -> "neighbor_id"),
+      "query_id", "cos", "neighbor_id", k)
+
+  /** Forward ∪ reverse edges of a (node_id, neighbor_id) graph, distinct. */
+  private[graft] def symmetrized(graph: DataFrame): DataFrame = {
+    val e = graph.select(col("node_id"), col("neighbor_id"))
+    e.union(e.select(col("neighbor_id").as("node_id"), col("node_id").as("neighbor_id")))
+      .distinct()
   }
 
   /** Sign-LSH bucket id from the signs of `nBits` consecutive coordinates
@@ -102,93 +150,37 @@ object Similarity {
   /** Bucket over the leading dims — table 0 of the amplified family. */
   def signBucket(vec: Column, nBits: Int): Column = signBucketAt(vec, 0, nBits)
 
-  /** AND-OR amplified sign-LSH approximate top-k: `tables` hash tables, each
-    * AND-ing `nBits` sign bits from a disjoint block of coordinates (table l
-    * buckets on dims [l*nBits, (l+1)*nBits)); a corpus row is a candidate for
-    * a query if they share a bucket in ANY table. For per-hyperplane
-    * agreement p the candidate probability is 1-(1-p^nBits)^tables — the
-    * AND sharpens precision, the OR recovers recall: one 8-bit table
-    * measured 1/40 top-5 recall on the benchmark embeddings; 16 tables of
-    * 4 bits (the `q_sim_ann_lsh` / `q_ann_recall` configuration) measured
-    * 39/40, 37/40 and 35/40 at sf0.001/0.01/0.1 — the 0.8 floor asserted
-    * by `q_ann_recall`'s `lsh_recall_ok` contract.
+  /** AND-OR amplified sign-LSH approximate top-k, for queries that are a
+    * predicate-selected subset of the corpus (the "find neighbors of these
+    * docs in the collection" shape; `lit(true)` searches every row).
+    * `tables` hash tables, each AND-ing `nBits` sign bits from a disjoint
+    * block of coordinates (table l buckets on dims [l*nBits, (l+1)*nBits));
+    * a corpus row is a candidate for a query if they share a bucket in ANY
+    * table. For per-hyperplane agreement p the candidate probability is
+    * 1-(1-p^nBits)^tables — the AND sharpens precision, the OR recovers
+    * recall: one 8-bit table measured 1/40 top-5 recall on the benchmark
+    * embeddings; 16 tables of 4 bits (the `q_sim_ann_lsh` / `q_ann_recall`
+    * configuration) measured 39/40, 37/40 and 35/40 at sf0.001/0.01/0.1 —
+    * the 0.8 floor asserted by `q_ann_recall`'s `lsh_recall_ok` contract.
     *
-    * The table family consumes dims [0, tables*nBits); every vector must be
-    * at least that wide (checked per row — `element_at` past the array end
-    * would otherwise read NULL and silently merge high tables into one
-    * degenerate bucket).
-    *
-    * Scale shape: both sides explode to (table, bucket) KEYS ONLY — vectors
-    * are not carried through the explode, so the corpus never inflates
-    * `tables`-fold through a shuffle. The candidate join is an equi-join on
-    * (table, bucket) (AQE-skew-splittable), duplicates across tables
-    * collapse in a distinct over narrow id pairs (candidates ≪ pair space —
-    * that is the point of the index), and each surviving pair fetches its
-    * two vectors back by id equi-join for exact cosine scoring.
-    */
-  def lshTopK(
-      corpus: DataFrame, queries: DataFrame,
-      idCol: String, vecCol: String, k: Int, nBits: Int = 8,
-      tables: Int = 1): DataFrame = {
-    require(nBits >= 1 && tables >= 1,
-      s"nBits=$nBits and tables=$tables must both be >= 1")
-    val needDims = tables * nBits
-    def bucketed(df: DataFrame, idAs: String) = {
-      // per-row dim check: fail loudly instead of bucketing on NULL signs.
-      // size() of a NULL vector is NULL, so the message side must coalesce
-      // or the raise_error itself would fire with a NULL (useless) message
-      val v = when(size(col(vecCol)) >= needDims, col(vecCol))
-        .otherwise(raise_error(concat(
-          lit(s"lshTopK: tables*nBits = $needDims sign dims but vector has "),
-          coalesce(size(col(vecCol)).cast("string"), lit("NULL (null vector)")))))
-      df.select(col(idCol).as(idAs),
-        posexplode(array((0 until tables).map { l =>
-          signBucketAt(v, l * nBits, nBits)
-        }: _*)).as(Seq("l", "bucket")))
-    }
-    val cand = bucketed(queries, "query_id")
-      .join(bucketed(corpus, "neighbor_id"), Seq("l", "bucket"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .select("query_id", "neighbor_id")
-      .distinct()
-    val scored = cand
-      .join(queries.select(col(idCol).as("query_id"), col(vecCol).as("qv")), "query_id")
-      .join(corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv")), "neighbor_id")
-      .withColumn("cos", cosine(col("qv"), col("cv")))
-      .filter(col("cos").isNotNull)
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("query_id", "neighbor_id", "cos", "rank")
-  }
-
-  /** [[lshTopK]] specialized to SELF-search — queries are a
-    * predicate-selected subset of the corpus, the common "find neighbors
-    * of these docs in the collection" shape. The sign-bucket index is
-    * computed ONCE over the corpus and locally checkpointed: the query
-    * side filters that index instead of re-hashing its vectors, and both
-    * sides of the candidate join read the same materialized (id, table,
-    * bucket) artifact — n·tables narrow rows, exactly what an LSH service
-    * persists. Halves the signature work and keeps the probe
-    * recompute-free (measured 2.1 s → 1.2 s on q_sim_ann_lsh at sf0.1).
+    * Scale shape: the [[signKeys]] index is computed ONCE over the corpus
+    * and locally checkpointed — n·tables narrow (id, table, bucket) rows,
+    * exactly what an LSH service persists; vectors are not carried through
+    * the explode, so the corpus never inflates `tables`-fold through a
+    * shuffle. The query side filters that index instead of re-hashing its
+    * vectors (measured 2.1 s → 1.2 s on q_sim_ann_lsh at sf0.1). The
+    * candidate join is an equi-join on (table, bucket)
+    * (AQE-skew-splittable), duplicates across tables collapse in a
+    * distinct over narrow id pairs (candidates ≪ pair space — that is the
+    * point of the index), and each surviving pair fetches its two vectors
+    * back by id equi-join for exact cosine scoring.
     */
   def lshTopKSelf(
       corpus: DataFrame, queryPred: Column,
       idCol: String, vecCol: String, k: Int, nBits: Int = 8,
       tables: Int = 1): DataFrame = {
-    require(nBits >= 1 && tables >= 1,
-      s"nBits=$nBits and tables=$tables must both be >= 1")
-    val needDims = tables * nBits
-    val v = when(size(col(vecCol)) >= needDims, col(vecCol))
-      .otherwise(raise_error(concat(
-        lit(s"lshTopKSelf: tables*nBits = $needDims sign dims but vector has "),
-        coalesce(size(col(vecCol)).cast("string"), lit("NULL (null vector)")))))
-    val buckets = corpus.select(col(idCol), col(vecCol),
-        posexplode(array((0 until tables).map { l =>
-          signBucketAt(v, l * nBits, nBits)
-        }: _*)).as(Seq("l", "bucket")))
-      .select(col(idCol), col("l"), col("bucket"))
+    val buckets = signKeys(corpus, idCol, vecCol, nBits, tables)
+      .withColumnRenamed("id", idCol) // queryPred reads the caller's id
       .localCheckpoint(false)
     val cand = buckets.filter(queryPred)
       .withColumnRenamed(idCol, "query_id")
@@ -196,30 +188,27 @@ object Similarity {
       .filter(col("query_id") =!= col("neighbor_id"))
       .select("query_id", "neighbor_id")
       .distinct()
-    val scored = cand
-      .join(corpus.filter(queryPred)
-        .select(col(idCol).as("query_id"), col(vecCol).as("qv")), "query_id")
-      .join(corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv")),
-        "neighbor_id")
-      .withColumn("cos", cosine(col("qv"), col("cv")))
-      .filter(col("cos").isNotNull)
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    topK(scoreCos(cand,
+        corpus.filter(queryPred)
+          .select(col(idCol).as("query_id"), col(vecCol).as("qv")) -> "query_id",
+        corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv")) -> "neighbor_id"),
+        "query_id", "cos", "neighbor_id", k)
       .select("query_id", "neighbor_id", "cos", "rank")
   }
 
   /** The AND-OR sign-LSH key frame (id, l, bucket) — one row per (vector,
-    * table), the narrow index both [[lshTopK]] variants build inline and
-    * the streaming kNN maintenance persists incrementally. Same per-row
-    * width check (a too-narrow vector would bucket on NULL signs and
-    * silently merge high tables into one degenerate bucket). */
+    * table), the narrow index [[lshTopKSelf]] checkpoints and the
+    * streaming kNN maintenance persists incrementally. The table family
+    * consumes dims [0, tables*nBits); every vector must be at least that
+    * wide, checked per row: `element_at` past the array end would read
+    * NULL and silently merge high tables into one degenerate bucket. */
   def signKeys(df: DataFrame, idCol: String, vecCol: String,
       nBits: Int, tables: Int): DataFrame = {
     require(nBits >= 1 && tables >= 1,
       s"nBits=$nBits and tables=$tables must both be >= 1")
     val needDims = tables * nBits
+    // size() of a NULL vector is NULL, so the message side must coalesce
+    // or the raise_error itself would fire with a NULL (useless) message
     val v = when(size(col(vecCol)) >= needDims, col(vecCol))
       .otherwise(raise_error(concat(
         lit(s"signKeys: tables*nBits = $needDims sign dims but vector has "),
@@ -263,7 +252,7 @@ object Similarity {
     * Scale shape: the graph is node-scale (≤ n·k edges); symmetrization
     * doubles it; the two-hop expansion is a self-equi-join on the shared
     * middle node — ≤ n·(2k)² candidate rows, NEVER n². Scoring fetches
-    * the two vectors by id equi-join (the [[lshTopK]] discipline: ids
+    * the two vectors by id equi-join (the [[scoreCos]] discipline: ids
     * travel through the joins, vectors attach once at the end). Each
     * round is one shuffle-bounded pass; callers iterate rounds until the
     * graph stops improving (recall-vs-truth is the stop metric —
@@ -274,25 +263,16 @@ object Similarity {
   def nnDescentRound(corpus: DataFrame, graph: DataFrame,
       idCol: String, vecCol: String, k: Int): DataFrame = {
     val e = graph.select(col("node_id"), col("neighbor_id"))
-    val sym = e.union(
-        e.select(col("neighbor_id").as("node_id"), col("node_id").as("neighbor_id")))
-      .distinct()
+    val sym = symmetrized(graph)
     val hops = sym
       .join(sym.select(col("node_id").as("mid"), col("neighbor_id").as("hop")),
         col("neighbor_id") === col("mid"))
       .filter(col("node_id") =!= col("hop"))
       .select(col("node_id"), col("hop").as("neighbor_id"))
-    val cand = e.union(hops).distinct()
-    val scored = cand
-      .join(corpus.select(col(idCol).as("node_id"), col(vecCol).as("qv")), "node_id")
-      .join(corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv")),
-        "neighbor_id")
-      .withColumn("cos", cosine(col("qv"), col("cv")))
-      .filter(col("cos").isNotNull)
-    val w = Window.partitionBy(col("node_id"))
-      .orderBy(col("cos").desc, col("neighbor_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    topK(scoreCos(e.union(hops).distinct(),
+        corpus.select(col(idCol).as("node_id"), col(vecCol).as("qv")) -> "node_id",
+        corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv")) -> "neighbor_id"),
+        "node_id", "cos", "neighbor_id", k)
       .select("node_id", "neighbor_id", "cos", "rank")
   }
 
@@ -310,7 +290,7 @@ object Similarity {
     * [[nnDescentRound]] build it): per round, the frontier is
     * |Q|·beam·2k candidate rows through one equi-join on the node id —
     * query-scale, never corpus-scale. The corpus is touched only by the
-    * id-equi-join that attaches candidate vectors (the [[lshTopK]]
+    * id-equi-join that attaches candidate vectors (the [[scoreCos]]
     * discipline), so a 100 TB corpus costs each round one narrow
     * shuffled lookup of |Q|·beam·2k ids, not a scan. The symmetrized
     * edge frame is node-scale (≤ 2·n·k rows) and checkpointed once —
@@ -324,26 +304,14 @@ object Similarity {
       beam: Int, rounds: Int): DataFrame = {
     require(beam >= 1 && rounds >= 0,
       s"beam=$beam must be >= 1 and rounds=$rounds >= 0")
-    val e = graph.select(col("node_id"), col("neighbor_id"))
-    val sym = e.union(
-        e.select(col("neighbor_id").as("node_id"), col("node_id").as("neighbor_id")))
-      .distinct()
-      .localCheckpoint(true)
+    val sym = symmetrized(graph).localCheckpoint(true)
     val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
     val c = corpus.select(col(idCol).as("node_id"), col(vecCol).as("cv"))
-    def topBeam(cand: DataFrame): DataFrame = {
-      val scored = cand
-        .join(broadcast(q), "query_id")
-        .join(c, "node_id")
-        .filter(col("node_id") =!= col("query_id"))
-        .withColumn("cos", cosine(col("qv"), col("cv")))
-        .filter(col("cos").isNotNull)
-      val w = Window.partitionBy(col("query_id"))
-        .orderBy(col("cos").desc, col("node_id").asc)
-      scored.withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= beam)
+    def topBeam(cand: DataFrame): DataFrame =
+      topK(scoreCos(cand.filter(col("node_id") =!= col("query_id")),
+          broadcast(q) -> "query_id", c -> "node_id"),
+          "query_id", "cos", "node_id", beam)
         .select("query_id", "node_id", "cos", "rank")
-    }
     val b0 = topBeam(q.select(col("query_id"))
       .crossJoin(broadcast(entries.select(col(idCol).as("node_id")))))
     val bFinal = (1 to rounds).foldLeft(b0) { (b, _) =>
@@ -377,28 +345,20 @@ object Similarity {
       m: Int, subDim: Int, beam: Int, rounds: Int, k: Int): DataFrame = {
     require(beam >= 1 && rounds >= 0 && k >= 1 && k <= beam,
       s"need beam=$beam >= 1, rounds=$rounds >= 0, 1 <= k=$k <= beam")
-    val e = graph.select(col("node_id"), col("neighbor_id"))
-    val sym = e.union(
-        e.select(col("neighbor_id").as("node_id"), col("node_id").as("neighbor_id")))
-      .distinct()
-      .localCheckpoint(true)
+    val sym = symmetrized(graph).localCheckpoint(true)
     val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
       .withColumn("lut", pqQueryLut(col("qv"), cb, m, subDim))
       .withColumn("qnorm", norm(col("qv")))
     val cd = codes.select(col(idCol).as("node_id"), col("codes"))
-    def topBeamAdc(cand: DataFrame): DataFrame = {
-      val scored = cand
-        .join(broadcast(q.select(col("query_id"), col("lut"), col("qnorm"))), "query_id")
-        .join(cd, "node_id")
-        .filter(col("node_id") =!= col("query_id"))
-        .withColumn("adc",
-          pqAdcCosineLut(col("lut"), col("qnorm"), col("codes"), cb, m, subDim))
-      val w = Window.partitionBy(col("query_id"))
-        .orderBy(col("adc").desc, col("node_id").asc)
-      scored.withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= beam)
+    def topBeamAdc(cand: DataFrame): DataFrame =
+      topK(cand
+          .join(broadcast(q.select(col("query_id"), col("lut"), col("qnorm"))), "query_id")
+          .join(cd, "node_id")
+          .filter(col("node_id") =!= col("query_id"))
+          .withColumn("adc",
+            pqAdcCosineLut(col("lut"), col("qnorm"), col("codes"), cb, m, subDim)),
+          "query_id", "adc", "node_id", beam)
         .select("query_id", "node_id")
-    }
     val b0 = topBeamAdc(q.select(col("query_id"))
       .crossJoin(broadcast(entries.select(col(idCol).as("node_id")))))
     val bFinal = (1 to rounds).foldLeft(b0) { (b, _) =>
@@ -407,15 +367,9 @@ object Similarity {
       topBeamAdc(b.union(frontier).distinct())
     }
     val c = corpus.select(col(idCol).as("node_id"), col(vecCol).as("cv"))
-    val rr = bFinal
-      .join(broadcast(q.select(col("query_id"), col("qv"))), "query_id")
-      .join(c, "node_id")
-      .withColumn("cos", cosine(col("qv"), col("cv")))
-      .filter(col("cos").isNotNull)
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("node_id").asc)
-    rr.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    topK(scoreCos(bFinal,
+        broadcast(q.select(col("query_id"), col("qv"))) -> "query_id", c -> "node_id"),
+        "query_id", "cos", "node_id", k)
       .select(col("query_id"), col("node_id").as("neighbor_id"),
         col("cos"), col("rank"))
   }
@@ -585,11 +539,10 @@ object Similarity {
     * undefined). */
   def silhouetteMargin(corpus: DataFrame, cents: DataFrame,
       vecCol: String, cellCol: String): DataFrame = {
-    val cs = cents.select(col(cellCol), col("centroid")).orderBy(col(cellCol))
-      .collect().map(r => (r.get(0), r.getSeq[Double](1)))
+    val cs = collectCentroidRows(cents, cellCol)
     require(cs.length >= 2, "silhouetteMargin: need at least 2 cells")
-    val centLits = array(cs.map(c => typedlit(c._2)).toSeq: _*)
-    val cellLits = array(cs.map(c => lit(c._1)).toSeq: _*)
+    val centLits = array(cs.map(c => typedlit(c._2)): _*)
+    val cellLits = array(cs.map(c => lit(c._1)): _*)
     val scores = transform(centLits, c =>
       TextAnalysis.round6(dotD(col(vecCol), c) / (norm(col(vecCol)) * normD(c))))
     val ownIdx = array_position(cellLits, col(cellCol)).cast("int")
@@ -601,14 +554,6 @@ object Similarity {
       .withColumn("cos_other", array_max(masked))
   }
 
-  /** IVF-style approximate top-k: corpus rows are indexed by their cell
-    * (coarse label); each query probes only its `nprobe` nearest cells by
-    * centroid cosine. The probe join is an equi-join on cell id — at
-    * 100 TB the corpus shuffles once by cell (or is written bucketed by
-    * cell and never shuffles again), and scan cost drops by
-    * ~nprobe/n_cells versus brute force, trading recall like any IVF
-    * index. Centroid table is tiny — broadcast.
-    */
   /** The probe stage of [[ivfTopK]], exposed so consumers can price the
     * candidate scan (Σ probed-cell sizes) without re-deriving the cell
     * ranking: per query, the `nprobe` nearest cells by rounded
@@ -632,14 +577,11 @@ object Similarity {
       nprobe: Int): DataFrame = {
     val cAsDouble = cents.select(col(cellCol).as("cell"), col("centroid"))
     val qv = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
-    qv.join(broadcast(cAsDouble))
-      .withColumn("ccos", TextAnalysis.round6(
-        dotD(col("qv"), col("centroid"))
-          / (norm(col("qv")) * normD(col("centroid")))))
-      .withColumn("crank", row_number().over(
-        Window.partitionBy(col("query_id"))
-          .orderBy(col("ccos").desc, col("cell").asc)))
-      .filter(col("crank") <= nprobe)
+    topK(qv.join(broadcast(cAsDouble))
+        .withColumn("ccos", TextAnalysis.round6(
+          dotD(col("qv"), col("centroid"))
+            / (norm(col("qv")) * normD(col("centroid"))))),
+        "query_id", "ccos", "cell", nprobe, "crank")
       .select(col("query_id"), col("qv"), col("cell"), col("crank"))
   }
 
@@ -658,10 +600,8 @@ object Similarity {
       idCol: String, vecCol: String, cellCol: String): DataFrame = {
     val cv = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"),
       col(cellCol).as("cell"))
-    cv.join(rankedProbes, Seq("cell"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cos", cosine(col("qv"), col("cv")))
-      .filter(col("cos").isNotNull)
+    scoreCos(cv.join(rankedProbes, Seq("cell"))
+        .filter(col("query_id") =!= col("neighbor_id")))
       .select(col("query_id"), col("neighbor_id"), col("cos"), col("crank"))
   }
 
@@ -670,31 +610,25 @@ object Similarity {
     * after the filter over the same rows [[ivfTopK]] would score, so
     * ranks (and ties) are identical. */
   def ivfTopKAt(scored: DataFrame, k: Int, nprobe: Int): DataFrame =
-    scored.filter(col("crank") <= nprobe)
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("query_id"))
-          .orderBy(col("cos").desc, col("neighbor_id").asc)))
-      .filter(col("rank") <= k)
+    topK(scored.filter(col("crank") <= nprobe), "query_id", "cos", "neighbor_id", k)
       .select("query_id", "neighbor_id", "cos", "rank")
 
+  /** IVF-style approximate top-k: corpus rows are indexed by their cell
+    * (coarse label); each query probes only its `nprobe` nearest cells by
+    * centroid cosine ([[probeCellsRanked]] → [[ivfScoreCandidates]] →
+    * [[ivfTopKAt]]). The probe join is an equi-join on cell id — at
+    * 100 TB the corpus shuffles once by cell (or is written bucketed by
+    * cell and never shuffles again), and scan cost drops by
+    * ~nprobe/n_cells versus brute force, trading recall like any IVF
+    * index. Centroid table is tiny — broadcast.
+    */
   def ivfTopK(
       corpus: DataFrame, queries: DataFrame, cents: DataFrame,
       idCol: String, vecCol: String, cellCol: String,
-      k: Int, nprobe: Int = 2): DataFrame = {
-    // rank cells per query by cosine(query, centroid); keep nprobe cells
-    val qCells = probeCells(queries, cents, idCol, vecCol, cellCol, nprobe)
-    val cv = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"),
-      col(cellCol).as("cell"))
-    val scored = cv.join(qCells, Seq("cell"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cos", cosine(col("qv"), col("cv")))
-      .filter(col("cos").isNotNull)
-    scored.withColumn("rank", row_number().over(
-        Window.partitionBy(col("query_id"))
-          .orderBy(col("cos").desc, col("neighbor_id").asc)))
-      .filter(col("rank") <= k)
-      .select("query_id", "neighbor_id", "cos", "rank")
-  }
+      k: Int, nprobe: Int = 2): DataFrame =
+    ivfTopKAt(ivfScoreCandidates(corpus,
+      probeCellsRanked(queries, cents, idCol, vecCol, cellCol, nprobe),
+      idCol, vecCol, cellCol), k, nprobe)
 
   // ---- product quantization (IVF-PQ) --------------------------------------
 
@@ -938,14 +872,8 @@ object Similarity {
       col(cellCol).as("cell"), col(labelCol).as("label_q"))
     val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"),
       col(cellCol).as("cell"), col(labelCol).as("label_n"))
-    c.join(q, Seq("cell"))
-      .filter(col("label_q") =!= col("label_n"))
-      .withColumn("cos", cosine(col("qv"), col("cv")))
-      .filter(col("cos").isNotNull)
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("query_id"))
-          .orderBy(col("cos").desc, col("neighbor_id").asc)))
-      .filter(col("rank") <= k)
+    topK(scoreCos(c.join(q, Seq("cell")).filter(col("label_q") =!= col("label_n"))),
+        "query_id", "cos", "neighbor_id", k)
       .select("query_id", "label_q", "neighbor_id", "label_n", "cos", "rank")
   }
 
@@ -964,20 +892,10 @@ object Similarity {
       col(cellCol).as("cell"), col(labelCol).as("label_q"))
     val c = corpus.select(col(idCol).as("nid"), col(vecCol).as("cv"),
       col(cellCol).as("cell"), col(labelCol).as("label_n"))
-    val topk = c.join(q, Seq("cell"))
-      .filter(col("qid") =!= col("nid"))
-      .withColumn("cos", cosine(col("qv"), col("cv")))
-      .filter(col("cos").isNotNull)
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("qid"))
-          .orderBy(col("cos").desc, col("nid").asc)))
-      .filter(col("rank") <= k)
-    topk.groupBy(col("qid"), col("label_q"), col("label_n"))
-      .agg(count(lit(1)).as("votes"))
-      .withColumn("r", row_number().over(
-        Window.partitionBy(col("qid"))
-          .orderBy(col("votes").desc, col("label_n").asc)))
-      .filter(col("r") === 1)
+    val topk = topK(scoreCos(c.join(q, Seq("cell")).filter(col("qid") =!= col("nid"))),
+      "qid", "cos", "nid", k)
+    topK(topk.groupBy(col("qid"), col("label_q"), col("label_n"))
+        .agg(count(lit(1)).as("votes")), "qid", "votes", "label_n", 1, "r")
       .select(col("qid"), col("label_q"),
         col("label_n").as("majority_label"),
         (col("label_q") =!= col("label_n")).as("suspect"))
@@ -985,7 +903,7 @@ object Similarity {
 
   /** Embedding-cosine near-duplicate pairs on a pre-sampled input:
     * all (id_a < id_b) pairs with cosine >= minCosine. The quadratic form is
-    * the oracle twin; at scale route through `lshTopK`-style bucketing.
+    * the oracle twin; at scale route through [[signKeys]] bucketing.
     */
   def cosineNearDupPairs(
       df: DataFrame, idCol: String, vecCol: String, minCosine: Double): DataFrame = {

@@ -127,7 +127,7 @@ object AnnEvalQueries {
 
   /** Memoized scored LSH candidate frame with the neighbor label
     * attached — ONE sign-key build + ONE bucket join + ONE scoring pass
-    * serve BOTH strategies (r18; was two independent lshTopK calls that
+    * serve BOTH strategies (r18; was two independent LSH top-k calls that
     * each re-signed the corpus and re-joined the buckets): sign keys
     * are per-row, so the pre-filter candidate set is EXACTLY the
     * unfiltered candidate set restricted to allowed neighbors; `pre` =
@@ -146,18 +146,16 @@ object AnnEvalQueries {
           .localCheckpoint(false)
         val keys = Similarity.signKeys(emb, "vec_id", "embedding",
           nBits = 4, tables = 16)
-        keys.filter(col("id") < 8)
+        val cand = keys.filter(col("id") < 8)
           .withColumnRenamed("id", "query_id")
           .join(keys.withColumnRenamed("id", "neighbor_id"), Seq("l", "bucket"))
           .filter(col("query_id") =!= col("neighbor_id"))
           .select("query_id", "neighbor_id")
           .distinct()
-          .join(emb.select(col("vec_id").as("query_id"),
-            col("embedding").as("qv")), "query_id")
-          .join(emb.select(col("vec_id").as("neighbor_id"),
-            col("embedding").as("cv"), col("label").as("nl")), "neighbor_id")
-          .withColumn("cos", Similarity.cosine(col("qv"), col("cv")))
-          .filter(col("cos").isNotNull)
+        Similarity.scoreCos(cand,
+            emb.select(col("vec_id").as("query_id"), col("embedding").as("qv")) -> "query_id",
+            emb.select(col("vec_id").as("neighbor_id"), col("embedding").as("cv"),
+              col("label").as("nl")) -> "neighbor_id")
           .select(col("query_id"), col("neighbor_id"), col("nl"), col("cos"))
           .localCheckpoint(true)
       }
@@ -166,12 +164,8 @@ object AnnEvalQueries {
     fn = (spark, dir) => {
       val truthF = annFilteredTruth(spark, dir)
       val scoredAll = annFilteredScored(spark, dir)
-      def topK(df: org.apache.spark.sql.DataFrame) = df
-        .withColumn("rank", row_number().over(
-          org.apache.spark.sql.expressions.Window
-            .partitionBy(col("query_id"))
-            .orderBy(col("cos").desc, col("neighbor_id").asc)))
-        .filter(col("rank") <= K)
+      def topK(df: org.apache.spark.sql.DataFrame) =
+        Similarity.topK(df, "query_id", "cos", "neighbor_id", K)
       val pre = topK(scoredAll.filter(col("nl") <= 2))
         .select(col("query_id"), col("neighbor_id"))
       val post = topK(scoredAll)
@@ -274,21 +268,8 @@ object AnnEvalQueries {
         .join(broadcast(probes), col("query_id") =!= col("neighbor_id"))
         .withColumn("acos", Similarity.cosineInt(col("qv"), col("codes")))
         .filter(col("acos").isNotNull)
-        .withColumn("ar", row_number().over(
-          org.apache.spark.sql.expressions.Window
-            .partitionBy(col("query_id"))
-            .orderBy(col("acos").desc, col("neighbor_id").asc)))
-        .filter(col("ar") <= cTop)
-        .select(col("query_id"), col("qv"), col("neighbor_id"))
-      val rr = approx
-        .join(emb.select(col("vec_id").as("neighbor_id"),
-          col("embedding").as("cv")), "neighbor_id")
-        .withColumn("cos", Similarity.cosine(col("qv"), col("cv")))
-        .withColumn("rank", row_number().over(
-          org.apache.spark.sql.expressions.Window
-            .partitionBy(col("query_id"))
-            .orderBy(col("cos").desc, col("neighbor_id").asc)))
-        .filter(col("rank") <= K)
+      val rr = Similarity.rerankExact(approx, "acos", "neighbor_id", cTop,
+          emb.select(col("vec_id").as("neighbor_id"), col("embedding").as("cv")), K)
         .select(col("query_id"), col("neighbor_id"))
       val n = codes.agg(count(lit(1)).as("n_corpus"))
       truth.join(rr.withColumn("hit", lit(1L)),

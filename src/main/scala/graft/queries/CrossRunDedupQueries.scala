@@ -168,9 +168,10 @@ object CrossRunDedupQueries {
     * micro-batch. The oracle recomputes the pair set from raw text
     * row-level, so the driver's gate proves the persisted digests carry
     * the full near-dup semantics across a disk round trip (jaccards
-    * byte-identical, not just pair membership). Same expected output as
-    * q_dedup_minhash_incr — deliberately: two engine paths (text-side
-    * vs digest-store-side), one contract.
+    * byte-identical, not just pair membership). Same operator and same
+    * expected output as q_dedup_minhash_incr, whose corpus digests are
+    * computed in-session; here they come back from the persisted store,
+    * so the two rows differ only by the disk round trip.
     *
     * Scale shape: batch-sized signing + band equi-joins against a
     * narrow columnar digest scan; the corpus's text is never read. The
@@ -200,7 +201,7 @@ object CrossRunDedupQueries {
     * full rebuild (round-15 verdict task 2's spec obligation, promoted
     * to an oracle row). Same expected output as q_dedup_components —
     * deliberately: two engine paths (batch rebuild vs incremental
-    * maintenance), one contract, the q_dedup_state_pairs convention.
+    * maintenance), one contract.
     * The merged assignment memoizes per session, like the pair set of
     * q_dedup_state_pairs: its connected components run jobs at
     * construction. */

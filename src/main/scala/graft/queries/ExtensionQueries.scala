@@ -773,11 +773,7 @@ object ExtensionQueries {
         .crossJoin(broadcast(n))
         .withColumn("tfidf",
           floor(col("tf") * log(col("__n") / col("df")) * 1e6 + 0.5) / 1e6)
-      scored
-        .withColumn("rn", row_number().over(
-          org.apache.spark.sql.expressions.Window.partitionBy(col("doc_id"))
-            .orderBy(col("tfidf").desc, col("token").asc)))
-        .filter(col("rn") <= 3)
+      Similarity.topK(scored, "doc_id", "tfidf", "token", 3, "rn")
         .select(col("doc_id"), col("token"), col("tfidf"), col("rn"))
         .orderBy("doc_id", "rn")
     },
@@ -1074,20 +1070,20 @@ object ExtensionQueries {
          |ORDER BY id_a, id_b""".stripMargin))
 
   /** Incremental pair set — the NEW batch (doc_id % 20 = 0) against the
-    * rest of the corpus — memoized alongside the full chain:
-    * q_dedup_minhash_incr and q_dedup_cross_run share one build, and
-    * repeated bench passes stop paying the signature rebuild (the
-    * operator's own localCheckpoint barrier makes the memoized frame a
-    * cheap re-scan). */
+    * rest of the corpus, both sides as [[Dedup.minhashPrepared]] digests —
+    * memoized alongside the full chain: q_dedup_minhash_incr and
+    * q_dedup_cross_run share one build, and repeated bench passes stop
+    * paying the signature rebuild (the operator's own localCheckpoint
+    * barrier makes the memoized frame a cheap re-scan). */
   private[graft] def minhashIncrPairs(
       spark: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame =
     SessionCache.memo(spark, dir, "incr-pairs") {
       val docs = dedupDocs(spark, dir)
-      Dedup.nearDupMinhashIncremental(
-        docs.filter(col("doc_id") % 20 === 0),
-        docs.filter(col("doc_id") % 20 =!= 0),
-        "doc_id", "text", k = 16, bands = 4, minJaccard = 0.5)
+      Dedup.nearDupMinhashFromState(
+        Dedup.minhashPrepared(docs.filter(col("doc_id") % 20 === 0), "doc_id", "text"),
+        Dedup.minhashPrepared(docs.filter(col("doc_id") % 20 =!= 0), "doc_id", "text"),
+        k = 16, bands = 4, minJaccard = 0.5)
     }
 
   /** Incremental near-dup: the NEW batch (doc_id % 20 = 0) against the
@@ -3043,21 +3039,9 @@ object ExtensionQueries {
         // depth p = crank<=p restriction of the memoized max-depth ADC
         // frame (candidate sets nest; ADC values and tie-breaks are the
         // per-depth chain's, computed once per session — see pqAdc5)
-        val adc = pqAdc5(spark, dir)
-          .filter(col("crank") <= p)
-          .withColumn("ar", row_number().over(
-            org.apache.spark.sql.expressions.Window
-              .partitionBy(col("query_id"))
-              .orderBy(col("adc").desc, col("vec_id").asc)))
-          .filter(col("ar") <= cTop)
-          .select(col("query_id"), col("qv"), col("vec_id").as("neighbor_id"))
-        val reranked = adc.join(raw, Seq("neighbor_id"))
-          .withColumn("cos", Similarity.cosine(col("qv"), col("cv")))
-          .withColumn("rank", row_number().over(
-            org.apache.spark.sql.expressions.Window
-              .partitionBy(col("query_id"))
-              .orderBy(col("cos").desc, col("neighbor_id").asc)))
-          .filter(col("rank") <= 10)
+        val reranked = Similarity.rerankExact(
+            pqAdc5(spark, dir).filter(col("crank") <= p),
+            "adc", "vec_id", cTop, raw, 10)
           .select(col("query_id"), col("neighbor_id"))
         truth.join(reranked.withColumn("hit", lit(1L)),
             Seq("query_id", "neighbor_id"), "left")
@@ -3231,21 +3215,9 @@ object ExtensionQueries {
       .filter(col("query_id") =!= col("vec_id"))
       .withColumn("adc", Similarity.pqAdcCosineLut(
         col("lut"), col("qnorm"), col("codes"), cb, m, subDim))
-      .withColumn("ar", row_number().over(
-        org.apache.spark.sql.expressions.Window
-          .partitionBy(col("query_id"))
-          .orderBy(col("adc").desc, col("vec_id").asc)))
-      .filter(col("ar") <= cTop)
-      .select(col("query_id"), col("qv"), col("vec_id").as("neighbor_id"))
     val raw = trainedIvfCells(spark, dir, 2)
       .select(col("vec_id").as("neighbor_id"), col("embedding").as("cv"))
-    adc.join(raw, Seq("neighbor_id"))
-      .withColumn("cos", Similarity.cosine(col("qv"), col("cv")))
-      .withColumn("rank", row_number().over(
-        org.apache.spark.sql.expressions.Window
-          .partitionBy(col("query_id"))
-          .orderBy(col("cos").desc, col("neighbor_id").asc)))
-      .filter(col("rank") <= 10)
+    Similarity.rerankExact(adc, "adc", "vec_id", cTop, raw, 10)
       .select(col("query_id"), col("neighbor_id"), col("cos"),
         col("rank").cast("int").as("rank"))
       .orderBy("query_id", "rank")
@@ -3469,19 +3441,7 @@ object ExtensionQueries {
           .filter(col("query_id") =!= col("vec_id"))
           .withColumn("adc", Similarity.pqAdcCosineResidual(
             col("qv"), col("ccent"), col("codes"), cbr, m, subDim))
-          .withColumn("ar", row_number().over(
-            org.apache.spark.sql.expressions.Window
-              .partitionBy(col("query_id"))
-              .orderBy(col("adc").desc, col("vec_id").asc)))
-          .filter(col("ar") <= cTop)
-          .select(col("query_id"), col("qv"), col("vec_id").as("neighbor_id"))
-        val reranked = adc.join(raw, Seq("neighbor_id"))
-          .withColumn("cos", Similarity.cosine(col("qv"), col("cv")))
-          .withColumn("rank", row_number().over(
-            org.apache.spark.sql.expressions.Window
-              .partitionBy(col("query_id"))
-              .orderBy(col("cos").desc, col("neighbor_id").asc)))
-          .filter(col("rank") <= 10)
+        val reranked = Similarity.rerankExact(adc, "adc", "vec_id", cTop, raw, 10)
           .select(col("query_id"), col("neighbor_id"))
         truth.join(reranked.withColumn("hit", lit(1L)),
             Seq("query_id", "neighbor_id"), "left")
@@ -5544,11 +5504,7 @@ object ExtensionQueries {
         .withColumn("idf",
           (floor((log(col("nc") + 1) - log(col("cdf"))) * 1e9 + 0.5) / 1e9).cast(d189))
         .withColumn("score", col("tf").cast(d100) * col("idf"))
-      scored
-        .withColumn("rank", row_number().over(
-          org.apache.spark.sql.expressions.Window
-            .partitionBy(col("comp")).orderBy(col("score").desc, col("token"))))
-        .filter(col("rank") <= 3)
+      Similarity.topK(scored, "comp", "score", "token", 3)
         .select(col("comp"), col("rank"), col("token"), col("tf"),
           (floor(col("score").cast("double") * 1e6 + 0.5) / 1e6).as("score"))
         .orderBy("comp", "rank")

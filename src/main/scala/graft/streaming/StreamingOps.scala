@@ -811,17 +811,10 @@ object StreamingOps {
       .join(allKeys.withColumnRenamed("id", "neighbor_id"), Seq("l", "bucket"))
       .filter(col("node_id") =!= col("neighbor_id"))
       .select(col("node_id"), col("neighbor_id"))
-    val incident = incidentNew
-      .union(incidentNew.select(col("neighbor_id").as("node_id"),
-        col("node_id").as("neighbor_id")))
-      .distinct()
-    val scored = incident
-      .join(all.select(col("id").as("node_id"), col("vec").as("qv")), "node_id")
-      .join(all.select(col("id").as("neighbor_id"), col("vec").as("cv")),
-        "neighbor_id")
-      .select(col("node_id"), col("neighbor_id"),
-        Similarity.cosine(col("qv"), col("cv")).as("cos"))
-      .filter(col("cos").isNotNull)
+    val scored = Similarity.scoreCos(Similarity.symmetrized(incidentNew),
+        all.select(col("id").as("node_id"), col("vec").as("qv")) -> "node_id",
+        all.select(col("id").as("neighbor_id"), col("vec").as("cv")) -> "neighbor_id")
+      .select(col("node_id"), col("neighbor_id"), col("cos"))
     // prior ∪ incident may repeat a pair (both endpoints old, re-bucketed
     // never happens — but a REPLAY folds edges already in the snapshot);
     // cosines of repeats are bit-identical (same fused expression over
@@ -831,11 +824,7 @@ object StreamingOps {
       .fold(scored)(_.union(scored))
       .groupBy(col("node_id"), col("neighbor_id"))
       .agg(max(col("cos")).as("cos"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("node_id"))
-      .orderBy(col("cos").desc, col("neighbor_id").asc)
-    Store.graph.land(
-      merged.withColumn("rank", row_number().over(w)).filter(col("rank") <= k),
+    Store.graph.land(Similarity.topK(merged, "node_id", "cos", "neighbor_id", k),
       graphStorePath, batchId)
     Store.graph.gc(sess, graphStorePath, batchId)
   }

@@ -36,9 +36,8 @@ class SimilaritySpec extends SparkSpec {
     assert(both.filter(col("fused") =!= col("hof")).count() == 0)
     assert(both.count() > 1000)
     // edge inputs: a NULL column, empty arrays (0/0), a null element and
-    // a length mismatch are all NULL; the raw SQL function keeps the empty
-    // pair's NaN (the HOF form's double division by zero throws under
-    // ANSI, so it is the reference on non-empty inputs only)
+    // a length mismatch are all NULL in both forms; the raw SQL function
+    // keeps the empty pair's NaN
     val edges = Seq[(Int, Seq[Option[Float]], Seq[Option[Float]])](
       (1, null, Seq(Some(1f), Some(0f))),
       (2, Seq(), Seq()),
@@ -47,7 +46,7 @@ class SimilaritySpec extends SparkSpec {
       .toDF("id", "a", "b")
     val viaCol = edges.orderBy("id").select(
         Similarity.cosine(col("a"), col("b")),
-        when(col("id") =!= 2, Similarity.cosineHof(col("a"), col("b"))))
+        Similarity.cosineHof(col("a"), col("b")))
       .collect()
     assert(viaCol.forall(r => r.isNullAt(0) && r.isNullAt(1)), viaCol.toSeq)
     GraftExtensions.register(spark)
@@ -78,7 +77,7 @@ class SimilaritySpec extends SparkSpec {
     val brute = Similarity.bruteForceTopK(corpus, corpus, "vec_id", "embedding", 3)
       .as[(Long, Long, Double, Int)].collect()
       .map(r => (r._1, r._2)).toSet
-    val lsh = Similarity.lshTopK(corpus, corpus, "vec_id", "embedding", 3, nBits = 3)
+    val lsh = Similarity.lshTopKSelf(corpus, lit(true), "vec_id", "embedding", 3, nBits = 3)
       .as[(Long, Long, Double, Int)].collect()
     assert(lsh.nonEmpty)
     assert(lsh.map(r => (r._1, r._2)).toSet.subsetOf(brute))
@@ -92,7 +91,8 @@ class SimilaritySpec extends SparkSpec {
     val truth = Similarity.bruteForceTopK(emb, qs, "vec_id", "embedding", 5)
       .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
     def hits(tables: Int, nBits: Int): Int =
-      Similarity.lshTopK(emb, qs, "vec_id", "embedding", 5, nBits = nBits, tables = tables)
+      Similarity.lshTopKSelf(emb, col("vec_id") < 8, "vec_id", "embedding", 5,
+          nBits = nBits, tables = tables)
         .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
         .intersect(truth).size
     val one = hits(tables = 1, nBits = 4)
@@ -107,12 +107,13 @@ class SimilaritySpec extends SparkSpec {
 
   test("lshTopK rejects vectors narrower than tables*nBits per row") {
     val ex = intercept[Exception] {
-      Similarity.lshTopK(corpus, corpus, "vec_id", "embedding", 3,
+      Similarity.lshTopKSelf(corpus, lit(true), "vec_id", "embedding", 3,
         nBits = 4, tables = 2).collect() // 3-dim vectors, 8 sign dims needed
     }
     def messages(t: Throwable): Seq[String] =
       Option(t).toSeq.flatMap(e => e.getMessage +: messages(e.getCause))
-    assert(messages(ex).exists(m => m != null && m.contains("lshTopK")))
+    assert(messages(ex).exists(m => m != null &&
+      m.contains("tables*nBits = 8 sign dims but vector has 3")))
   }
 
   test("ivfTopK: centroids are per-cell means; probing all cells equals brute force") {
