@@ -1227,8 +1227,8 @@ object Dedup {
     * Scale shape: the global rank is NOT a single-partition
     * `row_number()` — the frame is range-partitioned on (key, id),
     * ranked per partition, and shifted by exclusive per-partition
-    * offsets (a #partitions-sized driver collect — the packBins
-    * prefix-sum pattern). Neighbor candidates are generated by exploding
+    * offsets ([[RobustStats.prefixSum]]: a #partitions-sized driver
+    * collect). Neighbor candidates are generated by exploding
     * each row's `window` successor ranks and equi-joining on rank, so
     * the pair stage is a plain hash join on a dense long key; the
     * verify step is per-pair scalar codegen
@@ -1244,24 +1244,11 @@ object Dedup {
     require(window >= 1, s"window=$window must be >= 1")
     val base = df
       .select(col(idCol).as("id"), sortKey.as("__sk"), tokSet.as("__ts"))
-      .repartitionByRange(col("__sk"), col("id"))
-      .withColumn("__pid", spark_partition_id())
-      .localCheckpoint(false) // totals pass + rank pass share one compute
-    val totals = base.groupBy(col("__pid")).agg(count(lit(1)).as("__n"))
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).sortBy(_._1)
-    var acc = 0L
-    val exclusive = totals.map { case (pid, n) =>
-      val o = pid -> acc; acc += n; o
-    }.toMap
-    val offsetCol = totals.map(_._1).foldLeft(lit(0L)) { (rest, pid) =>
-      when(col("__pid") === pid, lit(exclusive(pid))).otherwise(rest)
-    }
-    val wnd = Window.partitionBy(col("__pid")).orderBy(col("__sk"), col("id"))
     // checkpointed: both sides of the rank join read the ranked frame
-    val ranked = base
-      .withColumn("rn", row_number().over(wnd).cast("long") + offsetCol)
-      .select(col("id"), col("__ts"), col("rn"))
-      .localCheckpoint(false)
+    val ranked = RobustStats.prefixSum(base, Seq(col("__sk"), col("id")),
+        count(lit(1)), "rn") { w =>
+      row_number().over(w.orderBy(col("__sk"), col("id"))).cast("long")
+    }.select(col("id"), col("__ts"), col("rn")).localCheckpoint(false)
     val lhs = ranked.select(col("id").as("id_a"), col("__ts").as("toks_a"),
       explode(sequence(col("rn") + 1, col("rn") + window)).as("rn_b"))
     verify(lhs.join(ranked.select(col("id").as("id_b"), col("__ts").as("toks_b"),

@@ -13,19 +13,22 @@ import org.apache.spark.sql.functions._
   * `(hash, tieKey)` — a grouped order-statistic. The scale shape AVOIDS
   * the naive `row_number() OVER (PARTITION BY group ORDER BY hash)` plan,
   * which funnels the whole table through |groups| sort partitions (the
-  * same single-task straggler the MAD rewrite killed — see
-  * [[RobustStats]]). Instead:
+  * same single-task straggler the MAD rewrite killed). Instead every
+  * sampler is one [[RobustStats.search]] over the hash domain plus a
+  * filter:
   *
-  *   1. ONE bucket-histogram pass over the hash domain (domain-bounded
-  *      output: groups × 1024 buckets for the 32-bit universe),
+  *   1. ONE bucket-histogram pass (groups × 1024 buckets for the 32-bit
+  *      universe), which also yields each group's row count — the input
+  *      of the rebalancing quota rules,
   *   2. ONE in-bucket value-count pass that resolves the exact quota-th
-  *      hash `h*(g)` and the exact `#{hash < h*}` per group,
+  *      hash `h*(g)` and the exact `#{hash < h*}` per cut group,
   *   3. ONE scan-stage filter `hash < h*` plus a rank window over the
   *      TIE rows only (`hash = h*` — a handful of rows, never the table).
   *
   * Every cluster-side step is an embarrassingly parallel scan + a
   * combinable aggregate with bounded output; the driver only touches
   * histograms. No full-table sort, no data-sized shuffle at any point.
+  * An empty input yields an empty sample.
   */
 object Mixing {
 
@@ -39,11 +42,8 @@ object Mixing {
     * `tieKey` must be unique per row within a group.
     */
   def quotaSample(df: DataFrame, grp: String, hash: Column, tieKey: Column,
-      quotas: Map[String, Long]): DataFrame = {
-    val h = df.withColumn("__h", hash)
-    quotaSampleWith(h, grp, tieKey, quotas,
-      RobustStats.bucketCounts(h, grp, col("__h"), W))
-  }
+      quotas: Map[String, Long]): DataFrame =
+    sample(df, grp, hash, tieKey, _ => quotas)
 
   /** Equal-representation rebalance: budget = `n_total · num / den` rows,
     * split evenly across the observed groups, each capped by availability
@@ -51,14 +51,11 @@ object Mixing {
     * SQL-replayable: quota_g = min(n_g, budget div |groups|)).
     */
   def rebalanceEqual(df: DataFrame, grp: String, hash: Column, tieKey: Column,
-      num: Long, den: Long): DataFrame = {
-    val h = df.withColumn("__h", hash)
-    val counts = RobustStats.bucketCounts(h, grp, col("__h"), W)
-    val nG = counts.map { case (g, bs) => g -> bs.map(_._2).sum }
-    val perG = nG.values.sum * num / den / nG.size
-    quotaSampleWith(h, grp, tieKey, nG.map { case (g, n) => g -> math.min(n, perG) },
-      counts)
-  }
+      num: Long, den: Long): DataFrame =
+    sample(df, grp, hash, tieKey, { nG =>
+      val perG = if (nG.isEmpty) 0L else nG.values.sum * num / den / nG.size
+      nG.map { case (g, n) => g -> math.min(n, perG) }
+    })
 
   /** Temperature-flattened rebalance (the multilingual α-sampling rule of
     * mC4 / XLM-R with α = 1/2): group g's share of the `n_total · num /
@@ -72,43 +69,36 @@ object Mixing {
     * misround for n ≤ 2^52 (the nearest double to √(k²−1) is below k for
     * all k < 2^25 since the gap 1/(2k) exceeds the ulp k·2^−52), so the
     * SQL twin `floor(sqrt(n))` lands on the same integer. Same two-pass
-    * histogram rank search as [[rebalanceEqual]] — no full-table sort.
+    * rank search as [[rebalanceEqual]] — no full-table sort.
     */
   def rebalanceTemperature(df: DataFrame, grp: String, hash: Column,
-      tieKey: Column, num: Long, den: Long): DataFrame = {
-    val h = df.withColumn("__h", hash)
-    val counts = RobustStats.bucketCounts(h, grp, col("__h"), W)
-    val nG = counts.map { case (g, bs) => g -> bs.map(_._2).sum }
-    val w = nG.map { case (g, n) => g -> math.sqrt(n.toDouble).toLong }
-    val wSum = w.values.sum
-    val budget = nG.values.sum * num / den
-    quotaSampleWith(h, grp, tieKey,
-      nG.map { case (g, n) => g -> math.min(n, budget * w(g) / wSum) }, counts)
-  }
+      tieKey: Column, num: Long, den: Long): DataFrame =
+    sample(df, grp, hash, tieKey, { nG =>
+      val w = nG.map { case (g, n) => g -> math.sqrt(n.toDouble).toLong }
+      val wSum = w.values.sum
+      val budget = nG.values.sum * num / den
+      nG.map { case (g, n) => g -> math.min(n, budget * w(g) / wSum) }
+    })
 
-  /** Shared core over a precomputed pass-1 histogram (so rebalanceEqual
-    * pays two passes total, not three). `df` already carries `__h`. */
-  private def quotaSampleWith(df: DataFrame, grp: String, tieKey: Column,
-      quotas: Map[String, Long], counts: Map[String, Seq[(Long, Long)]])
-      : DataFrame = {
-    val nG = counts.map { case (g, bs) => g -> bs.map(_._2).sum }
-    // groups kept whole (quota >= n) need no rank search
-    val whole = nG.keySet.filter(g => quotas.getOrElse(g, 0L) >= nG(g))
-    val searched = quotas.collect {
+  /** The quota-smallest rows per group by `(hash, tieKey)`, where
+    * `quotaOf` maps the groups' row counts to their quotas. Groups kept
+    * whole (quota ≥ n) need no rank; every other group with a quota ≥ 1
+    * asks the search for its quota-th hash. */
+  private def sample(df: DataFrame, grp: String, hash: Column, tieKey: Column,
+      quotaOf: Map[String, Long] => Map[String, Long]): DataFrame = {
+    val h = df.withColumn("__h", hash)
+    def cut(nG: Map[String, Long]): Map[String, Long] = quotaOf(nG).collect {
       case (g, q) if nG.contains(g) && q >= 1 && q < nG(g) => g -> q
     }
-    val thresholds: Map[String, (Long, Long)] = if (searched.isEmpty) Map.empty
-    else {
-      val rb = searched.map { case (g, q) => g -> RobustStats.rankBucket(counts(g), q) }
-      val vals = RobustStats.valueCounts(df, grp, col("__h"), W,
-        rb.map { case (g, (b0, _)) => g -> Set(b0) })
-      searched.map { case (g, q) =>
-        val (_, cBefore) = rb(g)
-        val inBkt = vals(g)
-        val v = RobustStats.pickAtRank(inBkt, cBefore, q)
-        val below = cBefore + inBkt.takeWhile(_._1 < v).map(_._2).sum
-        g -> (v, q - below) // (quota-th hash, rows to take from its ties)
-      }
+    val found = RobustStats.search(h, col(grp), col("__h"),
+      RobustStats.bucketOf(col("__h"), W))(cut(_).map { case (g, q) => g -> Seq(q) })
+    val nG = found.map { case (g, (n, _)) => g -> n }
+    val quotas = quotaOf(nG)
+    val whole = nG.keySet.filter(g => quotas.getOrElse(g, 0L) >= nG(g))
+    // (quota-th hash, rows to take from its ties)
+    val thresholds: Map[String, (Long, Long)] = cut(nG).map { case (g, q) =>
+      val (v, below) = found(g)._2.head
+      g -> (v, q - below)
     }
     def orFalse(ps: Iterable[Column]): Column =
       ps.reduceOption(_ || _).getOrElse(lit(false))
@@ -119,10 +109,10 @@ object Mixing {
       thresholds.map { case (g, (v, _)) => col(grp) === lit(g) && col("__h") === lit(v) })
     val tieQuota = if (thresholds.isEmpty) lit(0L)
     else RobustStats.caseByGroup(grp, thresholds.map { case (g, (_, t)) => g -> lit(t) })
-    val ties = df.filter(tiePred)
+    val ties = h.filter(tiePred)
       .withColumn("__rn", row_number().over(Window.partitionBy(col(grp)).orderBy(tieKey)))
       .filter(col("__rn") <= tieQuota)
       .drop("__rn")
-    df.filter(mainPred).unionByName(ties).drop("__h")
+    h.filter(mainPred).unionByName(ties).drop("__h")
   }
 }

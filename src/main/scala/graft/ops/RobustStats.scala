@@ -1,26 +1,38 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 
-/** Robust-statistics primitives built for the 100 TB shape: exact
-  * rank-medians without ever sorting the fact table inside a
-  * low-cardinality-partitioned window.
+/** The engine's one driver-assisted rank search: exact order statistics
+  * and global running sums without ever sorting the fact table inside a
+  * low-cardinality-partitioned (or unpartitioned) window.
   *
   * The naive exact median (`row_number` over a window partitioned by the
   * group key) is correct but becomes a single-task straggler when the
   * group key has a handful of values: the whole table funnels through
-  * |groups| sort partitions. The machinery here is a driver-assisted
-  * two-level rank search instead:
+  * |groups| sort partitions. Every exact quantile, quota sample, weighted
+  * median and global running sum in the engine instead goes through the
+  * helpers here:
   *
-  *   1. ONE pass: count rows per (group, fixed-width value bucket) — a
-  *      map-side-combinable aggregate whose output is bounded by
-  *      groups × (value range / width), never by n. Collected to the
-  *      driver, a running sum locates the single bucket containing the
-  *      target rank plus the exact count below it.
-  *   2. ONE pass: per-value counts inside just that bucket — output
-  *      bounded by width / value quantum (e.g. cents). The driver walks
-  *      the sorted values to the exact rank-target value.
+  *   - [[histogram]]: ONE pass counting rows (or summing an integral
+  *     weight) per (group, key) — a map-side-combinable aggregate whose
+  *     output is bounded by groups × key domain, never by n — collected
+  *     to the driver.
+  *   - [[walk]]: the driver's cumulative walk over a histogram to the key
+  *     holding a target rank, plus the exact mass below that key.
+  *   - [[search]]: the two-level rank search built from those two. Pass 1
+  *     histograms fixed-width value buckets and walks to the bucket of
+  *     every requested rank; pass 2 collects per-value counts inside just
+  *     those buckets (bounded by width / value quantum) and walks to the
+  *     exact value. [[rankValues]], [[rankValuesMulti]], the quota
+  *     sampler in [[Mixing]] and the weighted median all run it.
+  *   - [[binOf]]: driver-computed boundaries back into the plan as a
+  *     scan-stage bin index (`#{b < u}`).
+  *   - [[prefixSum]]: the distributed running sum — range-partition,
+  *     one total per partition collected, exclusive offsets added back
+  *     as a CASE literal (packing, sorted-neighborhood ranks, sweep
+  *     lines).
   *
   * Every cluster-side operation is an embarrassingly parallel scan + a
   * combinable aggregate with bounded output; the driver only ever touches
@@ -39,183 +51,102 @@ import org.apache.spark.sql.functions._
   * quotient within one bucket of an integer boundary is ≥ `1/widthU`
   * away — far beyond double's ~1e-9 ulp at these magnitudes — so the
   * rounded division can never cross the floor boundary.
+  *
+  * Edge inputs: an empty frame yields an empty result from every entry
+  * point, and a NULL rank key fails with a message naming its group.
   */
 object RobustStats {
 
-  /** Exact lower median of `u` per group plus the search state reused by
-    * downstream derivations (deviation buckets, threshold counts).
-    *
-    * @param n       group row count
-    * @param med     the unscaled value at rank `(n+1) div 2` — an actual
-    *                data value
-    * @param bkt0    the bucket that contained the target rank
-    * @param buckets all (bucketId, count) pairs for the group, ascending
-    */
-  case class MedianResult(n: Long, med: Long, bkt0: Long,
-      buckets: Seq[(Long, Long)])
-
   /** Integer bucket id of an unscaled-long column (see object doc for the
     * float-exactness argument). */
-  def bucketOf(u: Column, widthU: Long): Column =
+  private[graft] def bucketOf(u: Column, widthU: Long): Column =
     floor(u.cast("double") / lit(widthU.toDouble)).cast("long")
 
-  /** One pass: rows per (group, fixed-width bucket of `u`), collected.
-    * Output cardinality is groups × (range/width) — domain-bounded.
-    */
-  def bucketCounts(df: DataFrame, grp: String, u: Column, widthU: Long)
-      : Map[String, Seq[(Long, Long)]] =
-    df.groupBy(col(grp), bucketOf(u, widthU).as("bkt"))
-      .agg(count(lit(1)).as("c")).collect()
+  /** One pass: rows (or the total of the non-negative integral weight
+    * `wt`: a row of weight w counts as w copies of its key) per (group,
+    * key), collected as each group's ascending (key, mass) pairs. `grp`
+    * must be a string column and `key` a long column. */
+  private[graft] def histogram(df: DataFrame, grp: Column, key: Column,
+      wt: Option[Column] = None): Map[String, Seq[(Long, Long)]] =
+    df.groupBy(grp, key.as("k"))
+      .agg(wt.fold(count(lit(1)))(sum(_)).as("c")).collect()
       .groupBy(_.getString(0))
       .map { case (g, rows) =>
-        g -> rows.map(r => (r.getLong(1), r.getLong(2))).sortBy(_._1).toSeq
+        g -> rows.map { r =>
+          require(!r.isNullAt(1), s"RobustStats: group '$g' has NULL values — " +
+            "filter or coalesce them before ranking")
+          (r.getLong(1), r.getLong(2))
+        }.sortBy(_._1).toSeq
       }
 
-  /** One pass: per-value counts restricted to the given buckets per group,
-    * collected. Output cardinality is buckets × (width/quantum) —
-    * domain-bounded.
-    */
-  def valueCounts(df: DataFrame, grp: String, u: Column, widthU: Long,
-      wanted: Map[String, Set[Long]]): Map[String, Seq[(Long, Long)]] = {
-    val bkt = bucketOf(u, widthU)
-    val pred = wanted.map { case (g, bs) =>
-      col(grp) === lit(g) && bkt.isin(bs.toSeq: _*)
-    }.reduce(_ || _)
-    df.filter(pred)
-      .groupBy(col(grp), u.as("u")).agg(count(lit(1)).as("c")).collect()
-      .groupBy(_.getString(0))
-      .map { case (g, rows) =>
-        g -> rows.map(r => (r.getLong(1), r.getLong(2))).sortBy(_._1).toSeq
-      }
-  }
-
-  /** One pass: total WEIGHT per (group, fixed-width bucket of `u`) — the
-    * weighted sibling of [[bucketCounts]] (`wt` must be a non-negative
-    * integral column; a row with weight w counts as w copies of its
-    * value). Same domain-bounded output contract.
-    */
-  def wBucketCounts(df: DataFrame, grp: String, u: Column, wt: Column,
-      widthU: Long): Map[String, Seq[(Long, Long)]] =
-    df.groupBy(col(grp), bucketOf(u, widthU).as("bkt"))
-      .agg(sum(wt).as("c")).collect()
-      .groupBy(_.getString(0))
-      .map { case (g, rows) =>
-        g -> rows.map(r => (r.getLong(1), r.getLong(2))).sortBy(_._1).toSeq
-      }
-
-  /** One pass: per-value total weights restricted to the given buckets per
-    * group — the weighted sibling of [[valueCounts]]. */
-  def wValueCounts(df: DataFrame, grp: String, u: Column, wt: Column,
-      widthU: Long, wanted: Map[String, Set[Long]]): Map[String, Seq[(Long, Long)]] = {
-    val bkt = bucketOf(u, widthU)
-    val pred = wanted.map { case (g, bs) =>
-      col(grp) === lit(g) && bkt.isin(bs.toSeq: _*)
-    }.reduce(_ || _)
-    df.filter(pred)
-      .groupBy(col(grp), u.as("u")).agg(sum(wt).as("c")).collect()
-      .groupBy(_.getString(0))
-      .map { case (g, rows) =>
-        g -> rows.map(r => (r.getLong(1), r.getLong(2))).sortBy(_._1).toSeq
-      }
-  }
-
-  /** Driver walk: locate the lower-median target rank `(n+1) div 2` in a
-    * group's ascending bucket counts → (bkt0, countBelowBkt0, target, n).
-    */
-  def rankTarget(buckets: Seq[(Long, Long)]): (Long, Long, Long, Long) = {
-    val n = buckets.map(_._2).sum
-    val target = (n + 1) / 2
-    var cum = 0L
-    val hit = buckets.find { case (_, c) =>
-      val found = cum + c >= target
-      if (!found) cum += c
-      found
-    }.getOrElse(throw new IllegalStateException("rank target outside histogram"))
-    (hit._1, cum, target, n)
-  }
-
-  /** Driver walk: the value at `target` given ascending (value, count)
-    * pairs that start at cumulative rank `cBefore`.
-    */
-  def pickAtRank(values: Seq[(Long, Long)], cBefore: Long,
-      target: Long): Long = {
-    var cum = cBefore
-    values.find { case (_, c) =>
-      val found = cum + c >= target
-      if (!found) cum += c
-      found
-    }.map(_._1)
-      .getOrElse(throw new IllegalStateException("rank target outside bucket"))
-  }
-
-  /** Driver walk: locate an ARBITRARY target rank in ascending bucket
-    * counts → (bucket, countBelowBucket). `target` must be in [1, n].
-    */
-  def rankBucket(buckets: Seq[(Long, Long)], target: Long): (Long, Long) = {
-    var cum = 0L
-    val hit = buckets.find { case (_, c) =>
-      val found = cum + c >= target
-      if (!found) cum += c
-      found
-    }.getOrElse(throw new IllegalStateException("rank target outside histogram"))
-    (hit._1, cum)
-  }
-
-  /** Exact value at a caller-chosen rank per group — the grouped
-    * order-statistic without a sort (two jobs: bucket histogram +
-    * in-bucket value counts; see the object doc for the scale argument).
-    * Groups absent from `targets`, and targets outside [1, n], are
-    * dropped. Returns per group the value `v` at the rank and the exact
-    * `#{u < v}` (callers doing exact-quota selection need the tie split).
-    */
-  def exactRankValue(df: DataFrame, grp: String, u: Column, widthU: Long,
-      targets: Map[String, Long]): Map[String, (Long, Long)] = {
-    val counts = bucketCounts(df, grp, u, widthU)
-    val wanted = targets.flatMap { case (g, t) =>
-      counts.get(g).filter(bs => t >= 1 && t <= bs.map(_._2).sum)
-        .map(bs => g -> rankBucket(bs, t))
+  /** Driver: each ascending (key, mass) pair with the mass before it. */
+  private[graft] def exclusive[K](counts: Seq[(K, Long)]): Seq[(K, Long, Long)] =
+    counts.zip(counts.scanLeft(0L)(_ + _._2)).map { case ((k, c), before) =>
+      (k, c, before)
     }
-    if (wanted.isEmpty) return Map.empty
-    val vals = valueCounts(df, grp, u, widthU,
-      wanted.map { case (g, (b0, _)) => g -> Set(b0) })
-    wanted.map { case (g, (b0, cBefore)) =>
-      val inBkt = vals(g)
-      val v = pickAtRank(inBkt, cBefore, targets(g))
-      // #{u < v} = histogram prefix below b0 + in-bucket values below v
-      val below = cBefore + inBkt.takeWhile(_._1 < v).map(_._2).sum
-      g -> (v, below)
+
+  /** Driver walk: the key of ascending (key, mass) pairs that holds rank
+    * `target` (1-based) → (key, mass below it). */
+  private[graft] def walk(hist: Seq[(Long, Long)], target: Long): (Long, Long) =
+    exclusive(hist).collectFirst {
+      case (k, c, before) if before + c >= target => (k, before)
+    }.getOrElse(throw new IllegalStateException("rank target outside histogram"))
+
+  /** Rows of `grp` whose bucket is among that group's wanted buckets. */
+  private def inBuckets(grp: Column, bkt: Column,
+      wanted: Map[String, Set[Long]]): Column =
+    wanted.map { case (g, bs) => grp === lit(g) && bkt.isin(bs.toSeq: _*) }
+      .reduce(_ || _)
+
+  /** The two-pass rank search (see the object doc): one [[histogram]] of
+    * `bkt` (a bucketing of `u` monotone in `u`, e.g. [[bucketOf]]), then
+    * one of `u` restricted to the buckets holding a requested rank.
+    * `ranksOf` maps every group's mass n to the ranks wanted per group
+    * (each in [1, n]; a group it leaves out costs no pass-2 work).
+    * Returns per group its mass n and, per requested rank in order, the
+    * value at that rank and the exact mass below the value (callers doing
+    * exact-quota selection need the tie split). Two jobs; one on an empty
+    * frame or when no rank is requested. */
+  private[graft] def search(df: DataFrame, grp: Column, u: Column,
+      bkt: Column, wt: Option[Column] = None)(
+      ranksOf: Map[String, Long] => Map[String, Seq[Long]])
+      : Map[String, (Long, Seq[(Long, Long)])] = {
+    val hist = histogram(df, grp, bkt, wt)
+    val ns = hist.map { case (g, bs) => g -> bs.map(_._2).sum }
+    val located = ranksOf(ns).collect {
+      case (g, ts) if hist.contains(g) && ts.nonEmpty =>
+        g -> ts.map(t => t -> walk(hist(g), t))
+    }
+    val wanted = located.map { case (g, ls) => g -> ls.map(_._2._1).toSet }
+    val vals = if (wanted.isEmpty) Map.empty[String, Seq[(Long, Long)]]
+      else histogram(df.filter(inBuckets(grp, bkt, wanted)), grp, u, wt)
+    ns.map { case (g, n) =>
+      g -> (n, located.getOrElse(g, Seq.empty).map { case (t, (b0, cBefore)) =>
+        // pass 2 holds every wanted bucket's values in one ascending run,
+        // and the wanted buckets below b0 come first: the walk over the
+        // run starts their pass-1 mass before b0's cumulative count
+        val skip = cBefore - hist(g).collect {
+          case (b, c) if b < b0 && wanted(g)(b) => c
+        }.sum
+        val (v, below) = walk(vals(g), t - skip)
+        (v, skip + below)
+      })
     }
   }
 
-  /** Exact values at MULTIPLE caller-chosen ranks per group in two jobs
-    * total (one bucket histogram + one value-count pass over the union of
-    * located buckets). `ranksOf` maps a group's row count n to its target
+  /** Exact values at caller-chosen ranks per group — the grouped
+    * order-statistic without a sort, in two jobs ([[search]] over
+    * [[bucketOf]] buckets of width `widthU`; see the object doc for the
+    * scale argument). `ranksOf` maps a group's row count n to its target
     * ranks (each must be in [1, n]) — so callers can ask for quantile
     * grids without a prior count job. Returns the values in `ranksOf`
-    * order. Safe for negative unscaled values: the in-bucket filter uses
-    * Math.floorDiv, matching [[bucketOf]]'s floor semantics (truncating
-    * `/` would disagree below zero and leave the filter empty).
+    * order; safe for negative unscaled values.
     */
   def rankValues(df: DataFrame, grp: String, u: Column, widthU: Long,
-      ranksOf: Long => Seq[Long]): Map[String, Seq[Long]] = {
-    val counts = bucketCounts(df, grp, u, widthU)
-    val located = counts.map { case (g, bs) =>
-      val n = bs.map(_._2).sum
-      g -> ranksOf(n).map(t => t -> rankBucket(bs, t))
-    }
-    val vals = valueCounts(df, grp, u, widthU,
-      located.map { case (g, ls) => g -> ls.map(_._2._1).toSet })
-    located.map { case (g, ls) =>
-      g -> ls.map { case (t, (b0, cBefore)) =>
-        // floorDiv, NOT truncating /: bucket ids come from bucketOf
-        // (floor of a double division), and for negative unscaled values
-        // trunc and floor disagree (u = -1, width 10: 0 vs -1) — the
-        // filter would come up empty and pickAtRank would throw
-        pickAtRank(vals(g).filter(v => Math.floorDiv(v._1, widthU) == b0),
-          cBefore, t)
-      }
-    }
-  }
+      ranksOf: Long => Seq[Long]): Map[String, Seq[Long]] =
+    search(df, col(grp), u, bucketOf(u, widthU))(
+      _.map { case (g, n) => g -> ranksOf(n) })
+      .map { case (g, (_, picks)) => g -> picks.map(_._1) }
 
   /** [[rankValues]] for SEVERAL metrics of ONE frame in two jobs TOTAL —
     * the fused form a multi-metric quantiler (RFM's three quartile sets)
@@ -232,72 +163,22 @@ object RobustStats {
     * `metrics`: (name, unscaled-long column, bucket width); names must
     * be unique. `ranksOf` maps each metric's row count n to its target
     * ranks, as in [[rankValues]]. Returns name → values in ranksOf
-    * order.
-    *
-    * Preconditions (r17 advice — fail with a message, not an opaque
-    * reduce/NPE deep in the driver walk): metric columns must be
-    * NON-NULL on every row (pre-filter or coalesce them first — a rank
-    * over nulls is undefined here). An EMPTY `df` returns each metric
-    * mapped to an empty value list (there is no rank to locate).
+    * order; an EMPTY `df` maps each metric to an empty value list.
     */
   def rankValuesMulti(df: DataFrame,
       metrics: Seq[(String, Column, Long)],
       ranksOf: Long => Seq[Long]): Map[String, Seq[Long]] = {
     require(metrics.map(_._1).distinct.size == metrics.size,
       "rankValuesMulti: metric names must be unique")
-    val widths = metrics.map { case (g, _, w) => g -> w }.toMap
     val stacked = df.select(explode(array(metrics.map { case (g, u, w) =>
       struct(lit(g).as("g"), u.cast("long").as("u"),
         bucketOf(u, w).as("bkt"))
     }: _*)).as("m")).select(col("m.g").as("g"), col("m.u").as("u"),
       col("m.bkt").as("bkt"))
-    // job 1: every metric's bucket histogram in one aggregation
-    val counts = stacked.groupBy(col("g"), col("bkt"))
-      .agg(count(lit(1)).as("c")).collect()
-      .groupBy(_.getString(0))
-      .map { case (g, rows) =>
-        g -> rows.map { r =>
-          require(!r.isNullAt(1),
-            s"rankValuesMulti: metric '$g' has NULL values — filter or " +
-              "coalesce them before ranking")
-          (r.getLong(1), r.getLong(2))
-        }.sortBy(_._1).toSeq
-      }
-    if (counts.isEmpty) return metrics.map(_._1 -> Seq.empty[Long]).toMap
-    val located = counts.map { case (g, bs) =>
-      val n = bs.map(_._2).sum
-      g -> ranksOf(n).map(t => t -> rankBucket(bs, t))
-    }
-    // job 2: every metric's in-bucket value counts in one pass
-    val pred = located.map { case (g, ls) =>
-      col("g") === lit(g) && col("bkt").isin(ls.map(_._2._1).distinct: _*)
-    }.reduce(_ || _)
-    val vals = stacked.filter(pred)
-      .groupBy(col("g"), col("u")).agg(count(lit(1)).as("c")).collect()
-      .groupBy(_.getString(0))
-      .map { case (g, rows) =>
-        g -> rows.map(r => (r.getLong(1), r.getLong(2))).sortBy(_._1).toSeq
-      }
-    located.map { case (g, ls) =>
-      g -> ls.map { case (t, (b0, cBefore)) =>
-        pickAtRank(vals(g).filter(v => Math.floorDiv(v._1, widths(g)) == b0),
-          cBefore, t)
-      }
-    }
-  }
-
-  /** Exact lower median per group in two jobs (bucket pass + in-bucket
-    * pass). See the object doc for the scale argument.
-    */
-  def exactLowerMedian(df: DataFrame, grp: String, u: Column, widthU: Long)
-      : Map[String, MedianResult] = {
-    val counts = bucketCounts(df, grp, u, widthU)
-    val targets = counts.map { case (g, bs) => g -> rankTarget(bs) }
-    val vals = valueCounts(df, grp, u, widthU,
-      targets.map { case (g, (b0, _, _, _)) => g -> Set(b0) })
-    targets.map { case (g, (b0, cBefore, target, n)) =>
-      g -> MedianResult(n, pickAtRank(vals(g), cBefore, target), b0, counts(g))
-    }
+    val found = search(stacked, col("g"), col("u"), col("bkt"))(
+      _.map { case (g, n) => g -> ranksOf(n) })
+    if (found.isEmpty) metrics.map(_._1 -> Seq.empty[Long]).toMap
+    else found.map { case (g, (_, picks)) => g -> picks.map(_._1) }
   }
 
   /** A per-group CASE literal: `when(grp = k, value(k))` chain. Injects
@@ -308,6 +189,38 @@ object RobustStats {
     values.tail.foldLeft(when(col(grp) === lit(values.head._1), values.head._2)) {
       case (acc, (k, c)) => acc.when(col(grp) === lit(k), c)
     }
+
+  /** Bin index of `c` against ascending driver-computed boundaries:
+    * `#{b ∈ bounds : c > b}` as a scan-stage sum of CASE literals, so a
+    * row equal to a boundary falls in the lower bin and coincident
+    * boundaries skip bins deterministically. */
+  private[graft] def binOf(c: Column, bounds: Seq[Long]): Column =
+    bounds.foldLeft(lit(0)) { (acc, b) => acc + when(c > lit(b), 1).otherwise(0) }
+
+  /** A global running sum without a single-partition window: range-
+    * partition `df` on `keys`, tag each row with its partition, checkpoint
+    * (the totals job and the final pass share one compute), collect one
+    * `total` aggregate per partition (numPartitions scalars of driver
+    * metadata, the class of AQE statistics), and add to `within` — the
+    * caller's running expression over the window it is given (rows of
+    * one partition; the caller orders it and sets the frame) — the
+    * exclusive offset of the partitions before, as a CASE literal.
+    * Returns `df`'s columns plus `name`. One job.
+    */
+  private[graft] def prefixSum(df: DataFrame, keys: Seq[Column], total: Column,
+      name: String)(within: WindowSpec => Column): DataFrame = {
+    val parts = df.repartitionByRange(keys: _*)
+      .withColumn("__pid", spark_partition_id())
+      .localCheckpoint(false)
+    val totals = parts.groupBy(col("__pid")).agg(total.as("__tot"))
+      .collect().map(r => r.getInt(0) -> r.getLong(1)).sortBy(_._1)
+    val offset = exclusive(totals.toSeq).foldLeft(lit(0L)) {
+      case (rest, (pid, _, before)) =>
+        when(col("__pid") === pid, lit(before)).otherwise(rest)
+    }
+    parts.withColumn(name, within(Window.partitionBy(col("__pid"))) + offset)
+      .drop("__pid")
+  }
 
   /** Per-group exact median, exact MAD, and exact `2·dev > 3·mad` outlier
     * count — in TWO cluster passes total.
@@ -346,10 +259,15 @@ object RobustStats {
       : Map[String, (Long, Long, Long, Long)] = {
     val W = widthU
     // ---- pass 1: (group, bucket) histogram --------------------------------
-    val counts = bucketCounts(df, grp, u, W)
+    val counts = histogram(df, col(grp), bucketOf(u, W))
     val hist: Map[String, Map[Long, Long]] =
       counts.map { case (g, bs) => g -> bs.toMap }
-    val targets = counts.map { case (g, bs) => g -> rankTarget(bs) }
+    // per group: (b0, mass below b0, median rank, n)
+    val targets = counts.map { case (g, bs) =>
+      val n = bs.map(_._2).sum
+      val (b0, cBelow) = walk(bs, (n + 1) / 2)
+      g -> (b0, cBelow, (n + 1) / 2, n)
+    }
 
     // ---- driver: derive the bucket set to collect, per group --------------
     case class Cover(b0: Long, jlo: Long, jhi: Long, buckets: Set[Long])
@@ -394,7 +312,9 @@ object RobustStats {
 
     // ---- pass 2: value counts over the covered buckets --------------------
     val vals: Map[String, Seq[(Long, Long)]] =
-      valueCounts(df, grp, u, W, covers.map { case (g, cv) => g -> cv.buckets })
+      if (covers.isEmpty) Map.empty
+      else histogram(df.filter(inBuckets(col(grp), bucketOf(u, W),
+        covers.map { case (g, cv) => g -> cv.buckets })), col(grp), u)
 
     // ---- driver: resolve exactly ------------------------------------------
     targets.map { case (g, (b0, cBelowB0, target, n)) =>
@@ -402,17 +322,17 @@ object RobustStats {
       def c(k: Long): Long = h.getOrElse(k, 0L)
       val Cover(_, jlo, jhi, covered) = covers(g)
       val vs = vals(g) // ascending (value, count)
-      def bkt(v: Long): Long = v / W // u ≥ 0: trunc == floor
+      def bkt(v: Long): Long = Math.floorDiv(v, W)
       // exact median: histogram prefix + b0's values
-      val med = pickAtRank(vs.filter(v => bkt(v._1) == b0), cBelowB0, target)
+      val med = walk(vs.filter(v => bkt(v._1) == b0), target - cBelowB0)._1
       // cBefore = #{dev < D0}, D0 = max(0, jlo−1)·W: full buckets strictly
       // inside the open interval (med−D0, med+D0) from pass 1, exact
       // partials from the collected boundary buckets
       val d0 = math.max(0L, jlo - 1) * W
       val cBefore = if (d0 == 0) 0L
       else {
-        val loBkt = (med - d0) / W // = b0 − (jlo−1) — collected
-        val hiBkt = (med + d0) / W // = b0 + (jlo−1) — collected
+        val loBkt = bkt(med - d0) // = b0 − (jlo−1) — collected
+        val hiBkt = bkt(med + d0) // = b0 + (jlo−1) — collected
         require(covered(loBkt) && covered(hiBkt), "cBefore boundary bucket not covered")
         val full = ((loBkt + 1) until hiBkt).map(c).sum
         val partial = vs.collect {
@@ -432,7 +352,7 @@ object RobustStats {
         .filter(_._1 >= d0)
         .toSeq.groupBy(_._1).map { case (d, xs) => (d, xs.map(_._2).sum) }
         .toSeq.sortBy(_._1)
-      val mad = pickAtRank(devCountsW, cBefore, target)
+      val mad = walk(devCountsW, target - cBefore)._1
       // the coverage proofs above rely on the bracket — fail loudly rather
       // than return a silently-wrong pick if it is ever violated
       require(mad > d0 - 1 && mad <= jhi * W,

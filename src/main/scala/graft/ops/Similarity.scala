@@ -708,14 +708,6 @@ object Similarity {
     collectMeans(withCodes)
   }
 
-  /** ADC (asymmetric-distance) cosine of a float query against a
-    * PQ-CODED candidate: the candidate contributes only its m byte
-    * codes — its reconstruction x̂ (sub-centroid concatenation) comes
-    * from the broadcast literal codebook, so the candidate scan reads
-    * 8 code bytes per row, never the raw floats. Floored at 1e-6 like
-    * every cosine in the family. `cb` must be j-dense per subspace on
-    * the codes actually emitted (guaranteed when codes came from
-    * [[pqCodesExpr]] over the same codebook). */
   /** The codebook as a dense m × 16 literal grid with NULL at (s, j)
     * holes (empty training clusters) — shared by the ADC scorers. NULL,
     * never a zero fill: a code read against a stale/mismatched codebook
@@ -741,6 +733,14 @@ object Similarity {
         case None    => lit(null).cast("array<double>")
       }: _*)): _*)
 
+  /** ADC (asymmetric-distance) cosine of a float query against a
+    * PQ-CODED candidate: the candidate contributes only its m byte
+    * codes — its reconstruction x̂ (sub-centroid concatenation) comes
+    * from the broadcast literal codebook, so the candidate scan reads
+    * 8 code bytes per row, never the raw floats. Floored at 1e-6 like
+    * every cosine in the family. `cb` must be j-dense per subspace on
+    * the codes actually emitted (guaranteed when codes came from
+    * [[pqCodesExpr]] over the same codebook). */
   def pqAdcCosine(qv: Column, codes: Column,
       cb: Seq[(Int, Int, Seq[Double])], m: Int, subDim: Int): Column = {
     val cbLit = pqCbLit(pqCbGrid("pqAdcCosine", cb, m))

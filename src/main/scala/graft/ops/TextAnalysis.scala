@@ -342,11 +342,10 @@ object TextAnalysis {
     * truncated downstream by [[chunks]], not here).
     *
     * The prefix sum is DISTRIBUTED, not a global-order window (which Spark
-    * executes on a single reducer): range-partition on the order key,
-    * prefix-sum WITHIN each partition, and add per-partition offsets
-    * computed from partition totals — the zipWithIndex pattern. The totals
-    * collect is numPartitions scalars of driver-side metadata (same class
-    * as AQE statistics), not a data-path collect.
+    * executes on a single reducer): [[RobustStats.prefixSum]] range-
+    * partitions on the order key, prefix-sums WITHIN each partition, and
+    * adds per-partition offsets computed from partition totals (a
+    * numPartitions-scalar driver collect, not a data-path collect).
     *
     * Returns the input columns + (n_tokens, bin).
     */
@@ -354,27 +353,14 @@ object TextAnalysis {
       orderCol: String, budgetTokens: Int): org.apache.spark.sql.DataFrame = {
     require(budgetTokens > 0, s"budgetTokens=$budgetTokens must be positive")
     import org.apache.spark.sql.expressions.Window
-    val parts = df
-      .withColumn("n_tokens", tokenCount(col(textCol)))
-      .repartitionByRange(col(orderCol))
-      .withColumn("__pid", spark_partition_id())
-      .localCheckpoint(false) // totals pass + final pass share one compute
-    val totals = parts.groupBy(col("__pid"))
-      .agg(sum(col("n_tokens")).as("__ptot"))
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).sortBy(_._1)
-    var acc = 0L
-    val exclusive = totals.map { case (pid, tot) =>
-      val o = pid -> acc; acc += tot; o
-    }.toMap
-    val offsetCol = totals.map(_._1).foldLeft(lit(0L)) { (rest, pid) =>
-      when(col("__pid") === pid, lit(exclusive(pid))).otherwise(rest)
+    val packed = RobustStats.prefixSum(
+        df.withColumn("n_tokens", tokenCount(col(textCol))),
+        Seq(col(orderCol)), sum(col("n_tokens")), "__before") { w =>
+      coalesce(sum(col("n_tokens")).over(w.orderBy(col(orderCol))
+        .rowsBetween(Window.unboundedPreceding, -1)), lit(0L))
     }
-    val w = Window.partitionBy(col("__pid")).orderBy(col(orderCol))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    parts
-      .withColumn("__before",
-        coalesce(sum(col("n_tokens")).over(w), lit(0L)) + offsetCol)
+    packed
       .withColumn("bin", (col("__before") / budgetTokens).cast("bigint"))
-      .drop("__pid", "__before")
+      .drop("__before")
   }
 }

@@ -1456,10 +1456,10 @@ object AnalyticQueries {
     * sum ordered by (ts, starts-before-ends).
     *
     * Scale shape: the running sum is NOT a single-partition global window —
-    * endpoints are `repartitionByRange` on ts, each partition computes its
-    * local running sum, and the per-partition exclusive offsets come from
-    * a numPartitions-scalar totals collect folded into a CASE literal (the
-    * zipWithIndex/packBins pattern; driver state is partition-count-sized
+    * [[RobustStats.prefixSum]] range-partitions the endpoints on ts, each
+    * partition computes its local running sum, and the per-partition
+    * exclusive offsets come from a numPartitions-scalar totals collect
+    * folded into a CASE literal (driver state is partition-count-sized
     * metadata). The final reduction is a single `max(struct(run, -ts))` —
     * peak and its earliest timestamp in one aggregate, no second pass over
     * the data. Although ties on (ts, delta) make per-row `run` values
@@ -1483,21 +1483,12 @@ object AnalyticQueries {
         .localCheckpoint(false)
       val endpoints = sessions.select(col("s").as("ts"), lit(1).as("delta"))
         .unionAll(sessions.select(col("e").as("ts"), lit(-1).as("delta")))
-      val parts = endpoints.repartitionByRange(col("ts"))
-        .withColumn("__pid", spark_partition_id())
-        .localCheckpoint(false) // totals pass + final pass share one compute
-      val totals = parts.groupBy(col("__pid")).agg(sum(col("delta")).as("d"))
-        .collect().map(r => r.getInt(0) -> r.getLong(1)).sortBy(_._1)
-      var acc = 0L
-      val excl = totals.map { case (p, d) => val o = p -> acc; acc += d; o }.toMap
-      val offset = totals.map(_._1).foldLeft(lit(0L)) { (rest, p) =>
-        when(col("__pid") === p, lit(excl(p))).otherwise(rest)
+      val runs = RobustStats.prefixSum(endpoints, Seq(col("ts")),
+          sum(col("delta")), "run") { w =>
+        sum(col("delta")).over(w.orderBy(col("ts").asc, col("delta").desc)
+          .rowsBetween(Window.unboundedPreceding, Window.currentRow))
       }
-      val w = Window.partitionBy(col("__pid"))
-        .orderBy(col("ts").asc, col("delta").desc)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      parts
-        .withColumn("run", sum(col("delta")).over(w) + offset)
+      runs
         .agg(
           sum(when(col("delta") === 1, 1L).otherwise(0L)).as("n_sessions"),
           max(struct(col("run"), (-col("ts")).as("nts"))).as("m"))

@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.QueryDef
 import graft.ops.SessionCache.MemoOps
-import graft.ops.{Tables, TextAnalysis}
+import graft.ops.{RobustStats, Tables, TextAnalysis}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -77,13 +77,10 @@ object KeywordQueries {
       .groupBy(col("bin")).agg(count(lit(1)).as("c"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
     val n = grid.map(_._2).sum
-    var off = 0L
-    val tagged = grid.map { case (b, c) =>
+    val tagged = RobustStats.exclusive(grid.toSeq).map { case (b, c, off) =>
       val first = ((off + 1) * k + n - 1) / n
       val last = ((off + c) * k + n - 1) / n
-      val row = (b, off, if (first == last) first else -1L)
-      off += c
-      row
+      (b, off, if (first == last) first else -1L)
     }
     val interiorGrid = tagged.collect { case (b, _, bk) if bk >= 0 =>
       (b, bk) }.toSeq.toDF("bin", "bucket")

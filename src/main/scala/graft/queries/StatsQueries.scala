@@ -528,9 +528,7 @@ object StatsQueries {
       val bounds = RobustStats.rankValues(ref, "event_type", col("u"), W,
         n => (1 to 7).map(i => math.max(1L, i * n / 8)))
       val bin = RobustStats.caseByGroup("event_type", bounds.map { case (g, bs) =>
-        g -> bs.foldLeft(lit(0)) { (acc, b) =>
-          acc + when(col("u") > lit(b), 1).otherwise(0)
-        }
+        g -> RobustStats.binOf(col("u"), bs)
       })
       val counts = ev
         .withColumn("bin", bin)

@@ -1302,9 +1302,7 @@ object WarehouseQueries {
           (dec(col("l_extendedprice")) * lit(10000)).cast("long").as("u"))
       val bounds = RobustStats.rankValues(x, "g", col("u"), W,
         n => (1 until K).map(i => math.max(1L, i * n / K)))("all")
-      val bin = bounds.foldLeft(lit(0)) { (acc, b) =>
-        acc + when(col("u") > lit(b), 1).otherwise(0)
-      }
+      val bin = RobustStats.binOf(col("u"), bounds)
       val hi = (1 until K - 1).foldLeft(
         when(col("bin") === 0, lit(bounds(0).toDouble / 10000.0))) { (acc, i) =>
         acc.when(col("bin") === i, lit(bounds(i).toDouble / 10000.0))
@@ -1462,9 +1460,7 @@ object WarehouseQueries {
       val bounds = RobustStats.rankValues(x, fl, col("u"), W,
         n => (1 to 3).map(i => math.max(1L, i * n / 4)))
       val bin = RobustStats.caseByGroup(fl, bounds.map { case (g, bs) =>
-        g -> bs.foldLeft(lit(0)) { (acc, b) =>
-          acc + when(col("u") > lit(b), 1).otherwise(0)
-        }
+        g -> RobustStats.binOf(col("u"), bs)
       })
       x.withColumn("bin", bin)
         .groupBy(col(fl), col("bin"))
@@ -1562,24 +1558,18 @@ object WarehouseQueries {
         .select((dec(col("l_extendedprice")) * lit(10000)).cast("long").as("u"),
           col("l_extendedprice").cast("double").as("v"))
         .filter(col("v") > 0)
-      val hist = x
-        .groupBy(floor(floor((log(col("v")) / lnG) * 1e9 + 0.5) / 1e9)
-          .cast("long").as("b"))
-        .agg(count(lit(1)).as("c"))
-        .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
+      val hist = RobustStats.histogram(x, lit("all"),
+          floor(floor((log(col("v")) / lnG) * 1e9 + 0.5) / 1e9).cast("long"))
+        .getOrElse("all", throw new IllegalStateException(
+          "q_ddsketch_quantiles requires a non-empty lineitem table " +
+            "(no positive prices to bucket)"))
       val n = hist.map(_._2).sum
       val targets = qs.map { case (num, den, _) => (n * num + den - 1) / den }
       val exact = RobustStats.rankValues(
         x.select(lit("all").as("g"), col("u")), "g", col("u"), 160000L,
         _ => targets)("all")
       val rows = qs.zipWithIndex.map { case ((_, _, label), i) =>
-        val t = targets(i)
-        var cum = 0L
-        val b = hist.find { case (_, c) =>
-          val hit = cum + c >= t; if (!hit) cum += c; hit
-        }.getOrElse(throw new IllegalStateException(
-          "q_ddsketch_quantiles requires a non-empty lineitem table " +
-            "(no positive prices to bucket)"))._1
+        val b = RobustStats.walk(hist, targets(i))._1
         // harmonic-mean midpoint of the FLOOR-bucket [γ^b, γ^(b+1)):
         // x̂ = 2·lo·hi/(lo+hi) = 2γ^(b+1)/(γ+1), max rel err (γ−1)/(γ+1) = α
         val est = 2.0 * math.pow(gamma, b + 1) / (gamma + 1.0)
@@ -1640,12 +1630,13 @@ object WarehouseQueries {
     * and Monetary (DECIMAL-summed spend) are each quartiled EXACTLY and
     * combined into a `100·r + 10·f + m` segment code with per-segment
     * counts and average spend. Quartile boundaries come from
-    * [[RobustStats.rankValues]] — the same two-pass bucket rank search as
-    * q_equidepth_bins, three metrics on one checkpointed customer-domain
-    * frame (six histogram-bounded jobs, no sort anywhere); scoring is a
-    * scan-stage CASE chain over nine broadcast boundary literals. Rows
-    * equal to a boundary fall in the lower quartile (tie-invariant,
-    * value-at-rank convention), so both engines derive identical codes.
+    * [[RobustStats.rankValuesMulti]] — the same two-pass bucket rank
+    * search as q_equidepth_bins, three metrics stacked on one checkpointed
+    * customer-domain frame (two histogram-bounded collects, no sort
+    * anywhere); scoring is a scan-stage [[RobustStats.binOf]] chain over
+    * nine broadcast boundary literals. Rows equal to a boundary fall in
+    * the lower quartile (tie-invariant, value-at-rank convention), so
+    * both engines derive identical codes.
     */
   private val rfmSegments = QueryDef(
     fn = (spark, dir) => {
@@ -1674,11 +1665,10 @@ object WarehouseQueries {
       val rb = bounds("r")
       val fb = bounds("f")
       val mb = bounds("mu")
-      def score(c: Column, bs: Seq[Long]): Column =
-        bs.foldLeft(lit(0)) { (acc, b) => acc + when(c > lit(b), 1).otherwise(0) }
       cust
-        .select((score(col("r"), rb) * 100 + score(col("f"), fb) * 10
-          + score(col("mu"), mb)).as("segment"), col("m"))
+        .select((RobustStats.binOf(col("r"), rb) * 100
+          + RobustStats.binOf(col("f"), fb) * 10
+          + RobustStats.binOf(col("mu"), mb)).as("segment"), col("m"))
         .groupBy(col("segment"))
         .agg(count(lit(1)).as("n_customers"),
           r6(sum(col("m")).cast("double") / count(lit(1))).as("avg_monetary"))
@@ -1786,13 +1776,12 @@ object WarehouseQueries {
     * (each row counts as its quantity). l_returnflag has 3 values: the
     * rank-window form would funnel the whole table through 3 sort
     * partitions, the exact shape the judge flagged on q_outlier_mad.
-    * Instead [[RobustStats.wBucketCounts]]/[[RobustStats.wValueCounts]]
-    * run the same two-pass bucket rank search with WEIGHT totals in place
-    * of row counts — the driver walk ([[RobustStats.rankTarget]] /
-    * [[RobustStats.pickAtRank]]) is unchanged because a weighted median
-    * is just the rank walk over the weight-expanded multiset. Target
-    * rank `(W+1) div 2`, lower-value convention, tie-invariant; integral
-    * weights (l_quantity is whole units) keep every total exact in longs.
+    * Instead [[RobustStats.search]] runs the same two-pass bucket rank
+    * search with WEIGHT totals in place of row counts — the driver walk
+    * is unchanged because a weighted median is just the rank walk over
+    * the weight-expanded multiset. Target rank `(W+1) div 2`, lower-value
+    * convention, tie-invariant; integral weights (l_quantity is whole
+    * units) keep every total exact in longs.
     */
   private val weightedMedian = QueryDef(
     fn = (spark, dir) => {
@@ -1802,14 +1791,11 @@ object WarehouseQueries {
         .select(col(fl),
           (dec(col("l_extendedprice")) * lit(10000)).cast("long").as("u"),
           col("l_quantity").cast("long").as("wt"))
-      val counts = RobustStats.wBucketCounts(x, fl, col("u"), col("wt"), W)
-      val targets = counts.map { case (g, bs) => g -> RobustStats.rankTarget(bs) }
-      val vals = RobustStats.wValueCounts(x, fl, col("u"), col("wt"), W,
-        targets.map { case (g, (b0, _, _, _)) => g -> Set(b0) })
-      val out = targets.keys.toSeq.sorted.map { g =>
-        val (b0, cBefore, target, wTot) = targets(g)
-        val med = RobustStats.pickAtRank(
-          vals(g).filter(_._1 / W == b0), cBefore, target)
+      val found = RobustStats.search(x, col(fl), col("u"),
+          RobustStats.bucketOf(col("u"), W), Some(col("wt")))(
+        _.map { case (g, wTot) => g -> Seq((wTot + 1) / 2) })
+      val out = found.keys.toSeq.sorted.map { g =>
+        val (wTot, Seq((med, _))) = found(g)
         org.apache.spark.sql.Row(g, wTot,
           java.math.BigDecimal.valueOf(med, 4).doubleValue)
       }

@@ -67,4 +67,11 @@ class MixingSpec extends SparkSpec {
     // budget = 318/2 = 159, per-group 159/3 = 53; fr capped at 30
     assert(out === Map("en" -> 53L, "fr" -> 30L, "de" -> 53L))
   }
+
+  test("rebalanceEqual and rebalanceTemperature on an empty frame sample nothing") {
+    val df = Seq.empty[(String, Long)].toDF("g", "id")
+    val h = pmod(col("id") * 2654435761L, lit(1L << 32))
+    assert(Mixing.rebalanceEqual(df, "g", h, col("id"), 1, 2).count() === 0L)
+    assert(Mixing.rebalanceTemperature(df, "g", h, col("id"), 1, 2).count() === 0L)
+  }
 }

@@ -35,12 +35,6 @@ class PricenowPipelineSpec extends SparkSpec {
     .toDF("product_id", "d", "price", "ord")
     .withColumn("valid_at", to_date(col("d"))).drop("d")
 
-  /** Jobs launched by `body`, counted under a job group of its own. */
-  private def jobsOf(body: => Unit): Int = {
-    val group = s"jobs-of-${System.nanoTime()}"
-    jobsDuring(group)(body).count(_._1 == group)
-  }
-
   test("full EP1->EP2->EP3 run lands both tables; rerun converges") {
     val conn = DriverManager.getConnection(url)
     try {

@@ -68,13 +68,30 @@ class RobustStatsSpec extends SparkSpec {
     check(Map("bnd" -> (Seq.fill(10)(160L) ++ Seq.fill(9)(0L) ++ Seq.fill(9)(319L))), 16L)
   }
 
-  test("exactLowerMedian agrees with madProfile's median") {
+  test("rankValues' lower median agrees with madProfile's median") {
     val rnd = new scala.util.Random(7)
     val us = (0 until 301).map(_ => rnd.nextInt(5000).toLong)
     val df = us.map("g" -> _).toDF("g", "u")
-    val m = RobustStats.exactLowerMedian(df, "g", col("u"), 16L)("g")
-    assert(m.med === brute(us)._2)
-    assert(m.n === 301L)
+    val m = RobustStats.rankValues(df, "g", col("u"), 16L, n => Seq((n + 1) / 2))("g")
+    assert(m === Seq(brute(us)._2))
+    assert(RobustStats.madProfile(df, "g", col("u"), 16L)("g")._2 === m.head)
+  }
+
+  test("rankValues and madProfile edge inputs: empty frame and NULL values") {
+    val empty = Seq.empty[(String, Long)].toDF("g", "u")
+    assert(RobustStats.rankValues(empty, "g", col("u"), 16L, n => Seq((n + 1) / 2))
+      === Map.empty)
+    assert(RobustStats.madProfile(empty, "g", col("u"), 16L) === Map.empty)
+    val withNull = Seq[(String, java.lang.Long)](
+      ("a", 1L), ("a", null), ("a", 3L)).toDF("g", "u")
+    val e1 = intercept[IllegalArgumentException] {
+      RobustStats.rankValues(withNull, "g", col("u"), 16L, n => Seq((n + 1) / 2))
+    }
+    assert(e1.getMessage.contains("group 'a' has NULL values"))
+    val e2 = intercept[IllegalArgumentException] {
+      RobustStats.madProfile(withNull, "g", col("u"), 16L)
+    }
+    assert(e2.getMessage.contains("group 'a' has NULL values"))
   }
 
   test("rankValuesMulti equals per-metric rankValues (fused 2-job form)") {

@@ -48,6 +48,12 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     jobs.asScala.toSeq
   }
 
+  /** Jobs launched by `body`, counted under a job group of its own. */
+  def jobsOf(body: => Unit): Int = {
+    val group = s"jobs-of-${System.nanoTime()}"
+    jobsDuring(group)(body).count(_._1 == group)
+  }
+
   override protected def afterAll(): Unit = {
     // keep the session for sibling suites; stopped by the JVM exit
     super.afterAll()
