@@ -117,6 +117,25 @@ object Similarity {
         Window.partitionBy(col(key)).orderBy(col(score).desc, col(tie).asc)))
       .filter(col(as) <= k)
 
+  /** The evaluation stage of every recall gate: how many (query_id,
+    * neighbor_id) rows of `truth` each named result returned. Each result
+    * left-joins onto the truth with a flag, and one aggregate counts
+    * `n_truth` and one hit column per result, named as given. An empty
+    * result counts 0 hits. A result must hold each pair at most once, as
+    * a top-k does. */
+  private[graft] def hits(truth: DataFrame, results: (String, DataFrame)*): DataFrame = {
+    val pair = Seq("query_id", "neighbor_id")
+    results.foldLeft(truth.select(pair.map(col): _*)) { case (df, (name, r)) =>
+        df.join(r.select(pair.map(col): _*).withColumn(s"in_$name", lit(1L)), pair, "left")
+      }
+      .agg(count(lit(1)).as("n_truth"), results.map { case (name, _) =>
+        sum(coalesce(col(s"in_$name"), lit(0L))).as(name) }: _*)
+  }
+
+  /** Recall as the exact integer ⌊hits·10⁶/n_truth⌋ of a [[hits]] row. */
+  private[graft] def recallE6(hits: String = "hits"): Column =
+    expr(s"$hits * 1000000 div n_truth")
+
   /** Approximate shortlist → exact re-rank: per query, the `shortlist`
     * best rows of `approx` by its approximate `score` (ties by candidate
     * id `tie`), then the raw vectors of `raw` (neighbor_id, cv) attach to

@@ -23,13 +23,16 @@ import org.apache.spark.sql.functions._
 object AnnEvalQueries {
 
   private val K = 10
-  /** Prefix-dimension budgets (full width last — that run IS the truth). */
+  /** Prefix-dimension budgets (full width last — that run must return
+    * the exact truth). */
   private val DIMS = Seq(8, 16, 32, 64)
 
   /** Matryoshka-style truncation sweep: brute-force top-10 per probe at
-    * each prefix-dim budget, scored against the full-width run's exact
-    * top-10. Emits hits + recall per budget with the structural contract
-    * recall(64) = 1. MEASURED (sf0.001/sf0.01/sf0.1): dims 8 →
+    * each prefix-dim budget, scored against the family's exact top-10
+    * truth ([[ExtensionQueries.annTruth]], full width). Emits hits +
+    * recall per budget with the structural contract recall(64) = 1: the
+    * 64-dim point is a fresh full-width run, so `full_exact` checks it
+    * against the memoized truth. MEASURED (sf0.001/sf0.01/sf0.1): dims 8 →
     * 0.10/0.11/0, 16 → 0.20/0.21/0.075, 32 → 0.275/0.35/0.2375,
     * 64 → 1.0 everywhere — these synthetic
     * embeddings spread information uniformly across dimensions (they are
@@ -42,24 +45,15 @@ object AnnEvalQueries {
       val emb = Tables.embeddings(spark, dir)
         .select(col("vec_id"), col("embedding"))
         .localCheckpoint(false)
-      def topAt(d: Int) = {
+      val truth = ExtensionQueries.annTruth(spark, dir)
+      DIMS.map { d =>
         val s = emb.select(col("vec_id"),
           slice(col("embedding"), 1, d).as("embedding"))
-        Similarity.bruteForceTopK(s, s.filter(col("vec_id") < 8),
-            "vec_id", "embedding", K)
-          .select(col("query_id"), col("neighbor_id"))
-      }
-      val truth = topAt(64)
-      val perD = DIMS.map { d =>
-        truth
-          .join(topAt(d).withColumn("hit", lit(1L)),
-            Seq("query_id", "neighbor_id"), "left")
-          .agg(count(lit(1)).as("n_truth"),
-            sum(coalesce(col("hit"), lit(0L))).as("hits"))
+        Similarity.hits(truth, "hits" -> Similarity.bruteForceTopK(s,
+            s.filter(ExtensionQueries.isProbe()), "vec_id", "embedding", K))
           .select(lit(d.toLong).as("dims"), col("n_truth"), col("hits"))
-      }
-      perD.reduce(_ union _)
-        .withColumn("recall_e6", expr("hits * 1000000 div n_truth"))
+      }.reduce(_ union _)
+        .withColumn("recall_e6", Similarity.recallE6())
         .withColumn("full_exact",
           col("dims") =!= 64 || col("hits") === col("n_truth"))
         .orderBy("dims")
@@ -81,35 +75,16 @@ object AnnEvalQueries {
          |  SELECT dims, query_id, neighbor_id, row_number() OVER (
          |    PARTITION BY dims, query_id ORDER BY cos DESC, neighbor_id ASC) AS r
          |  FROM sc) WHERE r <= $K),
-         |truth AS (SELECT query_id, neighbor_id FROM rk WHERE dims = 64),
-         |agg AS (SELECT b.dims, COUNT(*) AS n_truth,
-         |    CAST(SUM(CASE WHEN rk.query_id IS NOT NULL THEN 1 ELSE 0 END)
-         |      AS BIGINT) AS hits
-         |  FROM b CROSS JOIN truth t
-         |  LEFT JOIN rk ON rk.dims = b.dims AND rk.query_id = t.query_id
-         |    AND rk.neighbor_id = t.neighbor_id
-         |  GROUP BY b.dims)
+         |${ExtensionQueries.dTruth(K)},
+         |${ExtensionQueries.dSweepHits("b", "dims", "rk")}
          |SELECT CAST(dims AS BIGINT) AS dims, n_truth, hits,
          |  hits * 1000000 // n_truth AS recall_e6,
          |  (dims <> 64 OR hits = n_truth) AS full_exact
          |FROM agg ORDER BY dims""".stripMargin
     })
 
-  /** Filtered ANN: top-10 under a metadata predicate (label <= 2, ~30%
-    * of the corpus), answered two ways over the SAME 16×4 sign-LSH
-    * index — filter-then-search (bucket-join against the ALLOWED subset
-    * only) vs search-then-filter (unfiltered top-10, then drop
-    * disallowed rows). Both are scored against the exact filtered
-    * truth. The second strategy is the classic filtered-ANN failure:
-    * it can return at most the allowed members of the unfiltered
-    * top-10, so `returned` collapses toward k·selectivity and recall
-    * drops with it — the measured gap is the reason filtered search
-    * must push the predicate INTO candidate generation (at 100 TB: the
-    * label is a partition/bucket column of the key index, so
-    * filter-then-search prunes index partitions instead of scanning
-    * them). */
   /** Memoized exact FILTERED truth (label <= 2) for the fixed 8-probe
-    * set — the filtered sibling of ExtensionQueries.annBruteTruth, under
+    * set — the filtered sibling of [[ExtensionQueries.annTruth]], under
     * the same session-memo contract: the full-corpus re-rank runs once
     * per session, the query still evaluates both strategies against it
     * per pass. */
@@ -120,7 +95,7 @@ object AnnEvalQueries {
           .select(col("vec_id"), col("embedding"), col("label"))
           .localCheckpoint(false)
         Similarity.bruteForceTopK(emb.filter(col("label") <= 2),
-            emb.filter(col("vec_id") < 8), "vec_id", "embedding", K)
+            emb.filter(ExtensionQueries.isProbe()), "vec_id", "embedding", K)
           .select(col("query_id"), col("neighbor_id"))
           .localCheckpoint(true)
       }
@@ -146,7 +121,7 @@ object AnnEvalQueries {
           .localCheckpoint(false)
         val keys = Similarity.signKeys(emb, "vec_id", "embedding",
           nBits = 4, tables = 16)
-        val cand = keys.filter(col("id") < 8)
+        val cand = keys.filter(ExtensionQueries.isProbe("id"))
           .withColumnRenamed("id", "query_id")
           .join(keys.withColumnRenamed("id", "neighbor_id"), Seq("l", "bucket"))
           .filter(col("query_id") =!= col("neighbor_id"))
@@ -160,6 +135,19 @@ object AnnEvalQueries {
           .localCheckpoint(true)
       }
 
+  /** Filtered ANN: top-10 under a metadata predicate (label <= 2, ~30%
+    * of the corpus), answered two ways over the SAME 16×4 sign-LSH
+    * index — filter-then-search (bucket-join against the ALLOWED subset
+    * only) vs search-then-filter (unfiltered top-10, then drop
+    * disallowed rows). Both are scored against the exact filtered
+    * truth. The second strategy is the classic filtered-ANN failure:
+    * it can return at most the allowed members of the unfiltered
+    * top-10, so `returned` collapses toward k·selectivity and recall
+    * drops with it — the measured gap is the reason filtered search
+    * must push the predicate INTO candidate generation (at 100 TB: the
+    * label is a partition/bucket column of the key index, so
+    * filter-then-search prunes index partitions instead of scanning
+    * them). */
   private val annFiltered = QueryDef(
     fn = (spark, dir) => {
       val truthF = annFilteredTruth(spark, dir)
@@ -171,18 +159,11 @@ object AnnEvalQueries {
       val post = topK(scoredAll)
         .filter(col("nl") <= 2)
         .select(col("query_id"), col("neighbor_id"))
-      def evalOf(name: String, res: org.apache.spark.sql.DataFrame) = {
-        val returned = res.agg(count(lit(1)).as("returned"))
-        truthF
-          .join(res.withColumn("hit", lit(1L)),
-            Seq("query_id", "neighbor_id"), "left")
-          .agg(count(lit(1)).as("n_truth"),
-            sum(coalesce(col("hit"), lit(0L))).as("hits"))
-          .crossJoin(broadcast(returned))
+      def evalOf(name: String, res: org.apache.spark.sql.DataFrame) =
+        Similarity.hits(truthF, "hits" -> res)
+          .crossJoin(broadcast(res.agg(count(lit(1)).as("returned"))))
           .select(lit(name).as("strategy"), col("n_truth"),
-            col("returned"), col("hits"),
-            expr("hits * 1000000 div n_truth").as("recall_e6"))
-      }
+            col("returned"), col("hits"), Similarity.recallE6().as("recall_e6"))
       evalOf("pre_filter", pre).union(evalOf("post_filter", post))
         .orderBy("strategy")
     },
@@ -252,33 +233,24 @@ object AnnEvalQueries {
         .select(col("vec_id"), col("embedding"))
         .localCheckpoint(false)
       val probes = emb.select(col("vec_id").as("query_id"),
-        col("embedding").as("qv")).filter(col("query_id") < 8)
+        col("embedding").as("qv")).filter(ExtensionQueries.isProbe("query_id"))
       val maxAbs = array_max(transform(col("embedding"),
         x => abs(x.cast("double"))))
       val codes = emb.select(col("vec_id").as("neighbor_id"),
         when(maxAbs > 0, transform(col("embedding"),
           x => floor(x.cast("double") / maxAbs * 127 + 0.5).cast("int")))
           .as("codes"))
-      // exact top-10 truth from the session memo (identical rows to the
-      // inline bruteForceTopK this replaced — same corpus, probes, k,
-      // tie-breaks; one full-corpus re-rank per session, not per pass)
-      val truth = ExtensionQueries.annTruth10(spark, dir)
-        .select(col("query_id"), col("neighbor_id"))
       val approx = codes.filter(col("codes").isNotNull)
         .join(broadcast(probes), col("query_id") =!= col("neighbor_id"))
         .withColumn("acos", Similarity.cosineInt(col("qv"), col("codes")))
         .filter(col("acos").isNotNull)
       val rr = Similarity.rerankExact(approx, "acos", "neighbor_id", cTop,
           emb.select(col("vec_id").as("neighbor_id"), col("embedding").as("cv")), K)
-        .select(col("query_id"), col("neighbor_id"))
       val n = codes.agg(count(lit(1)).as("n_corpus"))
-      truth.join(rr.withColumn("hit", lit(1L)),
-          Seq("query_id", "neighbor_id"), "left")
-        .agg(count(lit(1)).as("n_truth"),
-          sum(coalesce(col("hit"), lit(0L))).as("hits"))
+      Similarity.hits(ExtensionQueries.annTruth(spark, dir), "hits" -> rr)
         .crossJoin(broadcast(n))
         .select(col("n_truth"), col("hits"),
-          expr("hits * 1000000 div n_truth").as("recall_e6"),
+          Similarity.recallE6().as("recall_e6"),
           (col("n_corpus") * 256L).as("bytes_raw"),
           (col("n_corpus") * 68L).as("bytes_sq8"))
     },
@@ -297,11 +269,7 @@ object AnnEvalQueries {
          |      + 0.5) AS INTEGER)) AS cd
          |  FROM v WHERE ma > 0),
          |q AS (SELECT vec_id AS query_id, e AS qv FROM v WHERE vec_id < 8),
-         |truth AS (SELECT query_id, neighbor_id FROM (
-         |  SELECT q.query_id, c.vec_id AS neighbor_id, row_number() OVER (
-         |    PARTITION BY q.query_id
-         |    ORDER BY ${ExtensionQueries.dCos("q.qv", "c.e")} DESC, c.vec_id ASC) AS r
-         |  FROM v c CROSS JOIN q WHERE c.vec_id <> q.query_id) WHERE r <= $K),
+         |${ExtensionQueries.dTruth(K)},
          |ap AS (SELECT query_id, neighbor_id FROM (
          |  SELECT q.query_id, cds.neighbor_id, row_number() OVER (
          |    PARTITION BY q.query_id ORDER BY
@@ -316,17 +284,12 @@ object AnnEvalQueries {
          |    ORDER BY ${ExtensionQueries.dCos("q.qv", "c.e")} DESC, ap.neighbor_id ASC) AS r
          |  FROM ap JOIN q USING (query_id)
          |    JOIN v c ON ap.neighbor_id = c.vec_id) WHERE r <= $K),
-         |n AS (SELECT COUNT(*) AS n_corpus FROM cds)
-         |SELECT (SELECT COUNT(*) FROM truth) AS n_truth,
-         |  (SELECT COUNT(*) FROM truth t JOIN rr r
-         |     ON t.query_id = r.query_id AND t.neighbor_id = r.neighbor_id)
-         |    AS hits,
-         |  (SELECT COUNT(*) FROM truth t JOIN rr r
-         |     ON t.query_id = r.query_id AND t.neighbor_id = r.neighbor_id)
-         |    * 1000000 // (SELECT COUNT(*) FROM truth) AS recall_e6,
+         |n AS (SELECT COUNT(*) AS n_corpus FROM cds),
+         |${ExtensionQueries.dHits("hits" -> "rr")}
+         |SELECT n_truth, hits, hits * 1000000 // n_truth AS recall_e6,
          |  n.n_corpus * 256 AS bytes_raw,
          |  n.n_corpus * 68 AS bytes_sq8
-         |FROM n""".stripMargin
+         |FROM agg CROSS JOIN n""".stripMargin
     })
 
   val defs: Map[String, QueryDef] = Map(

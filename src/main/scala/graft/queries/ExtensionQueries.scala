@@ -1555,32 +1555,83 @@ object ExtensionQueries {
          |WHERE ${dCos("x.e", "y.e")} >= 0.2
          |ORDER BY id_a, id_b""".stripMargin))
 
-  /** Brute-force cosine top-5 ground truth for the fixed 8-query probe
-    * set, memoized per (session, dir) and checkpointed — the recall gate
-    * (q_ann_recall) and the standalone q_sim_ann_brute consume the
-    * IDENTICAL truth table, so the full-corpus re-rank runs once per
-    * session across the ANN family (round-9 verdict #7). Derives from
-    * trainedIvfCells level 0 so the base read shares the chain's lineage
-    * (the attribute-id note there). */
-  private def annBruteTruth(spark: org.apache.spark.sql.SparkSession,
-      dir: String): org.apache.spark.sql.DataFrame =
-    SessionCache.memo(spark, dir, "ann_truth") {
+  /** The fixed probe set of the ANN family: the first 8 vectors. Every
+    * search, recall gate and truth below evaluates these probes. */
+  private[queries] def isProbe(id: String = "vec_id"): org.apache.spark.sql.Column =
+    col(id) < 8
+
+  /** Exact cosine top-10 of the probe set over the full corpus, memoized
+    * per (session, dir) and checkpointed: the one truth of every ANN
+    * recall gate (LSH, IVF, IVF-PQ, SQ8, Matryoshka, kNN graph, graph
+    * search) and of q_sim_ann_brute, so the full-corpus re-rank runs once
+    * per session. A gate at k < 10 reads the `rank <= k` prefix:
+    * [[Similarity.topK]] numbers rows in one total order (cos desc,
+    * neighbor_id asc), so the prefix is the exact top-k row for row.
+    * Derives from trainedIvfCells level 0 (the memoized
+    * `Tables.embeddings` frame) so the base read shares the chain's
+    * lineage (the attribute-id note there). [[dTruth]] is its oracle. */
+  private[queries] def annTruth(spark: org.apache.spark.sql.SparkSession,
+      dir: String, k: Int = 10): org.apache.spark.sql.DataFrame = {
+    require(k <= 10, s"the probe truth holds the top 10, not $k")
+    SessionCache.memo(spark, dir, "ann_truth10") {
       val emb = trainedIvfCells(spark, dir, 0)
-      Similarity.bruteForceTopK(emb, emb.filter(col("vec_id") < 8),
-          "vec_id", "embedding", k = 5)
+      Similarity.bruteForceTopK(emb, emb.filter(isProbe()),
+          "vec_id", "embedding", k = 10)
         .localCheckpoint(true)
+    }.filter(col("rank") <= k)
+  }
+
+  /** DuckDB twin of [[annTruth]]: the CTE `truth (query_id, neighbor_id,
+    * cos, rank)`, the exact top-`k` of the 8 probes computed from
+    * `embeddings`. */
+  private[queries] def dTruth(k: Int): String =
+    s"""truth AS (SELECT query_id, neighbor_id, cos, CAST(rank AS INTEGER) AS rank FROM (
+       |  SELECT *, row_number() OVER (
+       |    PARTITION BY query_id ORDER BY cos DESC, neighbor_id ASC) AS rank
+       |  FROM (SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
+       |          ${dCos("q.embedding", "c.embedding")} AS cos
+       |        FROM embeddings q JOIN embeddings c ON q.vec_id <> c.vec_id
+       |        WHERE q.vec_id < 8))
+       |  WHERE rank <= $k)""".stripMargin
+
+  /** DuckDB twin of [[Similarity.hits]]: the CTE `agg (n_truth, name…)`,
+    * the rows of `truth` each named (query_id, neighbor_id) relation
+    * returned. */
+  private[queries] def dHits(results: (String, String)*): String = {
+    val named = results.zipWithIndex
+    val counts = named.map { case ((name, _), i) =>
+      s"CAST(SUM(CASE WHEN r$i.query_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS $name"
     }
+    val joins = named.map { case ((_, rel), i) =>
+      s"LEFT JOIN $rel r$i\n    ON t.query_id = r$i.query_id AND t.neighbor_id = r$i.neighbor_id"
+    }
+    s"""agg AS (SELECT COUNT(*) AS n_truth,
+       |    ${counts.mkString(",\n    ")}
+       |  FROM truth t
+       |  ${joins.mkString("\n  ")})""".stripMargin
+  }
+
+  /** [[dHits]] per sweep point: the CTE `agg (point, n_truth, hits)`, one
+    * row per `point` value of the `pts` CTE, counting the rows of `truth`
+    * that `res` (point, query_id, neighbor_id) returned at that point. */
+  private[queries] def dSweepHits(pts: String, point: String, res: String): String =
+    s"""agg AS (SELECT p.$point, COUNT(*) AS n_truth,
+       |    CAST(SUM(CASE WHEN r.query_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS hits
+       |  FROM $pts p CROSS JOIN truth t
+       |  LEFT JOIN $res r ON r.$point = p.$point
+       |    AND t.query_id = r.query_id AND t.neighbor_id = r.neighbor_id
+       |  GROUP BY p.$point)""".stripMargin
 
   /** Memoized amplified-LSH top-5 for the fixed 8-query probe set — the
     * recall gate (q_ann_recall, alphabetically the family's first
     * toucher) and the standalone q_sim_ann_lsh consume the IDENTICAL
     * result, so the bucket-index build + candidate join + re-rank run
-    * once per session (same contract as [[annBruteTruth]]). */
+    * once per session (same contract as [[annTruth]]). */
   private def annLshTopK(spark: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame =
     SessionCache.memo(spark, dir, "ann_lsh") {
       val emb = trainedIvfCells(spark, dir, 0)
-      Similarity.lshTopKSelf(emb, col("vec_id") < 8,
+      Similarity.lshTopKSelf(emb, isProbe(),
           "vec_id", "embedding", k = 5, nBits = 4, tables = 16)
         .localCheckpoint(true)
     }
@@ -1592,22 +1643,9 @@ object ExtensionQueries {
     SessionCache.memo(spark, dir, "ann_ivf") {
       val emb = trainedIvfCells(spark, dir, 0)
       val cells = trainedIvfCells(spark, dir, 2)
-      Similarity.ivfTopK(cells, emb.filter(col("vec_id") < 8),
+      Similarity.ivfTopK(cells, emb.filter(isProbe()),
           trainedCentFrame(spark, dir, 3),
           "vec_id", "embedding", "label", k = 5, nprobe = 2)
-        .localCheckpoint(true)
-    }
-
-  /** Memoized exact top-10 truth for the fixed 8-query probe set (the
-    * k=10 sibling of [[annBruteTruth]]) — one full-corpus re-rank per
-    * session shared by the IVF-PQ/rerank recall gates and the SQ8
-    * readout (was inlined at three call sites). */
-  private[queries] def annTruth10(spark: org.apache.spark.sql.SparkSession,
-      dir: String): org.apache.spark.sql.DataFrame =
-    SessionCache.memo(spark, dir, "ann_truth10") {
-      val emb = trainedIvfCells(spark, dir, 0)
-      Similarity.bruteForceTopK(emb, emb.filter(col("vec_id") < 8),
-          "vec_id", "embedding", k = 10)
         .localCheckpoint(true)
     }
 
@@ -1616,12 +1654,12 @@ object ExtensionQueries {
     * SWEEP queries (q_ivf_multiprobe, q_ivf_rerank) derive every depth
     * p as the `crank <= p` restriction (candidate sets nest by
     * construction), so the cell ranking runs once per session instead
-    * of once per sweep point per pass (the [[annBruteTruth]] contract;
+    * of once per sweep point per pass (the [[annTruth]] contract;
     * an index artifact — which cells each query probes). */
   private def ivfProbe5(spark: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame =
     SessionCache.memo(spark, dir, "ivf_probe5") {
-      val qs = trainedIvfCells(spark, dir, 0).filter(col("vec_id") < 8)
+      val qs = trainedIvfCells(spark, dir, 0).filter(isProbe())
       Similarity.probeCellsRanked(qs, trainedCentFrame(spark, dir, 3),
           "vec_id", "embedding", "label", nprobe = 5)
         .localCheckpoint(true)
@@ -1646,18 +1684,11 @@ object ExtensionQueries {
 
   private val annBrute = QueryDef(
     fn = (spark, dir) =>
-      annBruteTruth(spark, dir).orderBy("query_id", "rank"),
+      annTruth(spark, dir, 5).orderBy("query_id", "rank"),
     oracle = Some(
-      s"""WITH q AS (SELECT vec_id AS query_id, embedding AS qv
-         |           FROM embeddings WHERE vec_id < 8),
-         |c AS (SELECT vec_id AS neighbor_id, embedding AS cv FROM embeddings),
-         |scored AS (SELECT query_id, neighbor_id, ${dCos("qv", "cv")} AS cos
-         |           FROM c CROSS JOIN q WHERE query_id <> neighbor_id),
-         |ranked AS (SELECT *, row_number() OVER (
-         |  PARTITION BY query_id ORDER BY cos DESC, neighbor_id ASC) AS rank
-         |  FROM scored)
-         |SELECT query_id, neighbor_id, cos, CAST(rank AS INTEGER) AS rank
-         |FROM ranked WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin))
+      s"""WITH ${dTruth(5)}
+         |SELECT query_id, neighbor_id, cos, rank FROM truth
+         |ORDER BY query_id, rank""".stripMargin))
 
   /** AND-OR amplified sign-LSH ANN — 16 tables × 4 bits over the 64-dim
     * embeddings (one 8-bit table measured 1/40 recall; this family measures
@@ -2555,10 +2586,8 @@ object ExtensionQueries {
 
   private val annRecall = QueryDef(
     fn = (spark, dir) => {
-      def pairs(df: org.apache.spark.sql.DataFrame) =
-        df.select(col("query_id"), col("neighbor_id"))
       // The three index builds are INDEPENDENT eager materializations
-      // (brute truth, LSH buckets, IVF train+probe) — launch them as
+      // (exact truth, LSH buckets, IVF train+probe) — launch them as
       // concurrent Spark jobs so the scheduler fills otherwise-idle cores
       // during each build's stage tails (classic driver-side job-level
       // parallelism; on a cluster this is how a recall gate over several
@@ -2567,19 +2596,12 @@ object ExtensionQueries {
       import scala.concurrent.{Await, Future}
       import scala.concurrent.ExecutionContext.Implicits.global
       import scala.concurrent.duration.Duration
-      val fBrute = Future(annBruteTruth(spark, dir))
+      val fTruth = Future(annTruth(spark, dir, 5))
       val fLsh = Future(annLshTopK(spark, dir))
       val fIvf = Future(annIvfTopK(spark, dir))
-      val brute = pairs(Await.result(fBrute, Duration.Inf))
-      val lsh = pairs(Await.result(fLsh, Duration.Inf))
-      val ivf = pairs(Await.result(fIvf, Duration.Inf))
-      brute
-        .join(lsh.withColumn("in_lsh", lit(1)), Seq("query_id", "neighbor_id"), "left")
-        .join(ivf.withColumn("in_ivf", lit(1)), Seq("query_id", "neighbor_id"), "left")
-        .agg(
-          count(lit(1)).as("n_truth"),
-          sum(coalesce(col("in_lsh"), lit(0))).as("lsh_hits"),
-          sum(coalesce(col("in_ivf"), lit(0))).as("ivf_hits"))
+      Similarity.hits(Await.result(fTruth, Duration.Inf),
+          "lsh_hits" -> Await.result(fLsh, Duration.Inf),
+          "ivf_hits" -> Await.result(fIvf, Duration.Inf))
         .select(col("n_truth"), col("lsh_hits"), col("ivf_hits"),
           (col("lsh_hits").cast("double") >= col("n_truth") * 0.8).as("lsh_recall_ok"),
           (col("ivf_hits").cast("double") >= col("n_truth") * 0.35).as("ivf_recall_ok"))
@@ -2590,13 +2612,8 @@ object ExtensionQueries {
       val normQ = s"sqrt(${dDot("qv", "qv")})"
       s"""WITH ${dLloydCtes(2)},
          |q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings WHERE vec_id < 8),
-         |c AS (SELECT vec_id AS neighbor_id, embedding AS cv, label AS cell FROM embeddings),
          |tc AS (SELECT vec_id AS neighbor_id, e AS cv, cell FROM a2),
-         |brute AS (
-         |  SELECT query_id, neighbor_id FROM (
-         |    SELECT query_id, neighbor_id, row_number() OVER (
-         |      PARTITION BY query_id ORDER BY ${dCos("qv", "cv")} DESC, neighbor_id ASC) AS r
-         |    FROM c CROSS JOIN q WHERE query_id <> neighbor_id) WHERE r <= 5),
+         |${dTruth(5)},
          |vb AS (SELECT vec_id, embedding AS e,
          |  ${dLshKeys("embedding", tables = 16, nBits = 4)} AS keys FROM embeddings),
          |vk AS (SELECT vec_id, unnest(keys) AS key FROM vb),
@@ -2621,14 +2638,8 @@ object ExtensionQueries {
          |  SELECT query_id, neighbor_id FROM (
          |    SELECT query_id, neighbor_id, row_number() OVER (
          |      PARTITION BY query_id ORDER BY ${dCos("qv", "cv")} DESC, neighbor_id ASC) AS r
-         |    FROM tc JOIN qc USING (cell) WHERE query_id <> neighbor_id) WHERE r <= 5)
-         |,agg AS (
-         |  SELECT COUNT(*) AS n_truth,
-         |    CAST(SUM(CASE WHEN l.query_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS lsh_hits,
-         |    CAST(SUM(CASE WHEN i.query_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS ivf_hits
-         |  FROM brute b
-         |  LEFT JOIN lsh l ON b.query_id = l.query_id AND b.neighbor_id = l.neighbor_id
-         |  LEFT JOIN ivf i ON b.query_id = i.query_id AND b.neighbor_id = i.neighbor_id)
+         |    FROM tc JOIN qc USING (cell) WHERE query_id <> neighbor_id) WHERE r <= 5),
+         |${dHits("lsh_hits" -> "lsh", "ivf_hits" -> "ivf")}
          |SELECT n_truth, lsh_hits, ivf_hits,
          |  (CAST(lsh_hits AS DOUBLE) >= n_truth * 0.8) AS lsh_recall_ok,
          |  (CAST(ivf_hits AS DOUBLE) >= n_truth * 0.35) AS ivf_recall_ok
@@ -2637,14 +2648,14 @@ object ExtensionQueries {
 
   /** Multi-probe IVF sweep — the standard recall/cost knob of an IVF
     * index: probe the top-p nearest cells per query (p = 1, 2, 3, 5 of
-    * 10) and report top-5 recall against the shared brute-force truth at
+    * 10) and report top-5 recall against the shared exact truth at
     * each depth. One row per p, so the query IS the recall-vs-
     * scan-fraction curve an index operator reads before picking nprobe
     * in production. Candidate sets nest as p grows (the cell ranking is
     * fixed), so hits are monotone non-decreasing in p — spec-pinned.
     *
     * Consumes the memoized level-2 Lloyd chain, its literal probe
-    * centroids, and the memoized brute truth + nprobe=2 probe, so the
+    * centroids, and the memoized exact truth ([[annTruth]]), so the
     * marginal work is the p=1/3/5 probe joins (cell-keyed equi-joins;
     * at 100 TB the corpus is bucketed by cell and scan cost is
     * ~p/n_cells of brute force). Recall is emitted as the exact integer
@@ -2664,8 +2675,7 @@ object ExtensionQueries {
     * flip recall_ok). */
   private val ivfMultiprobe = QueryDef(
     fn = (spark, dir) => {
-      val truth = annBruteTruth(spark, dir)
-        .select(col("query_id"), col("neighbor_id"))
+      val truth = annTruth(spark, dir, 5)
       // ONE memoized cell ranking at the max depth + ONE memoized corpus
       // join + exact-cosine pass shared by all four sweep points (and by
       // q_ivf_rerank): depth p is the crank<=p restriction — candidate
@@ -2675,17 +2685,11 @@ object ExtensionQueries {
       // redundant scoring chains it removes at sf0.1); the session memo
       // keeps the one-build shape without the per-pass barrier.
       val scored = ivfScored5(spark, dir)
-      val perP = Seq(1, 2, 3, 5).map { p =>
-        val probed = Similarity.ivfTopKAt(scored, k = 5, nprobe = p)
-          .select(col("query_id"), col("neighbor_id"))
-        truth.join(probed.withColumn("hit", lit(1L)),
-            Seq("query_id", "neighbor_id"), "left")
-          .agg(count(lit(1)).as("n_truth"),
-            sum(coalesce(col("hit"), lit(0L))).as("hits"))
+      Seq(1, 2, 3, 5).map { p =>
+        Similarity.hits(truth, "hits" -> Similarity.ivfTopKAt(scored, k = 5, nprobe = p))
           .select(lit(p.toLong).as("nprobe"), col("n_truth"), col("hits"))
-      }
-      perP.reduce(_ union _)
-        .withColumn("recall_e6", expr("hits * 1000000 div n_truth"))
+      }.reduce(_ union _)
+        .withColumn("recall_e6", Similarity.recallE6())
         // integer cross-multiplied floor contract: 0.20/0.35/0.45/0.60
         // (under the measured per-depth minima; see the scaladoc curve)
         .withColumn("recall_ok",
@@ -2702,12 +2706,7 @@ object ExtensionQueries {
       val normQ = s"sqrt(${dDot("qv", "qv")})"
       s"""WITH ${dLloydCtes(2)},
          |q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings WHERE vec_id < 8),
-         |c AS (SELECT vec_id AS neighbor_id, embedding AS cv FROM embeddings),
-         |brute AS (
-         |  SELECT query_id, neighbor_id FROM (
-         |    SELECT query_id, neighbor_id, row_number() OVER (
-         |      PARTITION BY query_id ORDER BY ${dCos("qv", "cv")} DESC, neighbor_id ASC) AS r
-         |    FROM c CROSS JOIN q WHERE query_id <> neighbor_id) WHERE r <= 5),
+         |${dTruth(5)},
          |tc AS (SELECT vec_id AS neighbor_id, e AS cv, cell FROM a2),
          |qc AS (
          |  SELECT query_id, qv, cell, row_number() OVER (PARTITION BY query_id ORDER BY
@@ -2724,14 +2723,7 @@ object ExtensionQueries {
          |        ORDER BY ${dCos("qv", "cv")} DESC, neighbor_id ASC) AS r
          |    FROM tc JOIN probe USING (cell)
          |    WHERE probe.query_id <> tc.neighbor_id) WHERE r <= 5),
-         |agg AS (
-         |  SELECT ps.nprobe, COUNT(*) AS n_truth,
-         |    CAST(SUM(CASE WHEN i.query_id IS NOT NULL THEN 1 ELSE 0 END)
-         |      AS BIGINT) AS hits
-         |  FROM ps CROSS JOIN brute b
-         |  LEFT JOIN ivf i ON i.nprobe = ps.nprobe
-         |    AND b.query_id = i.query_id AND b.neighbor_id = i.neighbor_id
-         |  GROUP BY ps.nprobe)
+         |${dSweepHits("ps", "nprobe", "ivf")}
          |SELECT CAST(nprobe AS BIGINT) AS nprobe, n_truth, hits,
          |  CAST(hits * 1000000 // n_truth AS BIGINT) AS recall_e6,
          |  hits * 100 >= n_truth
@@ -2761,12 +2753,12 @@ object ExtensionQueries {
     * query (map-side), candidates come from the cell equi-join (at
     * 100 TB the corpus is BUCKETED by cell, so the candidate stage reads
     * ~p/n_cells of it), and the exact re-rank touches candidates only.
-    * Consumes the memoized Lloyd chain + a memoized k=10 brute truth. */
+    * Consumes the memoized Lloyd chain + the memoized exact top-10 truth
+    * ([[annTruth]]). */
   private val ivfRerank = QueryDef(
     fn = (spark, dir) => {
       val cells = trainedIvfCells(spark, dir, 2)
-      val truth = annTruth10(spark, dir)
-        .select(col("query_id"), col("neighbor_id"))
+      val truth = annTruth(spark, dir)
       val sizes = cells.groupBy(col("label").as("cell"))
         .agg(count(lit(1)).as("cell_n"))
       val nTotal = cells.agg(count(lit(1)).as("n_corpus"))
@@ -2780,12 +2772,8 @@ object ExtensionQueries {
       val qCells = ivfProbe5(spark, dir)
       val scored = ivfScored5(spark, dir)
       val perP = Seq(2, 3, 5).map { p =>
-        val reranked = Similarity.ivfTopKAt(scored, k = 10, nprobe = p)
-          .select(col("query_id"), col("neighbor_id"))
-        val rec = truth.join(reranked.withColumn("hit", lit(1L)),
-            Seq("query_id", "neighbor_id"), "left")
-          .agg(count(lit(1)).as("n_truth"),
-            sum(coalesce(col("hit"), lit(0L))).as("hits"))
+        val rec = Similarity.hits(truth,
+          "hits" -> Similarity.ivfTopKAt(scored, k = 10, nprobe = p))
         val scan = qCells.filter(col("crank") <= p)
           .join(broadcast(sizes), Seq("cell"))
           .agg(sum(col("cell_n")).as("n_scanned"),
@@ -2795,7 +2783,7 @@ object ExtensionQueries {
             col("n_scanned"), col("n_q"), col("n_corpus"))
       }
       perP.reduce(_ union _)
-        .withColumn("recall_e6", expr("hits * 1000000 div n_truth"))
+        .withColumn("recall_e6", Similarity.recallE6())
         .withColumn("scanned_e6",
           expr("(n_scanned * CAST(1000000 AS BIGINT)) div (n_q * n_corpus)"))
         .withColumn("recall_ok",
@@ -2817,12 +2805,7 @@ object ExtensionQueries {
       val normQ = s"sqrt(${dDot("qv", "qv")})"
       s"""WITH ${dLloydCtes(2)},
          |q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings WHERE vec_id < 8),
-         |c AS (SELECT vec_id AS neighbor_id, embedding AS cv FROM embeddings),
-         |brute AS (
-         |  SELECT query_id, neighbor_id FROM (
-         |    SELECT query_id, neighbor_id, row_number() OVER (
-         |      PARTITION BY query_id ORDER BY ${dCos("qv", "cv")} DESC, neighbor_id ASC) AS r
-         |    FROM c CROSS JOIN q WHERE query_id <> neighbor_id) WHERE r <= 10),
+         |${dTruth(10)},
          |tc AS (SELECT vec_id AS neighbor_id, e AS cv, cell FROM a2),
          |sz AS (SELECT cell, COUNT(*) AS cell_n FROM a2 GROUP BY cell),
          |nt AS (SELECT COUNT(*) AS n_corpus FROM a2),
@@ -2844,14 +2827,7 @@ object ExtensionQueries {
          |        ORDER BY ${dCos("qv", "cv")} DESC, neighbor_id ASC) AS r
          |    FROM tc JOIN probe USING (cell)
          |    WHERE probe.query_id <> tc.neighbor_id) WHERE r <= 10),
-         |agg AS (
-         |  SELECT ps.nprobe, COUNT(*) AS n_truth,
-         |    CAST(SUM(CASE WHEN i.query_id IS NOT NULL THEN 1 ELSE 0 END)
-         |      AS BIGINT) AS hits
-         |  FROM ps CROSS JOIN brute b
-         |  LEFT JOIN ivf i ON i.nprobe = ps.nprobe
-         |    AND b.query_id = i.query_id AND b.neighbor_id = i.neighbor_id
-         |  GROUP BY ps.nprobe)
+         |${dSweepHits("ps", "nprobe", "ivf")}
          |SELECT CAST(agg.nprobe AS BIGINT) AS nprobe, n_truth, hits,
          |  CAST(hits * 1000000 // n_truth AS BIGINT) AS recall_e6,
          |  CAST((n_scanned * 1000000) // (n_q * nt.n_corpus) AS BIGINT)
@@ -2958,6 +2934,39 @@ object ExtensionQueries {
        |  FROM q CROSS JOIN cb2)""".stripMargin
 
 
+  /** Memoized LUT-order ADC scores of the max-depth (nprobe = 5) probe
+    * candidate set — the PQ sibling of [[ivfScored5]]: the m × 16
+    * partial-dot LUT expression and the candidate ADC pass (two LARGE
+    * literal expression trees — codebook literals expand per
+    * construction) build once per session; q_ivf_pq_rerank's sweep
+    * depths are `crank <= p` restrictions re-ranked per pass
+    * (candidate sets nest — a codes row has exactly one cell). */
+  private def pqAdc5(spark: org.apache.spark.sql.SparkSession,
+      dir: String): org.apache.spark.sql.DataFrame =
+    SessionCache.memo(spark, dir, "pq_adc5") {
+      val (m, subDim) = (8, 8)
+      val cb = pqCodebook(spark, dir)
+      val codes = pqCodesMemo(spark, dir)
+      val qs = trainedIvfCells(spark, dir, 0).filter(isProbe())
+      // LUT-order ADC (round-16 verdict task 2): the m × 16 partial-dot
+      // table and the query norm are computed ONCE per probed row
+      // (n_q × p rows), so each candidate costs m lookups + adds
+      // instead of a 64-dim x̂ reconstruction + dot.
+      val probed = Similarity.probeCellsRanked(qs,
+          trainedCentFrame(spark, dir, 3),
+          "vec_id", "embedding", "label", nprobe = 5)
+        .withColumn("lut", Similarity.pqQueryLut(col("qv"), cb, m, subDim))
+        .withColumn("qnorm", Similarity.norm(col("qv")))
+      codes
+        .join(probed, codes("label") === probed("cell"))
+        .filter(col("query_id") =!= col("vec_id"))
+        .withColumn("adc", Similarity.pqAdcCosineLut(
+          col("lut"), col("qnorm"), col("codes"), cb, m, subDim))
+        .select(col("query_id"), col("qv"), col("vec_id"), col("adc"),
+          col("crank"))
+        .localCheckpoint(true)
+    }
+
   /** IVF-PQ compressed-scan retrieval (round-15 verdict task 4): the
     * production 100 TB embedding-store design point — the in-cell
     * candidate scan reads PQ CODES (m = 8 subspaces × 16 centroids →
@@ -2966,7 +2975,7 @@ object ExtensionQueries {
     * x̂ = concat(codebook[s][code_s]) from the BROADCAST literal
     * codebook, exact-re-ranks only the top-30 ADC survivors with true
     * cosine (raw-vector random access, candidate-sized I/O), and
-    * reports recall@10 vs the memoized brute truth per probe depth
+    * reports recall@10 vs the memoized exact truth per probe depth
     * p ∈ {3, 5} plus the compression ratio. Codebook training is the
     * Lloyd machinery on sub-vector slices: 16 seed clusters (id % 16)
     * → DECIMAL(20,10)-exact means → one floored-L2² reassignment →
@@ -2990,68 +2999,28 @@ object ExtensionQueries {
     * argmin); the candidate stage is the same bucketed cell equi-join
     * as q_ivf_rerank but over the 8-byte code rows; nothing corpus-
     * sized shuffles. */
-  /** Memoized LUT-order ADC scores of the max-depth (nprobe = 5) probe
-    * candidate set — the PQ sibling of [[ivfScored5]]: the m × 16
-    * partial-dot LUT expression and the candidate ADC pass (two LARGE
-    * literal expression trees — codebook literals expand per
-    * construction) build once per session; q_ivf_pq_rerank's sweep
-    * depths are `crank <= p` restrictions re-ranked per pass
-    * (candidate sets nest — a codes row has exactly one cell). */
-  private def pqAdc5(spark: org.apache.spark.sql.SparkSession,
-      dir: String): org.apache.spark.sql.DataFrame =
-    SessionCache.memo(spark, dir, "pq_adc5") {
-      val (m, subDim) = (8, 8)
-      val cb = pqCodebook(spark, dir)
-      val codes = pqCodesMemo(spark, dir)
-      val qs = trainedIvfCells(spark, dir, 0).filter(col("vec_id") < 8)
-      // LUT-order ADC (round-16 verdict task 2): the m × 16 partial-dot
-      // table and the query norm are computed ONCE per probed row
-      // (n_q × p rows), so each candidate costs m lookups + adds
-      // instead of a 64-dim x̂ reconstruction + dot.
-      val probed = Similarity.probeCellsRanked(qs,
-          trainedCentFrame(spark, dir, 3),
-          "vec_id", "embedding", "label", nprobe = 5)
-        .withColumn("lut", Similarity.pqQueryLut(col("qv"), cb, m, subDim))
-        .withColumn("qnorm", Similarity.norm(col("qv")))
-      codes
-        .join(probed, codes("label") === probed("cell"))
-        .filter(col("query_id") =!= col("vec_id"))
-        .withColumn("adc", Similarity.pqAdcCosineLut(
-          col("lut"), col("qnorm"), col("codes"), cb, m, subDim))
-        .select(col("query_id"), col("qv"), col("vec_id"), col("adc"),
-          col("crank"))
-        .localCheckpoint(true)
-    }
-
   private val ivfPqRerank = QueryDef(
     fn = (spark, dir) => {
       val (m, cTop) = (8, 100)
       val cells = trainedIvfCells(spark, dir, 2)
       val codes = pqCodesMemo(spark, dir)
-      val truth = annTruth10(spark, dir)
-        .select(col("query_id"), col("neighbor_id"))
+      val truth = annTruth(spark, dir)
       val raw = cells.select(col("vec_id").as("neighbor_id"),
         col("embedding").as("cv"))
       // corpus size from the CHECKPOINTED codes frame (one row per
       // vector) — no extra embeddings scan just to count
       val nTotal = codes.agg(count(lit(1)).as("n_corpus"))
-      val perP = Seq(3, 5).map { p =>
+      Seq(3, 5).map { p =>
         // depth p = crank<=p restriction of the memoized max-depth ADC
         // frame (candidate sets nest; ADC values and tie-breaks are the
         // per-depth chain's, computed once per session — see pqAdc5)
-        val reranked = Similarity.rerankExact(
+        Similarity.hits(truth, "hits" -> Similarity.rerankExact(
             pqAdc5(spark, dir).filter(col("crank") <= p),
-            "adc", "vec_id", cTop, raw, 10)
-          .select(col("query_id"), col("neighbor_id"))
-        truth.join(reranked.withColumn("hit", lit(1L)),
-            Seq("query_id", "neighbor_id"), "left")
-          .agg(count(lit(1)).as("n_truth"),
-            sum(coalesce(col("hit"), lit(0L))).as("hits"))
+            "adc", "vec_id", cTop, raw, 10))
           .select(lit(p.toLong).as("nprobe"), col("n_truth"), col("hits"))
-      }
-      perP.reduce(_ union _)
+      }.reduce(_ union _)
         .crossJoin(broadcast(nTotal))
-        .withColumn("recall_e6", expr("hits * 1000000 div n_truth"))
+        .withColumn("recall_e6", Similarity.recallE6())
         .withColumn("recall_ok",
           col("hits") * 100 >= col("n_truth")
             * when(col("nprobe") === 3, 30).otherwise(35))
@@ -3071,11 +3040,7 @@ object ExtensionQueries {
       s"""WITH ${dLloydCtes(2)},
          |q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings WHERE vec_id < 8),
          |c AS (SELECT vec_id AS neighbor_id, embedding AS cv FROM embeddings),
-         |brute AS (
-         |  SELECT query_id, neighbor_id FROM (
-         |    SELECT query_id, neighbor_id, row_number() OVER (
-         |      PARTITION BY query_id ORDER BY ${dCos("qv", "cv")} DESC, neighbor_id ASC) AS r
-         |    FROM c CROSS JOIN q WHERE query_id <> neighbor_id) WHERE r <= 10),
+         |${dTruth(10)},
          |$pqOracleCtes,
          |$pqLutCtes,
          |tcell AS (SELECT vec_id, cell FROM a2),
@@ -3110,14 +3075,7 @@ object ExtensionQueries {
          |      row_number() OVER (PARTITION BY adc.nprobe, adc.query_id
          |        ORDER BY ${dCos("adc.qv", "c.cv")} DESC, adc.neighbor_id ASC) AS r
          |    FROM adc JOIN c USING (neighbor_id)) WHERE r <= 10),
-         |agg AS (
-         |  SELECT ps.nprobe, COUNT(*) AS n_truth,
-         |    CAST(SUM(CASE WHEN i.query_id IS NOT NULL THEN 1 ELSE 0 END)
-         |      AS BIGINT) AS hits
-         |  FROM ps CROSS JOIN brute b
-         |  LEFT JOIN rr i ON i.nprobe = ps.nprobe
-         |    AND b.query_id = i.query_id AND b.neighbor_id = i.neighbor_id
-         |  GROUP BY ps.nprobe)
+         |${dSweepHits("ps", "nprobe", "rr")}
          |SELECT CAST(nprobe AS BIGINT) AS nprobe, n_truth, hits,
          |  CAST(hits * 1000000 // n_truth AS BIGINT) AS recall_e6,
          |  hits * 100 >= n_truth * (CASE nprobe WHEN 3 THEN 30 ELSE 35 END)
@@ -3200,7 +3158,7 @@ object ExtensionQueries {
       // checkpoint (m × 16 doubles per probed row), so candidate scoring
       // is m lookups + adds per code row (round-16 verdict task 2).
       val probed = Similarity.probeCells(
-          trainedIvfCells(spark, dir, 0).filter(col("vec_id") < 8),
+          trainedIvfCells(spark, dir, 0).filter(isProbe()),
           trainedCentFrame(spark, dir, 3),
           "vec_id", "embedding", "label", nprobe = 3)
         .withColumn("lut", Similarity.pqQueryLut(col("qv"), cb, m, subDim))
@@ -3390,7 +3348,7 @@ object ExtensionQueries {
     * (the probed cell's centroid rides on the probe side of the join;
     * candidates still contribute only their 8 code bytes). Everything
     * else mirrors q_ivf_pq_rerank: probe depths p ∈ {3, 5}, ADC top-100
-    * → exact re-rank → recall@10 vs the memoized brute truth.
+    * → exact re-rank → recall@10 vs the memoized exact truth.
     *
     * Quantizer geometry: m = 16 subspaces × 4 dims × 16 centroids →
     * 16 code bytes/vector (16× compression vs the raw-PQ query's 32×).
@@ -3419,11 +3377,10 @@ object ExtensionQueries {
     fn = (spark, dir) => {
       val (m, subDim, cTop) = (16, 4, 100)
       val cents = trainedCentFrame(spark, dir, 3)
-      val qs = trainedIvfCells(spark, dir, 0).filter(col("vec_id") < 8)
+      val qs = trainedIvfCells(spark, dir, 0).filter(isProbe())
       val cbr = pqResCodebook(spark, dir)
       val codes = pqResCodesMemo(spark, dir)
-      val truth = annTruth10(spark, dir)
-        .select(col("query_id"), col("neighbor_id"))
+      val truth = annTruth(spark, dir)
       val raw = trainedIvfCells(spark, dir, 2)
         .select(col("vec_id").as("neighbor_id"), col("embedding").as("cv"))
       val cs = trainedCentRows(spark, dir, 3)
@@ -3441,16 +3398,12 @@ object ExtensionQueries {
           .filter(col("query_id") =!= col("vec_id"))
           .withColumn("adc", Similarity.pqAdcCosineResidual(
             col("qv"), col("ccent"), col("codes"), cbr, m, subDim))
-        val reranked = Similarity.rerankExact(adc, "adc", "vec_id", cTop, raw, 10)
-          .select(col("query_id"), col("neighbor_id"))
-        truth.join(reranked.withColumn("hit", lit(1L)),
-            Seq("query_id", "neighbor_id"), "left")
-          .agg(count(lit(1)).as("n_truth"),
-            sum(coalesce(col("hit"), lit(0L))).as("hits"))
+        Similarity.hits(truth,
+            "hits" -> Similarity.rerankExact(adc, "adc", "vec_id", cTop, raw, 10))
           .select(lit(p.toLong).as("nprobe"), col("n_truth"), col("hits"))
       }
       perP.reduce(_ union _)
-        .withColumn("recall_e6", expr("hits * 1000000 div n_truth"))
+        .withColumn("recall_e6", Similarity.recallE6())
         .withColumn("recall_ok",
           col("hits") * 100 >= col("n_truth")
             * when(col("nprobe") === 3, 40).otherwise(50))
@@ -3465,11 +3418,7 @@ object ExtensionQueries {
       s"""WITH ${dLloydCtes(2)},
          |q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings WHERE vec_id < 8),
          |c AS (SELECT vec_id AS neighbor_id, embedding AS cv FROM embeddings),
-         |brute AS (
-         |  SELECT query_id, neighbor_id FROM (
-         |    SELECT query_id, neighbor_id, row_number() OVER (
-         |      PARTITION BY query_id ORDER BY ${dCos("qv", "cv")} DESC, neighbor_id ASC) AS r
-         |    FROM c CROSS JOIN q WHERE query_id <> neighbor_id) WHERE r <= 10),
+         |${dTruth(10)},
          |${pqOracleCtesFrom(pqResidualSrc, 4)},
          |rh AS (SELECT codes.vec_id, flatten(list(cb2.sc ORDER BY codes.s)) AS rhat
          |       FROM codes JOIN cb2 USING (s, j) GROUP BY codes.vec_id),
@@ -3499,14 +3448,7 @@ object ExtensionQueries {
          |      row_number() OVER (PARTITION BY adc.nprobe, adc.query_id
          |        ORDER BY ${dCos("adc.qv", "c.cv")} DESC, adc.neighbor_id ASC) AS r
          |    FROM adc JOIN c USING (neighbor_id)) WHERE r <= 10),
-         |agg AS (
-         |  SELECT ps.nprobe, COUNT(*) AS n_truth,
-         |    CAST(SUM(CASE WHEN i.query_id IS NOT NULL THEN 1 ELSE 0 END)
-         |      AS BIGINT) AS hits
-         |  FROM ps CROSS JOIN brute b
-         |  LEFT JOIN rr i ON i.nprobe = ps.nprobe
-         |    AND b.query_id = i.query_id AND b.neighbor_id = i.neighbor_id
-         |  GROUP BY ps.nprobe)
+         |${dSweepHits("ps", "nprobe", "rr")}
          |SELECT CAST(nprobe AS BIGINT) AS nprobe, n_truth, hits,
          |  CAST(hits * 1000000 // n_truth AS BIGINT) AS recall_e6,
          |  hits * 100 >= n_truth * (CASE nprobe WHEN 3 THEN 40 ELSE 50 END)

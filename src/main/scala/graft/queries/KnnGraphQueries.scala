@@ -62,18 +62,6 @@ object KnnGraphQueries {
          .localCheckpoint(true)
     }
 
-  /** Truth for the recall contract: exact top-KEVAL of the 8 fixed probe
-    * nodes over the full corpus (memoized + checkpointed — the
-    * annBruteTruth convention; 8·n cosines, never n²). */
-  private def truthFrame(spark: org.apache.spark.sql.SparkSession,
-      dir: String): org.apache.spark.sql.DataFrame =
-    SessionCache.memo(spark, dir, "knn_truth") {
-      val emb = Tables.embeddings(spark, dir)
-      Similarity.bruteForceTopK(emb, emb.filter(col("vec_id") < 8),
-        "vec_id", "embedding", KEVAL)
-         .localCheckpoint(true)
-    }
-
   /** One descent round as SQL: symmetrize `prev`, two-hop expand, union
     * with `prev`, re-score, keep top K per node — the exact
     * [[graft.ops.Similarity.nnDescentRound]] dataflow. */
@@ -143,26 +131,20 @@ object KnnGraphQueries {
          |ORDER BY node_id, rank""".stripMargin))
 
   /** Recall@4 of the seed graph and of the twice-refined graph against
-    * exact truth on the 8 fixed probe nodes, with the measured
-    * contracts: the descent rounds at least triple the seed hits
-    * (measured 6.5×/5×/7×), keep a 0.6 recall floor (measured
+    * exact truth on the 8 fixed probe nodes (the `rank <= KEVAL` prefix
+    * of the ANN family's one truth memo, [[ExtensionQueries.annTruth]]),
+    * with the measured contracts: the descent rounds at least triple the
+    * seed hits (measured 6.5×/5×/7×), keep a 0.6 recall floor (measured
     * 0.8125/0.9375/0.656 at sf0.001/0.01/0.1), and the seed stays above
     * its own 0.05 floor (measured 0.125/0.1875/0.094). */
   private val knnRecallQ = QueryDef(
     fn = (spark, dir) => {
-      def pairs(df: org.apache.spark.sql.DataFrame) =
-        df.filter(col("node_id") < 8 && col("rank") <= KEVAL)
-          .select(col("node_id"), col("neighbor_id"))
-      val truth = truthFrame(spark, dir)
-        .select(col("query_id").as("node_id"), col("neighbor_id"))
-      truth
-        .join(pairs(graphFrame(spark, dir)).withColumn("in_g", lit(1)),
-          Seq("node_id", "neighbor_id"), "left")
-        .join(pairs(descentFrame(spark, dir)).withColumn("in_d", lit(1)),
-          Seq("node_id", "neighbor_id"), "left")
-        .agg(count(lit(1)).as("n_truth"),
-          sum(coalesce(col("in_g"), lit(0))).as("graph_hits"),
-          sum(coalesce(col("in_d"), lit(0))).as("descent_hits"))
+      def heads(df: org.apache.spark.sql.DataFrame) =
+        df.filter(ExtensionQueries.isProbe("node_id") && col("rank") <= KEVAL)
+          .select(col("node_id").as("query_id"), col("neighbor_id"))
+      Similarity.hits(ExtensionQueries.annTruth(spark, dir, KEVAL),
+          "graph_hits" -> heads(graphFrame(spark, dir)),
+          "descent_hits" -> heads(descentFrame(spark, dir)))
         .select(col("n_truth"), col("graph_hits"), col("descent_hits"),
           (col("descent_hits") >= col("graph_hits") * 3).as("descent_lift_ok"),
           (col("graph_hits").cast("double") >= col("n_truth") * 0.05)
@@ -171,26 +153,12 @@ object KnnGraphQueries {
             .as("descent_recall_ok"))
     },
     oracle = Some {
-      val cosQC = ExtensionQueries.dCos("q.qv", "c.cv")
+      def heads(graph: String) =
+        s"(SELECT node_id AS query_id, neighbor_id FROM $graph " +
+          s"WHERE node_id < 8 AND rank <= $KEVAL)"
       s"""WITH $dGraphCtes,
-         |q AS (SELECT vec_id AS node_id, e AS qv FROM v WHERE vec_id < 8),
-         |c AS (SELECT vec_id AS neighbor_id, e AS cv FROM v),
-         |truth AS (SELECT node_id, neighbor_id FROM (
-         |  SELECT node_id, neighbor_id, row_number() OVER (
-         |    PARTITION BY node_id ORDER BY $cosQC DESC, neighbor_id ASC) AS r
-         |  FROM c CROSS JOIN q WHERE node_id <> neighbor_id) WHERE r <= $KEVAL),
-         |agg AS (SELECT COUNT(*) AS n_truth,
-         |  CAST(SUM(CASE WHEN gg.node_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
-         |    AS graph_hits,
-         |  CAST(SUM(CASE WHEN dd.node_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
-         |    AS descent_hits
-         |  FROM truth t
-         |  LEFT JOIN (SELECT node_id, neighbor_id FROM g
-         |             WHERE node_id < 8 AND rank <= $KEVAL) gg
-         |    ON t.node_id = gg.node_id AND t.neighbor_id = gg.neighbor_id
-         |  LEFT JOIN (SELECT node_id, neighbor_id FROM d2
-         |             WHERE node_id < 8 AND rank <= $KEVAL) dd
-         |    ON t.node_id = dd.node_id AND t.neighbor_id = dd.neighbor_id)
+         |${ExtensionQueries.dTruth(KEVAL)},
+         |${ExtensionQueries.dHits("graph_hits" -> heads("g"), "descent_hits" -> heads("d2"))}
          |SELECT n_truth, graph_hits, descent_hits,
          |  descent_hits >= graph_hits * 3 AS descent_lift_ok,
          |  CAST(graph_hits AS DOUBLE) >= n_truth * 0.05 AS graph_recall_ok,
@@ -218,7 +186,7 @@ object KnnGraphQueries {
     SessionCache.memo(spark, dir, "knn_graph_search") {
       val emb = Tables.embeddings(spark, dir)
       Similarity.graphSearch(emb, descentFrame(spark, dir),
-        emb.filter(col("vec_id") < 8), "vec_id", "embedding",
+        emb.filter(ExtensionQueries.isProbe()), "vec_id", "embedding",
         emb.filter(col("vec_id") >= ENTRY_LO && col("vec_id") < ENTRY_LO + BEAM),
         BEAM, ROUNDS)
          .localCheckpoint(true)
@@ -302,47 +270,22 @@ object KnnGraphQueries {
       val emb = Tables.embeddings(spark, dir)
       val entryBase = Similarity.bruteForceTopK(
         emb.filter(col("vec_id") >= ENTRY_LO && col("vec_id") < ENTRY_LO + BEAM),
-        emb.filter(col("vec_id") < 8), "vec_id", "embedding", KEVAL)
-        .select(col("query_id"), col("neighbor_id"))
-      val searched = searchFrame(spark, dir)
-        .filter(col("rank") <= KEVAL)
-        .select(col("query_id"), col("neighbor_id"))
-      truthFrame(spark, dir)
-        .select(col("query_id"), col("neighbor_id"))
-        .join(entryBase.withColumn("in_e", lit(1)),
-          Seq("query_id", "neighbor_id"), "left")
-        .join(searched.withColumn("in_s", lit(1)),
-          Seq("query_id", "neighbor_id"), "left")
-        .agg(count(lit(1)).as("n_truth"),
-          sum(coalesce(col("in_e"), lit(0))).as("entry_hits"),
-          sum(coalesce(col("in_s"), lit(0))).as("search_hits"))
+        emb.filter(ExtensionQueries.isProbe()), "vec_id", "embedding", KEVAL)
+      Similarity.hits(ExtensionQueries.annTruth(spark, dir, KEVAL),
+          "entry_hits" -> entryBase,
+          "search_hits" -> searchFrame(spark, dir).filter(col("rank") <= KEVAL))
         .select(col("n_truth"), col("entry_hits"), col("search_hits"),
           (col("search_hits") >= col("entry_hits")).as("search_lift_ok"),
           (col("search_hits").cast("double") >= col("n_truth") * 0.6)
             .as("search_recall_ok"))
     },
     oracle = Some {
-      val cosQC = ExtensionQueries.dCos("q.qv", "c.cv")
+      def beam(b: String) =
+        s"(SELECT query_id, node_id AS neighbor_id FROM $b WHERE rank <= $KEVAL)"
       s"""WITH $dGraphCtes,
          |$dBeamCtes,
-         |q AS (SELECT vec_id AS query_id, e AS qv FROM v WHERE vec_id < 8),
-         |c AS (SELECT vec_id AS neighbor_id, e AS cv FROM v),
-         |truth AS (SELECT query_id, neighbor_id FROM (
-         |  SELECT query_id, neighbor_id, row_number() OVER (
-         |    PARTITION BY query_id ORDER BY $cosQC DESC, neighbor_id ASC) AS r
-         |  FROM c CROSS JOIN q WHERE query_id <> neighbor_id) WHERE r <= $KEVAL),
-         |agg AS (SELECT COUNT(*) AS n_truth,
-         |  CAST(SUM(CASE WHEN ee.query_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
-         |    AS entry_hits,
-         |  CAST(SUM(CASE WHEN ss.query_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
-         |    AS search_hits
-         |  FROM truth t
-         |  LEFT JOIN (SELECT query_id, node_id AS neighbor_id FROM b0
-         |             WHERE rank <= $KEVAL) ee
-         |    ON t.query_id = ee.query_id AND t.neighbor_id = ee.neighbor_id
-         |  LEFT JOIN (SELECT query_id, node_id AS neighbor_id FROM b$ROUNDS
-         |             WHERE rank <= $KEVAL) ss
-         |    ON t.query_id = ss.query_id AND t.neighbor_id = ss.neighbor_id)
+         |${ExtensionQueries.dTruth(KEVAL)},
+         |${ExtensionQueries.dHits("entry_hits" -> beam("b0"), "search_hits" -> beam(s"b$ROUNDS"))}
          |SELECT n_truth, entry_hits, search_hits,
          |  search_hits >= entry_hits AS search_lift_ok,
          |  CAST(search_hits AS DOUBLE) >= n_truth * 0.6 AS search_recall_ok
@@ -365,7 +308,7 @@ object KnnGraphQueries {
     SessionCache.memo(spark, dir, "knn_graph_search_adc") {
       val emb = Tables.embeddings(spark, dir)
       Similarity.graphSearchAdc(emb, descentFrame(spark, dir),
-        emb.filter(col("vec_id") < 8), "vec_id", "embedding",
+        emb.filter(ExtensionQueries.isProbe()), "vec_id", "embedding",
         emb.filter(col("vec_id") >= ENTRY_LO && col("vec_id") < ENTRY_LO + BEAM),
         ExtensionQueries.pqCodesMemo(spark, dir)
           .select(col("vec_id"), col("codes")),

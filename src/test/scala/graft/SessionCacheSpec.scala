@@ -116,6 +116,18 @@ class SessionCacheSpec extends SparkSpec {
     stop(s2)
   }
 
+  test("the ANN gates share one 8-probe truth memo") {
+    // q_sim_ann_brute reads k=5, q_knn_recall k=4 and q_sim_ann_sq8 k=10:
+    // all three are rank prefixes of the one exact top-10 memo
+    val s2 = spark.newSession()
+    Seq("q_sim_ann_brute", "q_knn_recall", "q_sim_ann_sq8").foreach(rows(s2, _, sf))
+    val truths = SessionCache.sessionKeys(s2).collect {
+      case (`sf`, tag) if tag.matches("(ann|knn)_truth.*") => tag
+    }
+    assert(truths == Set("ann_truth10"), s"8-probe truth memos: $truths")
+    stop(s2)
+  }
+
   test("nested memo builds record disjoint SELF-times") {
     // the memo-cost trailer must sum to real build wall-clock, so a build
     // nested inside another must be subtracted from its parent's recorded

@@ -66,6 +66,47 @@ class SimilaritySpec extends SparkSpec {
     assert(got.forall(_._1 == 1L))
   }
 
+  test("a smaller-k brute-force top-k is the rank prefix of the top-10, ties and zero norm included") {
+    // three copies of one vector and two of another give exact cosine
+    // ties; vec 12 has zero norm (NULL cosine: no one's neighbor)
+    val tied = Seq(
+      (1L, Array(1f, 0f, 0f)), (2L, Array(0.9f, 0.1f, 0f)),
+      (3L, Array(0.9f, 0.1f, 0f)), (4L, Array(0.9f, 0.1f, 0f)),
+      (5L, Array(0f, 1f, 0f)), (6L, Array(0f, 1f, 0f)),
+      (7L, Array(-1f, 0f, 0f)), (8L, Array(0.5f, 0.5f, 0.1f)),
+      (9L, Array(0.2f, 0.3f, 0.9f)), (10L, Array(0.7f, -0.2f, 0.1f)),
+      (11L, Array(0.1f, 0.9f, 0.1f)), (12L, Array(0f, 0f, 0f)),
+      (13L, Array(0.3f, 0.3f, 0.3f)), (14L, Array(-0.2f, 0.8f, 0.4f)))
+      .toDF("vec_id", "embedding")
+    val probes = tied.filter(col("vec_id") <= 6 || col("vec_id") === 12)
+    def top(k: Int) = Similarity.bruteForceTopK(tied, probes, "vec_id", "embedding", k)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.as[(Long, Long, Double, Int)].collect().toSeq.sortBy(r => (r._1, r._4))
+    val top10 = top(10)
+    val all = rows(top10)
+    assert(all.groupBy(r => (r._1, r._3)).exists(_._2.size > 1), "fixture must hold ties")
+    assert(!all.exists(r => r._1 == 12L || r._2 == 12L), "zero-norm vector ranks nowhere")
+    for (k <- Seq(4, 5)) {
+      val want = rows(top(k))
+      assert(want.nonEmpty && want.forall(_._4 <= k))
+      assert(rows(top10.filter(col("rank") <= k)) == want, s"k=$k")
+    }
+  }
+
+  test("hits counts each named result's truth rows; an empty result counts 0") {
+    val truth = Seq((1L, 2L, 0.9, 1), (1L, 3L, 0.8, 2), (1L, 4L, 0.7, 3),
+      (2L, 1L, 0.9, 1), (2L, 5L, 0.6, 2))
+      .toDF("query_id", "neighbor_id", "cos", "rank")
+    // 2 of a's 4 rows are in the truth: (1,3) and (2,5)
+    val a = Seq((1L, 3L), (1L, 9L), (2L, 5L), (3L, 2L)).toDF("query_id", "neighbor_id")
+    val empty = a.filter(lit(false))
+    val got = Similarity.hits(truth, "a_hits" -> a, "none_hits" -> empty)
+    assert(got.columns.toSeq == Seq("n_truth", "a_hits", "none_hits"))
+    val r = got.withColumn("recall_e6", Similarity.recallE6("a_hits"))
+      .as[(Long, Long, Long, Long)].collect().toSeq
+    assert(r == Seq((5L, 2L, 0L, 400000L)))
+  }
+
   test("signBucket packs sign bits of leading dims") {
     val got = Seq((Array(1f, -1f, 1f, -1f)))
       .toDF("v").select(Similarity.signBucket(col("v"), 4).as("b"))
